@@ -208,10 +208,11 @@ def layer_metrics(raw, input_bytes):
 
 def summarize(raw, trace, gen_s, input_bytes):
     plain = [p for p in raw["passes"] if p["tag"] == "plain"]
-    samples = [o for p in raw["passes"] for o in p["ops"]]
+    # timed ops are all checked; an unchecked warm-up op counts only when it threw
+    samples = [o for p in raw["passes"] for o in p["ops"] if p["tag"] != "warmup" or not o["ok"]]
     attempted, failed = len(samples), sum(1 for o in samples if not o["ok"])
     times = [o["s"] for p in plain for o in p["ops"]]
-    # A pass has 8 to 15 ops of very different cost, so single order
+    # A pass has 4 to 13 ops of very different cost, so single order
     # statistics (median, p90) jump between ops from run to run; the
     # interquartile mean and the slow-quarter mean average over several.
     e2e = {
@@ -222,6 +223,7 @@ def summarize(raw, trace, gen_s, input_bytes):
     }
     tail_v, tail_p, n = tail(times)
     notes = [f"{k} = {v:.4f} {END_TO_END[k]}" for k, v in e2e.items()]
+    notes.append(f"untimed warm-up pass {raw['warmup_s']:.2f} s")
     notes.append(f"op samples = {n} in {len(plain)} passes; median {statistics.median(times):.4f} s, "
                  f"p{tail_p:.1f} (10 samples beyond it, or the max) {tail_v:.4f} s")
     notes.append(f"failed_ops_frac = {failed / attempted:.4f}  ({failed} of {attempted} ops)")
@@ -229,7 +231,7 @@ def summarize(raw, trace, gen_s, input_bytes):
     if trace:
         layers = layer_metrics(raw, input_bytes)
         traced_walls = [p["wall_s"] for p in raw["passes"] if p["tag"] == "traced"]
-        # the untraced passes run first and colder, which biases this low
+        # both sets of passes follow the untimed warm-up pass
         layers["trace.overhead_frac"] = statistics.median(traced_walls) / e2e["wall_s"] - 1.0
         layers["gen_s"] = gen_s
         layers["failed_ops_frac"] = failed / attempted

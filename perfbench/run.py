@@ -5,11 +5,17 @@
 
 Run from the root of a graft source tree. The first run compiles graft's
 sources and the harness in `perfbench/src` with the Scala compiler that
-ships in Spark's jars directory (`$SPARK_HOME/jars`) into `.bench_build/`;
-later runs reuse the classes while the sources are unchanged. Inputs are
-generated from the seed into `.bench_build/data/` and checked against the
-DuckDB oracle once per seed. Every file a run writes stays under
-`.bench_build/`.
+ships in Spark's jars directory (`$SPARK_HOME/jars`) into a jar under
+`.bench_build/`, and has a short Spark session write a class-data archive
+that later JVMs map to start faster; both are reused while the sources are
+unchanged. Inputs are generated from the seed into `.bench_build/data/` and
+checked against the DuckDB oracle once per seed. Every file a run writes
+stays under `.bench_build/`.
+
+A run is one JVM: five set-ups (setup_s is their median), one untimed
+warm-up pass over the workload's ops, then timed passes for about
+`--seconds` (at least one), each op's output checked after its timed
+region.
 
 The last line of stdout is one JSON object: `correct`, `attempted`,
 `failed` and `metrics` (end-to-end metrics untraced, per-layer metrics with
@@ -34,8 +40,8 @@ ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 
 # workload -> spark.sql.shuffle.partitions
-WORKLOADS = {"join-x10": 8, "dedup": 8, "vector-store": 8, "event-stream": 4}
-KEEP_SEEDS = 3  # generated input sets kept per workload
+WORKLOADS = {"join-x10": 8, "dedup": 8, "vector-store": 4, "event-stream": 4}
+KEEP_SEEDS = 12  # generated input sets kept per workload
 
 
 def log(msg):
@@ -87,17 +93,18 @@ def build():
             h.update(f.read())
     key = h.hexdigest()[:16]
     jars = jars_dir()
-    classes = os.path.join(BUILD, f"classes-{key}")
+    classes = os.path.join(BUILD, f"classes-{key}.jar")
     cp = f"{classes}:{jars}/*"
-    if os.path.isdir(classes):
+    if os.path.isfile(classes):
         return cp, key
     for old in os.listdir(BUILD) if os.path.isdir(BUILD) else []:
-        if old.startswith(("classes-", "oracle-sql-")):
+        if old.startswith(("classes-", "oracle-sql-", "cds-")):
             shutil.rmtree(os.path.join(BUILD, old), ignore_errors=True)
             if os.path.isfile(os.path.join(BUILD, old)):
                 os.remove(os.path.join(BUILD, old))
-    tmp = classes + ".tmp"
-    os.makedirs(tmp)
+    os.makedirs(BUILD, exist_ok=True)
+    # a jar, not a directory: the class-data archive accepts only jars
+    tmp = os.path.join(BUILD, f"classes-{key}.tmp.jar")
     compiler = ":".join(os.path.join(jars, j) for j in sorted(os.listdir(jars))
                         if j.startswith(("scala-compiler", "scala-library", "scala-reflect")))
     log(f"perfbench: compiling {len(srcs)} sources")
@@ -106,16 +113,30 @@ def build():
                            "-nowarn", "-usejavacp:false", "-classpath", f"{jars}/*", "-d", tmp] + srcs,
                           stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True)
     if proc.returncode != 0:
-        shutil.rmtree(tmp, ignore_errors=True)
+        if os.path.exists(tmp):
+            os.remove(tmp)
         log(proc.stdout[-4000:])
         fail("compile failed")
     os.rename(tmp, classes)
     log(f"perfbench: compiled in {time.time() - t0:.1f}s")
+    # a class-data archive of Spark's classes shortens every JVM's start
+    scratch = os.path.join(BUILD, "cds-scratch")
+    shutil.rmtree(scratch, ignore_errors=True)
+    os.makedirs(scratch)
+    jvm(cp, ["mode=cds", f"scratch={scratch}"], os.path.join(scratch, "cds.log"), scratch,
+        cds_archive(key), dump=True)
+    shutil.rmtree(scratch)
     return cp, key
 
 
-def jvm(cp, args, log_path, scratch):
-    """Run the harness in its own JVM; all of its temp files stay in scratch."""
+def cds_archive(key):
+    return os.path.join(BUILD, f"cds-{key}.jsa")
+
+
+def jvm(cp, args, log_path, scratch, cds=None, dump=False):
+    """Run the harness in its own JVM; all of its temp files stay in scratch.
+    With `cds`, the JVM maps that class-data archive if it exists, or with
+    `dump` writes it at exit."""
     opens = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
         "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net", "java.nio",
         "java.util", "java.util.concurrent", "java.util.concurrent.atomic", "sun.nio.ch",
@@ -124,8 +145,13 @@ def jvm(cp, args, log_path, scratch):
                SPARK_LOCAL_DIRS=os.path.join(scratch, "spark-local"))
     for k in [k for k in env if k.startswith("SPARK_GRAFT_") and k != "SPARK_GRAFT_STORE_DIR"]:
         del env[k]  # engine knobs stay at their defaults
-    cmd = [java(), "-XX:-UsePerfData", "-Xmx3g", f"-Djava.io.tmpdir={scratch}", "-Dspark.ui.enabled=false",
-           "-Dderby.system.home=" + scratch] + opens + ["-cp", cp, "graftbench.Main"] + args
+    cmd = [java(), "-XX:-UsePerfData", "-Xms2g", "-Xmx2g", f"-Djava.io.tmpdir={scratch}", "-Dspark.ui.enabled=false",
+           "-Dderby.system.home=" + scratch] + opens
+    if dump:
+        cmd.append("-XX:ArchiveClassesAtExit=" + cds)
+    elif cds and os.path.exists(cds):
+        cmd.append("-XX:SharedArchiveFile=" + cds)
+    cmd += ["-cp", cp, "graftbench.Main"] + args
     with open(log_path, "w") as out:
         proc = subprocess.Popen(cmd, stdout=out, stderr=subprocess.STDOUT, cwd=scratch, env=env)
         try:
@@ -239,7 +265,7 @@ def main(argv=None):
     if a.corrupt_expectation:
         args.append("corrupt=1")
     t0 = time.time()
-    jvm(cp, args, os.path.join(run_dir, "harness.log"), scratch)
+    jvm(cp, args, os.path.join(run_dir, "harness.log"), scratch, cds_archive(key))
     log(f"perfbench: gen_s {gen_s:.1f}, harness {time.time() - t0:.1f}s")
     with open(raw_path) as f:
         raw = json.load(f)

@@ -13,13 +13,15 @@ import scala.collection.mutable
   *
   *  - `mode=sql workload=w out=f`: write the oracle SQL of the workload's
   *    ops that have one;
+  *  - `mode=cds scratch=d`: load the classes a run needs (see
+  *    [[loadClasses]]);
   *  - `mode=run workload=w data=d seed=n seconds=n trace=0|1 cpus=n
-  *    partitions=n scratch=d out=f [corrupt=1]`: set up three times (a
-  *    fresh session that opens every input and runs the workload's smoke
-  *    ops), then run closed-loop passes over `data` until `seconds` have
-  *    gone by. There is no full warm-up pass: every run is a fresh JVM,
-  *    and its first pass pays most JIT and codegen the way a submitted
-  *    job does.
+  *    partitions=n scratch=d out=f [corrupt=1]`: set up five times (a
+  *    fresh session that opens every input), run one untimed warm-up
+  *    pass whose outputs are not checked (a fresh JVM's first pass pays
+  *    JIT and codegen, and how much depends on what else the host runs),
+  *    then run closed-loop timed passes over `data` for about `seconds`
+  *    (at least one pass), checking every timed op's output.
   */
 object Main {
 
@@ -28,10 +30,28 @@ object Main {
     a("mode") match {
       case "sql" =>
         val sql = SparkEntry.oracleSql
-        val ops = Workloads(a("workload"))._1.map(_.name).distinct.filter(sql.contains)
+        val ops = Workloads(a("workload")).map(_.name).distinct.filter(sql.contains)
         write(a("out"), Json.obj(ops.map(o => o -> Json.str(sql(o)))))
       case "run" => new Run(a).apply()
+      case "cds" => loadClasses(a("scratch"))
     }
+  }
+
+  /** A short session that joins, aggregates, and writes and reads parquet
+    * and JSON, so that a JVM writing its class-data archive at exit has
+    * loaded most of the classes a run needs.
+    */
+  def loadClasses(scratch: String): Unit = {
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    val s = SparkSession.builder().master("local[2]").appName("graftbench-cds")
+      .config("spark.ui.enabled", "false").config("spark.local.dir", s"$scratch/spark-local")
+      .config("spark.sql.warehouse.dir", s"$scratch/warehouse").getOrCreate()
+    val facts = s.range(10000).selectExpr("id", "id % 100 as k", "cast(id as double) as v")
+    val dims = s.range(100).selectExpr("id as k", "concat('n', id) as name")
+    facts.join(dims, "k").groupBy("name").agg(sum("v"), count(lit(1)))
+      .write.parquet(s"$scratch/parquet")
+    s.read.parquet(s"$scratch/parquet").write.json(s"$scratch/json")
+    s.stop()
   }
 
   def write(path: String, text: String): Unit = {
@@ -77,7 +97,7 @@ final class Run(a: Map[String, String]) {
   private val cpus = a("cpus").toInt
   private val scratch = a("scratch")
   private val rnd = new scala.util.Random(a("seed").toLong)
-  private val (ops, smoke) = Workloads(workload)
+  private val ops = Workloads(workload)
   private val lifecycle = workload == "vector-store"
   private val resultsDir = s"$scratch/results"
   private val storeDir = sys.env("SPARK_GRAFT_STORE_DIR")
@@ -99,12 +119,15 @@ final class Run(a: Map[String, String]) {
     s
   }
 
-  /** The `Bench.releaseCaches` sequence, run before every op. */
+  /** The `Bench.releaseCaches` sequence, run before every op, then a
+    * full GC so that no op pays for the garbage of the one before it.
+    */
   private def releaseCaches(): Unit = {
     spark.sharedState.cacheManager.clearCache()
     graft.operators.Dedup.unpersistIntermediates()
     graft.operators.Corpus.unpersistIntermediates()
     graft.operators.Graph.unpersistIntermediates()
+    System.gc()
   }
 
   /** Every pass starts from empty result, store and checkpoint dirs. */
@@ -138,11 +161,15 @@ final class Run(a: Map[String, String]) {
 
   private final case class Sample(op: String, s: Double, ok: Boolean, rows: Long, err: String)
 
-  private def runPass(dir: String, expect: Map[String, (Long, String)], pass: Int): Seq[Sample] = {
+  /** One pass over the ops; the warm-up pass (`check = false`) only
+    * fails an op that throws, a timed pass also checks every output.
+    */
+  private def runPass(dir: String, expect: Map[String, (Long, String)], pass: Int,
+      check: Boolean = true): Seq[Sample] = {
     resetDirs()
     val order = if (lifecycle) ops else rnd.shuffle(ops)
     val passSpan = tracer.begin("pass", s"pass $pass")
-    val out = order.map { op => releaseCaches(); runOp(op, dir, expect) }
+    val out = order.map { op => releaseCaches(); runOp(op, dir, expect, check) }
     releaseCaches()
     drainBus()
     if (traced) {
@@ -155,7 +182,8 @@ final class Run(a: Map[String, String]) {
     out
   }
 
-  private def runOp(op: Op, dir: String, expect: Map[String, (Long, String)]): Sample = {
+  private def runOp(op: Op, dir: String, expect: Map[String, (Long, String)],
+      check: Boolean): Sample = {
     val opSpan = tracer.begin("op", op.name)
     val t0 = System.nanoTime()
     val result = try {
@@ -169,6 +197,7 @@ final class Run(a: Map[String, String]) {
     val opDone = tracer.end(opSpan)
     result match {
       case Left(e) => Sample(op.name, sec, ok = false, -1, e.toString)
+      case Right(_) if !check => Sample(op.name, sec, ok = true, -1, "")
       case Right((built, t1, sinkRows)) =>
         if (traced) annotate(op, opDone, built, t1)
         val (rows, dig) = try built.check() catch { case e: Throwable => (-1L, e.toString) }
@@ -202,46 +231,46 @@ final class Run(a: Map[String, String]) {
 
   // ---- run ---------------------------------------------------------------
 
-  /** One set-up: a fresh session that opens every input and runs the
-    * workload's smoke ops once (untimed by the passes, unchecked).
-    */
+  /** One set-up: a fresh session that opens every input. */
   private def setUp(): Double = {
     val t0 = System.nanoTime()
     spark = session()
     val dir = new File(data)
     dir.listFiles.filter(_.getName.endsWith(".parquet"))
-      .foreach(f => spark.read.parquet(f.getPath).count())
-    if (new File(dir, "events").isDirectory) spark.read.parquet(s"$data/events").count()
-    smoke.foreach { op => releaseCaches(); op.build(spark, data, Ctx(resultsDir, ckptDir)).act() }
-    releaseCaches()
-    resetDirs()
+      .foreach(f => spark.read.parquet(f.getPath).schema)
+    if (new File(dir, "events").isDirectory) spark.read.parquet(s"$data/events").schema
     (System.nanoTime() - t0) / 1e9
   }
 
   def apply(): Unit = {
-    val setup = (1 to 3).map { i =>
+    val setup = (1 to 5).map { i =>
       if (i > 1) { spark.stop(); SparkSession.clearActiveSession(); SparkSession.clearDefaultSession() }
       setUp()
     }
-    tracer.spans.clear()
+    val tw = System.nanoTime()
+    val warmup = runPass(data, Map.empty, -1, check = false)
+    val warmupS = (System.nanoTime() - tw) / 1e9
     val te = System.nanoTime()
     val expect = expectations()
     val expectS = (System.nanoTime() - te) / 1e9
+    tracer.spans.clear()
 
+    // passes (with their checks) while the next one, as long as the last,
+    // still ends within the budget; at least one
     def loop(budget: Double, tag: String): Seq[(String, Double, Seq[Sample])] = {
-      val end = System.nanoTime() + (budget * 1e9).toLong
+      val start = System.nanoTime()
       val passes = mutable.ArrayBuffer.empty[(String, Double, Seq[Sample])]
-      var i = 0
-      while (passes.isEmpty || System.nanoTime() < end) {
-        val samples = runPass(data, expect, i)
-        val wall = samples.map(_.s).sum
-        passes += ((tag, wall, samples))
-        i += 1
+      var last = 0L
+      while (passes.isEmpty || System.nanoTime() - start + last <= (budget * 1e9).toLong) {
+        val t = System.nanoTime()
+        val samples = runPass(data, expect, passes.size)
+        passes += ((tag, samples.map(_.s).sum, samples))
+        last = System.nanoTime() - t
       }
       passes.toSeq
     }
     // a traced run spends half its budget untraced first, to price the
-    // tracing (the untraced passes are the colder ones)
+    // tracing (the untraced passes run first, so slightly colder)
     val passes =
       if (!traced) loop(seconds, "plain")
       else {
@@ -253,7 +282,7 @@ final class Run(a: Map[String, String]) {
     tracer.enabled = false
     spark.stop()
 
-    val passJson = passes.map { case (tag, wall, samples) =>
+    val passJson = (("warmup", warmup.map(_.s).sum, warmup) +: passes).map { case (tag, wall, samples) =>
       Json.obj(Seq("tag" -> Json.str(tag), "wall_s" -> Json.num(wall),
         "ops" -> Json.arr(samples.map(s => Json.obj(Seq("op" -> Json.str(s.op), "s" -> Json.num(s.s),
           "ok" -> s.ok.toString, "rows" -> s.rows.toString, "err" -> Json.str(s.err)))))))
@@ -264,6 +293,7 @@ final class Run(a: Map[String, String]) {
     write(a("out"), Json.obj(Seq(
       "setup_s" -> Json.arr(setup.map(Json.num)),
       "expect_s" -> Json.num(expectS),
+      "warmup_s" -> Json.num(warmupS),
       "cpus" -> cpus.toString,
       "passes" -> Json.arr(passJson),
       "spans" -> Json.arr(spanJson))))

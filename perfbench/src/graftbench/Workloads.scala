@@ -210,21 +210,18 @@ object Workloads {
     "d19_prefix_jaccard", "d22_containment_keep", "d18_fuzzy_clusters", "d12_semdedup")
     .map(entryOp)
 
-  /** Store lifecycle order: build, probe, the in-memory ANN and the
-    * embedding dedup ops, build+append+probe, probe,
-    * build+append+compact+probe, probe.
+  /** Store lifecycle order: build, probe, the embedding dedup op, then
+    * build+append+compact+probe (s28, which runs s25's build+append+probe
+    * with a compaction before the probe).
     */
-  val vectorStore: Seq[Op] = Seq("s23_ivf_store_build", "s24_ann_ivf_store", "s3_ann_ivf",
-    "d12_semdedup", "s25_ann_ivf_store_append", "s24_ann_ivf_store", "s28_ivf_store_compact",
-    "s24_ann_ivf_store").map(entryOp)
+  val vectorStore: Seq[Op] = Seq("s23_ivf_store_build", "s24_ann_ivf_store", "d12_semdedup",
+    "s28_ivf_store_compact").map(entryOp)
 
-  /** (ops of one pass, ops run once before measuring so the first timed
-    * op does not pay for the first JSONL write, stream or store alone).
-    */
-  def apply(name: String): (Seq[Op], Seq[Op]) = name match {
-    case "join-x10" => (joins ++ streams, Seq(joins.head, streams.head))
-    case "dedup" => (dedup, dedup.take(1))
-    case "vector-store" => (vectorStore, vectorStore.slice(2, 3))
-    case "event-stream" => (streams, streams.take(1))
+  /** The ops of one pass. */
+  def apply(name: String): Seq[Op] = name match {
+    case "join-x10" => joins ++ streams.filter(_.name == "sessionize")
+    case "dedup" => dedup
+    case "vector-store" => vectorStore
+    case "event-stream" => streams
   }
 }
