@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-close gate row (VERDICT r17 task 5): the ANN recall contracts on
   * the ADVERSARIAL embeddings shape, small and fast enough to run every
-  * round — until r18 those numbers lived only in one-round instruments
-  * (`RecallCurve`/`PoolCurve` at the 200k sf10 copy), so a recall
+  * round — until r18 those numbers lived only in one-round measurements
+  * at the 200k sf10 copy (BASELINE §16c/§17a), so a recall
   * regression on the realistic clustered shape would surface a round
   * late. Three contract rows against one exact ground truth on an
   * `ScaleUp mode=advemb` corpus (sf0.1-equivalent, ~2k vectors —
@@ -37,14 +37,7 @@ object AdvRecallGate {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/tmp/sf01advemb")
     val outPath = if (args.length > 1) args(1) else "tmp/adv_recall_gate.json"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Mains.session(defaultCpus = 32, logLevel = "ERROR")
     import graft.operators.Similarity
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

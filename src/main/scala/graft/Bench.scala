@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Driver-run benchmark: every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout.
@@ -98,46 +98,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle partitions track the DATA, not the core count: at 10× the
-    // driver's sf0.1 a fixed 32 makes every reduce partition 10× bigger
-    // (spill-bound, superlinear) — a real cluster sizes partitions so each
-    // fits in executor memory at the target SF. Default stays cpus for the
-    // driver's per-round run; the sf1 gate passes 128.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // Shuffle/spill compression codec. The r12 sf10 sweep's ONE error was
-    // a shuffle-SCRATCH disk overflow in the exact containment tier under
-    // lz4; the same query fits comfortably under zstd (~2-3× smaller
-    // shuffle files for this text-heavy data at a CPU cost that is noise
-    // next to the tier's join). Large-SF sweeps pass `zstd` here (the
-    // README's sf1/sf10 gate commands do); the driver's per-round sf0.1
-    // run keeps Spark's lz4 default so round-over-round medians stay
-    // comparable.
-    val ioCodec = sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.io.compression.codec", ioCodec)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Mains.session(defaultCpus = 32, logLevel = "ERROR")
+    val cpus = spark.sparkContext.defaultParallelism
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val ioCodec = spark.conf.get("spark.io.compression.codec")
 
     def run(df: DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
-
-    // clearCache drops the cached data; draining the operator registries
-    // releases the retained DataFrame references too (they would otherwise
-    // accumulate one analyzed plan per dedup/corpus query for the JVM's
-    // lifetime)
-    def releaseCaches(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      graft.operators.Dedup.unpersistIntermediates()
-      graft.operators.Corpus.unpersistIntermediates()
-      graft.operators.Graph.unpersistIntermediates()
-    }
 
     // dev shortcut (mirrors Verify): trailing args restrict the timed set;
     // unknown names fail fast. The driver passes no args → full suite.
@@ -209,7 +176,10 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory)
       names.foreach { name =>
-        try { run(SparkEntry.queries(name)(spark, warmDir)); releaseCaches() }
+        try {
+          run(SparkEntry.queries(name)(spark, warmDir))
+          Mains.releaseCaches(spark)
+        }
         catch { case _: Throwable => () } // warm-up only; timed passes report errors
       }
     val rnd = new scala.util.Random(42) // fixed seed: reproducible pass orders
@@ -223,7 +193,7 @@ object Bench {
       if (ledger) "5" else "3").toInt
     (1 to passes).foreach { _ =>
       rnd.shuffle(names).foreach { name =>
-        releaseCaches()
+        Mains.releaseCaches(spark)
         val t0 = System.nanoTime()
         try {
           run(SparkEntry.queries(name)(spark, sfDir))

@@ -4,8 +4,6 @@ import graft.core.{Condition, TableInfo}
 import graft.operators.{HashJoinExecutor, NestedJoinExecutor}
 import graft.sources.ParquetResolver
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end smoke of the user-facing facade — the reference README's
   * canonical usage (reference: README.md:26-75) transposed to testdata:
   * build a chained join, execute, save JSONL, pretty-print, report timings.
@@ -15,13 +13,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val resultsDir = if (args.length > 1) args(1) else "results"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.session(defaultCpus = 4, logLevel = "WARN")
     val resolver = new ParquetResolver(sfDir)
 
     val ex: HashJoinExecutor = new HashJoinExecutor(spark, resolver)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Dev utility: materialize an N×-scaled copy of a driver testdata dir so
   * the WHOLE query suite can run at 10× (the SURVEY §8 full-suite scaling
-  * gate, vs [[DryRun]]'s per-operator spot checks).
+  * gate).
   *
   * Scaling model = TPC-H's: fact tables replicate with disjoint keys,
   * fixed dimensions (region/nation) stay fixed. Each replica k offsets
@@ -169,13 +169,7 @@ object ScaleUp {
     val mode = if (args.length > 4) args(4) else "std"
     require(mode == "std" || mode == "adv" || mode == "advemb",
       s"unknown mode: $mode")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Mains.session(defaultCpus = 32, logLevel = "ERROR")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$inDir/$t.parquet")
 

@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.session(defaultCpus = 4, logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     // dev shortcut: trailing args restrict the dump to named queries;
     // unknown names fail fast — silently filtering to nothing would
@@ -30,12 +22,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // operators legitimately persist shared intermediates; drop them
-      // between queries so 60+ pipelines don't stack up in one JVM — and
-      // drain the operator registries so the retained plan references go too
-      spark.sharedState.cacheManager.clearCache()
-      graft.operators.Dedup.unpersistIntermediates()
-      graft.operators.Corpus.unpersistIntermediates()
-      graft.operators.Graph.unpersistIntermediates()
+      // between queries so 60+ pipelines don't stack up in one JVM
+      Mains.releaseCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

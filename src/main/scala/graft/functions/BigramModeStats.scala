@@ -21,14 +21,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, St
   * one linear pass per row inside the scan's projection; the query
   * becomes shuffle-free.
   *
-  * SEMANTICS match the aggregation formulation exactly:
-  *  - grouping key ≡ `bigramList`'s `concat_ws(" ", slice(toks, i, 2))`
+  * SEMANTICS match the aggregation formulation exactly (it is kept as
+  * the test-scope oracle in CorpusPropertiesSpec):
+  *  - grouping key ≡ the `concat_ws(" ", slice(toks, i, 2))` bigram
   *    string (space-joined; injective for space-free tokens, and NULL
   *    elements are skipped by concat_ws — reproduced verbatim so even a
   *    null-bearing array groups identically);
   *  - `total` = bigram count = Σ per-bigram counts;
-  *  - < 2 tokens → (0, 0), matching the empty-`bigramList` explode_outer
-  *    + count(bg) path.
+  *  - < 2 tokens → (0, 0), matching the empty bigram list's
+  *    explode_outer + count(bg) path.
   * A NULL input array yields NULL (the caller coalesces to (0, 0) — the
   * old plan's null-text path also lands at top_bigram_ppm = 0).
   *

@@ -69,20 +69,6 @@ object TextFunctions {
         lit(0L),
         (acc, c) => (acc * 31 + c) % HashP))
 
-  /** Non-distinct word bigram list (repetition metrics need multiplicity —
-    * [[shingles]] deduplicates, which is right for Jaccard but would hide
-    * repeats here). The top-bigram metric itself lives in
-    * `Corpus.repetitionProfile`: counting the mode of this list per row is
-    * O(distinct × total) in interpreted lambdas (measured 15 s at sf0.1,
-    * and unbounded for book-sized docs), so it runs as a two-stage
-    * codegen'd aggregation instead of a Column expression.
-    */
-  private[graft] def bigramList(toks: Column): Column =
-    when(size(toks) >= 2,
-      transform(sequence(lit(1), size(toks) - 1),
-        i => concat_ws(" ", slice(toks, i, lit(2)))))
-      .otherwise(array().cast("array<string>"))
-
   /** Distinct-token fraction in integer ppm (1e6 = every token unique);
     * 0 for empty docs. The complement of Gopher's repeated-token filter.
     */

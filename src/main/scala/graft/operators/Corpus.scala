@@ -530,68 +530,31 @@ object Corpus {
     * fraction, and the symbol-character fraction. Output
     * `(doc_id, top_bigram_ppm, distinct_token_ppm, symbol_ppm)`.
     *
-    * The top-bigram mode is computed as a two-stage aggregation — explode
-    * bigrams, count per (doc, bigram) with map-side partials, then
-    * max/total per doc — NOT as a per-row array expression: counting a
-    * mode inside a Catalyst lambda is O(distinct × total) interpreted work
-    * per document (measured 15 s at sf0.1 vs ~2 s for this shape, and
-    * unbounded for book-sized docs), while the aggregation is codegen'd,
-    * linear, and bounded per task regardless of document length. The two
-    * cheap per-row ratios ride along through `min()` (they are constant
-    * per doc).
+    * The top-bigram mode is a per-row reduction (every bigram of a
+    * document comes from that one row), computed by the
+    * [[graft.functions.BigramModeStats]] kernel inside the scan's
+    * projection, so the query is shuffle-free. It is NOT a per-row
+    * Catalyst lambda: counting a mode there is O(distinct × total)
+    * interpreted work per document (measured 15 s at sf0.1, unbounded for
+    * book-sized docs); the kernel is O(total) compiled work.
+    * CorpusPropertiesSpec pins it bit-identical to the two-exchange
+    * aggregation formulation, incl. null/empty/single-token docs.
     */
-  def repetitionProfile(docs: DataFrame, id: Column, text: Column): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_NO_BIGRAM_MODE").contains("1"))
-      repetitionProfileAgg(docs, id, text)
-    else {
-      // r18 OPT (guide §2.4): every bigram of a document is generated from
-      // that one row, so the mode is a per-row reduction — the
-      // [[graft.functions.BigramModeStats]] kernel computes it inside the
-      // scan's projection and the query is SHUFFLE-FREE (the aggregation
-      // formulation below ran two corpus-sized exchanges). Output and
-      // grouping semantics are bit-identical (spec-pinned vs the
-      // aggregation arm, incl. null/empty/single-token docs).
-      import org.apache.spark.sql.graft.ColumnBridge
-      val bm = ColumnBridge.column(graft.functions.BigramModeStats(
-        ColumnBridge.expression(tokens(text))))
-      docs.select(id.as("doc_id"),
-          distinctTokenPpm(text).as("distinct_token_ppm"),
-          symbolPpm(text).as("symbol_ppm"),
-          coalesce(bm, struct(lit(0L).as("maxc"), lit(0L).as("total"))).as("_bm"))
-        .select(col("doc_id"),
-          when(col("_bm.total") === 0, lit(0L))
-            .otherwise(
-              floor(col("_bm.maxc") * 1000000L / col("_bm.total")).cast("long"))
-            .as("top_bigram_ppm"),
-          col("distinct_token_ppm"), col("symbol_ppm"))
-    }
-
-  /** The aggregation formulation of [[repetitionProfile]] — the
-    * `SPARK_GRAFT_NO_BIGRAM_MODE=1` A/B arm (and the shape to fall back
-    * to if a corpus ever needs the mode computed off-row).
-    */
-  private[operators] def repetitionProfileAgg(
-      docs: DataFrame, id: Column, text: Column): DataFrame =
+  def repetitionProfile(docs: DataFrame, id: Column, text: Column): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val bm = ColumnBridge.column(graft.functions.BigramModeStats(
+      ColumnBridge.expression(tokens(text))))
     docs.select(id.as("doc_id"),
-        // materialize the per-doc ratios BEFORE the explode: expressions
-        // sharing a select with a generator end up in the Project above
-        // the Generate and are re-evaluated once per exploded row
-        // (measured: ~200× re-tokenization, 22 s instead of 2 s at sf0.1)
-        distinctTokenPpm(text).as("d_ppm"), symbolPpm(text).as("s_ppm"),
-        text.as("_text"))
-      .select(col("doc_id"), col("d_ppm"), col("s_ppm"),
-        explode_outer(bigramList(tokens(col("_text")))).as("bg"))
-      .groupBy(col("doc_id"), col("bg"))
-      .agg(count(col("bg")).as("cnt"), // count() skips the null bg of <2-token docs
-        min("d_ppm").as("d_ppm"), min("s_ppm").as("s_ppm"))
-      .groupBy(col("doc_id"))
-      .agg(max("cnt").as("maxc"), sum("cnt").as("total"),
-        min("d_ppm").as("distinct_token_ppm"), min("s_ppm").as("symbol_ppm"))
+        distinctTokenPpm(text).as("distinct_token_ppm"),
+        symbolPpm(text).as("symbol_ppm"),
+        coalesce(bm, struct(lit(0L).as("maxc"), lit(0L).as("total"))).as("_bm"))
       .select(col("doc_id"),
-        when(col("total") === 0, lit(0L))
-          .otherwise(floor(col("maxc") * 1000000L / col("total")).cast("long"))
+        when(col("_bm.total") === 0, lit(0L))
+          .otherwise(
+            floor(col("_bm.maxc") * 1000000L / col("_bm.total")).cast("long"))
           .as("top_bigram_ppm"),
         col("distinct_token_ppm"), col("symbol_ppm"))
+  }
 
   /** The Gopher paper's required stop words (Rae et al. 2021, table A1
     * rule 8): a document must contain at least `minRequiredStops` DISTINCT

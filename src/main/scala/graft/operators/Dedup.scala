@@ -29,19 +29,8 @@ object Dedup {
   // clear the whole cache between queries).
   private val intermediates = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
 
-  // A/B hatch (round-2 candidate #5 measurement): `SPARK_GRAFT_CACHE_FORCE=
-  // ser` parks every dedup intermediate MEMORY_AND_DISK_SER instead of the
-  // deserialized default — note Dataset persists store COLUMNAR CachedBatch
-  // byte arrays either way (unlike the RDD-level checkpoint blocks behind
-  // SPARK_GRAFT_CKPT_FORCE), so the levels differ only in whether those
-  // batches are kept serialized in memory; sys.props first (spec seam).
   private[graft] def cached(df: DataFrame): DataFrame = {
-    val level = sys.props.get("SPARK_GRAFT_CACHE_FORCE")
-      .orElse(sys.env.get("SPARK_GRAFT_CACHE_FORCE")) match {
-      case Some("ser") => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      case _ => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    }
-    val p = df.persist(level)
+    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     intermediates.add(p)
     p
   }

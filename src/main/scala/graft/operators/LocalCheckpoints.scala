@@ -30,15 +30,6 @@ private[graft] object LocalCheckpoints {
   private val rdds = new java.util.concurrent.ConcurrentLinkedQueue[
     (String, org.apache.spark.rdd.RDD[_])]
 
-  /** A/B escape hatch: `SPARK_GRAFT_CKPT_FORCE=ser|deser` overrides the
-    * per-site `serialized` choice everywhere (one binary, both arms —
-    * the bench-evidence protocol); sys.props first so a spec can flip it
-    * per-case inside one JVM. Unset = honor the call site.
-    */
-  private def forcedMode: Option[String] =
-    sys.props.get("SPARK_GRAFT_CKPT_FORCE")
-      .orElse(sys.env.get("SPARK_GRAFT_CKPT_FORCE"))
-
   /** Eagerly localCheckpoint `df` and register the backing RDD under
     * `family` (the operator object that will release it).
     *
@@ -53,13 +44,8 @@ private[graft] object LocalCheckpoints {
     */
   def apply(family: String, serialized: Boolean = false)
       (df: DataFrame): DataFrame = {
-    val wantSer = forcedMode match {
-      case Some("ser") => true
-      case Some("deser") => false
-      case _ => serialized
-    }
     val cp =
-      if (wantSer) df.localCheckpoint(true,
+      if (serialized) df.localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       else df.localCheckpoint()
     cp.queryExecution.analyzed.foreach {

@@ -694,21 +694,8 @@ object Similarity {
     }
   }
 
-  /** A/B + fallback escape hatch: `SPARK_GRAFT_NO_TOPDOT=1` forces the
-    * exchange formulations everywhere (used for the committed before/after
-    * bench evidence and before-plans; read once at class init).
-    */
-  private val disableTopDot = sys.env.get("SPARK_GRAFT_NO_TOPDOT").contains("1")
-
-  /** Narrower hatch: forces only [[lloydLoop]]'s join formulation (the
-    * k-means A/B arm), leaving the assignment fast paths on.
-    */
-  private val disableTopDotKmeans =
-    sys.env.get("SPARK_GRAFT_NO_TOPDOT_KMEANS").contains("1")
-
   private[operators] def collectCentModel(cents: DataFrame): Option[CentModel] = {
     import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
-    if (disableTopDot) return None
     val idType = cents.schema("c_id").dataType
     // only integral id types: the model sorts by the long-cast id, which
     // must agree with the exchange path's native `col(idc).asc` ordering
@@ -1218,7 +1205,7 @@ object Similarity {
     * replays bit-for-bit; with `massPpm` set the query side ranks ALL
     * centroids flat (the budget needs every list's mass anyway), so
     * `hierarchical` then only accelerates the STORED-row assignment.
-    * Measured (PoolCurve, BASELINE §17a, 200k-vector corpora): residual
+    * Measured (BASELINE §17a, 200k-vector corpora): residual
     * + 15% mass + 50% pool reads 0.92 on the adversarial corpus where
     * every fixed config in the §16c ladder sat ≤ 0.38 (and 1.00 on
     * uniform sf10), at a wall flat across the whole fraction sweep
@@ -1926,8 +1913,8 @@ object Similarity {
     // (trained family 12.6 → 13.3 s at sf0.1), above it the removed
     // corpus-sized exchange wins (d12b 4.18 → 3.65 s at sf1, and the gap
     // is the corpus:model size ratio at 100 TB). Fallback (ragged or
-    // oversized seed sets, or SPARK_GRAFT_NO_TOPDOT=1): the join
-    // formulation verbatim below. Results identical on every path.
+    // oversized seed sets): the join formulation verbatim below. Results
+    // identical on every path.
     val dims = seeds.map(_._2.length).distinct
     // sys.props first so the equivalence spec can force either path in
     // one JVM (the oracle corpus sits below the gate, so the fast path's
@@ -1935,14 +1922,9 @@ object Similarity {
     val tdMinBytes = sys.props.get("SPARK_GRAFT_KMEANS_TOPDOT_BYTES")
       .orElse(sys.env.get("SPARK_GRAFT_KMEANS_TOPDOT_BYTES"))
       .map(_.toLong).getOrElse(4L * 1024 * 1024)
-    val useTopDot = !disableTopDot && !disableTopDotKmeans &&
-      seeds.nonEmpty && seeds.length <= MaxInlineCentroids &&
+    val useTopDot = seeds.nonEmpty && seeds.length <= MaxInlineCentroids &&
       dims.length == 1 &&
       pts.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(tdMinBytes)
-    if (sys.env.get("PROBE_KMEANS_GATE").contains("1"))
-      println(s"lloydLoop gate: stats=" +
-        s"${pts.queryExecution.optimizedPlan.stats.sizeInBytes} " +
-        s"min=$tdMinBytes useTopDot=$useTopDot")
     val groups = seeds.map(_._1._1).distinct.sorted
     val cidStride = if (seeds.isEmpty) 1L else seeds.map(_._1._2).max + 1
     val dim = dims.headOption.getOrElse(0)

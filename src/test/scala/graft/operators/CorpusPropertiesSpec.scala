@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.functions.TextFunctions.{distinctTokenPpm, symbolPpm, tokens}
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -250,6 +252,41 @@ class CorpusPropertiesSpec extends AnyFunSuite {
     }
   }
 
+  /** Non-distinct word bigram list (the top-bigram mode needs
+    * multiplicity; `shingles` deduplicates).
+    */
+  private def bigramList(toks: Column): Column =
+    when(size(toks) >= 2,
+      transform(sequence(lit(1), size(toks) - 1),
+        i => concat_ws(" ", slice(toks, i, lit(2)))))
+      .otherwise(array().cast("array<string>"))
+
+  /** The aggregation formulation of [[Corpus.repetitionProfile]], the
+    * oracle its per-row kernel must match: explode bigrams, count per
+    * (doc, bigram), then max/total per doc.
+    */
+  private def repetitionProfileAgg(
+      docs: DataFrame, id: Column, text: Column): DataFrame =
+    docs.select(id.as("doc_id"),
+        // materialize the per-doc ratios BEFORE the explode: expressions
+        // sharing a select with a generator end up in the Project above
+        // the Generate and are re-evaluated once per exploded row
+        distinctTokenPpm(text).as("d_ppm"), symbolPpm(text).as("s_ppm"),
+        text.as("_text"))
+      .select(col("doc_id"), col("d_ppm"), col("s_ppm"),
+        explode_outer(bigramList(tokens(col("_text")))).as("bg"))
+      .groupBy(col("doc_id"), col("bg"))
+      .agg(count(col("bg")).as("cnt"), // count() skips the null bg of <2-token docs
+        min("d_ppm").as("d_ppm"), min("s_ppm").as("s_ppm"))
+      .groupBy(col("doc_id"))
+      .agg(max("cnt").as("maxc"), sum("cnt").as("total"),
+        min("d_ppm").as("distinct_token_ppm"), min("s_ppm").as("symbol_ppm"))
+      .select(col("doc_id"),
+        when(col("total") === 0, lit(0L))
+          .otherwise(floor(col("maxc") * 1000000L / col("total")).cast("long"))
+          .as("top_bigram_ppm"),
+        col("distinct_token_ppm"), col("symbol_ppm"))
+
   test("r18 OPT: repetitionProfile kernel ≡ aggregation formulation " +
       "(15 random corpora incl. null/empty/single-token/looped docs)") {
     val wordGen = Gen.oneOf("a", "b", "cc", "dd", "x1", "!!", "")
@@ -266,7 +303,7 @@ class CorpusPropertiesSpec extends AnyFunSuite {
       def run(d: org.apache.spark.sql.DataFrame) =
         d.as[(Long, Long, Option[Long], Option[Long])].collect().sortBy(_._1).toSeq
       val fast = run(Corpus.repetitionProfile(df, col("doc_id"), col("text")))
-      val agg = run(Corpus.repetitionProfileAgg(df, col("doc_id"), col("text")))
+      val agg = run(repetitionProfileAgg(df, col("doc_id"), col("text")))
       assert(fast == agg, s"case $i")
     }
   }

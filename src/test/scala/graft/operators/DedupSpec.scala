@@ -818,41 +818,26 @@ class DedupSpec extends AnyFunSuite {
     assert(out(2L) == "c" && out(3L) == "d")
   }
 
-  test("SPARK_GRAFT_CACHE_FORCE=ser flips the intermediate persist level, results identical") {
-    // pins the A/B instrument behind the r18 cache-level measurement
-    // (MEMORY_AND_DISK_SER measured 1.30x SLOWER on d3 at sf10 — Dataset
-    // caches are columnar batches either way, so the deserialized default
-    // stays); if the hatch stopped flipping the level, a future A/B would
-    // compare an arm against itself
+  test("default persist level is deserialized on the RDDs a run adds") {
+    // the r18 cache-level A/B measured MEMORY_AND_DISK_SER 1.30x SLOWER on
+    // d3 at sf10 (Dataset caches are columnar batches either way), so
+    // Dedup.cached parks MEMORY_AND_DISK. Only RDDs this run persisted are
+    // inspected: caches left by earlier tests must not decide the outcome.
     val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z w q"))
       .toDF("doc_id", "text")
-    def run(): Set[(Long, Long)] = {
-      val out = Dedup.minhashLshPairs(docs, col("doc_id"), col("text"),
-        n = 3, numHashes = 16, bands = 4, minJaccard = 0.5)
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      out
-    }
-    val key = "SPARK_GRAFT_CACHE_FORCE"
-    val levels = scala.collection.mutable.Map[String, org.apache.spark.storage.StorageLevel]()
-    def levelsOfCached(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach { r =>
-        levels(r.getStorageLevel.description) = r.getStorageLevel }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Dedup.minhashLshPairs(docs, col("doc_id"), col("text"),
+      n = 3, numHashes = 16, bands = 4, minJaccard = 0.5)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    val added = spark.sparkContext.getPersistentRDDs.filter {
+      case (id, _) => !before.contains(id) }
     try {
-      sys.props(key) = "ser"
-      val serOut = run()
-      levelsOfCached()
-      assert(levels.values.exists(!_.deserialized),
-        s"force=ser must park serialized blocks, saw ${levels.keys}")
-      Dedup.unpersistIntermediates(blocking = true)
-      levels.clear()
-      sys.props.remove(key)
-      val deserOut = run()
-      levelsOfCached()
-      assert(levels.values.forall(_.deserialized),
-        s"default must park deserialized blocks, saw ${levels.keys}")
-      Dedup.unpersistIntermediates(blocking = true)
-      assert(serOut === deserOut)
-      assert(serOut === Set((1L, 2L)))
-    } finally sys.props.remove(key)
+      assert(added.nonEmpty, "the run must persist its intermediates")
+      added.values.foreach { r =>
+        assert(r.getStorageLevel.deserialized,
+          s"RDD ${r.id} parked ${r.getStorageLevel.description}")
+      }
+      assert(out === Set((1L, 2L)))
+    } finally Dedup.unpersistIntermediates(blocking = true)
   }
 }

@@ -7,14 +7,11 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the checkpoint storage-level contract and its A/B hatch
-  * (`SPARK_GRAFT_CKPT_FORCE`) — the instrument behind the r18 ser/deser
-  * measurement (serialized edges read FLAT at sf0.1: d18 solo 5-pass
-  * medians ser 4.80 vs deser 5.31, c9 3.11 vs 3.15 — so the call sites
-  * keep `serialized = true`, which buys the sf10 heap floor for free).
-  * If the hatch silently stopped flipping the storage level, a future
-  * A/B would compare an arm against itself and read "flat" no matter
-  * what the trade really costs — that is what this spec exists to catch.
+/** Pins the checkpoint storage-level contract: each call site's
+  * `serialized` argument decides the level. The r18 ser/deser measurement
+  * (serialized edges read FLAT at sf0.1: d18 solo 5-pass medians ser 4.80
+  * vs deser 5.31, c9 3.11 vs 3.15) is why the large-edge call sites keep
+  * `serialized = true`, which buys the sf10 heap floor for free.
   */
 class LocalCheckpointsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -25,65 +22,25 @@ class LocalCheckpointsSpec extends AnyFunSuite {
       case l: LogicalRDD => l.rdd.getStorageLevel
     }.getOrElse(fail("checkpointed frame has no LogicalRDD"))
 
-  private def withForce[A](mode: Option[String])(body: => A): A = {
-    val key = "SPARK_GRAFT_CKPT_FORCE"
-    val old = sys.props.get(key)
-    try {
-      mode match {
-        case Some(m) => sys.props(key) = m
-        case None => sys.props.remove(key)
-      }
-      body
-    } finally {
-      old match {
-        case Some(v) => sys.props(key) = v
-        case None => sys.props.remove(key)
-      }
-    }
-  }
-
   private def sample: DataFrame =
     (1L to 50L).map(i => (i, i % 7)).toDF("doc_a", "doc_b")
 
   test("call-site storage levels honored when the hatch is unset") {
-    withForce(None) {
-      val ser = LocalCheckpoints("ckpt-spec", serialized = true)(sample)
-      val deser = LocalCheckpoints("ckpt-spec")(sample)
-      assert(level(ser) === StorageLevel.MEMORY_AND_DISK_SER)
-      assert(level(deser).deserialized,
-        "default checkpoint must park deserialized blocks")
-      LocalCheckpoints.release("ckpt-spec")
-    }
+    val ser = LocalCheckpoints("ckpt-spec", serialized = true)(sample)
+    val deser = LocalCheckpoints("ckpt-spec")(sample)
+    assert(level(ser) === StorageLevel.MEMORY_AND_DISK_SER)
+    assert(level(deser).deserialized,
+      "default checkpoint must park deserialized blocks")
+    LocalCheckpoints.release("ckpt-spec")
   }
 
-  test("SPARK_GRAFT_CKPT_FORCE flips the storage level both ways") {
-    withForce(Some("deser")) {
-      val cp = LocalCheckpoints("ckpt-spec", serialized = true)(sample)
-      assert(level(cp).deserialized,
-        "force=deser must override a serialized call site")
-      LocalCheckpoints.release("ckpt-spec")
-    }
-    withForce(Some("ser")) {
-      val cp = LocalCheckpoints("ckpt-spec")(sample)
-      assert(level(cp) === StorageLevel.MEMORY_AND_DISK_SER,
-        "force=ser must override a deserialized call site")
-      LocalCheckpoints.release("ckpt-spec")
-    }
-  }
-
-  test("clusterPairs results are identical under both forced arms") {
+  test("clusterPairs expected output on the default arm") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L))
       .toDF("doc_a", "doc_b")
-    def run(): Set[(Long, Long)] = {
-      val out = Dedup.clusterPairs(pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      Dedup.unpersistIntermediates()
-      out
-    }
-    val serOut = withForce(Some("ser"))(run())
-    val deserOut = withForce(Some("deser"))(run())
-    assert(serOut === deserOut)
-    assert(serOut === Set(
+    val out = Dedup.clusterPairs(pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    Dedup.unpersistIntermediates()
+    assert(out === Set(
       (1L, 1L), (2L, 1L), (3L, 1L),
       (10L, 10L), (11L, 10L),
       (20L, 20L), (21L, 20L), (22L, 20L)))

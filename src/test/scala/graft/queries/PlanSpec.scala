@@ -143,8 +143,8 @@ class PlanSpec extends AnyFunSuite {
     // r18 OPT: the top-bigram mode is a per-row reduction — the
     // BigramModeStats kernel runs in the scan's projection, so the two
     // corpus-sized aggregation exchanges of the old formulation are gone
-    // (that shape survives as repetitionProfileAgg, spec-pinned equal in
-    // CorpusPropertiesSpec). The O(distinct×total) interpreted per-row
+    // (that shape survives as CorpusPropertiesSpec's test-scope oracle,
+    // pinned equal to the kernel). The O(distinct×total) interpreted per-row
     // array-lambda alternative remains rejected — the kernel is O(total)
     // compiled.
     assert(plan.contains("graft_bigram_mode_stats"),

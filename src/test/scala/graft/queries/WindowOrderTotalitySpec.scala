@@ -169,10 +169,6 @@ class WindowOrderTotalitySpec extends AnyFunSuite {
       "operators/AsOfJoin.scala" -> 1,
       "operators/Corpus.scala" -> 7,
       "operators/Dedup.scala" -> 8,
-      // dev instrument replicating Dedup.prefixJaccardPairs' ranked-prefix
-      // window verbatim for stage-at-a-time timing (r18 OPT) — same
-      // UNIQUE (doc_id, df asc, s asc) total order as the operator's
-      "PrefixProfile.scala" -> 1,
       "operators/Layout.scala" -> 3,
       "operators/Search.scala" -> 3,
       "operators/Similarity.scala" -> 26,
