@@ -1,7 +1,16 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
+import org.json4s.jackson.Serialization
 
 /** The PERSISTED form of the IVF / IVF×PQ index — the missing piece
   * between [[Similarity]]'s in-flight ANN tiers and a 100 TB deployment.
@@ -28,10 +37,11 @@ import org.apache.spark.sql.functions._
   *    reference's partition-restricted DSE direct join
   *    (reference: hash_join.py:811-818 gates on partition-key coverage;
   *    here the coarse quantizer IS the partition key).
-  *  - the index is SELF-DESCRIBING: `centroids/` (the coarse quantizer),
-  *    `meta/` (assignment mode + PQ config), and for PQ stores
-  *    `codebook/` ride beside `lists/`, so a probe needs nothing but the
-  *    store path — the same artifact discipline as
+  *  - the index is SELF-DESCRIBING: `centroids/` (the coarse quantizer)
+  *    and, for PQ stores, `codebook/` ride beside `lists/`, and the
+  *    completeness marker IS the manifest (assignment mode + PQ config,
+  *    per-list sizes, payload histograms — [[StoreManifest]]), so a probe
+  *    needs nothing but the store path — the same artifact discipline as
   *    [[BloomJoin.sketchBytes]].
   *  - [[appendToIvfIndex]] is continuous ingestion: an increment is
   *    assigned against the STORED centroids (the model stays fixed —
@@ -50,10 +60,11 @@ object VectorIndex {
 
   /** Bump when the ASSIGNMENT SEMANTICS change (centroid pick, tie-break,
     * super-geometry, PQ encode) in a way that makes previously-written
-    * lists disagree with what the same config would write today — cached
-    * store paths embed it, so a semantics change can never silently probe
-    * a stale store built by older code (`meta/` holds the config, but
-    * only the version names the code generation).
+    * lists disagree with what the same config would write today, or when
+    * the store LAYOUT changes — cached store paths embed it, so a
+    * semantics change can never silently probe a stale store built by
+    * older code (the manifest holds the config, but only the version
+    * names the code generation).
     *
     * This includes EXPRESSION-semantics changes that affect assignment
     * (e.g. [[graft.functions.UnitMicros]]'s quantization or NaN
@@ -86,40 +97,45 @@ object VectorIndex {
     * multiplies anywhere, closing the last FMA-contraction freedom.
     * Every stored unit vector, list assignment, and PQ code quantizes
     * on the new grid, so all stores rebuild.
-    */
-  val FormatVersion = 5
-
-  /** Marker written LAST: a store is only probeable once fully written
-    * (a killed build leaves no marker and the probe fails loudly).
     *
-    * All marker operations go through the Hadoop FileSystem API — like
-    * [[listManifest]] — so completeness works unchanged when the store
-    * path is `hdfs://`/`s3a://` (the module's design point). A
-    * `java.nio.file` marker would live on the DRIVER'S local disk for
-    * any non-local store: every probe on another node would reject a
-    * good store, and the compaction marker-drop protocol would protect
-    * nothing.
+    * v6: the store's bookkeeping moved into the completeness marker,
+    * which became a JSON manifest ([[StoreManifest]]: config, per-list sizes,
+    * requested payload histograms) in place of the `meta/`, `sizes/` and
+    * `stats/` parquet artifacts. The grid is v5's. The bump makes the
+    * version alone name the layout: every servable store carries a
+    * manifest and was written by the mass-routed (r18) writer, and an
+    * older store — an empty marker — is rebuilt by [[ensureIvfIndex]]
+    * and rejected by probes and appends.
+    */
+  val FormatVersion = 6
+
+  /** The completeness marker, which IS the store manifest
+    * ([[StoreManifest]]): one small JSON file at the store root, written
+    * LAST, so a killed build leaves no manifest and the probe fails
+    * loudly. Every manifest operation goes through the Hadoop FileSystem
+    * API, like [[listManifest]], so it works unchanged on `hdfs://` /
+    * `s3a://` store paths (a `java.nio.file` marker would live on the
+    * DRIVER'S disk, and every probe on another node would reject a good
+    * store).
     */
   private val OkMarker = "_GRAFT_IVF_STORE_OK"
 
-  /** Internal routing columns, named in ONE place so the write path
-    * ([[routeToLists]]'s `_f`) and compaction ([[compactIvfIndex]]'s
-    * `_bin`) can never drift from the payload-name validation: a payload
-    * column shadowing either would be silently replaced-and-dropped by
-    * the corresponding `withColumn(...).drop(...)` rewrite, removing it
-    * from every rewritten row.
+  /** The internal routing column of [[routeToLists]] (build, append and
+    * compaction), named in ONE place so it can never drift from the
+    * payload-name validation: a payload column shadowing it would be
+    * silently replaced-and-dropped by the `withColumn(...).drop(...)`
+    * rewrite, removing it from every rewritten row.
     */
-  private val BuildRouteCol = "_f"
-  private val CompactRouteCol = "_bin"
+  private val RouteCol = "_f"
 
   /** Every column name the store or its probe plans introduce — a payload
     * column colliding with any of these must be rejected at BUILD time
     * (a payload named `q_id` would make every probe die on an ambiguous
-    * column; `_f`/`_bin` would be clobbered by write/compaction routing;
+    * column; `_f` would be clobbered by the write routing;
     * `_vu`/`_qu`/`_ud` by the probe's unit-micros rank columns).
     */
   private val ReservedNames = Set("vec_id", "v", "c_id", "codes",
-    BuildRouteCol, CompactRouteCol,
+    RouteCol,
     "q_id", "qv", "cos", "cos_ud", "rn", "lut", "est", "ern",
     "_vu", "_qu", "_ud")
 
@@ -128,133 +144,154 @@ object VectorIndex {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
-  private def markerPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, OkMarker)
+  private def markerPath(path: String) = new Path(path, OkMarker)
 
-  /** True iff `path` holds a completely written store. */
+  /** True iff `path` holds a completely written store (its manifest). */
   def isComplete(path: String): Boolean = {
     val m = markerPath(path)
     m.getFileSystem(hadoopConf()).exists(m)
   }
 
-  /** Drop the completeness marker — the FIRST statement of any store
-    * mutation, so a concurrent probe can never read a half-rewritten
-    * artifact as complete.
+  /** Drop the manifest — the FIRST statement of any store rewrite, so a
+    * concurrent probe never reads a half-rewritten artifact as complete.
     */
   private def dropMarker(path: String): Unit = {
     val m = markerPath(path)
     m.getFileSystem(hadoopConf()).delete(m, false)
   }
 
-  /** (Re)create the completeness marker — written LAST. */
-  private def putMarker(path: String): Unit = {
-    val m = markerPath(path)
-    m.getFileSystem(hadoopConf()).create(m, true).close()
-  }
-
-  /** Index configuration, persisted in `meta/` beside the lists so a
-    * probe re-derives the exact assignment geometry from the store alone.
-    * `payload` names the metadata columns stored inline with each vector
-    * (empty = none) — recorded so [[appendToIvfIndex]] selects the same
-    * columns from every increment and a schema drift fails loudly at
-    * append time, not silently at probe time. `version` is the
-    * [[FormatVersion]] the store was BUILT under — persisted so a probe
-    * by a newer code generation rejects the store loudly instead of
-    * assigning queries with semantics the stored lists were never filed
-    * under (the path convention in the query layer embeds the version
-    * too, but the STORE must carry its own: caller-supplied paths don't).
+  /** One payload column's per-(list, value) histogram: its type
+    * (`DataType.json`) and one `{c_id, sval, n_list}` row per pair as
+    * Spark's JSON writer rendered it. Read back by Spark's JSON reader
+    * under that type ([[histogramDf]]), values keep the column's type, so
+    * a probe's `statsValues` match exactly the rows they match in lists.
     */
-  private case class Meta(
-      hierarchical: Boolean, superStride: Int, sProbe: Int,
-      pq: Boolean, numSubspaces: Int, numCodes: Int,
-      payload: Seq[String], version: Int, pqResidual: Boolean = false)
+  private case class Histogram(dataType: String, rows: List[JValue])
 
-  private def writeMeta(spark: SparkSession, path: String, m: Meta): Unit = {
-    import spark.implicits._
-    Seq((m.hierarchical, m.superStride, m.sProbe, m.pq, m.numSubspaces,
-      m.numCodes, m.payload.mkString(","), m.version, m.pqResidual))
-      .toDF("hierarchical", "super_stride", "s_probe", "pq", "num_subspaces",
-        "num_codes", "payload", "format_version", "pq_residual")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+  /** The counts a manifest carries, taken from the lists ACTUALLY WRITTEN
+    * ([[countLists]]): `n_list` per list id and the requested histograms
+    * — config-sized metadata like the centroids, so no mass budget pays a
+    * corpus pass at probe time.
+    */
+  private case class Counts(sizes: Map[String, Long],
+      stats: Map[String, Histogram]) {
+    def listSizes: Seq[(Long, Long)] =
+      sizes.toSeq.map { case (c, n) => (c.toLong, n) }.sortBy(_._1)
   }
 
-  private def readMeta(spark: SparkSession, path: String,
-      requireCurrent: Boolean = true): Meta = {
-    val df = spark.read.parquet(s"$path/meta")
-    val fields = df.schema.fieldNames.toSet
-    val r = df.collect().head
-    val meta = Meta(r.getAs[Boolean]("hierarchical"), r.getAs[Int]("super_stride"),
-      r.getAs[Int]("s_probe"), r.getAs[Boolean]("pq"),
-      r.getAs[Int]("num_subspaces"), r.getAs[Int]("num_codes"),
-      if (fields("payload"))
-        r.getAs[String]("payload").split(",").toSeq.filter(_.nonEmpty)
-      else Nil,
-      // a meta without the field predates version-stamping — its lists
-      // were filed under an earlier assignment-semantics generation
-      if (fields("format_version")) r.getAs[Int]("format_version") else 1,
-      // pre-r18 PQ stores hold RAW-space codes (the field didn't exist)
-      if (fields("pq_residual")) r.getAs[Boolean]("pq_residual") else false)
-    if (requireCurrent) require(meta.version == FormatVersion,
+  /** The store manifest, so a probe re-derives the exact assignment
+    * geometry from the store alone. `version` is the [[FormatVersion]]
+    * the store was BUILT under — a probe by a newer code generation
+    * rejects the store loudly instead of assigning queries with
+    * semantics the stored lists were never filed under (the query
+    * layer's paths embed the version too, but caller-supplied paths
+    * don't). `payload` names the metadata columns stored inline with
+    * each vector, so [[appendToIvfIndex]] selects the same columns from
+    * every increment and a schema drift fails loudly at append time.
+    */
+  private case class StoreManifest(
+      version: Int, hierarchical: Boolean, superStride: Int, sProbe: Int,
+      pq: Boolean, numSubspaces: Int, numCodes: Int, pqResidual: Boolean,
+      payload: List[String], counts: Counts)
+
+  private implicit val jsonFormats: Formats = DefaultFormats.withBigDecimal
+
+  /** The manifest at `path`, or why none is servable: no store (no
+    * marker), a store of generation ≤ 5 (an EMPTY marker — what every
+    * earlier generation wrote), or a manifest that fails its checksum or
+    * does not parse (damaged — the write protocol can't produce it). Any
+    * other filesystem error PROPAGATES: answering "not servable" to a
+    * transient IO hiccup would trigger a full index rebuild.
+    */
+  private def loadManifest(path: String): Either[String, StoreManifest] = {
+    val m = markerPath(path)
+    val fs = m.getFileSystem(hadoopConf())
+    def damaged(why: String) = s"the manifest of the store at $path is " +
+      s"damaged ($why) — rebuild with writeIvfIndex or ensureIvfIndex"
+    val text =
+      try {
+        val in = fs.open(m)
+        try Right(new String(in.readAllBytes(), UTF_8)) finally in.close()
+      } catch {
+        case _: java.io.FileNotFoundException => Left(
+          s"no completed IVF store at $path — build with writeIvfIndex")
+        case _: org.apache.hadoop.fs.ChecksumException =>
+          Left(damaged("checksum mismatch"))
+      }
+    text.flatMap {
+      case "" => Left(s"store at $path was built under assignment-" +
+        "semantics generation ≤ 5 (its completeness marker carries no " +
+        s"manifest), this code is generation $FormatVersion — rebuild " +
+        "with writeIvfIndex or ensureIvfIndex")
+      case t => scala.util.Try(Serialization.read[StoreManifest](t))
+        .toEither.left.map(e => damaged(e.getClass.getSimpleName))
+    }
+  }
+
+  /** The manifest of a complete store of THIS code's generation — every
+    * probe's and mutation's precondition — or an
+    * `IllegalArgumentException` naming `path`.
+    */
+  private def manifestOf(path: String): StoreManifest = {
+    val m = loadManifest(path).fold(e => throw new IllegalArgumentException(e),
+      identity)
+    require(m.version == FormatVersion,
       s"store at $path was built under assignment-semantics generation " +
-        s"${meta.version}, this code is generation $FormatVersion — its " +
+        s"${m.version}, this code is generation $FormatVersion — its " +
         "list membership would disagree with the probe's query " +
         "assignment; rebuild with writeIvfIndex")
-    meta
+    m
+  }
+
+  /** Write `m` as the store's manifest — LAST in every mutation — to a
+    * temporary file renamed over the old one, so a concurrent probe reads
+    * either the old manifest or the new one, never a partial file.
+    */
+  private def putManifest(path: String, m: StoreManifest): Unit = {
+    val conf = hadoopConf()
+    val dst = markerPath(path)
+    val tmp = new Path(path, s"$OkMarker.tmp")
+    val fs = dst.getFileSystem(conf)
+    val out = fs.create(tmp, true)
+    try out.write(Serialization.write(m).getBytes(UTF_8)) finally out.close()
+    FileContext.getFileContext(fs.getUri, conf).rename(fs.makeQualified(tmp),
+      fs.makeQualified(dst), Options.Rename.OVERWRITE)
   }
 
   /** True iff `path` holds a completely written store of THIS code's
-    * assignment-semantics generation — the build-if-needed gate
-    * ([[ensureIvfIndex]] and callers managing their own build): a
-    * complete store of an older generation must be REBUILT, where a
-    * probe/append of one must FAIL (they do — loudly, on the meta's
-    * recorded generation). A marker-complete store whose `meta/` is
-    * MISSING or doesn't parse as a table (damaged by hand — the marker
-    * protocol can't have produced it) is NOT servable rather than an
-    * error: the gate's callers want "rebuild", not a crash pointing
-    * away from the cause. Only that expected-corruption class is
-    * absorbed — an unexpected failure reading an intact-looking meta
-    * (a transient filesystem/IO error, say) PROPAGATES, because
-    * silently answering "not servable" to it would trigger a full
-    * index rebuild over a hiccup.
+    * generation — the build-if-needed gate ([[ensureIvfIndex]] and
+    * callers managing their own build): a complete store of an older
+    * generation must be REBUILT, where a probe/append of one must FAIL
+    * (they do — loudly, on the manifest's recorded generation). A store
+    * whose manifest is empty (generation ≤ 5) or damaged is NOT servable
+    * rather than an error: the gate's callers want "rebuild".
     *
     * `payload`: when given, the store must ALSO have been built with
     * exactly these inline payload column names — a servable-looking
     * store missing a requested payload column would make the caller's
-    * filtered probe die on an unresolved column far from the cause
-    * (meta records the names precisely so this drift is detectable
-    * here, at ensure time).
+    * filtered probe die on an unresolved column far from the cause.
+    * `pqResidual`, when the caller states a requirement, must MATCH: a
+    * raw-codes store served to a residual-expecting ensure (or vice
+    * versa) would probe self-consistently — the manifest drives the LUT
+    * — but in the wrong encoding space from the caller's standpoint.
     */
   def isServable(spark: SparkSession, path: String,
       payload: Seq[String] = Nil,
       pqResidual: Option[Boolean] = None): Boolean =
-    isComplete(path) && {
-      val meta =
-        try Some(readMeta(spark, path, requireCurrent = false))
-        catch {
-          // the expected corruption class only: meta/ missing or not
-          // readable AS A TABLE → rebuild; other failures propagate
-          case _: org.apache.spark.sql.AnalysisException => None
-        }
-      // pqResidual, when the caller states a requirement, must MATCH: a
-      // raw-codes store served to a residual-expecting ensure (or vice
-      // versa) would probe self-consistently — meta drives the LUT — but
-      // in the wrong encoding space from the caller's standpoint
-      meta.exists(m => m.version == FormatVersion &&
-        (payload.isEmpty || m.payload == payload) &&
-        pqResidual.forall(_ == m.pqResidual))
-    }
+    loadManifest(path).exists(m => m.version == FormatVersion &&
+      (payload.isEmpty || m.payload == payload) &&
+      pqResidual.forall(_ == m.pqResidual))
 
   /** Write the IVF index of `base` at `path`: inverted lists partitioned
-    * by `c_id` (+ PQ codes when `pq`), the centroid model, and the config.
-    * One pass over the corpus; the per-list files inherit the upstream
-    * partitioning's parallelism within each list directory.
+    * by `c_id` (+ PQ codes when `pq`), the centroid model, and — last —
+    * the manifest. One pass over the corpus.
     *
     * `hierarchical = true` (default) builds the lists with the two-level
     * assignment ([[Similarity.ivfAssignHierarchical]] — rows ×
     * (√k·… ) instead of rows × k cosines, the s19 trade measured at 2.65×
     * on the sf10 copy); `false` is the exact flat argmax (s3 semantics).
-    * Probes replay whichever mode built the store (recorded in `meta/`),
-    * so store and probe assignment can never disagree.
+    * Probes replay whichever mode the manifest records, so store and
+    * probe assignment can never disagree.
     *
     * `pq = true` additionally stores the `numSubspaces` PQ codes per
     * vector ([[graft.functions.PqEncode]], codebook from the FULL corpus
@@ -270,19 +307,17 @@ object VectorIndex {
     * alone.
     *
     * `payload` stores extra metadata columns of `base` INLINE with each
-    * vector (named/aliased `Column`s — e.g. `col("label")`,
-    * `col("lang")`) — the filtered-vector-search layout: a probe's
-    * `where` predicate on a payload column is evaluated inside the
-    * pruned list scan (parquet data filter on only the probed
-    * partitions), never as a post-hoc join against a corpus-sized
-    * attribute table. Unfiltered probes don't pay for it: the payload
-    * columns are column-pruned out of their scans. Costs one co-keyed
-    * join on `vec_id` at build time; the column NAMES are recorded in
-    * `meta/` so appends select the same columns from every increment.
-    * PRECONDITION: `id` must be unique in `base` — the payload join is
-    * an inner join of two projections of `base` on `vec_id`, so a
-    * duplicated id that would merely duplicate list rows without payload
-    * SQUARES its stored rows with payload (dup × dup join fan-out).
+    * vector (named/aliased `Column`s — e.g. `col("label")`) — the
+    * filtered-vector-search layout: a probe's `where` predicate on a
+    * payload column is evaluated inside the pruned list scan (parquet
+    * data filter on only the probed partitions), never as a post-hoc
+    * join against a corpus-sized attribute table; unfiltered probes
+    * column-prune the payload away. Costs one co-keyed join on `vec_id`
+    * at build time. `statsCols` (payload column names) adds their
+    * per-list value histograms to the manifest for
+    * [[probeIvfIndexFiltered]]. PRECONDITION: `id` must be unique in
+    * `base` — the payload join is an inner join of two projections of
+    * `base` on `vec_id`, so a duplicated id SQUARES its stored rows.
     *
     * `filesPerList` bounds the file count per `c_id=` directory: rows
     * are routed by a deterministic `xxhash64(vec_id) % filesPerList`
@@ -291,26 +326,20 @@ object VectorIndex {
     * partitionBy write fans every upstream task across every list —
     * `tasks × lists` drizzle files (81,920 at the 100× gate: ~20 s of
     * file-open tax on the build's own read-back, and per-file open cost
-    * on every probe thereafter). One extra corpus exchange buys
-    * `≤ lists × filesPerList` right-sized files; writer parallelism =
-    * `lists × filesPerList` tasks.
+    * on every probe thereafter).
     *
     * The DEFAULT (`filesPerList = 0`) AUTO-SIZES from the data, PER
     * LIST (r18): each list routes to `ceil(itsBytes / targetFileBytes)`
     * splits, with per-list bytes estimated from a deterministic
     * 1/[[RouteSampleStride]] hash slice of the assignment scaled by the
     * input size (Catalyst's file-index estimate) — so a file ≈ one HDFS
-    * block / row-group at ANY corpus size AND any skew. The r17 rule
-    * divided the input by the GLOBAL list count, which on a Zipf-mass
-    * corpus (§15a: heaviest cluster 24% of rows) sized the heavy list's
-    * files at `0.24 × lists ×` the target and made its one writer task
-    * the build's straggler. A fixed 1 was the 100 TB failure mode in
-    * the other direction from drizzle: ~400 GB single files per list
-    * and writer parallelism collapsed to ≤ `lists` tasks. Sources
-    * without a real size estimate (estimate ≥ the session's
-    * `defaultSizeInBytes` sentinel) fall back to 1, and per-list counts
-    * are clamped to [1, 4096] (4096 ≈ a 512 GB list at the 128 MB
-    * default target — past that, raise `targetFileBytes` deliberately).
+    * block / row-group at ANY corpus size AND any skew. (A global-mean
+    * width sized a Zipf-heavy list's files at `heavyShare × lists ×` the
+    * target, its one writer task the build's straggler; a fixed 1 means
+    * ~400 GB single files per list at 100 TB.) Sources without a real
+    * size estimate fall back to 1, and per-list counts are clamped to
+    * [1, 4096] (≈ a 512 GB list at the 128 MB default target — past
+    * that, raise `targetFileBytes` deliberately).
     */
   def writeIvfIndex(
       base: DataFrame,
@@ -332,50 +361,37 @@ object VectorIndex {
       targetFileBytes: Long = 128L << 20,
       pqResidual: Boolean = false,
       statsCols: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.graft.ColumnBridge
     val spark = base.sparkSession
     require(!pqResidual || pq,
       "pqResidual is a PQ-codes encoding mode — set pq = true with it")
-    // payload validation FIRST: a name collision must fail before any
-    // artifact (marker, codebook) of an existing store is touched.
-    // Reserved names cover the store's own columns, the routing split,
-    // AND every name the probe plans introduce (a payload named q_id
-    // would build a store whose every probe dies on an ambiguous
-    // column); commas would mis-split meta's recorded name list.
+    // payload validation FIRST: a name collision (see ReservedNames)
+    // must fail before any artifact of an existing store is touched
     val pay = base.select((id.as("vec_id") +: payload): _*)
     val payNames = pay.columns.toSeq.drop(1)
-    val reserved = ReservedNames
-    val bad = payNames.filter(n => reserved(n) || n.contains(","))
+    val bad = payNames.filter(ReservedNames)
     require(bad.isEmpty,
-      s"payload column names reserved by the store or its probes (or " +
-        s"containing ','): ${bad.mkString(", ")}")
-    // stats columns must be stored inline (the filtered probe's scan
-    // predicate runs on the payload column of only the probed
-    // partitions) — a stats request for an un-stored column would
-    // persist counts no probe could ever apply
+      s"payload column names reserved by the store or its probes: " +
+        bad.mkString(", "))
+    // stats columns must be stored inline: the filtered probe's scan
+    // predicate runs on the payload column, so counts of an un-stored
+    // column could never be applied
     val badStats = statsCols.filterNot(payNames.contains)
     require(badStats.isEmpty,
       s"statsCols must name payload columns (add them to `payload`): " +
         badStats.mkString(", "))
-    require(filesPerList >= 0,
-      s"filesPerList must be positive (or 0 = auto), got $filesPerList")
-    require(targetFileBytes > 0,
-      s"targetFileBytes must be positive, got $targetFileBytes")
+    requireRouting(filesPerList, targetFileBytes)
     // invalidate BEFORE any artifact is touched: a rebuild of an existing
     // complete store overwrites the codebook eagerly below, and a
     // concurrent probe in that window must fail loudly on the missing
     // marker rather than read the NEW codebook against the OLD lists
     dropMarker(path)
-    val b = base.select(id.as("vec_id"), vec.as("v"))
+    val meta = StoreManifest(FormatVersion, hierarchical, superStride, sProbe,
+      pq, numSubspaces, numCodes, pqResidual, payNames.toList,
+      Counts(Map.empty, Map.empty))
     val cents = centroids.map(_.select(col("c_id"), col("cv")))
-      .getOrElse(Similarity.ivfCentroids(b, centroidStride, maxCentroids))
-    // one config-sized count job, and only when a split could happen
-    // (explicit filesPerList = 1 never forces it)
-    lazy val nLists = cents.count()
-    val listed =
-      if (hierarchical)
-        Similarity.ivfAssignHierarchical(base, id, vec, cents, superStride, sProbe)
-      else Similarity.ivfAssignTo(cents, b, "v", "vec_id", 1)
+      .getOrElse(Similarity.ivfCentroids(base.select(id.as("vec_id"),
+        vec.as("v")), centroidStride, maxCentroids))
+    val listed = assign(base, id, vec, cents, meta)
     val rows =
       if (!pq) listed
       else {
@@ -385,18 +401,13 @@ object VectorIndex {
         // re-separating lists the coarse quantizer already separated.
         // Derivation mirrors Similarity.ivfPqTopK(residual = true)
         // exactly — the shared-oracle identity behind s35.
-        val centsV = cents.select(col("c_id"), col("cv"))
-        def resOf(vc: Column) =
-          zip_with(vc.cast("array<double>"), col("cv"), (a, bb) => a - bb)
-        lazy val listedR = listed.join(broadcast(centsV), Seq("c_id"))
-          .withColumn("_rv", resOf(col("v")))
         val cb =
-          if (pqResidual) Similarity.pqCodebook(listedR, col("vec_id"),
-            col("_rv"), numSubspaces, numCodes, codeStride)
+          if (pqResidual) Similarity.pqCodebook(
+            listed.join(broadcast(cents), Seq("c_id"))
+              .withColumn("_rv", residualOf(col("v"))),
+            col("vec_id"), col("_rv"), numSubspaces, numCodes, codeStride)
           else Similarity.pqCodebook(base, id, vec, numSubspaces, numCodes,
             codeStride)
-        def enc(c: Column) = ColumnBridge.column(graft.functions.PqEncode(
-          ColumnBridge.expression(c.cast("array<double>")), cb))
         // persist the codebook as exploded scalars (s, j, pos, val) — the
         // config-sized model artifact, array-format-free like kmeansTrain's
         import spark.implicits._
@@ -406,92 +417,144 @@ object VectorIndex {
           }
         }.toSeq.toDF("s", "j", "pos", "val")
           .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-        if (pqResidual)
-          listedR.withColumn("codes", enc(col("_rv"))).drop("_rv", "cv")
-        else listed.withColumn("codes", enc(col("v")))
+        withCodes(listed, cents, cb, pqResidual)
       }
     val stored = if (payload.isEmpty) rows else rows.join(pay, Seq("vec_id"))
-    val routed =
-      if (filesPerList > 0)
-        routeToLists(stored, filesPerList,
-          if (filesPerList > 1) nLists else 1L)
-      else autoListFileCounts(base, listed, targetFileBytes) match {
-        case Some(m) => routeToListsWeighted(stored, m, nLists)
-        case None => routeToLists(stored, 1, 1L)
-      }
-    routed
-      .write.mode("overwrite").partitionBy("c_id").parquet(s"$path/lists")
+    writeLists(stored, base, listed, cents, filesPerList, targetFileBytes,
+      path, "overwrite")
     cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    writeSizes(spark, path)
-    statsCols.foreach(writeListStats(spark, path, _))
-    writeMeta(spark, path, Meta(hierarchical, superStride, sProbe, pq,
-      numSubspaces, numCodes, payNames, FormatVersion, pqResidual))
-    putMarker(path)
+    putManifest(path, meta.copy(counts = countLists(spark, path, statsCols)))
   }
 
-  /** Persist `sizes/` — one `(c_id, n_list)` row per inverted list,
-    * counted from the lists ACTUALLY WRITTEN (read-back, the s23
-    * honesty rule; the scan touches only the partition column, so it
-    * resolves from file metadata, never the vectors). The adaptive
-    * probe's mass budget reads this config-sized artifact instead of
-    * paying a corpus pass per probe — at deployment scale the list
-    * lengths are index metadata, exactly like the centroids.
+  /** `(c_id, vec_id, v)`: `input` filed under its `keep` nearest lists in
+    * the store's geometry — two-level or flat, as `meta` records.
     */
-  private def writeSizes(spark: SparkSession, path: String): Unit =
-    spark.read.parquet(s"$path/lists")
-      .groupBy(col("c_id").cast("long").as("c_id"))
-      .agg(count(lit(1)).as("n_list"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/sizes")
+  private def assign(input: DataFrame, id: Column, vec: Column,
+      cents: DataFrame, meta: StoreManifest, keep: Int = 1): DataFrame =
+    if (meta.hierarchical)
+      Similarity.ivfAssignHierarchical(input, id, vec, cents,
+        meta.superStride, meta.sProbe, keep = keep)
+    else Similarity.ivfAssignTo(cents,
+      input.select(id.as("vec_id"), vec.as("v")), "v", "vec_id", keep)
 
-  /** Persist `stats/<col>/` — per-list VALUE histogram `(c_id, sval,
-    * n_list)` of one inline payload column, counted from the lists
-    * actually written (read-back, like [[writeSizes]] — the scan reads
-    * the partition column plus ONE payload column). This is the
-    * zone-map-style metadata behind [[probeIvfIndexFiltered]]: under a
-    * payload predicate the mass budget must run over MATCHING counts,
-    * and the per-(list, value) histogram is the config-sized artifact
-    * that answers "how many matching rows does each list hold" without
-    * a corpus pass at probe time (cardinality: lists × distinct values
-    * — low-cardinality metadata columns like label/lang/source by
+  /** `v − centroid(list)` against the joined `cv` — the residual space
+    * of `pqResidual` stores.
+    */
+  private def residualOf(v: Column): Column =
+    zip_with(v.cast("array<double>"), col("cv"), (a, c) => a - c)
+
+  /** `listed` plus its PQ `codes` under codebook `cb` — in residual space
+    * against the store's centroids when `residual`, so appended rows
+    * quantize exactly as build-time rows did.
+    */
+  private def withCodes(listed: DataFrame, cents: DataFrame,
+      cb: Array[Array[Array[Double]]], residual: Boolean): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    def enc(c: Column) = ColumnBridge.column(graft.functions.PqEncode(
+      ColumnBridge.expression(c.cast("array<double>")), cb))
+    if (!residual) listed.withColumn("codes", enc(col("v")))
+    else listed.join(broadcast(cents.select(col("c_id"), col("cv"))),
+        Seq("c_id"))
+      .withColumn("codes", enc(residualOf(col("v")))).drop("cv")
+  }
+
+  private def requireRouting(filesPerList: Int, targetFileBytes: Long): Unit = {
+    require(filesPerList >= 0,
+      s"filesPerList must be positive (or 0 = auto), got $filesPerList")
+    require(targetFileBytes > 0,
+      s"targetFileBytes must be positive, got $targetFileBytes")
+  }
+
+  /** Route `stored` rows to their lists and write them under `lists/` —
+    * the layout rule the build and every append share: explicit
+    * `filesPerList`, or per-list widths auto-sized from `input`'s bytes
+    * and `listed`'s sampled masses (see [[writeIvfIndex]]).
+    */
+  private def writeLists(stored: DataFrame, input: DataFrame,
+      listed: DataFrame, cents: DataFrame, filesPerList: Int,
+      targetFileBytes: Long, path: String, mode: String): Unit = {
+    val auto =
+      if (filesPerList > 0) None
+      else autoListFileCounts(input, listed, targetFileBytes)
+    // the list count is one config-sized job, run only when a split can
+    // happen (explicit filesPerList = 1 never forces it)
+    routeToLists(stored, auto.getOrElse(Map.empty), filesPerList.max(1),
+      cents.count())
+      .write.mode(mode).partitionBy("c_id").parquet(s"$path/lists")
+  }
+
+  /** Count the lists ACTUALLY WRITTEN (read-back, the s23 honesty rule)
+    * in ONE aggregation collected to the driver: grouping sets over
+    * `(c_id)` and each `(c_id, statsCol)` give the per-list sizes and
+    * every requested histogram from one scan of the partition column plus
+    * the histogram columns — never the vectors.
+    *
+    * The histograms are the zone-map-style metadata behind
+    * [[probeIvfIndexFiltered]]: under a payload predicate the mass budget
+    * must run over MATCHING counts, and the per-(list, value) histogram
+    * answers "how many matching rows does each list hold" without a
+    * corpus pass at probe time (cardinality: lists × distinct values —
+    * low-cardinality metadata columns like label/lang/source by
     * construction; a high-cardinality column would be the wrong
     * filter-stats key at any engine).
     */
-  private def writeListStats(spark: SparkSession, path: String,
-      statsCol: String): Unit =
-    spark.read.parquet(s"$path/lists")
-      .groupBy(col("c_id").cast("long").as("c_id"),
-        col(statsCol).as("sval"))
-      .agg(count(lit(1)).as("n_list"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats/$statsCol")
-
-  /** The persisted stats directories present at `path` (the store may
-    * carry histograms for any subset of its payload columns).
-    */
-  private def statsDirs(spark: SparkSession, path: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/stats")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq
+  private def countLists(spark: SparkSession, path: String,
+      statsCols: Seq[String]): Counts = {
+    val cols = statsCols.distinct
+    val keys = col("c_id") +: cols.indices.map(i => col(s"_s$i"))
+    val keyed = spark.read.parquet(s"$path/lists")
+      .select((col("c_id").cast("long").as("c_id") +:
+        cols.zipWithIndex.map { case (c, i) => col(c).as(s"_s$i") }): _*)
+    val rows = keyed
+      .groupingSets(Seq(keys.take(1)) ++
+        cols.indices.map(i => Seq(keys.head, keys(i + 1))), keys: _*)
+      .agg(count(lit(1)).as("n_list"),
+        cols.indices.map(i => grouping(s"_s$i").as(s"_g$i")): _*)
+      .toJSON.collect().toList.map(parse(_, useBigDecimalForDouble = true))
+    def in(r: JValue, i: Int) = (r \ s"_g$i").extract[Int] == 0
+    Counts(
+      rows.filterNot(r => cols.indices.exists(in(r, _))).map(r =>
+        (r \ "c_id").extract[Long].toString -> (r \ "n_list").extract[Long])
+        .toMap,
+      cols.zipWithIndex.map { case (c, i) =>
+        c -> Histogram(keyed.schema(s"_s$i").dataType.json,
+          rows.filter(in(_, i)).map(r => ("c_id" -> (r \ "c_id")) ~
+            ("sval" -> (r \ s"_s$i")) ~ ("n_list" -> (r \ "n_list"))))
+      }.toMap)
   }
 
-  /** The per-(list, value) histogram of one payload column — the
-    * persisted `stats/<col>/` artifact when present ([[writeIvfIndex]]'s
-    * `statsCols`), else recounted from the lists' `(c_id, <col>)`
-    * columns (a two-column pruned scan — the documented fallback for
-    * stores built without the artifact, mirroring [[listSizes]]'s; the
-    * persisted artifact is what makes the filtered probe corpus-pass-
-    * free at steady state).
+  /** A histogram as the `(c_id, sval, n_list)` frame [[listStats]]
+    * promises: a local relation, parsed under the recorded type.
+    */
+  private def histogramDf(spark: SparkSession, h: Histogram): DataFrame = {
+    import spark.implicits._
+    val schema = new StructType().add("c_id", LongType)
+      .add("sval", DataType.fromJson(h.dataType)).add("n_list", LongType)
+    h.rows.map(r => compact(render(r))).toDF("j")
+      .select(from_json(col("j"), schema).as("r")).select("r.*")
+  }
+
+  /** The store's per-list row counts `(c_id, n_list)`, from its manifest. */
+  def listSizes(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    manifestOf(path).counts.listSizes.toDF("c_id", "n_list")
+  }
+
+  /** The per-(list, value) histogram `(c_id, sval, n_list)` of one payload
+    * column — from the manifest when the store was built (or ensured)
+    * with it in `statsCols`, else counted by the same [[countLists]]
+    * without persisting the result (the documented fallback; the
+    * persisted histogram is what makes the filtered probe
+    * corpus-pass-free at steady state).
     */
   def listStats(spark: SparkSession, path: String,
-      statsCol: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/stats/$statsCol")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) spark.read.parquet(s"$path/stats/$statsCol")
-    else spark.read.parquet(s"$path/lists")
-      .groupBy(col("c_id").cast("long").as("c_id"),
-        col(statsCol).as("sval"))
-      .agg(count(lit(1)).as("n_list"))
-  }
+      statsCol: String): DataFrame =
+    statsOf(spark, path, manifestOf(path), statsCol)
+
+  private def statsOf(spark: SparkSession, path: String, m: StoreManifest,
+      statsCol: String): DataFrame =
+    histogramDf(spark, m.counts.stats.getOrElse(statsCol,
+      countLists(spark, path, Seq(statsCol)).stats(statsCol)))
 
   /** 1-in-N deterministic hash slice for the auto route's per-list mass
     * estimate — the cost knob: the estimating pass assigns only
@@ -501,25 +564,17 @@ object VectorIndex {
     */
   private val RouteSampleStride = 64L
 
-  /** PER-LIST file counts for the auto route (r18): the r17 global-mean
-    * rule (`ceil((inputBytes / lists) / targetFileBytes)`, one count for
-    * every list) sized files for the UNIFORM corpus — on a Zipf-mass
-    * corpus (§15a: heaviest cluster 24% of rows) the heavy list's share
-    * divided by the global count gave files at `0.24 × lists ×` the
-    * target, and the single task writing each of them was the build's
-    * straggler. Here each list gets `ceil(listBytes / targetFileBytes)`
-    * files with `listBytes` estimated as `inputBytes × (sampled list
-    * rows / sampled total)` from a deterministic
-    * 1/[[RouteSampleStride]] hash slice of the SAME assignment that
-    * files the rows — never a second full assignment pass. Lists absent
-    * from the sample route to 1 file (the floor); estimates are a
-    * LAYOUT knob only — row content and probe results are invariant to
-    * which file a row lands in.
-    *
-    * `None` when the plan-stats estimate is the session's
-    * `defaultSizeInBytes` sentinel (in-memory test frames with no real
-    * size) — callers fall back to the 1-file route rather than trusting
-    * an 8 EB placeholder. Per-list counts clamped to [1, 4096].
+  /** PER-LIST file counts for the auto route (see [[writeIvfIndex]]'s
+    * `filesPerList`): each list gets `ceil(listBytes / targetFileBytes)`
+    * files, with `listBytes` estimated as `inputBytes × (sampled list
+    * rows / sampled total)` from a deterministic 1/[[RouteSampleStride]]
+    * hash slice of the SAME assignment that files the rows — never a
+    * second full assignment pass. Lists absent from the sample route to
+    * 1 file; estimates are a LAYOUT knob only — row content and probe
+    * results are invariant to which file a row lands in. `None` when the
+    * plan-stats estimate is the session's `defaultSizeInBytes` sentinel
+    * (in-memory frames with no real size: callers take the 1-file route
+    * rather than trust an 8 EB placeholder). Counts clamped to [1, 4096].
     */
   private def autoListFileCounts(
       base: DataFrame, listed: DataFrame,
@@ -543,60 +598,38 @@ object VectorIndex {
     }
   }
 
-  /** Co-partition rows with their target list (plus a deterministic
-    * `xxhash64(vec_id) % filesPerList` sub-split), so the partitionBy
-    * writer emits `≤ filesPerList` files per `c_id=` directory instead
-    * of one per upstream task per list. Row content is untouched —
-    * routing only decides WHICH file a row lands in.
+  /** Co-partition rows with their target list plus a deterministic
+    * `xxhash64(vec_id) % files(c_id)` sub-split — `files` is
+    * `listFiles(c_id)`, else `dflt` — so the partitionBy writer emits
+    * `≤ files(c_id)` files per `c_id=` directory instead of one per
+    * upstream task per list. Row content is untouched — routing only
+    * decides WHICH file a row lands in. Per-list widths are the auto
+    * route's mass-proportional counts ([[autoListFileCounts]]) or
+    * compaction's bin counts.
     *
-    * At `filesPerList = 1` the exchange keys on `c_id` alone (each list
+    * When every width is 1 the exchange keys on `c_id` alone (each list
     * lands wholly in one task — exactly one file, under any AQE
-    * coalescing). At > 1 the partition COUNT is pinned to
-    * `lists × filesPerList` (the intended writer parallelism): an
-    * adaptive exchange would COALESCE the small sub-splits back into
-    * shared tasks — same-list splits in one task merge into one file —
-    * and silently undo the sizing (measured: a 76-way split wrote 1 file
-    * per list under AQE before the pin). Capped at 65536 tasks; past
-    * that a task holds several sub-splits and files grow past
+    * coalescing). Otherwise the partition COUNT is pinned to the intended
+    * writer parallelism (Σ listed widths + `dflt` for each of `nLists`
+    * lists): an adaptive exchange would COALESCE the small sub-splits
+    * back into shared tasks — same-list splits in one task merge into
+    * one file — and silently undo the sizing (measured: a 76-way split
+    * wrote 1 file per list under AQE before the pin). Capped at 65536
+    * tasks; past that a task holds several sub-splits and files grow past
     * `targetFileBytes` proportionally — still bounded, never drizzle.
     */
-  private def routeToLists(
-      rows: DataFrame, filesPerList: Int, nLists: Long): DataFrame =
-    if (filesPerList <= 1) rows.repartition(col("c_id"))
+  private def routeToLists(rows: DataFrame, listFiles: Map[Long, Int],
+      dflt: Int, nLists: => Long): DataFrame =
+    if (dflt <= 1 && listFiles.values.forall(_ <= 1))
+      rows.repartition(col("c_id"))
     else {
-      val parts = math.min(math.max(nLists, 1L) * filesPerList, 65536L).toInt
-      rows.withColumn(BuildRouteCol,
-          pmod(xxhash64(col("vec_id")), lit(filesPerList.toLong)))
-        .repartition(parts, col("c_id"), col(BuildRouteCol))
-        .drop(BuildRouteCol)
-    }
-
-  /** [[routeToLists]] with a PER-LIST split width (the auto route's
-    * mass-proportional counts from [[autoListFileCounts]]): each row's
-    * sub-split is `xxhash64(vec_id) % files(c_id)`, so a Zipf-heavy
-    * list fans across `ceil(itsBytes / target)` writer tasks while
-    * light lists stay at one file — the build's wall stops being bound
-    * by the single task that used to serialize the heaviest list, and
-    * no file is sized by a GLOBAL mean the skew makes fictional. Lists
-    * missing from the (sampled) map default to 1. The partition count
-    * is pinned (Σ files + one slack slot per list for the defaults) for
-    * the same AQE-coalescing reason as [[routeToLists]]; all-1 maps
-    * collapse to the plain `c_id` exchange.
-    */
-  private def routeToListsWeighted(
-      rows: DataFrame, listFiles: Map[Long, Int], nLists: Long): DataFrame =
-    if (listFiles.values.forall(_ <= 1)) rows.repartition(col("c_id"))
-    else {
-      val parts = math.min(
-        listFiles.values.map(_.toLong).sum + math.max(nLists, 1L),
-        65536L).toInt
-      val filesOf = typedLit(listFiles)
-      rows.withColumn(BuildRouteCol,
-          pmod(xxhash64(col("vec_id")),
-            coalesce(element_at(filesOf, col("c_id").cast("long")), lit(1))
-              .cast("long")))
-        .repartition(parts, col("c_id"), col(BuildRouteCol))
-        .drop(BuildRouteCol)
+      val parts = (listFiles.values.map(_.toLong).sum + nLists * dflt)
+        .max(1L).min(65536L).toInt
+      rows.withColumn(RouteCol, pmod(xxhash64(col("vec_id")),
+          coalesce(element_at(typedLit(listFiles), col("c_id").cast("long")),
+            lit(dflt)).cast("long")))
+        .repartition(parts, col("c_id"), col(RouteCol))
+        .drop(RouteCol)
     }
 
   /** [[writeIvfIndex]] only when `path` has no completed store — the
@@ -641,12 +674,13 @@ object VectorIndex {
         statsCols = statsCols)
     else {
       // servable store, possibly built before these histograms were
-      // requested: persist any missing stats/<col> from the lists
-      // already on disk (idempotent read-back recount — rows unchanged,
-      // so no rebuild; the filtered probe then runs corpus-pass-free)
-      val have = statsDirs(base.sparkSession, path).toSet
-      statsCols.filterNot(have).foreach(
-        writeListStats(base.sparkSession, path, _))
+      // requested: recount from the lists already on disk and rewrite the
+      // manifest (rows unchanged, so no rebuild; the filtered probe then
+      // runs corpus-pass-free)
+      val m = manifestOf(path)
+      if (!statsCols.forall(m.counts.stats.contains))
+        putManifest(path, m.copy(counts = countLists(base.sparkSession, path,
+          m.counts.stats.keys.toSeq ++ statsCols)))
     }
     // callers with a TRAINED model check isServable themselves before
     // training (the model derivation may run eager jobs — an ensure that
@@ -669,35 +703,16 @@ object VectorIndex {
       path: String,
       filesPerList: Int = 0,
       targetFileBytes: Long = 128L << 20): Unit = {
-    import org.apache.spark.sql.graft.ColumnBridge
     val spark = increment.sparkSession
-    require(isComplete(path), s"no completed IVF store at $path — build with " +
-      "writeIvfIndex before appending")
-    val meta = readMeta(spark, path)
+    val meta = manifestOf(path)
     val cents = spark.read.parquet(s"$path/centroids")
-    val b = increment.select(id.as("vec_id"), vec.as("v"))
-    val listed =
-      if (meta.hierarchical)
-        Similarity.ivfAssignHierarchical(increment, id, vec, cents,
-          meta.superStride, meta.sProbe)
-      else Similarity.ivfAssignTo(cents, b, "v", "vec_id", 1)
+    val listed = assign(increment, id, vec, cents, meta)
+    // PQ stores encode with the STORED codebook (residual stores against
+    // the STORED centroids too)
     val rows =
       if (!meta.pq) listed
-      else {
-        val cb = readCodebook(spark, path, meta)
-        def enc(c: Column) = ColumnBridge.column(graft.functions.PqEncode(
-          ColumnBridge.expression(c.cast("array<double>")), cb))
-        // residual stores encode the increment in residual space against
-        // the STORED centroids and the STORED (residual-space) codebook —
-        // appended rows must quantize exactly as build-time rows would
-        if (meta.pqResidual)
-          listed.join(broadcast(cents.select(col("c_id"), col("cv"))),
-              Seq("c_id"))
-            .withColumn("codes", enc(zip_with(col("v").cast("array<double>"),
-              col("cv"), (a, bb) => a - bb)))
-            .drop("cv")
-        else listed.withColumn("codes", enc(col("v")))
-      }
+      else withCodes(listed, cents, readCodebook(spark, path, meta),
+        meta.pqResidual)
     // payload columns are selected BY THE NAMES the build recorded, so an
     // increment missing one fails loudly here instead of appending rows
     // a filtered probe would silently treat as predicate-false
@@ -706,49 +721,23 @@ object VectorIndex {
       else rows.join(
         increment.select((id.as("vec_id") +: meta.payload.map(col)): _*),
         Seq("vec_id"))
-    require(filesPerList >= 0,
-      s"filesPerList must be positive (or 0 = auto), got $filesPerList")
-    require(targetFileBytes > 0,
-      s"targetFileBytes must be positive, got $targetFileBytes")
-    // same routing as the build: an append adds a bounded file count per
-    // TOUCHED list per batch (not one per upstream task per list), which
-    // is what keeps compaction an occasional maintenance job instead of
-    // a per-batch necessity. Auto-sizing uses the INCREMENT's bytes and
-    // the increment's own (sampled) per-list masses: a small batch
-    // routes to 1 file per touched list, a bulk backfill gets
-    // block-sized files like a build would — including on a skewed
-    // increment, where the heavy list fans out instead of writing one
-    // oversized straggler file.
-    lazy val nLists = cents.count()
-    val routed =
-      if (filesPerList > 0)
-        routeToLists(stored, filesPerList,
-          if (filesPerList > 1) nLists else 1L)
-      else autoListFileCounts(increment, listed, targetFileBytes) match {
-        case Some(m) => routeToListsWeighted(stored, m, nLists)
-        case None => routeToLists(stored, 1, 1L)
-      }
-    routed
-      .write.mode("append").partitionBy("c_id").parquet(s"$path/lists")
-    // refresh the persisted list lengths AFTER the rows land (order
-    // matters: a crash between the two leaves sizes/ stale — the mass
-    // budget then probes on last batch's masses, an approximation-
-    // quality drift the next append self-heals, never a wrong result).
-    // Full recount, not an increment merge: the count scan reads only
-    // the partition column (file metadata), and recounting also heals a
-    // stale sizes/ from a previously interrupted append.
-    writeSizes(spark, path)
-    // same refresh-by-recount for whichever payload histograms the
-    // build persisted (statsDirs — presence IS the registration, like
-    // sizes/): an append's new rows enter the filtered probe's masses
-    // the moment they are probeable, and a crash mid-refresh degrades
-    // to last batch's counts, healed by the next append, never a wrong
-    // result (stats only weight the budget's list SELECTION).
-    statsDirs(spark, path).foreach(writeListStats(spark, path, _))
+    requireRouting(filesPerList, targetFileBytes)
+    // same routing as the build, sized by the INCREMENT's bytes and
+    // sampled masses: a small batch adds 1 file per touched list (which
+    // keeps compaction occasional), a bulk or skewed backfill gets
+    // block-sized files like a build would
+    writeLists(stored, increment, listed, cents, filesPerList,
+      targetFileBytes, path, "append")
+    // recount AFTER the rows land, then swap the manifest: a crash
+    // between the two leaves last batch's counts — a drift in the mass
+    // budget's list SELECTION the next append heals, never a wrong
+    // result. A full recount (not an increment merge) is what heals it.
+    putManifest(path, meta.copy(counts = countLists(spark, path,
+      meta.counts.stats.keys.toSeq)))
   }
 
-  private def readCodebook(
-      spark: SparkSession, path: String, meta: Meta): Array[Array[Array[Double]]] = {
+  private def readCodebook(spark: SparkSession, path: String,
+      meta: StoreManifest): Array[Array[Array[Double]]] = {
     val rows = spark.read.parquet(s"$path/codebook").collect()
       .map(r => ((r.getAs[Int]("s"), r.getAs[Long]("j"), r.getAs[Int]("pos")),
         r.getAs[Double]("val"))).toMap
@@ -757,52 +746,51 @@ object VectorIndex {
       Array.tabulate(subDim)(p => rows((s, j.toLong, p + 1)))))
   }
 
-  /** The probed query assignment `(c_id, q_id, qv)` in the store's own
-    * geometry, plus the distinct probed list ids (config-sized: ≤
-    * `|queries| · nProbe` longs — the one driver collect, and it is the
-    * partition-pruning literal, not data).
+  /** A probed query assignment `(c_id, q_id, qv)` plus its distinct list
+    * ids — the one driver collect of every probe (config-sized, and it is
+    * the partition-pruning literal, not data).
     */
-  private def probedLists(
-      spark: SparkSession, path: String, meta: Meta, queries: DataFrame,
-      id: Column, vec: Column, nProbe: Int): (DataFrame, Array[Long]) = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val probed =
-      (if (meta.hierarchical)
-        Similarity.ivfAssignHierarchical(queries, id, vec, cents,
-          meta.superStride, meta.sProbe, keep = nProbe)
-          .select(col("c_id"), col("vec_id").as("q_id"), col("v").as("qv"))
-      else
-        Similarity.ivfAssignTo(cents,
-          queries.select(id.as("q_id"), vec.as("qv")), "qv", "q_id", nProbe))
-    val ids = probed.select(col("c_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    (probed, ids)
-  }
+  private def withIds(probed: DataFrame): (DataFrame, Array[Long]) =
+    (probed, probed.select(col("c_id").cast("long")).distinct()
+      .collect().map(_.getLong(0)).sorted)
 
   /** The MASS-BUDGET probe selection over a store's persisted model
     * artifacts — [[Similarity.massProbed]]'s rule fed by `centroids/` and
-    * [[listSizes]], shared by every adaptive probe
+    * per-list masses, shared by every adaptive probe
     * ([[probeIvfIndexAdaptive]], [[probeIvfPqIndex]]'s and
-    * [[probeIvfRange]]'s `massPpm`). Output mirrors [[probedLists]]:
-    * the probed `(c_id, q_id, qv)` assignment plus the budget-selected
-    * distinct list ids (the one driver collect — the partition-pruning
-    * literal, config-sized).
+    * [[probeIvfRange]]'s `massPpm` over the manifest's sizes;
+    * [[probeIvfIndexFiltered]] over its matching masses, with
+    * `dropEmpty`). The budget's total is summed on the driver.
     */
   private def massProbedLists(
       spark: SparkSession, path: String, queries: DataFrame,
-      id: Column, vec: Column, massPpm: Long): (DataFrame, Array[Long]) = {
+      id: Column, vec: Column, massPpm: Long, sizes: Seq[(Long, Long)],
+      dropEmpty: Boolean = false): (DataFrame, Array[Long]) = {
+    import spark.implicits._
+    val n = sizes.map(_._2).sum
+    require(n > 0, s"store at $path has no rows — nothing to probe")
     val cents = spark.read.parquet(s"$path/centroids")
       .select(col("c_id"), col("cv"))
-    val sizes = listSizes(spark, path)
-    val n = sizes.agg(coalesce(sum(col("n_list")), lit(0L)))
-      .collect().head.getLong(0)
-    require(n > 0, s"store at $path has no rows — nothing to probe")
-    val probed = Similarity.massProbed(
-      queries.select(id.as("q_id"), vec.as("qv")), cents, sizes, n, massPpm)
-      .select(col("c_id"), col("q_id"), col("qv"))
-    val ids = probed.select(col("c_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    (probed, ids)
+    withIds(Similarity.massProbed(
+      queries.select(id.as("q_id"), vec.as("qv")), cents,
+      sizes.toDF("c_id", "n_list"), n, massPpm, dropEmpty)
+      .select(col("c_id"), col("q_id"), col("qv")))
+  }
+
+  /** The list selection of the single-level probes: the `nProbe`
+    * nearest lists in the store's own geometry (≤ `|queries| · nProbe`
+    * ids), or — given `massPpm` — the mass budget over the manifest's
+    * sizes.
+    */
+  private def selectLists(
+      spark: SparkSession, path: String, meta: StoreManifest,
+      queries: DataFrame, id: Column, vec: Column, nProbe: Int,
+      massPpm: Option[Long]): (DataFrame, Array[Long]) = massPpm match {
+    case Some(mp) => massProbedLists(spark, path, queries, id, vec, mp,
+      meta.counts.listSizes)
+    case None => withIds(assign(queries, id, vec,
+        spark.read.parquet(s"$path/centroids"), meta, keep = nProbe)
+      .select(col("c_id"), col("vec_id").as("q_id"), col("v").as("qv")))
   }
 
   /** TWO-LEVEL mass-budget selection over the store's persisted model —
@@ -821,16 +809,16 @@ object VectorIndex {
     * the budget-bounded scan.
     */
   private def hierMassProbedLists(
-      spark: SparkSession, path: String, meta: Meta, queries: DataFrame,
-      id: Column, vec: Column, massPpm: Long): (DataFrame, Array[Long]) = {
-    import org.apache.spark.sql.expressions.Window
+      spark: SparkSession, path: String, meta: StoreManifest,
+      queries: DataFrame, id: Column, vec: Column,
+      massPpm: Long): (DataFrame, Array[Long]) = {
+    import spark.implicits._
     val cents = spark.read.parquet(s"$path/centroids")
       .select(col("c_id"), col("cv"))
     val supers = Similarity.hierSupers(cents, meta.superStride)
     val c2s = Similarity.hierC2s(cents, supers)
-    val sizes = listSizes(spark, path)
-    val n = sizes.agg(coalesce(sum(col("n_list")), lit(0L)))
-      .collect().head.getLong(0)
+    val sizes = meta.counts.listSizes.toDF("c_id", "n_list")
+    val n = meta.counts.listSizes.map(_._2).sum
     require(n > 0, s"store at $path has no rows — nothing to probe")
     val superSizes = c2s.select(col("s_id"), col("c_id"))
       .join(sizes, Seq("c_id"), "left")
@@ -844,7 +832,7 @@ object VectorIndex {
       .select(col("c_id").as("s_id"), col("q_id"), col("qv"), col("_qu"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("c_dot").desc, col("c_id").asc)
-    val probed = qsup
+    withIds(qsup
       .join(broadcast(c2s.select(col("s_id"), col("c_id"), col("cv"))
         .withColumn("_cu", Similarity.unitMicros(col("cv")))), Seq("s_id"))
       .select(col("q_id"), col("qv"), col("_qu"), col("c_id"),
@@ -854,10 +842,7 @@ object VectorIndex {
       .withColumn("cum_before", coalesce(sum(col("_m")).over(
         w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .filter(col("cum_before") * 1000000L < lit(massPpm) * n)
-      .select(col("c_id"), col("q_id"), col("qv"))
-    val ids = probed.select(col("c_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    (probed, ids)
+      .select(col("c_id"), col("q_id"), col("qv")))
   }
 
   /** The store's lists restricted to the probed ids, via a literal filter
@@ -865,21 +850,53 @@ object VectorIndex {
     * `c_id=` directories are listed or read. The literal is typed to the
     * partition column's inferred type (directory values parse as INT when
     * they fit — a long-typed literal would wrap the column in a cast and
-    * defeat pruning).
+    * defeat pruning). `where` is a probe's payload pre-filter, pushed into
+    * the same scan as a parquet data filter.
     */
   private def prunedLists(
-      spark: SparkSession, path: String, ids: Array[Long]): DataFrame = {
+      spark: SparkSession, path: String, ids: Array[Long],
+      where: Option[Column] = None): DataFrame = {
     val raw = spark.read.parquet(s"$path/lists")
     val pruned = raw.schema("c_id").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+      case LongType =>
         raw.filter(col("c_id").isin(ids.toIndexedSeq: _*))
       case org.apache.spark.sql.types.IntegerType =>
         raw.filter(col("c_id").isin(ids.toIndexedSeq.map(_.toInt): _*))
       case _ =>
         raw.filter(col("c_id").cast("long").isin(ids.toIndexedSeq: _*))
     }
-    pruned.withColumn("c_id", col("c_id").cast("long"))
+    where.foldLeft(pruned.withColumn("c_id", col("c_id").cast("long")))(
+      _.filter(_))
   }
+
+  /** The exact rescore every list probe shares: the pruned candidate
+    * `lists` joined to the broadcast probed-query assignment on `c_id`,
+    * self-matches dropped, scored on the exact integer unit-grid dot (the
+    * s26 convention — each side's unit vector computed once, store-side
+    * per candidate row, query-side on the config-sized broadcast). The
+    * emitted `cos_ud` IS that integer score (`/2⁴⁰ ≈ cosine`) — no float
+    * column enters the output hash.
+    */
+  private def rescore(lists: DataFrame, probed: DataFrame): DataFrame =
+    lists.withColumn("_vu", Similarity.unitMicros(col("v")))
+      .join(broadcast(probed.select(col("c_id"), col("q_id"),
+          Similarity.unitMicros(col("qv")).as("_qu"))),
+        Seq("c_id"))
+      .filter(col("q_id") =!= col("vec_id"))
+      .select(col("q_id"), col("vec_id"),
+        Similarity.unitDot(col("_qu"), col("_vu")).as("cos_ud"))
+
+  /** Each query's `k` best `cos_ud` rows (`rn` 1..k, ties on ascending
+    * `vec_id`) — the one `k·|queries|`-bounded rank exchange of a top-k
+    * probe.
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("cos_ud").desc, col("vec_id").asc)).cast("long"))
+      .filter(col("rn") <= k)
+
+  private def requirePpm(name: String, ppm: Long): Unit =
+    require(ppm > 0 && ppm <= 1000000L, s"$name out of (0, 1e6]: $ppm")
 
   /** Probe a persisted IVF store: assign `queries` to their `nProbe`
     * nearest lists in the store's own geometry, read ONLY those
@@ -908,41 +925,9 @@ object VectorIndex {
       k: Int = 10,
       nProbe: Int = 2,
       where: Option[Column] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(isComplete(path), s"no completed IVF store at $path")
-    val meta = readMeta(spark, path)
-    val (probed, ids) = probedLists(spark, path, meta, queries, id, vec, nProbe)
-    val lists = where.foldLeft(prunedLists(spark, path, ids))(_.filter(_))
-    // rank on the exact integer unit-grid dot (the s26 convention —
-    // each side's unit vector computed once, store-side per candidate
-    // row, query-side on the config-sized broadcast); the emitted
-    // `cos_ud` IS that integer score (`/2⁴⁰ ≈ cosine`) — no float
-    // column enters the output hash
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_ud").desc, col("vec_id").asc)
-    lists.withColumn("_vu", Similarity.unitMicros(col("v")))
-      .join(broadcast(probed.withColumn("_qu", Similarity.unitMicros(col("qv")))),
-        Seq("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        Similarity.unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-  }
-
-  /** The store's per-list row counts `(c_id, n_list)` — the persisted
-    * `sizes/` artifact when present (every store written or appended
-    * since r18 carries it), else counted from the lists' partition
-    * column (file metadata — no vector is read; stores built by earlier
-    * rounds lack the artifact until their next append refreshes it).
-    */
-  def listSizes(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/sizes")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) spark.read.parquet(s"$path/sizes")
-    else spark.read.parquet(s"$path/lists")
-      .groupBy(col("c_id").cast("long").as("c_id"))
-      .agg(count(lit(1)).as("n_list"))
+    val (probed, ids) = selectLists(spark, path, manifestOf(path), queries,
+      id, vec, nProbe, None)
+    topK(rescore(prunedLists(spark, path, ids, where), probed), k)
   }
 
   /** [[probeIvfIndex]] with [[Similarity.ivfTopKAdaptive]]'s MASS BUDGET
@@ -953,21 +938,21 @@ object VectorIndex {
     * touches — an explicit, skew-proof per-query I/O budget where fixed
     * nProbe's actual cost silently varies with list imbalance (a heavy
     * cluster's 2 lists can be 100× a light one's). List masses come from
-    * the store's own config-sized [[listSizes]] artifact — the probe
-    * never pays a corpus pass — and the selection rule is byte-identical
-    * to the in-flight tier's ([[Similarity.massProbed]]: flat unit-grid
-    * centroid rank, window cumsum, all-integer gate), so a probe of a
-    * FLAT store replays bit-for-bit against `ivfTopKAdaptive` on the
-    * same corpus (spec-pinned; the shared-oracle identity behind
-    * s34_ann_store_adaptive). On a HIERARCHICAL store the stored filing
-    * is whatever the build recorded; this probe still ranks all lists
-    * flat on the query side (masses are config metadata either way), so
-    * it trades `|queries| × lists` assignment dots for the flat tier's
-    * recall. [[probeIvfIndexHierAdaptive]] is the two-level-ranked
-    * sibling (r18) — measured SLOWER-or-even at the 256-list default
-    * (BASELINE §17f), it earns its keep only at large list counts where
-    * the flat rank stops being config-sized. `where` is the same pushed
-    * payload pre-filter as [[probeIvfIndex]]'s.
+    * the per-list sizes in the store's manifest ([[listSizes]]) — the
+    * probe never pays a corpus pass — and the selection rule is
+    * byte-identical to the in-flight tier's ([[Similarity.massProbed]]:
+    * flat unit-grid centroid rank, window cumsum, all-integer gate), so
+    * a probe of a FLAT store replays bit-for-bit against
+    * `ivfTopKAdaptive` on the same corpus (spec-pinned; the shared-oracle
+    * identity behind s34_ann_store_adaptive). On a HIERARCHICAL store
+    * the stored filing is whatever the build recorded; this probe still
+    * ranks all lists flat on the query side (masses are config metadata
+    * either way), so it trades `|queries| × lists` assignment dots for
+    * the flat tier's recall. [[probeIvfIndexHierAdaptive]] is the
+    * two-level-ranked sibling (r18) — measured SLOWER-or-even at the
+    * 256-list default (BASELINE §17f), it earns its keep only at large
+    * list counts where the flat rank stops being config-sized. `where`
+    * is the same pushed payload pre-filter as [[probeIvfIndex]]'s.
     */
   def probeIvfIndexAdaptive(
       spark: SparkSession,
@@ -978,24 +963,10 @@ object VectorIndex {
       k: Int = 10,
       massPpm: Long = 150000L,
       where: Option[Column] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(isComplete(path), s"no completed IVF store at $path")
-    require(massPpm > 0 && massPpm <= 1000000L,
-      s"massPpm out of (0, 1e6]: $massPpm")
-    readMeta(spark, path) // generation check; the flat rank needs no mode
-    val (probed, ids) = massProbedLists(spark, path, queries, id, vec, massPpm)
-    val lists = where.foldLeft(prunedLists(spark, path, ids))(_.filter(_))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_ud").desc, col("vec_id").asc)
-    lists.withColumn("_vu", Similarity.unitMicros(col("v")))
-      .join(broadcast(probed.select(col("c_id"), col("q_id"),
-          Similarity.unitMicros(col("qv")).as("_qu"))),
-        Seq("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        Similarity.unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    requirePpm("massPpm", massPpm)
+    val (probed, ids) = selectLists(spark, path, manifestOf(path), queries,
+      id, vec, 0, Some(massPpm))
+    topK(rescore(prunedLists(spark, path, ids, where), probed), k)
   }
 
   /** FILTERED top-k under the mass budget, with the budget run over
@@ -1004,30 +975,27 @@ object VectorIndex {
     * correlated with the query's neighborhood (cross-source / cross-
     * language retrieval: "nearest docs from that OTHER source").
     *
-    * The failure this closes (BASELINE §18a measures it): both
-    * [[probeIvfIndex]]'s fixed `nProbe` and [[probeIvfIndexAdaptive]]'s
-    * raw-mass budget select lists by the query's centroid-cosine order
-    * alone — under a selective predicate whose matching rows live AWAY
-    * from the query (in cluster terms: the filter names a cluster the
-    * query is not near), the selected lists hold plenty of ROWS but no
-    * MATCHING rows, every candidate dies on the scan predicate, and
-    * filtered recall collapses while the unfiltered contracts all stay
-    * green. No raw-mass budget can see this: row mass is the wrong
-    * measure the moment a predicate reweights the corpus.
+    * The failure this closes (BASELINE §18a): fixed `nProbe` and the
+    * raw-mass budget select lists by centroid-cosine order alone, so
+    * under a selective predicate whose matching rows live AWAY from the
+    * query the selected lists hold plenty of ROWS but no MATCHING rows,
+    * every candidate dies on the scan predicate, and filtered recall
+    * collapses while the unfiltered contracts all stay green.
     *
     * The rule here is [[Similarity.massProbed]]'s gate fed by FILTERED
-    * per-list masses from the store's `stats/<statsCol>/` histogram
-    * ([[listStats]] — config-sized, persisted at build, refreshed on
-    * append): lists still rank by centroid cosine, but (a) lists with
-    * ZERO matching rows are excluded outright (`dropEmpty` — they can
-    * contribute no candidate, and scanning them buys nothing), and (b)
-    * the cumsum-until-budget runs over matching counts against the
-    * corpus's total MATCHING count. `massPpm` thereby keeps its
-    * meaning under any predicate: the fraction of the MATCHING corpus
-    * each query's pruned scan may touch — probing exactly as deep as
-    * the filtered neighborhood requires, whether the predicate names
-    * 40% of the corpus or 0.4%. All-integer decision, oracle-replayable
-    * (s40).
+    * per-list masses from the `statsCol` histogram in the store's
+    * manifest ([[listStats]] — config-sized, counted at build, recounted
+    * on append; a store built without it is counted by the same
+    * [[countLists]] at probe time, unpersisted): lists still rank by
+    * centroid cosine, but (a) lists with ZERO matching rows are excluded
+    * outright (`dropEmpty` — they can contribute no candidate, and
+    * scanning them buys nothing), and (b) the cumsum-until-budget runs
+    * over matching counts against the corpus's total MATCHING count.
+    * `massPpm` thereby keeps its meaning under any predicate: the
+    * fraction of the MATCHING corpus each query's pruned scan may touch —
+    * probing exactly as deep as the filtered neighborhood requires,
+    * whether the predicate names 40% of the corpus or 0.4%. All-integer
+    * decision, oracle-replayable (s40).
     *
     * `statsValues` is the predicate (`statsCol IN (values…)`), applied
     * three times from one declaration so the budget's weighting and the
@@ -1040,13 +1008,10 @@ object VectorIndex {
     * should be the mild ones).
     *
     * 100 TB shape: identical to [[probeIvfIndexAdaptive]] — the
-    * budget-selected list set IS the partition filter, the predicate is
-    * a parquet data filter inside only those partitions, and the
-    * histogram join is config-sized × broadcast. The one new scale knob
-    * is stats cardinality (lists × distinct values), which is
-    * config-sized precisely when the stats column is low-cardinality
-    * metadata (label / lang / source) — the same constraint every
-    * engine's filter-stats carry.
+    * budget-selected list set IS the partition filter and the predicate
+    * a parquet data filter inside only those partitions. The one new
+    * scale knob is stats cardinality (lists × distinct values; see
+    * [[countLists]]).
     */
   def probeIvfIndexFiltered(
       spark: SparkSession,
@@ -1059,49 +1024,28 @@ object VectorIndex {
       k: Int = 10,
       massPpm: Long = 150000L,
       where: Option[Column] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(isComplete(path), s"no completed IVF store at $path")
-    require(massPpm > 0 && massPpm <= 1000000L,
-      s"massPpm out of (0, 1e6]: $massPpm")
+    requirePpm("massPpm", massPpm)
     require(statsValues.nonEmpty, "statsValues must name at least one value")
-    val meta = readMeta(spark, path)
+    val meta = manifestOf(path)
     require(meta.payload.contains(statsCol),
       s"statsCol '$statsCol' is not a stored payload column of $path " +
         s"(stored: ${meta.payload.mkString(", ")}) — the probe's scan " +
         "predicate runs on the inline payload, build with payload= and " +
         "statsCols=")
-    // one filtered-mass table from the persisted histogram: values
-    // collapse to per-list matching counts; the total is the budget's
-    // denominator (a config-sized agg, not a corpus pass)
-    val fsizes = listStats(spark, path, statsCol)
+    // per-list matching counts: the histogram's matching values, filtered
+    // by Spark (the scan predicate's own semantics) on the local histogram
+    // and summed per list on the driver — config-sized, no corpus pass
+    val fsizes = statsOf(spark, path, meta, statsCol)
       .filter(col("sval").isin(statsValues: _*))
-      .groupBy(col("c_id")).agg(sum(col("n_list")).as("n_list"))
-    val nF = fsizes.agg(coalesce(sum(col("n_list")), lit(0L)))
-      .collect().head.getLong(0)
-    require(nF > 0,
+      .select(col("c_id"), col("n_list")).collect()
+      .toSeq.map(r => (r.getLong(0), r.getLong(1)))
+      .groupMapReduce(_._1)(_._2)(_ + _).toSeq
+    require(fsizes.map(_._2).sum > 0,
       s"no stored rows match $statsCol IN (${statsValues.mkString(", ")})")
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("c_id"), col("cv"))
-    val probed = Similarity.massProbed(
-      queries.select(id.as("q_id"), vec.as("qv")), cents, fsizes, nF,
-      massPpm, dropEmpty = true)
-      .select(col("c_id"), col("q_id"), col("qv"))
-    val ids2 = probed.select(col("c_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val lists = where.foldLeft(
-      prunedLists(spark, path, ids2)
-        .filter(col(statsCol).isin(statsValues: _*)))(_.filter(_))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_ud").desc, col("vec_id").asc)
-    lists.withColumn("_vu", Similarity.unitMicros(col("v")))
-      .join(broadcast(probed.select(col("c_id"), col("q_id"),
-          Similarity.unitMicros(col("qv")).as("_qu"))),
-        Seq("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        Similarity.unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    val (probed, ids) = massProbedLists(spark, path, queries, id, vec,
+      massPpm, fsizes, dropEmpty = true)
+    val pred = where.foldLeft(col(statsCol).isin(statsValues: _*))(_ && _)
+    topK(rescore(prunedLists(spark, path, ids, Some(pred)), probed), k)
   }
 
   /** [[probeIvfIndexAdaptive]] with the TWO-LEVEL rank on the query side
@@ -1114,20 +1058,14 @@ object VectorIndex {
     * IS `ivfAssignHierarchical` at the recorded `superStride`/`sProbe`),
     * same selection rule, same exact rescore.
     *
-    * When to pick which — MEASURED, not the dot-count intuition
-    * (BASELINE §17f, 200k corpus, 256 lists, 2000-query batch): at the
-    * pinned 15% budget the two-level probe reads 1.12× faster (31.5 vs
-    * 35.2 s — the budget-bounded candidate join dominates both, so the
-    * assignment cut barely shows); at a 1% budget it is SLOWER (9.5 vs
-    * 7.0 s — the extra gate's plan machinery costs more than the dots
-    * it saves), and its recall plateau is the hier tier's 0.96–0.98 vs
-    * the flat rank's 1.00 (§17d). So at list counts like the default
-    * 256, prefer [[probeIvfIndexAdaptive]] — the two-level rank's
-    * `lists → lists/superStride + probed-supers' centroids` saving only
-    * outgrows its overhead when the list count itself is large
-    * (10³–10⁵ lists, the billion-vector IVF geometry this sandbox
-    * cannot reach), which is exactly when the flat per-query rank over
-    * ALL lists stops being config-sized. Requires the store's recorded
+    * When to pick which — MEASURED (BASELINE §17f, 200k corpus, 256
+    * lists, 2000-query batch): 1.12× faster at the pinned 15% budget,
+    * SLOWER at 1% (9.5 vs 7.0 s — the extra gate costs more than the
+    * dots it saves), and a recall plateau of 0.96–0.98 vs the flat
+    * rank's 1.00 (§17d). So at list counts like the default 256 prefer
+    * [[probeIvfIndexAdaptive]]; the two-level saving only outgrows its
+    * overhead at 10³–10⁵ lists, where the flat per-query rank over ALL
+    * lists stops being config-sized. Requires the store's recorded
     * super geometry (`hierarchical = true` build) — probing a flat
     * store two-level would INVENT a filing the stored lists never had.
     */
@@ -1140,29 +1078,15 @@ object VectorIndex {
       k: Int = 10,
       massPpm: Long = 150000L,
       where: Option[Column] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(isComplete(path), s"no completed IVF store at $path")
-    require(massPpm > 0 && massPpm <= 1000000L,
-      s"massPpm out of (0, 1e6]: $massPpm")
-    val meta = readMeta(spark, path)
+    requirePpm("massPpm", massPpm)
+    val meta = manifestOf(path)
     require(meta.hierarchical,
       "two-level adaptive probe needs the store's recorded super " +
         "geometry (hierarchical build) — probe flat stores with " +
         "probeIvfIndexAdaptive")
     val (probed, ids) =
       hierMassProbedLists(spark, path, meta, queries, id, vec, massPpm)
-    val lists = where.foldLeft(prunedLists(spark, path, ids))(_.filter(_))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_ud").desc, col("vec_id").asc)
-    lists.withColumn("_vu", Similarity.unitMicros(col("v")))
-      .join(broadcast(probed.select(col("c_id"), col("q_id"),
-          Similarity.unitMicros(col("qv")).as("_qu"))),
-        Seq("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        Similarity.unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    topK(rescore(prunedLists(spark, path, ids, where), probed), k)
   }
 
   /** Radius (range) search against a persisted store: every candidate in
@@ -1198,33 +1122,17 @@ object VectorIndex {
       nProbe: Int = 2,
       where: Option[Column] = None,
       massPpm: Option[Long] = None): DataFrame = {
-    require(isComplete(path), s"no completed IVF store at $path")
-    massPpm.foreach(m => require(m > 0 && m <= 1000000L,
-      s"massPpm out of (0, 1e6]: $m"))
-    val meta = readMeta(spark, path)
-    // massPpm swaps the fixed-nProbe selection for the mass budget over
-    // the persisted sizes — for range search the budget matters even
-    // more than for top-k: the result set is data-dependent, so the
-    // probe's I/O bound is the ONLY cost knob the caller holds
-    val (probed, ids) = massPpm match {
-      case Some(mp) => massProbedLists(spark, path, queries, id, vec, mp)
-      case None => probedLists(spark, path, meta, queries, id, vec, nProbe)
-    }
-    val lists = where.foldLeft(prunedLists(spark, path, ids))(_.filter(_))
-    // row MEMBERSHIP decides on the exact integer unit-grid dot
-    // (`udot ≥ minCosine·2⁴⁰` — the one comparison a float boundary must
-    // never own: a candidate AT the bar would flip rows_match across
-    // engines, not just a hash); the emitted `cos_ud` is the SAME score
-    // membership decided on, so output rows always satisfy
-    // `cos_ud ≥ cosineMicros2(minCosine)` — unlike the old 6-dp float
-    // display column, which could print below the bar
-    lists.withColumn("_vu", Similarity.unitMicros(col("v")))
-      .join(broadcast(probed.withColumn("_qu", Similarity.unitMicros(col("qv")))),
-        Seq("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("cos_ud", Similarity.unitDot(col("_qu"), col("_vu")))
+    massPpm.foreach(requirePpm("massPpm", _))
+    // massPpm swaps the fixed-nProbe selection for the mass budget — for
+    // range search the budget matters even more than for top-k: the
+    // result set is data-dependent, so the probe's I/O bound is the ONLY
+    // cost knob the caller holds
+    val (probed, ids) = selectLists(spark, path, manifestOf(path), queries,
+      id, vec, nProbe, massPpm)
+    // membership on the integer score itself (`udot ≥ minCosine·2⁴⁰`): a
+    // candidate AT the bar must never hinge on a float boundary
+    rescore(prunedLists(spark, path, ids, where), probed)
       .filter(col("cos_ud") >= Similarity.cosineMicros2(minCosine))
-      .select(col("q_id"), col("vec_id"), col("cos_ud"))
   }
 
   /** File manifest of the store's inverted lists, one row per data file:
@@ -1261,10 +1169,8 @@ object VectorIndex {
     * untouched lists are never read or rewritten. A rewrite wins in
     * EITHER direction (r18): some bin holds more than one file (drizzle
     * — the merge case), or some single file exceeds `2 × targetBytes`
-    * (oversized — the SPLIT case, which drizzle-only compaction could
-    * never fix: a Zipf-heavy list written before the mass-proportional
-    * build route, or one whose mass outgrew its estimate across appends,
-    * is one file in one bin and so never "needy" under the merge rule).
+    * (oversized — the SPLIT case: a heavy list whose mass outgrew its
+    * estimate is one file in one bin, never "needy" to a merge rule).
     * Rows are routed to `max(bins, ceil(listBytes / targetBytes))`
     * output files via a deterministic `xxhash64(vec_id) % files` split,
     * so a compacted list lands in row-group-friendly blocks of
@@ -1272,9 +1178,10 @@ object VectorIndex {
     *
     * Probe results are bit-identical before and after (the store's ROWS
     * are untouched — spec-pinned, and `s28`'s standing oracle replays the
-    * probe of a compacted store); the completeness marker is dropped for
-    * the duration of the rewrite so a killed compaction fails the next
-    * probe loudly instead of serving a half-rewritten store.
+    * probe of a compacted store); the manifest is dropped for the
+    * duration of the rewrite, so a killed compaction fails the next probe
+    * loudly instead of serving a half-rewritten store, and put back
+    * unchanged after it (no count changes).
     *
     * @return the pre-compaction plan for the rewritten lists — one row
     *         per merged file: (`c_id`, `file_id`, `bytes`, `bin`,
@@ -1284,7 +1191,9 @@ object VectorIndex {
       spark: SparkSession,
       path: String,
       targetBytes: Long = 128L << 20): DataFrame = {
-    require(isComplete(path), s"no completed IVF store at $path")
+    // read before the marker drop: compaction changes no row, so the same
+    // manifest goes back afterwards
+    val meta = manifestOf(path)
     val manifest = listManifest(spark, path)
     val plan = Layout.compactionPlan(manifest, col("c_id"), col("file_id"),
       col("bytes"), targetBytes)
@@ -1306,15 +1215,8 @@ object VectorIndex {
           lit(4096L)).cast("int").as("bins"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     if (needy.nonEmpty) {
-      val ids = needy.keys.toArray.sorted
-      val rows = prunedLists(spark, path, ids)
-      val binsOf = typedLit(needy)
-      val rewrite = rows
-        .withColumn(CompactRouteCol,
-          pmod(xxhash64(col("vec_id")), element_at(binsOf, col("c_id"))))
-        .repartition(math.max(needy.values.sum, 1), col("c_id"),
-          col(CompactRouteCol))
-        .drop(CompactRouteCol)
+      val rewrite = routeToLists(
+        prunedLists(spark, path, needy.keys.toArray.sorted), needy, 1, 0L)
       val conf = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       dropMarker(path)
       try {
@@ -1325,7 +1227,7 @@ object VectorIndex {
         conf.fold(spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
           spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
       }
-      putMarker(path)
+      putManifest(path, meta)
     }
     import spark.implicits._
     plan.join(broadcast(needy.keys.toSeq.toDF("c_id")), Seq("c_id"))
@@ -1397,11 +1299,12 @@ object VectorIndex {
     *
     * r18: serves RESIDUAL stores transparently (`writeIvfIndex(pq =
     * true, pqResidual = true)` — codes over `v − centroid(list)`, the
-    * IVFADC layout §16c showed clustered corpora need): meta routes the
-    * LUT to per-(query, probed-list) residual space, in lockstep with
-    * `ivfPqTopK(residual = true)`. And both adaptive knobs compose:
+    * IVFADC layout §16c showed clustered corpora need): the manifest
+    * routes the LUT to per-(query, probed-list) residual space, in
+    * lockstep with `ivfPqTopK(residual = true)`. And both adaptive knobs
+    * compose:
     * `massPpm` replaces the fixed nProbe with the mass budget over the
-    * persisted sizes (the budget then bounds the BYTES the codes scan
+    * manifest's sizes (the budget then bounds the BYTES the codes scan
     * touches), `poolPpm` replaces the fixed pool with the candidate-
     * scaled cut — a residual store probed with both is the store-served
     * s33 (shared oracle, s35).
@@ -1425,14 +1328,10 @@ object VectorIndex {
       where: Option[Column] = None,
       massPpm: Option[Long] = None,
       poolPpm: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graft.ColumnBridge
-    require(isComplete(path), s"no completed IVF store at $path")
-    massPpm.foreach(m => require(m > 0 && m <= 1000000L,
-      s"massPpm out of (0, 1e6]: $m"))
-    poolPpm.foreach(p => require(p > 0 && p <= 1000000L,
-      s"poolPpm out of (0, 1e6]: $p"))
-    val meta = readMeta(spark, path)
+    massPpm.foreach(requirePpm("massPpm", _))
+    poolPpm.foreach(requirePpm("poolPpm", _))
+    val meta = manifestOf(path)
     require(meta.pq, s"store at $path was written without PQ codes — " +
       "probe with probeIvfIndex or rebuild with pq = true")
     val effPool = math.max(pool, k * nProbe)
@@ -1442,12 +1341,10 @@ object VectorIndex {
     lazy val centsDf = spark.read.parquet(s"$path/centroids")
       .select(col("c_id"), col("cv"))
     // probe selection: fixed nProbe in the store's own geometry, or the
-    // mass budget over the persisted sizes (see [[probeIvfIndexAdaptive]]
+    // mass budget over the manifest's sizes (see [[probeIvfIndexAdaptive]]
     // — same rule, so massPpm bounds the bytes the codes scan touches)
-    val (probed, ids) = massPpm match {
-      case Some(mp) => massProbedLists(spark, path, queries, id, vec, mp)
-      case None => probedLists(spark, path, meta, queries, id, vec, nProbe)
-    }
+    val (probed, ids) =
+      selectLists(spark, path, meta, queries, id, vec, nProbe, massPpm)
     // residual stores (meta.pqResidual) hold codes over v − centroid:
     // the LUT must be per-(query, probed LIST) over qv − centroid, in
     // lockstep with Similarity.ivfPqTopK(residual = true)
@@ -1456,8 +1353,7 @@ object VectorIndex {
         probed.select(col("c_id"), col("q_id"), lut(col("qv")).as("lut"))
       else probed.join(broadcast(centsDf), Seq("c_id"))
         .select(col("c_id"), col("q_id"),
-          lut(zip_with(col("qv").cast("array<double>"), col("cv"),
-            (a, bb) => a - bb)).as("lut"))
+          lut(residualOf(col("qv"))).as("lut"))
     val all = prunedLists(spark, path, ids)
     val lists = where.foldLeft(all)(_.filter(_))
     val est = (0 until meta.numSubspaces)
@@ -1466,8 +1362,6 @@ object VectorIndex {
       .reduce(_ + _)
     val wEst = Window.partitionBy(col("q_id"))
       .orderBy(col("est").asc, col("vec_id").asc)
-    val wCos = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_ud").desc, col("vec_id").asc)
     // candidate scan: codes only — the store's vectors are not read here
     val ranked = lists.select(col("c_id"), col("vec_id"), col("codes"))
       .join(broadcast(probedLut), Seq("c_id"))
@@ -1490,12 +1384,11 @@ object VectorIndex {
     // drag the predicate's payload columns into the vector scan)
     val qv = queries.select(id.as("q_id"), vec.as("qv"),
       Similarity.unitMicros(vec).as("_qu"))
-    all.select(col("vec_id"), col("v"))
+    topK(all.select(col("vec_id"), col("v"))
       .join(broadcast(poolRows), Seq("vec_id"))
       .join(broadcast(qv), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
-        Similarity.unitDot(col("_qu"), Similarity.unitMicros(col("v"))).as("cos_ud"))
-      .withColumn("rn", row_number().over(wCos).cast("long"))
-      .filter(col("rn") <= k)
+        Similarity.unitDot(col("_qu"), Similarity.unitMicros(col("v")))
+          .as("cos_ud")), k)
   }
 }

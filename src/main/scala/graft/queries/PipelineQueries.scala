@@ -872,14 +872,6 @@ object PipelineQueries {
   private def storeRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_STORE_DIR", "/root/repo/tmp/stores")
 
-  /** Deterministic per-(corpus, config) store path: keyed on the sfDir
-    * path, the embeddings parquet's newest mtime, AND
-    * [[VectorIndex.FormatVersion]] — so a regenerated corpus at the same
-    * path gets a FRESH store instead of probing a stale one, and a
-    * code-generation change in the assignment semantics (version bump)
-    * invalidates every cached store instead of serving lists older code
-    * wrote.
-    */
   /** Newest mtime under `dir`'s embeddings table — the corpus VERSION
     * key shared by the cached-store paths and the memoized corpus count.
     * Walked through the Hadoop FS API (not java.io.File) so the key
@@ -900,6 +892,14 @@ object PipelineQueries {
     newest(fs, fs.getFileStatus(p))
   }
 
+  /** Deterministic per-(corpus, config) store path: keyed on the sfDir
+    * path, the embeddings parquet's newest mtime, AND
+    * [[VectorIndex.FormatVersion]] — so a regenerated corpus at the same
+    * path gets a FRESH store instead of probing a stale one, and a
+    * code-generation change in the assignment semantics or the store
+    * layout (version bump) invalidates every cached store instead of
+    * serving lists older code wrote.
+    */
   private def ivfStorePath(dir: String, tag: String): String =
     ivfStorePath(dir, tag, embeddingsVersion(dir))
 
@@ -977,8 +977,8 @@ object PipelineQueries {
   // 100 TB path: lists are stored partitionBy(c_id), so the budget-
   // selected list set IS the partition filter and massPpm bounds the
   // BYTES each query's pruned scan touches (fixed nProbe's actual cost
-  // silently varies with list imbalance). Masses come from the store's
-  // config-sized sizes/ artifact — no corpus pass at probe time. Flat
+  // silently varies with list imbalance). Masses come from the per-list
+  // sizes in the store's manifest — no corpus pass at probe time. Flat
   // store at s32's geometry → result ≡ s32 by construction (the probe's
   // selection rule is byte-identical to massProbed's): shared oracle.
   private val s34: Q = (s, dir) => {
@@ -1022,8 +1022,8 @@ object PipelineQueries {
   // rows live away from the query's neighborhood fills the probed lists
   // with non-matching candidates and filtered recall collapses while
   // every unfiltered contract stays green. Here the budget runs over
-  // MATCHING masses from the store's persisted stats/label histogram
-  // (zone-map-style metadata: config-sized, written at build, refreshed
+  // MATCHING masses from the label histogram in the store's manifest
+  // (zone-map-style metadata: config-sized, counted at build, recounted
   // on append), zero-match lists leave the rank outright, and massPpm
   // keeps its meaning under the predicate — the fraction of the
   // MATCHING corpus each query's pruned scan may touch

@@ -16,6 +16,8 @@ class VectorIndexSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.001"
+  /** The store's completeness marker, which holds its manifest. */
+  private val Marker = "_GRAFT_IVF_STORE_OK"
   private def emb: DataFrame = spark.read.parquet(s"$sfDir/embeddings.parquet")
   private def queries: DataFrame = emb.filter(col("vec_id") < 5)
 
@@ -148,7 +150,7 @@ class VectorIndexSpec extends AnyFunSuite {
     val path = tmpStore("ivfadaptprune")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
       hierarchical = false)
-    // sizes/ written at build = a recount of the persisted lists
+    // the manifest's sizes = a recount of the persisted lists
     val persisted = VectorIndex.listSizes(spark, path)
       .select(col("c_id"), col("n_list"))
       .as[(Long, Long)].collect().toMap
@@ -156,8 +158,6 @@ class VectorIndexSpec extends AnyFunSuite {
       .groupBy(col("c_id").cast("long")).agg(count(lit(1)))
       .as[(Long, Long)].collect().toMap
     assert(persisted == recount && persisted.nonEmpty)
-    assert(new java.io.File(s"$path/sizes").isDirectory,
-      "build must persist the sizes/ artifact")
     val totalLists = new java.io.File(s"$path/lists").listFiles()
       .count(_.getName.startsWith("c_id="))
     // the expected probed set, from the SAME rule over the store's own
@@ -193,26 +193,6 @@ class VectorIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("listSizes falls back to a lists recount when sizes/ is absent (pre-r18 stores)") {
-    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
-    val path = tmpStore("ivfnosizes")
-    VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false)
-    val before = ranking(VectorIndex.probeIvfIndexAdaptive(spark, path,
-      queries, col("vec_id"), col("embedding"), k = 10, massPpm = 150000L))
-    // simulate a store written by an earlier code generation
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(s"$path/sizes"))
-    assert(!new java.io.File(s"$path/sizes").exists())
-    val after = ranking(VectorIndex.probeIvfIndexAdaptive(spark, path,
-      queries, col("vec_id"), col("embedding"), k = 10, massPpm = 150000L))
-    assert(after == before && after.nonEmpty,
-      "fallback recount must select the same lists as the persisted sizes")
-  }
-
   test("append refreshes sizes/ so the mass budget sees appended rows") {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfsizesapp")
@@ -225,7 +205,7 @@ class VectorIndexSpec extends AnyFunSuite {
     val afterN = VectorIndex.listSizes(spark, path)
       .agg(sum(col("n_list"))).as[Long].collect().head
     assert(afterN == emb.count() && afterN > beforeN,
-      s"sizes/ must cover build + increment: $beforeN -> $afterN")
+      s"sizes must cover build + increment: $beforeN -> $afterN")
   }
 
   test("residual PQ store probed with both adaptive knobs ≡ in-flight ivfPqTopK (the s35/s33 shared-oracle identity)") {
@@ -812,7 +792,6 @@ class VectorIndexSpec extends AnyFunSuite {
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
       hierarchical = false, payload = Seq(col("label")),
       statsCols = Seq("label"))
-    assert(new java.io.File(s"$path/stats/label").exists())
     // massPpm = 1e6 covers every matching list → the probe must be the
     // exact cosine top-k among matching rows (the filtered ground truth)
     val got = ranking(VectorIndex.probeIvfIndexFiltered(spark, path,
@@ -867,16 +846,14 @@ class VectorIndexSpec extends AnyFunSuite {
     // (c_id, label) columns and must decide identically
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
       hierarchical = false, payload = Seq(col("label")))
-    assert(!new java.io.File(s"$path/stats/label").exists())
     val noStats = ranking(VectorIndex.probeIvfIndexFiltered(spark, path,
       queries, col("vec_id"), col("embedding"), statsCol = "label",
       statsValues = Seq(3), k = 10, massPpm = 300000L))
-    // ensure on the servable store persists the missing histogram
-    // without a rebuild; the probe then reads the artifact — same rows
+    // ensure on the servable store counts the missing histogram into
+    // the manifest without a rebuild; the probe then reads it — same rows
     VectorIndex.ensureIvfIndex(emb, col("vec_id"), col("embedding"), path,
       hierarchical = false, payload = Seq(col("label")),
       statsCols = Seq("label"))
-    assert(new java.io.File(s"$path/stats/label").exists())
     val withStats = ranking(VectorIndex.probeIvfIndexFiltered(spark, path,
       queries, col("vec_id"), col("embedding"), statsCol = "label",
       statsValues = Seq(3), k = 10, massPpm = 300000L))
@@ -899,7 +876,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("no stored rows match"))
     VectorIndex.appendToIvfIndex(emb.filter(col("label") === 9),
       col("vec_id"), col("embedding"), path)
-    // stats/ recounted on append → the new label's masses drive the
+    // histogram recounted on append → the new label's masses drive the
     // budget and its rows are served
     val labels = emb.select(col("vec_id"), col("label"))
       .as[(Long, Int)].collect().toMap
@@ -958,29 +935,136 @@ class VectorIndexSpec extends AnyFunSuite {
   test("a store built under another assignment-semantics generation is rejected, not silently probed") {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfgen")
-    VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path)
-    // simulate a generation-1 store: its meta predates version-stamping
-    // (the field is absent), so its lists were filed under rounded-cosine
-    // semantics that today's probe assignment would disagree with
-    val legacy = spark.read.parquet(s"$path/meta").drop("format_version")
-      .collect()
-    val schema = spark.read.parquet(s"$path/meta").drop("format_version").schema
-    spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          java.util.Arrays.asList(legacy: _*)), schema)
+    VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
+      pq = true, payload = Seq(col("label")))
+    // reshape it into what the v5 writer left: an EMPTY completeness
+    // marker and a one-row meta/ table stamped format_version = 5
+    val marker = new org.apache.hadoop.fs.Path(path, Marker)
+    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(marker, false)
+    fs.create(marker, true).close()
+    Seq((true, 16, 2, true, 8, 16, "label", 5, false))
+      .toDF("hierarchical", "super_stride", "s_probe", "pq", "num_subspaces",
+        "num_codes", "payload", "format_version", "pq_residual")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    val e = intercept[IllegalArgumentException] {
-      VectorIndex.probeIvfIndex(spark, path, queries,
-        col("vec_id"), col("embedding"))
+    val (id, vec) = (col("vec_id"), col("embedding"))
+    val calls: Seq[(String, () => Any)] = Seq(
+      "probeIvfIndex" -> (() =>
+        VectorIndex.probeIvfIndex(spark, path, queries, id, vec)),
+      "probeIvfIndexAdaptive" -> (() =>
+        VectorIndex.probeIvfIndexAdaptive(spark, path, queries, id, vec)),
+      "probeIvfIndexFiltered" -> (() =>
+        VectorIndex.probeIvfIndexFiltered(spark, path, queries, id, vec,
+          statsCol = "label", statsValues = Seq(3))),
+      "probeIvfIndexHierAdaptive" -> (() =>
+        VectorIndex.probeIvfIndexHierAdaptive(spark, path, queries, id, vec)),
+      "probeIvfRange" -> (() =>
+        VectorIndex.probeIvfRange(spark, path, queries, id, vec,
+          minCosine = 0.25)),
+      "probeIvfPqIndex" -> (() =>
+        VectorIndex.probeIvfPqIndex(spark, path, queries, id, vec)),
+      "appendToIvfIndex" -> (() =>
+        VectorIndex.appendToIvfIndex(queries, id, vec, path)))
+    for ((name, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("generation"), s"$name: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("generation"))
     // ensure = build-if-needed: an older-generation store is REBUILT
     // (probe/append fail, the serving gate refreshes)
     assert(!VectorIndex.isServable(spark, path))
-    VectorIndex.ensureIvfIndex(emb, col("vec_id"), col("embedding"), path)
+    VectorIndex.ensureIvfIndex(emb, id, vec, path)
     assert(VectorIndex.isServable(spark, path))
-    assert(ranking(VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"))).nonEmpty)
+    assert(ranking(VectorIndex.probeIvfIndex(spark, path, queries, id, vec))
+      .nonEmpty)
+  }
+
+  test("a damaged manifest is not servable: ensure rebuilds, probes and appends fail naming the store") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    val path = tmpStore("ivfdamaged")
+    val marker = new org.apache.hadoop.fs.Path(path, Marker)
+    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
+    // two ways to lose the manifest's second half: rewritten short through
+    // the filesystem API (the JSON no longer parses), and truncated in
+    // place behind its back (a checksummed filesystem fails the read)
+    val damages: Seq[(String, () => Unit)] = Seq(
+      "rewritten" -> (() => {
+        val in = fs.open(marker)
+        val bytes = try in.readAllBytes() finally in.close()
+        val out = fs.create(marker, true)
+        try out.write(bytes.take(bytes.length / 2)) finally out.close()
+      }),
+      "truncated" -> (() => {
+        val f = new java.io.RandomAccessFile(s"$path/$Marker", "rw")
+        try f.setLength(f.length / 2) finally f.close()
+      }))
+    VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path)
+    val want = ranking(VectorIndex.probeIvfIndex(spark, path, queries,
+      col("vec_id"), col("embedding")))
+    for ((how, damage) <- damages) {
+      damage()
+      assert(VectorIndex.isComplete(path), how)
+      assert(!VectorIndex.isServable(spark, path), how)
+      val probe = intercept[IllegalArgumentException] {
+        VectorIndex.probeIvfIndex(spark, path, queries, col("vec_id"),
+          col("embedding"))
+      }
+      val append = intercept[IllegalArgumentException] {
+        VectorIndex.appendToIvfIndex(queries, col("vec_id"),
+          col("embedding"), path)
+      }
+      for (e <- Seq(probe, append))
+        assert(e.getMessage.contains(path) && e.getMessage.contains("damaged"),
+          s"$how: ${e.getMessage}")
+      VectorIndex.ensureIvfIndex(emb, col("vec_id"), col("embedding"), path)
+      assert(VectorIndex.isServable(spark, path), how)
+      assert(ranking(VectorIndex.probeIvfIndex(spark, path, queries,
+        col("vec_id"), col("embedding"))) == want, how)
+    }
+  }
+
+  test("the store root holds only lists/, centroids/, codebook/ (PQ) and the manifest, whose counts equal a recount of lists/ after build, append and compact") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    // a string histogram with a NULL group beside the int one: histogram
+    // values must keep their column's type and their NULL group
+    val corpus = emb.withColumn("tag",
+      when(col("label") < 8, (col("label") % 3).cast("string")))
+    // the build slice keeps every stride-picked PQ codebook id (0,16,…,240)
+    val build = corpus.filter(col("vec_id") < 250 || col("vec_id") >= 300)
+    val inc = corpus.filter(col("vec_id") >= 250 && col("vec_id") < 300)
+    val stores = Seq(
+      ("plain", false, Nil),
+      ("pq", true, Nil),
+      ("stats", false, Seq("label", "tag")))
+    for ((name, pq, statsCols) <- stores) {
+      val path = tmpStore(s"ivflayout$name")
+      def check(step: String): Unit = {
+        // hidden entries are the local filesystem's .crc checksum sidecars
+        val root = new java.io.File(path).list().filterNot(_.startsWith("."))
+        assert(root.toSet == Set("lists", "centroids", Marker) ++
+          (if (pq) Set("codebook") else Set()), s"$name/$step: ${root.toSeq}")
+        val lists = spark.read.parquet(s"$path/lists")
+        def recount(c: String*) = lists
+          .groupBy((col("c_id").cast("long") +: c.map(col)): _*)
+          .agg(count(lit(1))).collect().toSet
+        assert(VectorIndex.listSizes(spark, path).collect().toSet == recount(),
+          s"$name/$step: sizes")
+        for (c <- statsCols) {
+          val stats = VectorIndex.listStats(spark, path, c)
+          assert(stats.schema("sval").dataType == lists.schema(c).dataType,
+            s"$name/$step: $c type")
+          assert(stats.collect().toSet == recount(c), s"$name/$step: $c")
+        }
+      }
+      VectorIndex.writeIvfIndex(build, col("vec_id"), col("embedding"), path,
+        hierarchical = false, pq = pq, payload = statsCols.map(col),
+        statsCols = statsCols)
+      check("build")
+      VectorIndex.appendToIvfIndex(inc, col("vec_id"), col("embedding"), path)
+      check("append")
+      assert(!VectorIndex.compactIvfIndex(spark, path).isEmpty,
+        s"$name: the append left nothing to compact")
+      check("compact")
+    }
   }
 
   test("loud failures: probing an incomplete store, PQ-probing a non-PQ store, appending to nothing") {

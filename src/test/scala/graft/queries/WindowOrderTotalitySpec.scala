@@ -99,6 +99,11 @@ class WindowOrderTotalitySpec extends AnyFunSuite {
     // same class as every rescore window); its selection reuses
     // massProbed's already-classified cumsum (the inner-join dropEmpty
     // variant orders the same (c_dot desc, c_id asc) singleton ranks).
+    // VectorIndex's rescore ranks — every top-k probe's, PQ included —
+    // are ONE call site now (its `topK` helper, (cos_ud desc, vec_id
+    // asc), UNIQUE via vec_id), so the file holds four sites: topK,
+    // hierMassProbedLists' leaf cumsum, the PQ probe's ADC rank ((est
+    // asc, vec_id asc), UNIQUE via vec_id) and its cand_n count.
     ("embeddings", Seq("vec_id"), "Similarity/VectorIndex rank tiebreaks"),
     ("customer", Seq("c_custkey"), "fuzzy-join id tiebreaks"),
     ("part", Seq("p_partkey"), "join/agg determinism"),
@@ -173,7 +178,7 @@ class WindowOrderTotalitySpec extends AnyFunSuite {
       "operators/Search.scala" -> 3,
       "operators/Similarity.scala" -> 26,
       "operators/SkewAgg.scala" -> 1,
-      "operators/VectorIndex.scala" -> 8,
+      "operators/VectorIndex.scala" -> 4,
       "queries/AnalyticsQueries.scala" -> 9,
       "queries/PipelineQueries.scala" -> 9)
     val root = new java.io.File("src/main/scala/graft")
