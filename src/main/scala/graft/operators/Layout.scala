@@ -100,6 +100,7 @@ object Layout {
     * Scale shape: ONE window per group partition ordered by file id —
     * manifest-sized work; group cardinality (table partitions) bounds the
     * skew, and a group's manifest slice is at most its file count.
+    * [[nextFitBins]] is the same rule on the driver, for one group.
     *
     * @return one row per file: (`group`, `file_id`, `bytes`, `bin`,
     *         `bin_files`, `bin_bytes`) — `bin_*` aggregates let the
@@ -124,6 +125,37 @@ object Layout {
     planned
       .withColumn("bin_files", count(lit(1)).over(wb))
       .withColumn("bin_bytes", sum(col("bytes")).over(wb))
+  }
+
+  /** One file of a [[nextFitBins]] plan — a [[compactionPlan]] row
+    * without its group.
+    */
+  final case class BinnedFile[K](fileId: K, bytes: Long, bin: Long,
+      binFiles: Long, binBytes: Long)
+
+  /** [[compactionPlan]]'s bin rule for ONE group's files, on the driver:
+    * files in `fileId` order, `bin = start_offset div targetBytes`, plus
+    * each bin's file count and bytes. For a manifest the driver already
+    * holds (a store's file listing), this answers without a Spark job;
+    * `LayoutSpec` pins it equal to [[compactionPlan]] on random
+    * manifests. File ids must be unique within the group, and `ord` must
+    * be the engine's order on them (for strings: ASCII names, where
+    * UTF-16 and Spark's byte order agree).
+    *
+    * @return one entry per file, in `fileId` order
+    */
+  def nextFitBins[K](files: Seq[(K, Long)], targetBytes: Long)(
+      implicit ord: Ordering[K]): Seq[BinnedFile[K]] = {
+    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
+    val sorted = files.sortBy(_._1)
+    // each file's start offset is the running byte total before it
+    val binned = sorted.zip(sorted.scanLeft(0L)(_ + _._2).map(_ / targetBytes))
+    val totals = binned.groupMapReduce(_._2)(f => (1L, f._1._2)) {
+      case ((n1, b1), (n2, b2)) => (n1 + n2, b1 + b2)
+    }
+    binned.map { case ((id, bytes), bin) =>
+      BinnedFile(id, bytes, bin, totals(bin)._1, totals(bin)._2)
+    }
   }
 
   /** Write `df` as a bucketed (+ per-bucket sorted) parquet table in the

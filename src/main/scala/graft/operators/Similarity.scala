@@ -665,13 +665,14 @@ object Similarity {
   private val MaxInlineCentroids = 8192
 
   /** The collected centroid model behind the zero-exchange assignment
-    * fast path: original `(c_id, cv)` rows (so callers can rebuild a
-    * LOCAL centroid relation and never recompute a trained-quantizer
-    * subtree), ids sorted ascending with their unit-grid vectors
-    * flattened beside them. `None` when the set is empty, larger than
-    * [[MaxInlineCentroids]], holds NULL ids / NULL or ragged unit
-    * vectors, or duplicate ids — callers fall back to the exchange
-    * formulation, which owns those edge semantics.
+    * fast path: original `(c_id, cv)` rows in the frame's own order (so
+    * callers can rebuild a LOCAL centroid relation that writes the same
+    * bytes, and never recompute a trained-quantizer subtree), ids sorted
+    * ascending with their unit-grid vectors flattened beside them.
+    * `None` when the set is empty, larger than [[MaxInlineCentroids]],
+    * holds NULL ids / NULL or ragged unit vectors, or duplicate ids —
+    * callers fall back to the exchange formulation, which owns those
+    * edge semantics.
     *
     * The collect is config-sized by the `maxCentroids` contract — the
     * same model-artifact pattern as the PQ codebook ([[pqCodebook]]).
@@ -710,7 +711,7 @@ object Similarity {
       None
     else {
       val sorted = all.map(r =>
-        (r.getLong(2), r.getSeq[Long](3).toArray, r)).sortBy(_._1)
+        (r.getLong(2), r.getSeq[Long](3).toArray)).sortBy(_._1)
       val dim = sorted.head._2.length
       val dup = sorted.iterator.sliding(2).exists {
         case Seq(a, b) => a._1 == b._1
@@ -720,8 +721,7 @@ object Similarity {
       else {
         val schema = org.apache.spark.sql.types.StructType(
           projected.schema.take(2))
-        val rows = sorted.map { case (_, _, r) =>
-          org.apache.spark.sql.Row(r.get(0), r.get(1)) }
+        val rows = all.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1)))
         Some(CentModel(rows, schema, sorted.map(_._1),
           sorted.flatMap(_._2), idType))
       }

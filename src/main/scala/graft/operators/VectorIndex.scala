@@ -46,9 +46,10 @@ import org.json4s.jackson.Serialization
   *  - [[appendToIvfIndex]] is continuous ingestion: an increment is
   *    assigned against the STORED centroids (the model stays fixed —
   *    stored rows must be probe- and batch-independent) and appended as
-  *    new files inside the existing `c_id=` directories; per-batch cost
-  *    tracks the increment, never the store (the d13/incrementalDedup
-  *    contract, applied to vectors).
+  *    new files inside the existing `c_id=` directories; the per-batch
+  *    assignment and write track the increment (the d13/incrementalDedup
+  *    contract, applied to vectors), and only the manifest recount reads
+  *    the store's partition and histogram columns.
   *
   * Everything is deterministic (stride centroids, exact integer
   * unit-micros dots for every list-membership decision —
@@ -336,8 +337,11 @@ object VectorIndex {
     * block / row-group at ANY corpus size AND any skew. (A global-mean
     * width sized a Zipf-heavy list's files at `heavyShare × lists ×` the
     * target, its one writer task the build's straggler; a fixed 1 means
-    * ~400 GB single files per list at 100 TB.) Sources without a real
-    * size estimate fall back to 1, and per-list counts are clamped to
+    * ~400 GB single files per list at 100 TB.) An input whose size
+    * estimate is at most `targetFileBytes` takes the 1-file route with
+    * no sampling job — no list can estimate above the whole input, so
+    * the sample could only answer 1. Sources without a real size
+    * estimate fall back to 1 too, and per-list counts are clamped to
     * [1, 4096] (≈ a 512 GB list at the 128 MB default target — past
     * that, raise `targetFileBytes` deliberately).
     */
@@ -388,10 +392,16 @@ object VectorIndex {
     val meta = StoreManifest(FormatVersion, hierarchical, superStride, sProbe,
       pq, numSubspaces, numCodes, pqResidual, payNames.toList,
       Counts(Map.empty, Map.empty))
-    val cents = centroids.map(_.select(col("c_id"), col("cv")))
+    val picked = centroids.map(_.select(col("c_id"), col("cv")))
       .getOrElse(Similarity.ivfCentroids(base.select(id.as("vec_id"),
         vec.as("v")), centroidStride, maxCentroids))
-    val listed = assign(base, id, vec, cents, meta)
+    // the centroid model is collected ONCE: the assignment, the residual
+    // join, the list count and `centroids/` all read it, so none of them
+    // re-runs the centroid pick over `base` (no model — the exchange
+    // fallback — keeps the frame)
+    val cm = Similarity.collectCentModel(picked)
+    val cents = cm.fold(picked)(_.localCents(spark))
+    val listed = assign(base, id, vec, cents, meta, cm)
     val rows =
       if (!pq) listed
       else {
@@ -420,22 +430,27 @@ object VectorIndex {
         withCodes(listed, cents, cb, pqResidual)
       }
     val stored = if (payload.isEmpty) rows else rows.join(pay, Seq("vec_id"))
-    writeLists(stored, base, listed, cents, filesPerList, targetFileBytes,
-      path, "overwrite")
+    val written = writeLists(stored, base, listed,
+      cm.fold(cents.count())(_.ids.length.toLong), filesPerList,
+      targetFileBytes, path, "overwrite")
     cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    putManifest(path, meta.copy(counts = countLists(spark, path, statsCols)))
+    putManifest(path,
+      meta.copy(counts = countLists(spark, path, statsCols, Some(written))))
   }
 
   /** `(c_id, vec_id, v)`: `input` filed under its `keep` nearest lists in
-    * the store's geometry — two-level or flat, as `meta` records.
+    * the store's geometry — two-level or flat, as `meta` records. `model`
+    * is the already-collected centroid model of `cents`, if any.
     */
   private def assign(input: DataFrame, id: Column, vec: Column,
-      cents: DataFrame, meta: StoreManifest, keep: Int = 1): DataFrame =
+      cents: DataFrame, meta: StoreManifest,
+      model: Option[Similarity.CentModel] = None,
+      keep: Int = 1): DataFrame =
     if (meta.hierarchical)
       Similarity.ivfAssignHierarchical(input, id, vec, cents,
-        meta.superStride, meta.sProbe, keep = keep)
+        meta.superStride, meta.sProbe, keep = keep, model = model)
     else Similarity.ivfAssignTo(cents,
-      input.select(id.as("vec_id"), vec.as("v")), "v", "vec_id", keep)
+      input.select(id.as("vec_id"), vec.as("v")), "v", "vec_id", keep, model)
 
   /** `v − centroid(list)` against the joined `cv` — the residual space
     * of `pqResidual` stores.
@@ -469,25 +484,31 @@ object VectorIndex {
     * the layout rule the build and every append share: explicit
     * `filesPerList`, or per-list widths auto-sized from `input`'s bytes
     * and `listed`'s sampled masses (see [[writeIvfIndex]]).
+    *
+    * @return the schema of the rows written, for the read-back
     */
   private def writeLists(stored: DataFrame, input: DataFrame,
-      listed: DataFrame, cents: DataFrame, filesPerList: Int,
-      targetFileBytes: Long, path: String, mode: String): Unit = {
+      listed: DataFrame, nLists: => Long, filesPerList: Int,
+      targetFileBytes: Long, path: String, mode: String): StructType = {
     val auto =
       if (filesPerList > 0) None
       else autoListFileCounts(input, listed, targetFileBytes)
-    // the list count is one config-sized job, run only when a split can
+    // the list count comes from the collected centroid model (a count job
+    // only on the exchange fallback), and is taken only when a split can
     // happen (explicit filesPerList = 1 never forces it)
-    routeToLists(stored, auto.getOrElse(Map.empty), filesPerList.max(1),
-      cents.count())
-      .write.mode(mode).partitionBy("c_id").parquet(s"$path/lists")
+    val routed = routeToLists(stored, auto.getOrElse(Map.empty),
+      filesPerList.max(1), nLists)
+    routed.write.mode(mode).partitionBy("c_id").parquet(s"$path/lists")
+    routed.schema
   }
 
   /** Count the lists ACTUALLY WRITTEN (read-back, the s23 honesty rule)
     * in ONE aggregation collected to the driver: grouping sets over
     * `(c_id)` and each `(c_id, statsCol)` give the per-list sizes and
     * every requested histogram from one scan of the partition column plus
-    * the histogram columns — never the vectors.
+    * the histogram columns — never the vectors. `written` is the schema
+    * of the rows the same call just wrote (build, append): the read-back
+    * takes it instead of running a parquet schema-inference job.
     *
     * The histograms are the zone-map-style metadata behind
     * [[probeIvfIndexFiltered]]: under a payload predicate the mass budget
@@ -499,10 +520,10 @@ object VectorIndex {
     * filter-stats key at any engine).
     */
   private def countLists(spark: SparkSession, path: String,
-      statsCols: Seq[String]): Counts = {
+      statsCols: Seq[String], written: Option[StructType] = None): Counts = {
     val cols = statsCols.distinct
     val keys = col("c_id") +: cols.indices.map(i => col(s"_s$i"))
-    val keyed = spark.read.parquet(s"$path/lists")
+    val keyed = written.foldLeft(spark.read)(_.schema(_)).parquet(s"$path/lists")
       .select((col("c_id").cast("long").as("c_id") +:
         cols.zipWithIndex.map { case (c, i) => col(c).as(s"_s$i") }): _*)
     val rows = keyed
@@ -571,10 +592,15 @@ object VectorIndex {
     * hash slice of the SAME assignment that files the rows — never a
     * second full assignment pass. Lists absent from the sample route to
     * 1 file; estimates are a LAYOUT knob only — row content and probe
-    * results are invariant to which file a row lands in. `None` when the
+    * results are invariant to which file a row lands in. Counts clamped
+    * to [1, 4096].
+    *
+    * `None` — the 1-file route, with no sampling job — when the
     * plan-stats estimate is the session's `defaultSizeInBytes` sentinel
     * (in-memory frames with no real size: callers take the 1-file route
-    * rather than trust an 8 EB placeholder). Counts clamped to [1, 4096].
+    * rather than trust an 8 EB placeholder), or when the whole input
+    * fits one file: every list's estimate is then at most the input's,
+    * so at most `targetFileBytes`, and the sample could only answer 1.
     */
   private def autoListFileCounts(
       base: DataFrame, listed: DataFrame,
@@ -582,7 +608,7 @@ object VectorIndex {
     val stats = base.queryExecution.optimizedPlan.stats.sizeInBytes
     val unknown = BigInt(
       base.sparkSession.sessionState.conf.defaultSizeInBytes)
-    if (stats >= unknown || stats <= 0) None
+    if (stats >= unknown || stats <= targetFileBytes) None
     else {
       val sampled = listed
         .filter(pmod(xxhash64(col("vec_id")), lit(RouteSampleStride)) === 0)
@@ -693,8 +719,11 @@ object VectorIndex {
     * with the same vector would) and append its rows inside the existing
     * `c_id=` partition directories. The centroid model is deliberately
     * NOT retrained: stored rows must stay probe- and batch-independent,
-    * the same fixed-model contract as the PQ codebook. Cost tracks the
-    * increment — the store is never read, only its directories appended.
+    * the same fixed-model contract as the PQ codebook. The assignment and
+    * the write track the increment; the manifest does not: after the
+    * rows land, [[countLists]] re-reads the partition column and the
+    * histogram columns of the WHOLE `lists/` (never the vectors) to
+    * recount the sizes and histograms.
     */
   def appendToIvfIndex(
       increment: DataFrame,
@@ -705,8 +734,10 @@ object VectorIndex {
       targetFileBytes: Long = 128L << 20): Unit = {
     val spark = increment.sparkSession
     val meta = manifestOf(path)
-    val cents = spark.read.parquet(s"$path/centroids")
-    val listed = assign(increment, id, vec, cents, meta)
+    val onDisk = spark.read.parquet(s"$path/centroids")
+    val cm = Similarity.collectCentModel(onDisk)
+    val cents = cm.fold(onDisk)(_.localCents(spark))
+    val listed = assign(increment, id, vec, cents, meta, cm)
     // PQ stores encode with the STORED codebook (residual stores against
     // the STORED centroids too)
     val rows =
@@ -726,14 +757,15 @@ object VectorIndex {
     // sampled masses: a small batch adds 1 file per touched list (which
     // keeps compaction occasional), a bulk or skewed backfill gets
     // block-sized files like a build would
-    writeLists(stored, increment, listed, cents, filesPerList,
+    val written = writeLists(stored, increment, listed,
+      cm.fold(cents.count())(_.ids.length.toLong), filesPerList,
       targetFileBytes, path, "append")
     // recount AFTER the rows land, then swap the manifest: a crash
     // between the two leaves last batch's counts — a drift in the mass
     // budget's list SELECTION the next append heals, never a wrong
     // result. A full recount (not an increment merge) is what heals it.
     putManifest(path, meta.copy(counts = countLists(spark, path,
-      meta.counts.stats.keys.toSeq)))
+      meta.counts.stats.keys.toSeq, Some(written))))
   }
 
   private def readCodebook(spark: SparkSession, path: String,
@@ -1144,9 +1176,15 @@ object VectorIndex {
     */
   def listManifest(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
+    manifestFiles(spark, path).toDF("c_id", "file_id", "bytes")
+  }
+
+  /** [[listManifest]]'s rows on the driver, as the FS listing gave them. */
+  private def manifestFiles(spark: SparkSession,
+      path: String): Seq[(Long, String, Long)] = {
     val lists = new org.apache.hadoop.fs.Path(s"$path/lists")
     val fs = lists.getFileSystem(spark.sessionState.newHadoopConf())
-    val rows = fs.listStatus(lists).toSeq
+    fs.listStatus(lists).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("c_id="))
       .flatMap { dir =>
         val cId = dir.getPath.getName.stripPrefix("c_id=").toLong
@@ -1155,16 +1193,18 @@ object VectorIndex {
             && !f.getPath.getName.startsWith("."))
           .map(f => (cId, f.getPath.getName, f.getLen))
       }
-    rows.toDF("c_id", "file_id", "bytes")
   }
 
   /** Small-file compaction for a store grown by [[appendToIvfIndex]] —
     * the `OPTIMIZE` analog: every append drops one file set per touched
     * `c_id=` directory, so a continuously-ingesting store drifts toward
     * drizzle-sized files and probe IO pays per-file open cost instead of
-    * row-group scans. Planning is [[Layout.compactionPlan]] over
-    * [[listManifest]] (group = list, next-fit by byte offset into
-    * `targetBytes` bins); only lists where a rewrite wins are touched,
+    * row-group scans. Planning is [[Layout.compactionPlan]]'s bin rule
+    * over [[listManifest]]'s rows (group = list, next-fit by byte offset
+    * into `targetBytes` bins), run on the driver by
+    * [[Layout.nextFitBins]] — the FS listing is already there, so
+    * deciding which lists to rewrite costs no Spark job. Only lists
+    * where a rewrite wins are touched,
     * through a partition-pruned read and a DYNAMIC partition overwrite —
     * untouched lists are never read or rewritten. A rewrite wins in
     * EITHER direction (r18): some bin holds more than one file (drizzle
@@ -1191,29 +1231,25 @@ object VectorIndex {
       spark: SparkSession,
       path: String,
       targetBytes: Long = 128L << 20): DataFrame = {
+    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     // read before the marker drop: compaction changes no row, so the same
     // manifest goes back afterwards
     val meta = manifestOf(path)
-    val manifest = listManifest(spark, path)
-    val plan = Layout.compactionPlan(manifest, col("c_id"), col("file_id"),
-      col("bytes"), targetBytes)
-      .withColumnRenamed("group", "c_id")
+    val plan = manifestFiles(spark, path).groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (c, files) =>
+        c -> Layout.nextFitBins(files.map(f => (f._2, f._3)), targetBytes)
+      }
     // lists worth rewriting, in either direction: drizzle (some bin
     // holds >1 file — merge) or an oversized single file (> 2× target —
     // split; within 2× is row-group tolerance, not worth a rewrite).
     // The rewrite width right-sizes both: at least the plan's bins, at
     // least the list's ideal ceil(bytes/target), clamped like the build
-    val needy = plan.groupBy(col("c_id"))
-      .agg(max(col("bin_files")).as("max_files"),
-        countDistinct(col("bin")).as("bins"),
-        max(col("bytes")).as("max_bytes"),
-        sum(col("bytes")).as("list_bytes"))
-      .filter(col("max_files") > 1 || col("max_bytes") > lit(2L * targetBytes))
-      .select(col("c_id").cast("long"),
-        least(greatest(col("bins"),
-          expr(s"(list_bytes + ${targetBytes - 1}) div $targetBytes")),
-          lit(4096L)).cast("int").as("bins"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val needy = plan.collect {
+      case (c, bins) if bins.exists(b =>
+          b.binFiles > 1 || b.bytes > 2L * targetBytes) =>
+        val ideal = (bins.map(_.bytes).sum - 1) / targetBytes + 1
+        c -> ideal.max(bins.map(_.bin).distinct.size).min(4096L).toInt
+    }.toMap
     if (needy.nonEmpty) {
       val rewrite = routeToLists(
         prunedLists(spark, path, needy.keys.toArray.sorted), needy, 1, 0L)
@@ -1230,7 +1266,9 @@ object VectorIndex {
       putManifest(path, meta)
     }
     import spark.implicits._
-    plan.join(broadcast(needy.keys.toSeq.toDF("c_id")), Seq("c_id"))
+    plan.filter(p => needy.contains(p._1)).flatMap { case (c, bins) =>
+      bins.map(b => (c, b.fileId, b.bytes, b.bin, b.binFiles, b.binBytes))
+    }.toDF("c_id", "file_id", "bytes", "bin", "bin_files", "bin_bytes")
   }
 
   /** Continuous ingestion into a persisted store: each micro-batch of

@@ -4,6 +4,8 @@ import graft.TestSpark
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 class LayoutSpec extends AnyFunSuite {
@@ -99,6 +101,51 @@ class LayoutSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Layout.compactionPlan(manifest, col("src"), col("fid"), col("sz"), 0L)
     }
+  }
+
+  test("nextFitBins (the driver's bin rule) equals compactionPlan on seeded random manifests") {
+    val target = 1000L
+    // sizes mix drizzle, quarter-target steps (offsets that land exactly
+    // on a multiple of the target) and files up to 3× the target; file
+    // ids are distinct ASCII names listed out of order
+    val size = Gen.frequency(
+      3 -> Gen.choose(1L, target / 3),
+      2 -> Gen.choose(1L, 4L).map(_ * target / 4),
+      1 -> Gen.choose(target + 1, 3 * target))
+    val group = Gen.choose(1, 12).flatMap(n => Gen.pick(n, 0 until 100))
+      .flatMap(ids => Gen.listOfN(ids.size, size)
+        .map(ids.map(i => f"part-$i%05d").zip(_).toList))
+    val fixed = Seq(
+      // offsets 0, 500, 1000, 2000: bins 0, 0, 1, 2
+      "exact" -> List("a" -> 500L, "b" -> 500L, "c" -> 1000L, "d" -> 1L),
+      // one oversized file alone in its bin — the split case
+      "oversized" -> List("a" -> 5 * target),
+      // every bin holds one file — nothing to merge
+      "healthy" -> List("c" -> target, "a" -> target, "b" -> target))
+    def driver(groups: Seq[(String, List[(String, Long)])]) =
+      groups.flatMap { case (g, files) =>
+        Layout.nextFitBins(files, target)
+          .map(b => (g, b.fileId, b.bytes, b.bin, b.binFiles, b.binBytes))
+      }
+    for (seed <- 1L to 5L) {
+      val groups = (0 until 20).map(g => s"g$g" ->
+        group.pureApply(Gen.Parameters.default, Seed(seed * 100 + g))) ++ fixed
+      val manifest = groups.flatMap { case (g, fs) =>
+        fs.map { case (f, b) => (g, f, b) } }.toDF("src", "fid", "sz")
+      val sql = Layout.compactionPlan(manifest, col("src"), col("fid"),
+          col("sz"), target)
+        .select("group", "file_id", "bytes", "bin", "bin_files", "bin_bytes")
+        .as[(String, String, Long, Long, Long, Long)].collect().toSeq
+      val got = driver(groups)
+      assert(got.size == sql.size && got.toSet == sql.toSet, s"seed $seed")
+    }
+    val pinned = driver(fixed).map(r => (r._1, r._2) -> (r._4, r._5)).toMap
+    assert(Seq("a", "b", "c", "d").map(f => pinned(("exact", f))) ==
+      Seq((0L, 2L), (0L, 2L), (1L, 1L), (2L, 1L)))
+    assert(pinned(("oversized", "a")) == ((0L, 1L)))
+    assert(Seq("a", "b", "c").map(f => pinned(("healthy", f))) ==
+      Seq((0L, 1L), (1L, 1L), (2L, 1L)))
+    intercept[IllegalArgumentException](Layout.nextFitBins(Seq("a" -> 1L), 0L))
   }
 
   test("co-bucketed tables join with zero exchanges and match the plain join") {

@@ -42,6 +42,24 @@ class VectorIndexSpec extends AnyFunSuite {
     try body finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  /** The Spark jobs `body` launches, counted by a listener. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBridge.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerBridge.waitUntilListenerBusEmpty(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("probe of a written hierarchical store is bit-identical to the in-flight s19 tier") {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfstore")
@@ -506,24 +524,55 @@ class VectorIndexSpec extends AnyFunSuite {
         .filter(_.getName.startsWith("c_id="))
         .map(d => d.getName -> d.listFiles()
           .count(f => f.getName.endsWith(".parquet"))).toMap
+    def build(path: String, filesPerList: Int = 0,
+        targetFileBytes: Long = 128L << 20): Int = jobsOf(
+      VectorIndex.writeIvfIndex(emb.repartition(16), col("vec_id"),
+        col("embedding"), path, filesPerList = filesPerList,
+        targetFileBytes = targetFileBytes))
+    // the explicit single-file route never samples: its job count is the
+    // reference for "no sampling job"
+    val singleJobs = build(tmpStore("ivfautosingle"), filesPerList = 1)
     // the sf0.001 corpus is a few hundred KB over ≤256 lists: a 256-byte
     // target forces ceil(listBytes/target) > 1 splits per list — the
-    // build must choose >1 file on its own (filesPerList left at auto)
+    // build must choose >1 file on its own (filesPerList left at auto),
+    // which takes the sampling job
     val tight = tmpStore("ivfautotight")
-    VectorIndex.writeIvfIndex(emb.repartition(16), col("vec_id"),
-      col("embedding"), tight, targetFileBytes = 256L)
+    val tightJobs = build(tight, targetFileBytes = 256L)
     val tightCounts = filesPerDir(tight)
     assert(tightCounts.nonEmpty && tightCounts.values.max > 1,
       s"auto sizing should split lists at a 256-byte target: $tightCounts")
+    assert(tightJobs > singleJobs,
+      s"a tight target must sample: $tightJobs jobs vs $singleJobs single-file")
     // ...and the file count stays bounded by the routed split, never
     // tasks × lists (16 upstream tasks would otherwise give up to 16)
     assert(tightCounts.values.max <= 4096)
-    // the 128 MB default on the same corpus keeps one file per list (the
-    // existing build test pins this too — this is the same-knob contrast)
+    // the 128 MB default on the same corpus: the whole input fits one
+    // file, so the route is the single-file one with NO sampling job —
+    // exactly the explicit route's jobs — and one file per list
     val loose = tmpStore("ivfautoloose")
-    VectorIndex.writeIvfIndex(emb.repartition(16), col("vec_id"),
-      col("embedding"), loose)
+    val looseJobs = build(loose)
+    assert(looseJobs == singleJobs,
+      s"an input under the target must not sample: $looseJobs jobs vs " +
+        s"$singleJobs single-file")
     assert(filesPerDir(loose).values.max <= 1)
+  }
+
+  test("the build + append + compact chain stays within its job budget") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    // s28's store flow on the spec fixture, under this session's AQE
+    // settings: 26 jobs before the chain was cut (route sampling on build
+    // and append although the input fits one file, the compaction plan's
+    // window job, parquet schema inference on each read-back), 18 after.
+    // A regrowing chain fails here first.
+    val path = tmpStore("ivfbudget")
+    val jobs = jobsOf {
+      VectorIndex.writeIvfIndex(emb.filter(col("vec_id") % 7 =!= 0),
+        col("vec_id"), col("embedding"), path)
+      VectorIndex.appendToIvfIndex(emb.filter(col("vec_id") % 7 === 0),
+        col("vec_id"), col("embedding"), path)
+      VectorIndex.compactIvfIndex(spark, path)
+    }
+    assert(jobs <= 18, s"store flow launched $jobs jobs (budget 18)")
   }
 
   test("auto route is mass-proportional on a skewed corpus: heavy list fans out, probes invariant") {
