@@ -103,16 +103,11 @@ object Similarity {
       id: Column,
       vec: Column,
       k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val b = base.select(id.as("vec_id"), vec.as("v"), unitMicros(vec).as("_vu"))
     val q = queries.select(id.as("q_id"), vec.as("qv"), unitMicros(vec).as("_qu"))
-    val scored = b.join(broadcast(q), col("q_id") =!= col("vec_id"))
+    topK(b.join(broadcast(q), col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
-        unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_ud").desc, col("vec_id").asc)
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+        unitDot(col("_qu"), col("_vu")).as("cos_ud")), k)
   }
 
   /** MMR-diversified top-k (Carbonell & Goldstein): re-rank each query's
@@ -518,8 +513,6 @@ object Similarity {
     val pq = projected(queries, "q_id", "pq", "_pqu")
     val wEst = Window.partitionBy(col("q_id"))
       .orderBy(col("pcos_ud").desc, col("vec_id").asc)
-    val wCos = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_ud").desc, col("vec_id").asc)
     val top = pb.join(broadcast(pq), col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
         unitDot(col("_pqu"), col("_pvu")).as("pcos_ud"))
@@ -527,35 +520,16 @@ object Similarity {
       .filter(col("ern") <= pool)
     // pool·|queries| survivors by construction — broadcast them against
     // the base so the exact rescore never shuffles the full vectors
-    broadcast(top)
+    topK(broadcast(top)
       .join(base.select(id.as("vec_id"), vec.as("v"), unitMicros(vec).as("_vu")),
         "vec_id")
       .join(broadcast(
         queries.select(id.as("q_id"), vec.as("qv"), unitMicros(vec).as("_qu"))),
         "q_id")
       .select(col("q_id"), col("vec_id"), col("pcos_ud"),
-        unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-      .withColumn("rn", row_number().over(wCos).cast("long"))
-      .filter(col("rn") <= k)
+        unitDot(col("_qu"), col("_vu")).as("cos_ud")), k)
   }
 
-  /** IVF ANN: coarse centroids are the base vectors whose id ≡ 0 (mod
-    * `centroidStride`) — deterministic, no k-means dependency; production
-    * would train real centroids but the *plan shape* is identical. Every
-    * base vector is assigned to its nearest centroid (the "inverted list");
-    * a query probes the `nProbe` nearest lists only. At scale the lists
-    * become partition keys of the stored table and probing = partition
-    * pruning.
-    *
-    * Recall contract: on well-clustered corpora recall concentrates in the
-    * first probed lists; on (near-)isotropic data — like the driver
-    * testdata, whose intra-label cosine ≈ inter-label — NO coarse
-    * quantizer can beat the scanned fraction (verified empirically:
-    * Lloyd-trained centroids leave recall unchanged there), and `nProbe`
-    * is the recall/cost knob (SimilaritySpec measures ~0.48 → ~0.84 going
-    * 2 → 6 probes of ~10 lists). LSH ([[lshTopK]]) stays accurate on such
-    * data because its `tables` independent partitions multiply coverage.
-    */
   /** Stride-picked coarse centroids, CAPPED at `maxCentroids` (the first
     * `maxCentroids` qualifying ids in id order — so offset or sparse id
     * spaces still yield a full centroid set). The cap is what keeps the
@@ -819,38 +793,6 @@ object Similarity {
     ivfAssignTo(cents, b, "v", "vec_id", 1)
   }
 
-  /** TWO-LEVEL centroid assignment — [[ivfAssign]]'s scale path when the
-    * centroid count itself grows with the corpus (SemDeDup's k ≈ √N
-    * contract): instead of ranking every row against all k centroids
-    * (rows × k cosines — the N^1.5 term that dominates the d12c route,
-    * BASELINE.md §9), the centroids are grouped under every
-    * `superStride`-th centroid BY RANK (k/superStride super-centroids;
-    * rank-picked, so any id space works), each row probes its `sProbe`
-    * nearest super-lists, and the exact argmax runs only over the
-    * centroids IN those lists: rows × (k/superStride + sProbe·superStride)
-    * cosines, minimized at superStride ≈ √k — N·k^½ total, N^1.25 when
-    * k ≈ √N. This is faiss's IVF-on-the-quantizer trick re-expressed as
-    * three broadcast-rank passes; everything stays deterministic
-    * (EXACT integer unit-grid dots — see [[unitMicros]] — ties on
-    * ascending id), so an external engine replays the identical
-    * assignment from the stored bytes alone, with no floating-summation
-    * boundary class.
-    *
-    * APPROXIMATE by design: a row whose true nearest centroid sits in an
-    * unprobed super-list lands in its best PROBED list instead — the
-    * standard IVF recall trade, moved one level up. `sProbe` ≥ the
-    * super-centroid count degenerates to the exact flat argmax
-    * (spec-pinned), which is the knob's contract: raise `sProbe` to buy
-    * assignment fidelity with assignment cost. NEVER lossy on rows: every
-    * super list is guaranteed non-empty (a super-centroid always files
-    * under itself — see the c2s tie-break below), so every input row
-    * reaches the argmax with ≥ 1 candidate and appears in the output
-    * (spec-pinned on a rounded-tie corpus built to trigger the
-    * displacement that would otherwise empty a list).
-    *
-    * Output: `(c_id, vec_id, v)` — the [[ivfAssign]] shape, accepted by
-    * [[graft.operators.Dedup.semanticKeepAssigned]].
-    */
   /** Super-centroids: every `superStride`-th centroid by c_id rank — the
     * centroid table is config-sized, so the single-partition window is a
     * driver-scale sort, not a data-scale one.
@@ -908,6 +850,38 @@ object Similarity {
       .select(col("vec_id"), col("v"), col("s_id"), col("srn"))
   }
 
+  /** TWO-LEVEL centroid assignment — [[ivfAssign]]'s scale path when the
+    * centroid count itself grows with the corpus (SemDeDup's k ≈ √N
+    * contract): instead of ranking every row against all k centroids
+    * (rows × k cosines — the N^1.5 term that dominates the d12c route,
+    * BASELINE.md §9), the centroids are grouped under every
+    * `superStride`-th centroid BY RANK (k/superStride super-centroids;
+    * rank-picked, so any id space works), each row probes its `sProbe`
+    * nearest super-lists, and the exact argmax runs only over the
+    * centroids IN those lists: rows × (k/superStride + sProbe·superStride)
+    * cosines, minimized at superStride ≈ √k — N·k^½ total, N^1.25 when
+    * k ≈ √N. This is faiss's IVF-on-the-quantizer trick re-expressed as
+    * three broadcast-rank passes; everything stays deterministic
+    * (EXACT integer unit-grid dots — see [[unitMicros]] — ties on
+    * ascending id), so an external engine replays the identical
+    * assignment from the stored bytes alone, with no floating-summation
+    * boundary class.
+    *
+    * APPROXIMATE by design: a row whose true nearest centroid sits in an
+    * unprobed super-list lands in its best PROBED list instead — the
+    * standard IVF recall trade, moved one level up. `sProbe` ≥ the
+    * super-centroid count degenerates to the exact flat argmax
+    * (spec-pinned), which is the knob's contract: raise `sProbe` to buy
+    * assignment fidelity with assignment cost. NEVER lossy on rows: every
+    * super list is guaranteed non-empty (a super-centroid always files
+    * under itself — see the c2s tie-break below), so every input row
+    * reaches the argmax with ≥ 1 candidate and appears in the output
+    * (spec-pinned on a rounded-tie corpus built to trigger the
+    * displacement that would otherwise empty a list).
+    *
+    * Output: `(c_id, vec_id, v)` — the [[ivfAssign]] shape, accepted by
+    * [[graft.operators.Dedup.semanticKeepAssigned]].
+    */
   def ivfAssignHierarchical(
       base: DataFrame,
       id: Column,
@@ -1006,23 +980,11 @@ object Similarity {
       maxCentroids: Int = 256,
       superStride: Int = 16,
       sProbe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val b = base.select(id.as("vec_id"), vec.as("v"))
-    val cents = ivfCentroids(b, centroidStride, maxCentroids)
-    val listed = ivfAssignHierarchical(base, id, vec, cents, superStride, sProbe)
-      .withColumn("_vu", unitMicros(col("v")))
-    val probed = ivfAssignHierarchical(queries, id, vec, cents, superStride,
-        sProbe, keep = nProbe)
-      .select(col("c_id"), col("vec_id").as("q_id"), col("v").as("qv"))
-      .withColumn("_qu", unitMicros(col("qv")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_ud").desc, col("vec_id").asc)
-    listed.join(probed, Seq("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    val cents = ivfCentroids(base.select(id.as("vec_id"), vec.as("v")),
+      centroidStride, maxCentroids)
+    val hier = Some((superStride, sProbe))
+    topK(rescore(assignLists(base, id, vec, cents, hier),
+      nearestLists(queries, id, vec, cents, nProbe, hier)), k)
   }
 
   /** Flat product-quantization ANN (Jégou et al., "Product quantization
@@ -1064,10 +1026,6 @@ object Similarity {
       codebookFrom: Option[DataFrame] = None,
       codebook: Option[Array[Array[Array[Double]]]] = None,
       poolPpm: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graft.ColumnBridge
-    poolPpm.foreach(p => require(p > 0 && p <= 1000000L,
-      s"poolPpm out of (0, 1e6]: $p"))
     // IVF-PQ composition: when `base` is a probed (partition-pruned)
     // subset, the codebook must still come from the full corpus — pass it
     // via codebookFrom, exactly as a trained-codebook deployment would
@@ -1077,40 +1035,14 @@ object Similarity {
     require(cb.length == numSubspaces && cb.forall(_.length == numCodes),
       s"pqTopK: codebook shape ${cb.length}×${cb.headOption.fold(0)(_.length)} " +
         s"must be numSubspaces×numCodes = $numSubspaces×$numCodes")
-    def enc(v: Column) = ColumnBridge.column(
-      graft.functions.PqEncode(ColumnBridge.expression(v.cast("array<double>")), cb))
-    def lut(v: Column) = ColumnBridge.column(
-      graft.functions.PqLut(ColumnBridge.expression(v.cast("array<double>")), cb))
-    val b = base.select(id.as("vec_id"), vec.as("v"), enc(vec).as("codes"))
-    val q = queries.select(id.as("q_id"), vec.as("qv"), lut(vec).as("lut"))
-    // ADC estimate summed in subspace order (left-to-right fold — the
-    // oracle replays the identical sequence via list_reduce over ORDER BY s)
-    val est = (0 until numSubspaces)
-      .map(s => element_at(col("lut"),
-        element_at(col("codes"), s + 1) + s * numCodes + 1))
-      .reduce(_ + _)
-    val wEst = Window.partitionBy(col("q_id")).orderBy(col("est").asc, col("vec_id").asc)
-    val wCos = Window.partitionBy(col("q_id")).orderBy(col("cos_ud").desc, col("vec_id").asc)
-    val ranked = b.join(broadcast(q), col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"), col("v"), col("qv"), est.as("est"))
-      .withColumn("ern", row_number().over(wEst))
-    // fixed pool, or [[ivfPqTopK]]'s ADAPTIVE CONTRACT rule: the cut
-    // scales with the query's candidate count (here = corpus−1 for every
-    // query — the rule matters when a caller pre-prunes `base`), floor
-    // at one full result set; all-integer, order-insensitive count
-    val cut = poolPpm match {
-      case Some(pp) => ranked
-        .withColumn("cand_n",
-          count(lit(1)).over(Window.partitionBy(col("q_id"))))
-        .filter(col("ern") <= k ||
-          col("ern") * 1000000L <= lit(pp) * col("cand_n"))
-      case None => ranked.filter(col("ern") <= pool)
-    }
-    cut
-      .select(col("q_id"), col("vec_id"),
-        unitDot(unitMicros(col("qv")), unitMicros(col("v"))).as("cos_ud"))
-      .withColumn("rn", row_number().over(wCos).cast("long"))
-      .filter(col("rn") <= k)
+    val b = base.select(id.as("vec_id"), vec.as("v"), pqEncode(vec, cb).as("codes"))
+    val q = queries.select(id.as("q_id"), vec.as("qv"), pqLut(vec, cb).as("lut"))
+    // no list floor here; under poolPpm every query's candidate count is
+    // corpus−1 (the rule matters when a caller pre-prunes `base`)
+    val cut = pqPool(b.join(broadcast(q), col("q_id") =!= col("vec_id")),
+      Seq("v", "qv"), numSubspaces, numCodes, k, pool, 0, poolPpm)
+    topK(cut.select(col("q_id"), col("vec_id"),
+      unitDot(unitMicros(col("qv")), unitMicros(col("v"))).as("cos_ud")), k)
   }
 
   /** Deterministic stride-picked PQ codebook from `src`: code `j` of
@@ -1235,20 +1167,6 @@ object Similarity {
       residual: Boolean = false,
       massPpm: Option[Long] = None,
       poolPpm: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graft.ColumnBridge
-    massPpm.foreach(m => require(m > 0 && m <= 1000000L,
-      s"massPpm out of (0, 1e6]: $m"))
-    poolPpm.foreach(p => require(p > 0 && p <= 1000000L,
-      s"poolPpm out of (0, 1e6]: $p"))
-    // the pool-vs-nProbe contract (see scaladoc): the ADC-rescore cut
-    // must grow with the probed candidate volume or added probes EVICT
-    // true neighbors instead of finding them (the measured nProbe=32
-    // recall dip). k·nProbe is the floor that keeps one full result set
-    // per probed list competitive in the pool. (Moot under poolPpm: the
-    // adaptive cut scales with the probed volume by construction, floor
-    // at one full result set.)
-    val effPool = math.max(pool, k * nProbe)
     val b = base.select(id.as("vec_id"), vec.as("v"))
     val cents = ivfCentroids(b, centroidStride, maxCentroids)
     // the stored index rows: list id + PQ codes (+ the full vector, read
@@ -1256,111 +1174,36 @@ object Similarity {
     // flat rows × centroids assignment for the two-level
     // [[ivfAssignHierarchical]] on BOTH sides (the s19 trade — the PQ
     // machinery below is independent of how list membership was decided).
-    val listedBase =
-      if (hierarchical) ivfAssignHierarchical(base, id, vec, cents, superStride, sProbe)
-      else ivfAssignTo(cents, b, "v", "vec_id", 1)
-    val probedBase = massPpm match {
+    val hier = if (hierarchical) Some((superStride, sProbe)) else None
+    val listed = assignLists(base, id, vec, cents, hier)
+    val probed = massPpm match {
       // mass-adaptive probing (see ADAPTIVE CONTRACT): list masses come
       // from the SAME assignment that files the stored rows, so the
       // budget counts exactly the candidates the probe join will read
       case Some(mp) =>
-        val sizes = listedBase.groupBy("c_id").agg(count(lit(1)).as("n_list"))
+        val sizes = listed.groupBy("c_id").agg(count(lit(1)).as("n_list"))
         massProbed(queries.select(id.as("q_id"), vec.as("qv")),
           cents, sizes, b.count(), mp)
           .select(col("c_id"), col("q_id"), col("qv"))
-      case None =>
-        if (hierarchical)
-          ivfAssignHierarchical(queries, id, vec, cents, superStride, sProbe,
-            keep = nProbe)
-            .select(col("c_id"), col("vec_id").as("q_id"), col("v").as("qv"))
-        else ivfAssignTo(
-          cents, queries.select(id.as("q_id"), vec.as("qv")), "qv", "q_id", nProbe)
+      case None => nearestLists(queries, id, vec, cents, nProbe, hier)
     }
-    // residual mode centers every encoded/looked-up vector on ITS list's
-    // centroid (zip_with subtraction against the broadcast 256-row
-    // centroid table), so the codebook's cells resolve WITHIN-list
-    // variation instead of re-separating the lists (which the coarse
-    // quantizer already did) — both the stored codes and the per-(query,
-    // probed-list) LUT are residual-space, so the ADC estimate is
-    // ||(q−c) − quant(v−c)||² ≈ ||q − v||² with the cluster offset gone
-    val centsV = cents.select(col("c_id"), col("cv"))
-    def resOf(vc: Column) =
-      zip_with(vc.cast("array<double>"), col("cv"), (a, bb) => a - bb)
-    val listedR =
-      if (!residual) listedBase
-      else listedBase.join(broadcast(centsV), Seq("c_id"))
-        .withColumn("_rv", resOf(col("v")))
-    val cb = codebook.getOrElse {
-      if (residual)
-        pqCodebook(listedR, col("vec_id"), col("_rv"),
-          numSubspaces, numCodes, codeStride)
-      else pqCodebook(base, id, vec, numSubspaces, numCodes, codeStride)
-    }
+    val cb = codebook.getOrElse(listCodebook(base, id, vec, listed, cents,
+      residual, numSubspaces, numCodes, codeStride))
     require(cb.length == numSubspaces && cb.forall(_.length == numCodes),
       s"ivfPqTopK: codebook shape ${cb.length}×${cb.headOption.fold(0)(_.length)} " +
         s"does not match numSubspaces=$numSubspaces numCodes=$numCodes")
-    def enc(v: Column) = ColumnBridge.column(
-      graft.functions.PqEncode(ColumnBridge.expression(v.cast("array<double>")), cb))
-    def lut(v: Column) = ColumnBridge.column(
-      graft.functions.PqLut(ColumnBridge.expression(v.cast("array<double>")), cb))
-    val listed =
-      if (!residual) listedBase
-        .select(col("c_id"), col("vec_id"), col("v"), enc(col("v")).as("codes"))
-      else listedR
-        .select(col("c_id"), col("vec_id"), col("v"), enc(col("_rv")).as("codes"))
-    val probed =
-      if (!residual) probedBase
-        .select(col("c_id"), col("q_id"), col("qv"), lut(col("qv")).as("lut"))
-      else probedBase.join(broadcast(centsV), Seq("c_id"))
-        .select(col("c_id"), col("q_id"), col("qv"),
-          lut(resOf(col("qv"))).as("lut"))
-    // ADC estimate in subspace order, identical to [[pqTopK]]
-    val est = (0 until numSubspaces)
-      .map(s => element_at(col("lut"),
-        element_at(col("codes"), s + 1) + s * numCodes + 1))
-      .reduce(_ + _)
-    val wEst = Window.partitionBy(col("q_id")).orderBy(col("est").asc, col("vec_id").asc)
-    val wCos = Window.partitionBy(col("q_id")).orderBy(col("cos_ud").desc, col("vec_id").asc)
     // each base row lives in exactly ONE list, so a (query, candidate)
-    // pair appears at most once — no dedup needed before the pool rank
-    val ranked = listed.join(probed, Seq("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"), col("v"), col("qv"), est.as("est"))
-      .withColumn("ern", row_number().over(wEst))
-    // fixed cut (effPool) or the adaptive one: per-query candidate count
-    // over the SAME q_id partitioning as wEst (order-insensitive whole-
-    // partition count — no extra exchange), all-integer survival rule
-    val cut = poolPpm match {
-      case Some(pp) => ranked
-        .withColumn("cand_n",
-          count(lit(1)).over(Window.partitionBy(col("q_id"))))
-        .filter(col("ern") <= k ||
-          col("ern") * 1000000L <= lit(pp) * col("cand_n"))
-      case None => ranked.filter(col("ern") <= effPool)
-    }
-    cut
-      .select(col("q_id"), col("vec_id"),
-        unitDot(unitMicros(col("qv")), unitMicros(col("v"))).as("cos_ud"))
-      .withColumn("rn", row_number().over(wCos).cast("long"))
-      .filter(col("rn") <= k)
+    // pair appears at most once — no dedup needed before the pool rank;
+    // k·nProbe is the pool floor of the pool-vs-nProbe contract (see
+    // scaladoc)
+    val cut = pqPool(withCodes(listed, cents, cb, residual)
+        .join(withLut(probed, cents, cb, residual), Seq("c_id"))
+        .filter(col("q_id") =!= col("vec_id")),
+      Seq("v", "qv"), numSubspaces, numCodes, k, pool, k * nProbe, poolPpm)
+    topK(cut.select(col("q_id"), col("vec_id"),
+      unitDot(unitMicros(col("qv")), unitMicros(col("v"))).as("cos_ud")), k)
   }
 
-  /** `centroids`: optional trained coarse quantizer `(c_id, cv)` — e.g.
-    * [[kmeansCentroids]] of [[kmeansTrain]] — replacing the stride-picked
-    * default. Same plan either way; centroids are config-scale and
-    * broadcast.
-    *
-    * Recall contract at the capped list count: `nProbe / lists` is the
-    * scanned fraction, so at `maxCentroids = 256` the default `nProbe=2`
-    * scans 2/256 of the corpus — MEASURED at the 100× copy (200k rows,
-    * 256 stride lists, r11 probe, BASELINE.md §9): recall@10 = 0.94 at
-    * nProbe 2, 0.98 at 8, 1.00 at 32, with near-flat wall (the flat
-    * assignment dominates; the scanned slice is secondary). Raise
-    * `nProbe` with the list count if you cap tighter — recall tracks
-    * the scanned fraction, not the corpus size. [[recallAtK]] is the
-    * eval that produced these numbers; re-run it after any index-shape
-    * change.
-    */
   /** IVF top-k with MASS-ADAPTIVE probing — the fixed-nProbe knob's
     * answer to IMBALANCED lists (r17, BASELINE §16c/§16h): on a
     * Zipf-clustered corpus a fixed nProbe=2 reads 0.62 recall because a
@@ -1386,78 +1229,14 @@ object Similarity {
       massPpm: Long = 150000L,
       centroids: Option[DataFrame] = None,
       maxCentroids: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(massPpm > 0 && massPpm <= 1000000L,
-      s"massPpm out of (0, 1e6]: $massPpm")
     val b = base.select(id.as("vec_id"), vec.as("v"))
     val cents = centroids
       .map(_.select(col("c_id"), col("cv")))
       .getOrElse(ivfCentroids(b, centroidStride, maxCentroids))
-    val listed = ivfAssignTo(cents, b, "v", "vec_id", 1)
-      .withColumn("_vu", unitMicros(col("v")))
+    val listed = assignLists(base, id, vec, cents, None)
     val sizes = listed.groupBy("c_id").agg(count(lit(1)).as("n_list"))
-    val n = b.count()
-    val probed = massProbed(queries.select(id.as("q_id"), vec.as("qv")),
-      cents, sizes, n, massPpm)
-      .select(col("c_id"), col("q_id"), col("_qu"))
-    val wCos = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_ud").desc, col("vec_id").asc)
-    listed.join(probed, Seq("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-      .withColumn("rn", row_number().over(wCos).cast("long"))
-      .filter(col("rn") <= k)
-  }
-
-  /** The mass-budget list selection shared by [[ivfTopKAdaptive]],
-    * [[ivfPqTopK]]'s adaptive mode, and (re-expressed over the persisted
-    * sizes) [[VectorIndex]]'s adaptive probe: per (query, centroid) the
-    * flat unit-grid dot ranks ALL centroids, a window cumsum carries the
-    * mass probed BEFORE each list, and a list survives while that
-    * preceding mass is still under `massPpm` of `n` (rank 1 always
-    * survives — its preceding mass is 0). Left join: a centroid whose
-    * list is empty (identical-vector centroids deduped by the assign
-    * tiebreak) contributes zero mass, not a dropped rank. All-integer
-    * decision (`cum_before · 1e6 < massPpm · n`), oracle-replayable.
-    *
-    * `dropEmpty = true` (r18, the FILTERED-mass variant) instead joins
-    * `sizes` INNER, so a centroid with no `sizes` row is excluded from
-    * the rank outright — the right rule when `sizes` carries MATCHING
-    * counts under a payload predicate ([[VectorIndex
-    * .probeIvfIndexFiltered]]): a zero-match list can contribute no
-    * candidate, but under the left-join rule it would still be SELECTED
-    * (zero mass never advances the cumsum), and every zero-match list
-    * ranked ahead of the budget's exhaustion would be scanned for
-    * nothing. Dropping them keeps the scan's byte bound proportional to
-    * where matching rows actually live. Ranking among surviving lists
-    * is unchanged (a window ORDER over a subset preserves relative
-    * order), so the left-join replays stay byte-identical.
-    *
-    * `queries` must be `(q_id, qv)`; `sizes` is `(c_id, n_list)`; output
-    * `(c_id, q_id, qv, _qu)` — one row per surviving (query, list).
-    */
-  private[operators] def massProbed(
-      queries: DataFrame,
-      cents: DataFrame,
-      sizes: DataFrame,
-      n: Long,
-      massPpm: Long,
-      dropEmpty: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_dot").desc, col("c_id").asc)
-    queries
-      .withColumn("_qu", unitMicros(col("qv")))
-      .crossJoin(broadcast(cents.withColumn("_cu", unitMicros(col("cv")))))
-      .select(col("q_id"), col("qv"), col("_qu"), col("c_id"),
-        dotNative(col("_qu"), col("_cu")).as("c_dot"))
-      .join(broadcast(sizes), Seq("c_id"), if (dropEmpty) "inner" else "left")
-      .withColumn("_m", coalesce(col("n_list"), lit(0L)))
-      .withColumn("cum_before", coalesce(sum(col("_m")).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .filter(col("cum_before") * 1000000L < lit(massPpm) * n)
-      .select(col("c_id"), col("q_id"), col("qv"), col("_qu"))
+    topK(rescore(listed, massProbed(queries.select(id.as("q_id"), vec.as("qv")),
+      cents, sizes, b.count(), massPpm)), k)
   }
 
   /** [[ivfTopKHierarchical]] with MASS-ADAPTIVE probing at BOTH levels —
@@ -1500,58 +1279,47 @@ object Similarity {
       superStride: Int = 16,
       sProbe: Int = 2,
       massPpm: Long = 150000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(massPpm > 0 && massPpm <= 1000000L,
-      s"massPpm out of (0, 1e6]: $massPpm")
     val b = base.select(id.as("vec_id"), vec.as("v"))
     val cents = ivfCentroids(b, centroidStride, maxCentroids)
-    val supers = hierSupers(cents, superStride)
-    val c2s = hierC2s(cents, supers)
-    val listed = ivfAssignHierarchical(base, id, vec, cents, superStride, sProbe)
-      .withColumn("_vu", unitMicros(col("v")))
+    val listed = assignLists(base, id, vec, cents, Some((superStride, sProbe)))
     val sizes = listed.groupBy("c_id").agg(count(lit(1)).as("n_list"))
-    val n = b.count()
-    // super masses: every centroid files under exactly one super, so the
-    // rollup partitions the leaf masses (Σ n_super = N); left join keeps
-    // a super whose every leaf list is empty at mass 0, not dropped
-    val superSizes = c2s.select(col("s_id"), col("c_id"))
-      .join(sizes, Seq("c_id"), "left")
-      .groupBy("s_id")
-      .agg(sum(coalesce(col("n_list"), lit(0L))).as("n_list"))
-    // LEVEL 1: the flat gate verbatim, over the supers (rename to the
-    // (c_id, cv)/(c_id, n_list) shapes massProbed contracts on)
-    val qsup = massProbed(
-      queries.select(id.as("q_id"), vec.as("qv")),
-      supers.select(col("s_id").as("c_id"), col("sv").as("cv")),
-      superSizes.select(col("s_id").as("c_id"), col("n_list")),
-      n, massPpm)
-      .select(col("c_id").as("s_id"), col("q_id"), col("_qu"))
-    // LEVEL 2: the probed supers' centroids compete in ONE dot-ranked
-    // window per query (not per super — a heavy super's 3rd-best leaf
-    // must outrank a light super's 1st when the dots say so)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_dot").desc, col("c_id").asc)
-    val probed = qsup
-      .join(broadcast(c2s.select(col("s_id"), col("c_id"), col("cv"))
-        .withColumn("_cu", unitMicros(col("cv")))), Seq("s_id"))
-      .select(col("q_id"), col("_qu"), col("c_id"),
-        dotNative(col("_qu"), col("_cu")).as("c_dot"))
-      .join(broadcast(sizes), Seq("c_id"), "left")
-      .withColumn("_m", coalesce(col("n_list"), lit(0L)))
-      .withColumn("cum_before", coalesce(sum(col("_m")).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .filter(col("cum_before") * 1000000L < lit(massPpm) * n)
-      .select(col("c_id"), col("q_id"), col("_qu"))
-    val wCos = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_ud").desc, col("vec_id").asc)
-    listed.join(probed, Seq("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-      .withColumn("rn", row_number().over(wCos).cast("long"))
-      .filter(col("rn") <= k)
+    topK(rescore(listed, hierMassProbed(queries.select(id.as("q_id"), vec.as("qv")),
+      cents, sizes, b.count(), superStride, massPpm)), k)
   }
 
+  /** IVF ANN: coarse centroids are the base vectors whose id ≡ 0 (mod
+    * `centroidStride`) — deterministic, no k-means dependency; production
+    * would train real centroids but the *plan shape* is identical. Every
+    * base vector is assigned to its nearest centroid (the "inverted list");
+    * a query probes the `nProbe` nearest lists only. At scale the lists
+    * become partition keys of the stored table and probing = partition
+    * pruning.
+    *
+    * Recall contract: on well-clustered corpora recall concentrates in the
+    * first probed lists; on (near-)isotropic data — like the driver
+    * testdata, whose intra-label cosine ≈ inter-label — NO coarse
+    * quantizer can beat the scanned fraction (verified empirically:
+    * Lloyd-trained centroids leave recall unchanged there), and `nProbe`
+    * is the recall/cost knob (SimilaritySpec measures ~0.48 → ~0.84 going
+    * 2 → 6 probes of ~10 lists). LSH ([[lshTopK]]) stays accurate on such
+    * data because its `tables` independent partitions multiply coverage.
+    *
+    * `centroids`: optional trained coarse quantizer `(c_id, cv)` — e.g.
+    * [[kmeansCentroids]] of [[kmeansTrain]] — replacing the stride-picked
+    * default. Same plan either way; centroids are config-scale and
+    * broadcast.
+    *
+    * Recall contract at the capped list count: `nProbe / lists` is the
+    * scanned fraction, so at `maxCentroids = 256` the default `nProbe=2`
+    * scans 2/256 of the corpus — MEASURED at the 100× copy (200k rows,
+    * 256 stride lists, r11 probe, BASELINE.md §9): recall@10 = 0.94 at
+    * nProbe 2, 0.98 at 8, 1.00 at 32, with near-flat wall (the flat
+    * assignment dominates; the scanned slice is secondary). Raise
+    * `nProbe` with the list count if you cap tighter — recall tracks
+    * the scanned fraction, not the corpus size. [[recallAtK]] is the
+    * eval that produced these numbers; re-run it after any index-shape
+    * change.
+    */
   def ivfTopK(
       base: DataFrame,
       queries: DataFrame,
@@ -1562,24 +1330,279 @@ object Similarity {
       nProbe: Int = 2,
       centroids: Option[DataFrame] = None,
       maxCentroids: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val b = base.select(id.as("vec_id"), vec.as("v"))
     val cents = centroids
       .map(_.select(col("c_id"), col("cv")))
-      .getOrElse(ivfCentroids(b, centroidStride, maxCentroids))
-    val listed = ivfAssignTo(cents, b, "v", "vec_id", 1)
-      .withColumn("_vu", unitMicros(col("v")))
-    val probed = ivfAssignTo(
-      cents, queries.select(id.as("q_id"), vec.as("qv")), "qv", "q_id", nProbe)
-      .withColumn("_qu", unitMicros(col("qv")))
+      .getOrElse(ivfCentroids(base.select(id.as("vec_id"), vec.as("v")),
+        centroidStride, maxCentroids))
+    topK(rescore(assignLists(base, id, vec, cents, None),
+      nearestLists(queries, id, vec, cents, nProbe, None)), k)
+  }
+
+  // ------------------------------------------------------------------
+  // The IVF probe core: list selection, the PQ candidate cut and the
+  // rescore + top-k tail — one copy of each rule, shared by the in-memory
+  // tiers above and [[VectorIndex]]'s store probes.
+  // ------------------------------------------------------------------
+
+  private def requirePpm(name: String, ppm: Long): Unit =
+    require(ppm > 0 && ppm <= 1000000L, s"$name out of (0, 1e6]: $ppm")
+
+  private def requirePositive(name: String, n: Int): Unit =
+    require(n > 0, s"$name must be positive, got $n")
+
+  /** `(c_id, vec_id, v)`: `input` filed under its `keep` nearest lists —
+    * the flat argmax, or the two-level [[ivfAssignHierarchical]] at
+    * `hier = Some((superStride, sProbe))`. `model` is the already-collected
+    * centroid model of `cents`, if any.
+    */
+  private[operators] def assignLists(
+      input: DataFrame, id: Column, vec: Column, cents: DataFrame,
+      hier: Option[(Int, Int)], keep: Int = 1,
+      model: Option[CentModel] = None): DataFrame = hier match {
+    case Some((superStride, sProbe)) => ivfAssignHierarchical(input, id, vec,
+      cents, superStride, sProbe, keep, model)
+    case None => ivfAssignTo(cents, input.select(id.as("vec_id"), vec.as("v")),
+      "v", "vec_id", keep, model)
+  }
+
+  /** The fixed-`nProbe` list selection: each query's `nProbe` nearest
+    * lists `(c_id, q_id, qv)` in the given geometry (see [[assignLists]]).
+    */
+  private[operators] def nearestLists(
+      queries: DataFrame, id: Column, vec: Column, cents: DataFrame,
+      nProbe: Int, hier: Option[(Int, Int)]): DataFrame = {
+    requirePositive("nProbe", nProbe)
+    assignLists(queries, id, vec, cents, hier, nProbe)
+      .select(col("c_id"), col("vec_id").as("q_id"), col("v").as("qv"))
+  }
+
+  /** The all-integer mass-budget gate: per query, `ranked` lists
+    * `(q_id, c_id, c_dot, …)` in `(c_dot desc, c_id asc)` order survive
+    * while the mass probed BEFORE them is under `massPpm` of `n`
+    * (`cum_before · 1e6 < massPpm · n`; rank 1 always survives). `sizes`
+    * `(c_id, n_list)` joins left (a missing list weighs 0) or, with
+    * `dropEmpty`, inner (see [[massProbed]]).
+    */
+  private def massGate(ranked: DataFrame, sizes: DataFrame, n: Long,
+      massPpm: Long, dropEmpty: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    requirePpm("massPpm", massPpm)
     val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_ud").desc, col("vec_id").asc)
-    listed.join(probed, Seq("c_id"))
+      .orderBy(col("c_dot").desc, col("c_id").asc)
+    ranked.join(broadcast(sizes), Seq("c_id"), if (dropEmpty) "inner" else "left")
+      .withColumn("_m", coalesce(col("n_list"), lit(0L)))
+      .withColumn("cum_before", coalesce(sum(col("_m")).over(
+        w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .filter(col("cum_before") * 1000000L < lit(massPpm) * n)
+  }
+
+  /** The mass-budget list selection shared by [[ivfTopKAdaptive]],
+    * [[ivfPqTopK]]'s adaptive mode, and (re-expressed over the persisted
+    * sizes) [[VectorIndex]]'s adaptive probe: per (query, centroid) the
+    * flat unit-grid dot ranks ALL centroids, a window cumsum carries the
+    * mass probed BEFORE each list, and a list survives while that
+    * preceding mass is still under `massPpm` of `n` (rank 1 always
+    * survives — its preceding mass is 0). Left join: a centroid whose
+    * list is empty (identical-vector centroids deduped by the assign
+    * tiebreak) contributes zero mass, not a dropped rank. All-integer
+    * decision (`cum_before · 1e6 < massPpm · n`), oracle-replayable.
+    *
+    * `dropEmpty = true` (r18, the FILTERED-mass variant) instead joins
+    * `sizes` INNER, so a centroid with no `sizes` row is excluded from
+    * the rank outright — the right rule when `sizes` carries MATCHING
+    * counts under a payload predicate ([[VectorIndex
+    * .probeIvfIndexFiltered]]): a zero-match list can contribute no
+    * candidate, but under the left-join rule it would still be SELECTED
+    * (zero mass never advances the cumsum), and every zero-match list
+    * ranked ahead of the budget's exhaustion would be scanned for
+    * nothing. Dropping them keeps the scan's byte bound proportional to
+    * where matching rows actually live. Ranking among surviving lists
+    * is unchanged (a window ORDER over a subset preserves relative
+    * order), so the left-join replays stay byte-identical.
+    *
+    * `queries` must be `(q_id, qv)`; `sizes` is `(c_id, n_list)`; output
+    * `(c_id, q_id, qv, _qu)` — one row per surviving (query, list).
+    */
+  private[operators] def massProbed(
+      queries: DataFrame,
+      cents: DataFrame,
+      sizes: DataFrame,
+      n: Long,
+      massPpm: Long,
+      dropEmpty: Boolean = false): DataFrame =
+    massGate(queries
+      .withColumn("_qu", unitMicros(col("qv")))
+      .crossJoin(broadcast(cents.withColumn("_cu", unitMicros(col("cv")))))
+      .select(col("q_id"), col("qv"), col("_qu"), col("c_id"),
+        dotNative(col("_qu"), col("_cu")).as("c_dot")),
+      sizes, n, massPpm, dropEmpty)
+      .select(col("c_id"), col("q_id"), col("qv"), col("_qu"))
+
+  /** The TWO-LEVEL mass-budget selection of [[ivfTopKHierarchicalAdaptive]]
+    * and [[VectorIndex.probeIvfIndexHierAdaptive]]: the super geometry is
+    * derived from `cents` ([[hierSupers]]/[[hierC2s]] at `superStride` —
+    * deterministic in the centroids, so a store needs no extra artifact),
+    * leaf `sizes` `(c_id, n_list)` roll up through the filing to super
+    * masses, [[massProbed]] picks supers, and the probed supers' leaf
+    * centroids rank ACROSS their union per query under the same gate.
+    * Output `(c_id, q_id, qv)`.
+    */
+  private[operators] def hierMassProbed(
+      queries: DataFrame,
+      cents: DataFrame,
+      sizes: DataFrame,
+      n: Long,
+      superStride: Int,
+      massPpm: Long): DataFrame = {
+    val supers = hierSupers(cents, superStride)
+    val c2s = hierC2s(cents, supers)
+    // super masses: every centroid files under exactly one super, so the
+    // rollup partitions the leaf masses (Σ n_super = N); left join keeps
+    // a super whose every leaf list is empty at mass 0, not dropped
+    val superSizes = c2s.select(col("s_id"), col("c_id"))
+      .join(sizes, Seq("c_id"), "left")
+      .groupBy("s_id")
+      .agg(sum(coalesce(col("n_list"), lit(0L))).as("n_list"))
+    // LEVEL 1: the flat gate verbatim, over the supers (renamed to the
+    // (c_id, cv)/(c_id, n_list) shapes massProbed contracts on)
+    val qsup = massProbed(queries,
+      supers.select(col("s_id").as("c_id"), col("sv").as("cv")),
+      superSizes.select(col("s_id").as("c_id"), col("n_list")),
+      n, massPpm)
+      .select(col("c_id").as("s_id"), col("q_id"), col("qv"), col("_qu"))
+    // LEVEL 2: the probed supers' centroids compete in ONE dot-ranked
+    // window per query (not per super — a heavy super's 3rd-best leaf
+    // must outrank a light super's 1st when the dots say so)
+    massGate(qsup
+      .join(broadcast(c2s.select(col("s_id"), col("c_id"), col("cv"))
+        .withColumn("_cu", unitMicros(col("cv")))), Seq("s_id"))
+      .select(col("q_id"), col("qv"), col("c_id"),
+        dotNative(col("_qu"), col("_cu")).as("c_dot")),
+      sizes, n, massPpm, dropEmpty = false)
+      .select(col("c_id"), col("q_id"), col("qv"))
+  }
+
+  /** The exact rescore of every list probe: candidate `lists`
+    * `(c_id, vec_id, v)` joined to the probed query assignment
+    * `(c_id, q_id, qv)` on `c_id`, self-matches dropped, scored on the
+    * exact integer unit-grid dot (each side's unit vector computed once).
+    * The emitted `cos_ud` IS that integer score (`/2⁴⁰ ≈ cosine`) — no
+    * float column enters the output hash. The join strategy is the
+    * caller's: store probes pass `broadcast(probed)`, the in-memory tiers
+    * leave it to the planner (a library caller may pass a corpus-sized
+    * query set).
+    */
+  private[operators] def rescore(lists: DataFrame, probed: DataFrame): DataFrame =
+    lists.withColumn("_vu", unitMicros(col("v")))
+      .join(probed.select(col("c_id"), col("q_id"),
+          unitMicros(col("qv")).as("_qu")),
+        Seq("c_id"))
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
         unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-      .withColumn("rn", row_number().over(w).cast("long"))
+
+  /** Each query's `k` best `cos_ud` rows (`rn` 1..k, ties on ascending
+    * `vec_id`) — the one `k·|queries|`-bounded rank exchange of a top-k
+    * tier or probe.
+    */
+  private[operators] def topK(scored: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    requirePositive("k", k)
+    scored.withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("cos_ud").desc, col("vec_id").asc)).cast("long"))
       .filter(col("rn") <= k)
+  }
+
+  private def pqEncode(v: Column, cb: Array[Array[Array[Double]]]): Column =
+    ColumnBridge.column(graft.functions.PqEncode(
+      ColumnBridge.expression(v.cast("array<double>")), cb))
+
+  private def pqLut(v: Column, cb: Array[Array[Array[Double]]]): Column =
+    ColumnBridge.column(graft.functions.PqLut(
+      ColumnBridge.expression(v.cast("array<double>")), cb))
+
+  /** `v − cv` against a joined list centroid `cv` — the residual space of
+    * residual PQ (Jégou's IVFADC): the codebook's cells resolve WITHIN-list
+    * variation instead of re-separating the lists the coarse quantizer
+    * already separated, and the ADC estimate
+    * ||(q−c) − quant(v−c)||² ≈ ||q − v||² loses the cluster offset.
+    */
+  private def residualOf(v: Column): Column =
+    zip_with(v.cast("array<double>"), col("cv"), (a, c) => a - c)
+
+  /** `rows` joined to their list's centroid `cv` (broadcast — the
+    * centroid table is config-sized).
+    */
+  private def withCentroid(rows: DataFrame, cents: DataFrame): DataFrame =
+    rows.join(broadcast(cents.select(col("c_id"), col("cv"))), Seq("c_id"))
+
+  /** The codebook a listed PQ index encodes with: stride-picked from the
+    * full `base` ([[pqCodebook]]), or — for `residual` codes — from the
+    * `listed` rows' residuals against `cents`.
+    */
+  private[operators] def listCodebook(
+      base: DataFrame, id: Column, vec: Column, listed: DataFrame,
+      cents: DataFrame, residual: Boolean, numSubspaces: Int, numCodes: Int,
+      codeStride: Int): Array[Array[Array[Double]]] =
+    if (residual) pqCodebook(withCentroid(listed, cents), col("vec_id"),
+      residualOf(col("v")), numSubspaces, numCodes, codeStride)
+    else pqCodebook(base, id, vec, numSubspaces, numCodes, codeStride)
+
+  /** `listed` `(c_id, vec_id, v, …)` plus its PQ `codes` under `cb` — in
+    * residual space against `cents` when `residual`, so probe-time LUTs
+    * ([[withLut]]) and appended rows use the same space.
+    */
+  private[operators] def withCodes(listed: DataFrame, cents: DataFrame,
+      cb: Array[Array[Array[Double]]], residual: Boolean): DataFrame =
+    if (!residual) listed.withColumn("codes", pqEncode(col("v"), cb))
+    else withCentroid(listed, cents)
+      .withColumn("codes", pqEncode(residualOf(col("v")), cb)).drop("cv")
+
+  /** The probed query assignment `(c_id, q_id, qv, …)` plus its ADC
+    * lookup table `lut` — per (query, probed list) over `qv − cv` when
+    * `residual` (`cents` is read only then).
+    */
+  private[operators] def withLut(probed: DataFrame, cents: => DataFrame,
+      cb: Array[Array[Array[Double]]], residual: Boolean): DataFrame =
+    if (!residual) probed.withColumn("lut", pqLut(col("qv"), cb))
+    else withCentroid(probed, cents)
+      .withColumn("lut", pqLut(residualOf(col("qv")), cb)).drop("cv")
+
+  /** The PQ candidate cut of every PQ tier and probe. `pairs` holds one
+    * row per (query, candidate) with the query's `lut` and the
+    * candidate's `codes`; the ADC estimate `Σ_s lut[s·numCodes + code_s]`
+    * is summed in subspace order (a left-to-right fold — the oracle
+    * replays the identical sequence via list_reduce over ORDER BY s) and
+    * ranks each query's candidates `(est asc, vec_id asc)`. Survivors:
+    * the first `max(pool, floor)` (`floor` = k·nProbe for the IVF tiers —
+    * the pool-vs-nProbe contract), or under `poolPpm` the ADAPTIVE rule
+    * `ern ≤ k || ern·1e6 ≤ poolPpm·cand_n` with `cand_n` the query's
+    * candidate count (an order-insensitive whole-partition count over the
+    * same `q_id` partitioning — no extra exchange). Output
+    * `(q_id, vec_id, carry…)`.
+    */
+  private[operators] def pqPool(
+      pairs: DataFrame, carry: Seq[String], numSubspaces: Int, numCodes: Int,
+      k: Int, pool: Int, floor: Int, poolPpm: Option[Long]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    requirePositive("pool", pool)
+    poolPpm.foreach(requirePpm("poolPpm", _))
+    val est = (0 until numSubspaces)
+      .map(s => element_at(col("lut"),
+        element_at(col("codes"), s + 1) + s * numCodes + 1))
+      .reduce(_ + _)
+    val kept = (Seq("q_id", "vec_id") ++ carry).map(col)
+    val ranked = pairs.select(kept :+ est.as("est"): _*)
+      .withColumn("ern", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("est").asc, col("vec_id").asc)))
+    (poolPpm match {
+      case Some(pp) => ranked
+        .withColumn("cand_n",
+          count(lit(1)).over(Window.partitionBy(col("q_id"))))
+        .filter(col("ern") <= k ||
+          col("ern") * 1000000L <= lit(pp) * col("cand_n"))
+      case None => ranked.filter(col("ern") <= math.max(pool, floor))
+    }).select(kept: _*)
   }
 
   /** Recall@k of an approximate ranking against the exact one — the eval

@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
 import org.json4s._
@@ -193,7 +192,11 @@ object VectorIndex {
   private case class StoreManifest(
       version: Int, hierarchical: Boolean, superStride: Int, sProbe: Int,
       pq: Boolean, numSubspaces: Int, numCodes: Int, pqResidual: Boolean,
-      payload: List[String], counts: Counts)
+      payload: List[String], counts: Counts) {
+    /** The assignment geometry in [[Similarity.assignLists]]' terms. */
+    def hier: Option[(Int, Int)] =
+      if (hierarchical) Some((superStride, sProbe)) else None
+  }
 
   private implicit val jsonFormats: Formats = DefaultFormats.withBigDecimal
 
@@ -401,23 +404,17 @@ object VectorIndex {
     // fallback — keeps the frame)
     val cm = Similarity.collectCentModel(picked)
     val cents = cm.fold(picked)(_.localCents(spark))
-    val listed = assign(base, id, vec, cents, meta, cm)
+    val listed = Similarity.assignLists(base, id, vec, cents, meta.hier,
+      model = cm)
     val rows =
       if (!pq) listed
       else {
         // pqResidual (r18 — Jégou's IVFADC as the STORED layout, §16c):
         // codes and codebook live in residual space (v − centroid(list)),
         // so the cells resolve within-list variation instead of
-        // re-separating lists the coarse quantizer already separated.
-        // Derivation mirrors Similarity.ivfPqTopK(residual = true)
-        // exactly — the shared-oracle identity behind s35.
-        val cb =
-          if (pqResidual) Similarity.pqCodebook(
-            listed.join(broadcast(cents), Seq("c_id"))
-              .withColumn("_rv", residualOf(col("v"))),
-            col("vec_id"), col("_rv"), numSubspaces, numCodes, codeStride)
-          else Similarity.pqCodebook(base, id, vec, numSubspaces, numCodes,
-            codeStride)
+        // re-separating lists the coarse quantizer already separated
+        val cb = Similarity.listCodebook(base, id, vec, listed, cents,
+          pqResidual, numSubspaces, numCodes, codeStride)
         // persist the codebook as exploded scalars (s, j, pos, val) — the
         // config-sized model artifact, array-format-free like kmeansTrain's
         import spark.implicits._
@@ -427,7 +424,7 @@ object VectorIndex {
           }
         }.toSeq.toDF("s", "j", "pos", "val")
           .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-        withCodes(listed, cents, cb, pqResidual)
+        Similarity.withCodes(listed, cents, cb, pqResidual)
       }
     val stored = if (payload.isEmpty) rows else rows.join(pay, Seq("vec_id"))
     val written = writeLists(stored, base, listed,
@@ -436,41 +433,6 @@ object VectorIndex {
     cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     putManifest(path,
       meta.copy(counts = countLists(spark, path, statsCols, Some(written))))
-  }
-
-  /** `(c_id, vec_id, v)`: `input` filed under its `keep` nearest lists in
-    * the store's geometry — two-level or flat, as `meta` records. `model`
-    * is the already-collected centroid model of `cents`, if any.
-    */
-  private def assign(input: DataFrame, id: Column, vec: Column,
-      cents: DataFrame, meta: StoreManifest,
-      model: Option[Similarity.CentModel] = None,
-      keep: Int = 1): DataFrame =
-    if (meta.hierarchical)
-      Similarity.ivfAssignHierarchical(input, id, vec, cents,
-        meta.superStride, meta.sProbe, keep = keep, model = model)
-    else Similarity.ivfAssignTo(cents,
-      input.select(id.as("vec_id"), vec.as("v")), "v", "vec_id", keep, model)
-
-  /** `v − centroid(list)` against the joined `cv` — the residual space
-    * of `pqResidual` stores.
-    */
-  private def residualOf(v: Column): Column =
-    zip_with(v.cast("array<double>"), col("cv"), (a, c) => a - c)
-
-  /** `listed` plus its PQ `codes` under codebook `cb` — in residual space
-    * against the store's centroids when `residual`, so appended rows
-    * quantize exactly as build-time rows did.
-    */
-  private def withCodes(listed: DataFrame, cents: DataFrame,
-      cb: Array[Array[Array[Double]]], residual: Boolean): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    def enc(c: Column) = ColumnBridge.column(graft.functions.PqEncode(
-      ColumnBridge.expression(c.cast("array<double>")), cb))
-    if (!residual) listed.withColumn("codes", enc(col("v")))
-    else listed.join(broadcast(cents.select(col("c_id"), col("cv"))),
-        Seq("c_id"))
-      .withColumn("codes", enc(residualOf(col("v")))).drop("cv")
   }
 
   private def requireRouting(filesPerList: Int, targetFileBytes: Long): Unit = {
@@ -737,13 +699,14 @@ object VectorIndex {
     val onDisk = spark.read.parquet(s"$path/centroids")
     val cm = Similarity.collectCentModel(onDisk)
     val cents = cm.fold(onDisk)(_.localCents(spark))
-    val listed = assign(increment, id, vec, cents, meta, cm)
+    val listed = Similarity.assignLists(increment, id, vec, cents, meta.hier,
+      model = cm)
     // PQ stores encode with the STORED codebook (residual stores against
     // the STORED centroids too)
     val rows =
       if (!meta.pq) listed
-      else withCodes(listed, cents, readCodebook(spark, path, meta),
-        meta.pqResidual)
+      else Similarity.withCodes(listed, cents,
+        readCodebook(spark, path, meta), meta.pqResidual)
     // payload columns are selected BY THE NAMES the build recorded, so an
     // increment missing one fails loudly here instead of appending rows
     // a filtered probe would silently treat as predicate-false
@@ -820,21 +783,14 @@ object VectorIndex {
       massPpm: Option[Long]): (DataFrame, Array[Long]) = massPpm match {
     case Some(mp) => massProbedLists(spark, path, queries, id, vec, mp,
       meta.counts.listSizes)
-    case None => withIds(assign(queries, id, vec,
-        spark.read.parquet(s"$path/centroids"), meta, keep = nProbe)
-      .select(col("c_id"), col("vec_id").as("q_id"), col("v").as("qv")))
+    case None => withIds(Similarity.nearestLists(queries, id, vec,
+      spark.read.parquet(s"$path/centroids"), nProbe, meta.hier))
   }
 
   /** TWO-LEVEL mass-budget selection over the store's persisted model —
-    * the in-flight s37 rule ([[Similarity.ivfTopKHierarchicalAdaptive]])
-    * served from `centroids/` + [[listSizes]]: the super geometry is
-    * re-derived from the persisted centroid table exactly as the build
-    * derived it (`hierSupers`/`hierC2s` at `meta.superStride` — the
-    * filing is deterministic in the centroids, so no extra artifact is
-    * needed), leaf sizes roll up through the filing to super masses,
-    * [[Similarity.massProbed]]'s gate picks supers, and the probed
-    * supers' leaf centroids rank ACROSS their union per query under the
-    * same budget. Per-query centroid dots drop from `lists` to
+    * the in-flight s37 rule ([[Similarity.hierMassProbed]]) served from
+    * `centroids/` + [[listSizes]] at the recorded `superStride`.
+    * Per-query centroid dots drop from `lists` to
     * `lists/superStride + probed-supers' centroids` — the saving that
     * matters when the probe BATCH is large (serving-scale inference),
     * where the flat rank's `|queries| × lists` assignment dots dominate
@@ -845,36 +801,13 @@ object VectorIndex {
       queries: DataFrame, id: Column, vec: Column,
       massPpm: Long): (DataFrame, Array[Long]) = {
     import spark.implicits._
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("c_id"), col("cv"))
-    val supers = Similarity.hierSupers(cents, meta.superStride)
-    val c2s = Similarity.hierC2s(cents, supers)
-    val sizes = meta.counts.listSizes.toDF("c_id", "n_list")
     val n = meta.counts.listSizes.map(_._2).sum
     require(n > 0, s"store at $path has no rows — nothing to probe")
-    val superSizes = c2s.select(col("s_id"), col("c_id"))
-      .join(sizes, Seq("c_id"), "left")
-      .groupBy("s_id")
-      .agg(sum(coalesce(col("n_list"), lit(0L))).as("n_list"))
-    val qsup = Similarity.massProbed(
+    withIds(Similarity.hierMassProbed(
       queries.select(id.as("q_id"), vec.as("qv")),
-      supers.select(col("s_id").as("c_id"), col("sv").as("cv")),
-      superSizes.select(col("s_id").as("c_id"), col("n_list")),
-      n, massPpm)
-      .select(col("c_id").as("s_id"), col("q_id"), col("qv"), col("_qu"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_dot").desc, col("c_id").asc)
-    withIds(qsup
-      .join(broadcast(c2s.select(col("s_id"), col("c_id"), col("cv"))
-        .withColumn("_cu", Similarity.unitMicros(col("cv")))), Seq("s_id"))
-      .select(col("q_id"), col("qv"), col("_qu"), col("c_id"),
-        Similarity.unitDot(col("_qu"), col("_cu")).as("c_dot"))
-      .join(broadcast(sizes), Seq("c_id"), "left")
-      .withColumn("_m", coalesce(col("n_list"), lit(0L)))
-      .withColumn("cum_before", coalesce(sum(col("_m")).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .filter(col("cum_before") * 1000000L < lit(massPpm) * n)
-      .select(col("c_id"), col("q_id"), col("qv")))
+      spark.read.parquet(s"$path/centroids").select(col("c_id"), col("cv")),
+      meta.counts.listSizes.toDF("c_id", "n_list"), n, meta.superStride,
+      massPpm))
   }
 
   /** The store's lists restricted to the probed ids, via a literal filter
@@ -900,35 +833,6 @@ object VectorIndex {
     where.foldLeft(pruned.withColumn("c_id", col("c_id").cast("long")))(
       _.filter(_))
   }
-
-  /** The exact rescore every list probe shares: the pruned candidate
-    * `lists` joined to the broadcast probed-query assignment on `c_id`,
-    * self-matches dropped, scored on the exact integer unit-grid dot (the
-    * s26 convention — each side's unit vector computed once, store-side
-    * per candidate row, query-side on the config-sized broadcast). The
-    * emitted `cos_ud` IS that integer score (`/2⁴⁰ ≈ cosine`) — no float
-    * column enters the output hash.
-    */
-  private def rescore(lists: DataFrame, probed: DataFrame): DataFrame =
-    lists.withColumn("_vu", Similarity.unitMicros(col("v")))
-      .join(broadcast(probed.select(col("c_id"), col("q_id"),
-          Similarity.unitMicros(col("qv")).as("_qu"))),
-        Seq("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        Similarity.unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-
-  /** Each query's `k` best `cos_ud` rows (`rn` 1..k, ties on ascending
-    * `vec_id`) — the one `k·|queries|`-bounded rank exchange of a top-k
-    * probe.
-    */
-  private def topK(scored: DataFrame, k: Int): DataFrame =
-    scored.withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_ud").desc, col("vec_id").asc)).cast("long"))
-      .filter(col("rn") <= k)
-
-  private def requirePpm(name: String, ppm: Long): Unit =
-    require(ppm > 0 && ppm <= 1000000L, s"$name out of (0, 1e6]: $ppm")
 
   /** Probe a persisted IVF store: assign `queries` to their `nProbe`
     * nearest lists in the store's own geometry, read ONLY those
@@ -959,7 +863,8 @@ object VectorIndex {
       where: Option[Column] = None): DataFrame = {
     val (probed, ids) = selectLists(spark, path, manifestOf(path), queries,
       id, vec, nProbe, None)
-    topK(rescore(prunedLists(spark, path, ids, where), probed), k)
+    Similarity.topK(Similarity.rescore(
+      prunedLists(spark, path, ids, where), broadcast(probed)), k)
   }
 
   /** [[probeIvfIndex]] with [[Similarity.ivfTopKAdaptive]]'s MASS BUDGET
@@ -995,10 +900,10 @@ object VectorIndex {
       k: Int = 10,
       massPpm: Long = 150000L,
       where: Option[Column] = None): DataFrame = {
-    requirePpm("massPpm", massPpm)
     val (probed, ids) = selectLists(spark, path, manifestOf(path), queries,
       id, vec, 0, Some(massPpm))
-    topK(rescore(prunedLists(spark, path, ids, where), probed), k)
+    Similarity.topK(Similarity.rescore(
+      prunedLists(spark, path, ids, where), broadcast(probed)), k)
   }
 
   /** FILTERED top-k under the mass budget, with the budget run over
@@ -1056,7 +961,6 @@ object VectorIndex {
       k: Int = 10,
       massPpm: Long = 150000L,
       where: Option[Column] = None): DataFrame = {
-    requirePpm("massPpm", massPpm)
     require(statsValues.nonEmpty, "statsValues must name at least one value")
     val meta = manifestOf(path)
     require(meta.payload.contains(statsCol),
@@ -1077,7 +981,8 @@ object VectorIndex {
     val (probed, ids) = massProbedLists(spark, path, queries, id, vec,
       massPpm, fsizes, dropEmpty = true)
     val pred = where.foldLeft(col(statsCol).isin(statsValues: _*))(_ && _)
-    topK(rescore(prunedLists(spark, path, ids, Some(pred)), probed), k)
+    Similarity.topK(Similarity.rescore(
+      prunedLists(spark, path, ids, Some(pred)), broadcast(probed)), k)
   }
 
   /** [[probeIvfIndexAdaptive]] with the TWO-LEVEL rank on the query side
@@ -1110,7 +1015,6 @@ object VectorIndex {
       k: Int = 10,
       massPpm: Long = 150000L,
       where: Option[Column] = None): DataFrame = {
-    requirePpm("massPpm", massPpm)
     val meta = manifestOf(path)
     require(meta.hierarchical,
       "two-level adaptive probe needs the store's recorded super " +
@@ -1118,7 +1022,8 @@ object VectorIndex {
         "probeIvfIndexAdaptive")
     val (probed, ids) =
       hierMassProbedLists(spark, path, meta, queries, id, vec, massPpm)
-    topK(rescore(prunedLists(spark, path, ids, where), probed), k)
+    Similarity.topK(Similarity.rescore(
+      prunedLists(spark, path, ids, where), broadcast(probed)), k)
   }
 
   /** Radius (range) search against a persisted store: every candidate in
@@ -1154,7 +1059,6 @@ object VectorIndex {
       nProbe: Int = 2,
       where: Option[Column] = None,
       massPpm: Option[Long] = None): DataFrame = {
-    massPpm.foreach(requirePpm("massPpm", _))
     // massPpm swaps the fixed-nProbe selection for the mass budget — for
     // range search the budget matters even more than for top-k: the
     // result set is data-dependent, so the probe's I/O bound is the ONLY
@@ -1163,7 +1067,7 @@ object VectorIndex {
       id, vec, nProbe, massPpm)
     // membership on the integer score itself (`udot ≥ minCosine·2⁴⁰`): a
     // candidate AT the bar must never hinge on a float boundary
-    rescore(prunedLists(spark, path, ids, where), probed)
+    Similarity.rescore(prunedLists(spark, path, ids, where), broadcast(probed))
       .filter(col("cos_ud") >= Similarity.cosineMicros2(minCosine))
   }
 
@@ -1338,9 +1242,8 @@ object VectorIndex {
     * r18: serves RESIDUAL stores transparently (`writeIvfIndex(pq =
     * true, pqResidual = true)` — codes over `v − centroid(list)`, the
     * IVFADC layout §16c showed clustered corpora need): the manifest
-    * routes the LUT to per-(query, probed-list) residual space, in
-    * lockstep with `ivfPqTopK(residual = true)`. And both adaptive knobs
-    * compose:
+    * routes the LUT to per-(query, probed-list) residual space. And both
+    * adaptive knobs compose:
     * `massPpm` replaces the fixed nProbe with the mass budget over the
     * manifest's sizes (the budget then bounds the BYTES the codes scan
     * touches), `poolPpm` replaces the fixed pool with the candidate-
@@ -1349,7 +1252,7 @@ object VectorIndex {
     *
     * `where` pre-filters candidates on the store's inline payload
     * columns, exactly as in [[probeIvfIndex]] — applied BEFORE the ADC
-    * pool cut, so the pool holds `effPool` MATCHING candidates (filtering
+    * pool cut, so the pool holds `max(pool, k·nProbe)` MATCHING candidates (filtering
     * after the cut would shrink the rescore pool below its floor). The
     * candidate scan then reads the predicate's columns beside
     * `(vec_id, codes)`; payload stays unread when `where` is empty.
@@ -1366,63 +1269,35 @@ object VectorIndex {
       where: Option[Column] = None,
       massPpm: Option[Long] = None,
       poolPpm: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    massPpm.foreach(requirePpm("massPpm", _))
-    poolPpm.foreach(requirePpm("poolPpm", _))
     val meta = manifestOf(path)
     require(meta.pq, s"store at $path was written without PQ codes — " +
       "probe with probeIvfIndex or rebuild with pq = true")
-    val effPool = math.max(pool, k * nProbe)
     val cb = readCodebook(spark, path, meta)
-    def lut(c: Column) = ColumnBridge.column(graft.functions.PqLut(
-      ColumnBridge.expression(c.cast("array<double>")), cb))
-    lazy val centsDf = spark.read.parquet(s"$path/centroids")
-      .select(col("c_id"), col("cv"))
     // probe selection: fixed nProbe in the store's own geometry, or the
     // mass budget over the manifest's sizes (see [[probeIvfIndexAdaptive]]
     // — same rule, so massPpm bounds the bytes the codes scan touches)
     val (probed, ids) =
       selectLists(spark, path, meta, queries, id, vec, nProbe, massPpm)
-    // residual stores (meta.pqResidual) hold codes over v − centroid:
-    // the LUT must be per-(query, probed LIST) over qv − centroid, in
-    // lockstep with Similarity.ivfPqTopK(residual = true)
-    val probedLut =
-      if (!meta.pqResidual)
-        probed.select(col("c_id"), col("q_id"), lut(col("qv")).as("lut"))
-      else probed.join(broadcast(centsDf), Seq("c_id"))
-        .select(col("c_id"), col("q_id"),
-          lut(residualOf(col("qv"))).as("lut"))
+    // residual stores hold codes over v − centroid, so the LUT is
+    // per-(query, probed list) over qv − centroid
+    val probedLut = Similarity.withLut(probed,
+        spark.read.parquet(s"$path/centroids"), cb, meta.pqResidual)
+      .select(col("c_id"), col("q_id"), col("lut"))
     val all = prunedLists(spark, path, ids)
     val lists = where.foldLeft(all)(_.filter(_))
-    val est = (0 until meta.numSubspaces)
-      .map(s => element_at(col("lut"),
-        element_at(col("codes"), s + 1) + s * meta.numCodes + 1))
-      .reduce(_ + _)
-    val wEst = Window.partitionBy(col("q_id"))
-      .orderBy(col("est").asc, col("vec_id").asc)
     // candidate scan: codes only — the store's vectors are not read here
-    val ranked = lists.select(col("c_id"), col("vec_id"), col("codes"))
-      .join(broadcast(probedLut), Seq("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"), est.as("est"))
-      .withColumn("ern", row_number().over(wEst))
-    // fixed cut, or ivfPqTopK's ADAPTIVE CONTRACT rule (pool scales with
-    // the query's probed candidate count, floor at one full result set)
-    val poolRows = (poolPpm match {
-      case Some(pp) => ranked
-        .withColumn("cand_n",
-          count(lit(1)).over(Window.partitionBy(col("q_id"))))
-        .filter(col("ern") <= k ||
-          col("ern") * 1000000L <= lit(pp) * col("cand_n"))
-      case None => ranked.filter(col("ern") <= effPool)
-    }).select(col("q_id"), col("vec_id"))
+    val poolRows = Similarity.pqPool(
+      lists.select(col("c_id"), col("vec_id"), col("codes"))
+        .join(broadcast(probedLut), Seq("c_id"))
+        .filter(col("q_id") =!= col("vec_id")),
+      Nil, meta.numSubspaces, meta.numCodes, k, pool, k * nProbe, poolPpm)
     // rescore fetch: pool·|queries| rows broadcast back onto the SAME
     // pruned partitions — full vectors are read only for survivors
     // (pool rows already satisfy `where`; re-filtering here would only
     // drag the predicate's payload columns into the vector scan)
     val qv = queries.select(id.as("q_id"), vec.as("qv"),
       Similarity.unitMicros(vec).as("_qu"))
-    topK(all.select(col("vec_id"), col("v"))
+    Similarity.topK(all.select(col("vec_id"), col("v"))
       .join(broadcast(poolRows), Seq("vec_id"))
       .join(broadcast(qv), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),

@@ -289,6 +289,30 @@ class SimilaritySpec extends AnyFunSuite {
     assert(e.getMessage.contains("centroidStride"))
   }
 
+  test("ANN tiers reject a non-positive k, nProbe or pool, naming the argument") {
+    val q = vecs.filter(col("vec_id") < 2)
+    val (id, v) = (col("vec_id"), col("embedding"))
+    val cb = Some(Array(Array(Array(1.0, 0.0), Array(0.0, 1.0))))
+    def rejects(arg: String)(call: => DataFrame): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(s"$arg must be positive"), e.getMessage)
+    }
+    for (bad <- Seq(0, -1)) {
+      rejects("k")(Similarity.bruteForceTopK(vecs, q, id, v, k = bad))
+      rejects("k")(Similarity.ivfTopK(vecs, q, id, v, k = bad, centroidStride = 2))
+      rejects("nProbe")(Similarity.ivfTopK(vecs, q, id, v, centroidStride = 2,
+        nProbe = bad))
+      rejects("nProbe")(Similarity.ivfTopKHierarchical(vecs, q, id, v,
+        centroidStride = 2, nProbe = bad))
+      rejects("k")(Similarity.ivfTopKAdaptive(vecs, q, id, v, k = bad,
+        centroidStride = 2))
+      rejects("pool")(Similarity.pqTopK(vecs, q, id, v, numSubspaces = 1,
+        numCodes = 2, codebook = cb, pool = bad))
+      rejects("pool")(Similarity.ivfPqTopK(vecs, q, id, v, centroidStride = 2,
+        numSubspaces = 1, numCodes = 2, codebook = cb, pool = bad))
+    }
+  }
+
   test("IVF index stored partitionBy(c_id): probing = partition pruning (the 100 TB path)") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/embeddings.parquet").exists())

@@ -1116,6 +1116,31 @@ class VectorIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("store probes reject a non-positive k, nProbe or pool, naming the argument") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    val path = tmpStore("ivfargs")
+    VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
+      hierarchical = false, pq = true)
+    val (id, v) = (col("vec_id"), col("embedding"))
+    def rejects(arg: String)(call: => DataFrame): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(s"$arg must be positive"), e.getMessage)
+    }
+    for (bad <- Seq(0, -1)) {
+      rejects("k")(VectorIndex.probeIvfIndex(spark, path, queries, id, v, k = bad))
+      rejects("nProbe")(VectorIndex.probeIvfIndex(spark, path, queries, id, v,
+        nProbe = bad))
+      rejects("k")(VectorIndex.probeIvfIndexAdaptive(spark, path, queries, id, v,
+        k = bad))
+      rejects("nProbe")(VectorIndex.probeIvfRange(spark, path, queries, id, v,
+        minCosine = 0.5, nProbe = bad))
+      rejects("k")(VectorIndex.probeIvfPqIndex(spark, path, queries, id, v,
+        k = bad))
+      rejects("pool")(VectorIndex.probeIvfPqIndex(spark, path, queries, id, v,
+        pool = bad))
+    }
+  }
+
   test("loud failures: probing an incomplete store, PQ-probing a non-PQ store, appending to nothing") {
     val path = tmpStore("ivfbad")
     intercept[IllegalArgumentException] {

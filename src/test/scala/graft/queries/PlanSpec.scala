@@ -735,4 +735,51 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("partial_sum") || plan.contains("partial_count"),
       "checksum folds combine map-side before the group exchange")
   }
+
+  /** The plan lines of the subtree rooted at line `i`. */
+  private def subtree(lines: IndexedSeq[String], i: Int): Seq[String] = {
+    def depth(l: String) = l.indexWhere(_.isLetter)
+    lines.drop(i + 1).takeWhile(depth(_) > depth(lines(i)))
+  }
+
+  test("ANN probes: result-rank windows and key exchanges pinned; store probes broadcast the query side") {
+    assume(new java.io.File(s"$dir/embeddings.parquet").exists())
+    // (query, result-rank windows, hash exchanges, served from a store);
+    // the store plans count their dynamic-pruning subquery's exchanges too
+    val pinned = Seq(
+      ("s3_ann_ivf", 1, 1, false),
+      ("s19_ann_ivf_hier", 1, 1, false),
+      ("s32_ann_ivf_adaptive", 1, 2, false),
+      ("s37_ann_ivf_hier_adaptive", 1, 6, false),
+      ("s33_ann_ivfpq_adaptive", 1, 5, false),
+      ("s24_ann_ivf_store", 1, 1, true),
+      ("s34_ann_store_adaptive", 1, 3, true),
+      ("s38_ann_store_hier_adaptive", 1, 9, true),
+      ("s35_ann_pqstore_residual", 1, 4, true))
+    for ((name, windows, exchanges, store) <- pinned) {
+      val plan = planOf(name)
+      val lines = plan.linesIterator.toIndexedSeq
+      val rank = lines.count(l => l.contains("Window [") && l.contains("cos_ud"))
+      assert(rank == windows, s"$name: result-rank windows $rank:\n$plan")
+      val keyEx = lines.count(_.contains("Exchange hashpartitioning"))
+      assert(keyEx == exchanges, s"$name: hash exchanges $keyEx:\n$plan")
+      if (store) {
+        // the candidate join reads the lists scan on its streamed side and
+        // takes the probed queries from a BroadcastExchange child
+        def depth(i: Int) = lines(i).indexWhere(_.isLetter)
+        val broadcastProbe = lines.indices.exists { j =>
+          lines(j).contains("BroadcastHashJoin [c_id") &&
+            lines(j).contains("Inner") &&
+            subtree(lines, j).exists(_.contains("/lists]")) &&
+            lines.indices.drop(j + 1).take(subtree(lines, j).size).exists { c =>
+              val sub = subtree(lines, c)
+              depth(c) == depth(j) + 3 &&
+                lines(c).contains("BroadcastExchange") &&
+                sub.exists(_.contains("q_id")) && !sub.exists(_.contains("/lists]"))
+            }
+        }
+        assert(broadcastProbe, s"$name: the query side must broadcast:\n$plan")
+      }
+    }
+  }
 }

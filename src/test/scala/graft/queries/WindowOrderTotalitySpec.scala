@@ -99,11 +99,14 @@ class WindowOrderTotalitySpec extends AnyFunSuite {
     // same class as every rescore window); its selection reuses
     // massProbed's already-classified cumsum (the inner-join dropEmpty
     // variant orders the same (c_dot desc, c_id asc) singleton ranks).
-    // VectorIndex's rescore ranks — every top-k probe's, PQ included —
-    // are ONE call site now (its `topK` helper, (cos_ud desc, vec_id
-    // asc), UNIQUE via vec_id), so the file holds four sites: topK,
-    // hierMassProbedLists' leaf cumsum, the PQ probe's ADC rank ((est
-    // asc, vec_id asc), UNIQUE via vec_id) and its cand_n count.
+    // The IVF probe core in Similarity now holds every one of these
+    // rules once, for the in-memory tiers and VectorIndex's store probes
+    // alike (VectorIndex has no window of its own): `topK`, the one
+    // result rank ((cos_ud desc, vec_id asc), UNIQUE via vec_id — also
+    // the brute-force and RP tails); `massGate`, the one probe-mass
+    // cumsum ((c_dot desc, c_id asc), UNIQUE — the flat, super and leaf
+    // gates); and `pqPool`, the one ADC rank ((est asc, vec_id asc),
+    // UNIQUE via vec_id) with its cand_n count (ORDER-INSENSITIVE).
     ("embeddings", Seq("vec_id"), "Similarity/VectorIndex rank tiebreaks"),
     ("customer", Seq("c_custkey"), "fuzzy-join id tiebreaks"),
     ("part", Seq("p_partkey"), "join/agg determinism"),
@@ -176,9 +179,8 @@ class WindowOrderTotalitySpec extends AnyFunSuite {
       "operators/Dedup.scala" -> 8,
       "operators/Layout.scala" -> 3,
       "operators/Search.scala" -> 3,
-      "operators/Similarity.scala" -> 26,
+      "operators/Similarity.scala" -> 16,
       "operators/SkewAgg.scala" -> 1,
-      "operators/VectorIndex.scala" -> 4,
       "queries/AnalyticsQueries.scala" -> 9,
       "queries/PipelineQueries.scala" -> 9)
     val root = new java.io.File("src/main/scala/graft")
