@@ -125,31 +125,30 @@ abstract class JoinExecutor(
     }
   }
 
-  /** Resolve one table: read, qualify columns, apply projection.
+  /** Resolve one table: read, then project and qualify in one `select`.
     * Projection = user-selected ∪ join keys ∪ filter-referenced columns
     * (the reference force-adds filter columns to the scan list,
-    * hash_join.py:59-89). Catalyst prunes the parquet scan to exactly this.
+    * hash_join.py:59-89), or every column when the table has no select.
+    * Catalyst prunes the parquet scan to exactly this.
     */
   private def qualifiedTable(name: String): DataFrame = {
-    val table = tableForName(name)
-    val df = resolver.resolve(spark, table)
-    val projected = selectedCols.get(name) match {
+    val df = resolver.resolve(spark, tableForName(name))
+    val want = selectedCols.get(name) match {
       case Some(cols) =>
         val keys = joinSpecs.flatMap { js =>
           Seq(js.left, js.right).filter(_.name == name).flatMap(_.joinColumns)
         }
         val filterCols = filterConditions.flatMap(_.references)
           .collect { case (t, c) if t == name => c }
-        val want = (cols ++ keys ++ filterCols).distinct
-        df.select(want.map(df(_)): _*)
-      case None => df
+        (cols ++ keys ++ filterCols).distinct
+      case None => df.columns.toSeq
     }
-    projected.columns.foldLeft(projected)((d, c) => d.withColumnRenamed(c, qual(name, c)))
+    df.select(want.map(c => colRef(c).as(qual(name, c))): _*)
   }
 
   private def joinCondition(spec: JoinSpec): Column = {
-    val lcols = spec.left.joinColumns.map(c => scol(qual(spec.left.name, c)))
-    val rcols = spec.right.joinColumns.map(c => scol(qual(spec.right.name, c)))
+    val lcols = spec.left.joinColumns.map(c => colRef(qual(spec.left.name, c)))
+    val rcols = spec.right.joinColumns.map(c => colRef(qual(spec.right.name, c)))
     if (spec.operator == "=") {
       require(lcols.size == rcols.size,
         s"composite key arity mismatch: ${spec.left.joinColumns} vs ${spec.right.joinColumns}")
@@ -194,7 +193,7 @@ abstract class JoinExecutor(
     // re-evaluation (hash_join.py:1222-1261). Catalyst pushes them below
     // joins exactly when legal (not past null-extending sides).
     filterConditions.foreach { cond =>
-      result = result.filter(cond.toColumn((t, c) => scol(qual(t, c))))
+      result = result.filter(cond.toColumn((t, c) => colRef(qual(t, c))))
     }
     timings("plan_build") = (System.nanoTime() - t0) / 1e9
     result
@@ -285,6 +284,11 @@ object JoinExecutor {
     }
     own + nested
   }
+
+  /** A reference to the column named `name`, backtick-quoted so that a
+    * `.` in it is part of the name, not a struct-field access.
+    */
+  private[graft] def colRef(name: String): Column = scol("`" + name.replace("`", "``") + "`")
 
   /** Qualified column name — the tuple-key `(column, table)` analog. */
   def qual(table: String, column: String): String = s"${table}__$column"

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.sources.Sources
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,7 +23,7 @@ object AnalyticsQueries {
   private type Q = (SparkSession, String) => DataFrame
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Sources.parquet(s, s"$dir/$name.parquet")
 
   /** exact-decimal revenue term: extendedprice * (1 - discount) */
   private val revenueTerm =

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.{Condition, TableInfo}
 import graft.operators.{HashJoinExecutor, NestedJoinExecutor}
-import graft.sources.ParquetResolver
+import graft.sources.{ParquetResolver, Sources}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -148,12 +148,12 @@ object ParityQueries {
   // which also exercises the resolver seam with a non-parquet table.
   private val f2contains: Q = (s, dir) => {
     import graft.sources.InMemoryResolver
-    val orders = s.read.parquet(s"$dir/orders.parquet")
+    val orders = Sources.parquet(s, s"$dir/orders.parquet")
     // testdata parquet is single-row-group → a bare scan is ONE task, and
     // the collect_list partial aggregation would run on one core; rebalance
     // first (same rationale as PipelineQueries.t)
     val parts = PipelineQueries.rebalance(s,
-        s.read.parquet(s"$dir/lineitem.parquet"))
+        Sources.parquet(s, s"$dir/lineitem.parquet"))
       .groupBy(col("l_orderkey")).agg(collect_list(col("l_partkey")).as("parts"))
     new HashJoinExecutor(s, new InMemoryResolver(Map(
       "orders" -> orders, "order_parts" -> parts)))

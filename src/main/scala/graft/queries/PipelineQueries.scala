@@ -3,6 +3,7 @@ package graft.queries
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import graft.operators.{Corpus, Dedup, Multimodal, Similarity, VectorIndex}
+import graft.sources.Sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -56,7 +57,7 @@ object PipelineQueries {
   }
 
   private[queries] def t(s: SparkSession, dir: String, name: String): DataFrame =
-    rebalance(s, s.read.parquet(s"$dir/$name.parquet"))
+    rebalance(s, Sources.parquet(s, s"$dir/$name.parquet"))
 
   /** Events `ts` column, schema-adaptive: some testdata generations write
     * TIMESTAMP(NANOS) (which Spark's vectorized reader rejects — read the
@@ -544,7 +545,7 @@ object PipelineQueries {
   // consumers (ANN probes AND dedup) — the keep-set is d12d's verbatim,
   // so the shared oracle hash-checks the store round-trip every run.
   private val d12e: Q = (s, dir) => {
-    val ver = embeddingsVersion(dir)
+    val ver = embeddingsVersion(s, dir)
     val path = ivfStorePath(dir, "sem", ver)
     val emb = t(s, dir, "embeddings")
     if (!VectorIndex.isServable(s, path)) {
@@ -872,49 +873,39 @@ object PipelineQueries {
   private def storeRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_STORE_DIR", "/root/repo/tmp/stores")
 
-  /** Newest mtime under `dir`'s embeddings table — the corpus VERSION
-    * key shared by the cached-store paths and the memoized corpus count.
-    * Walked through the Hadoop FS API (not java.io.File) so the key
-    * works unchanged when the corpus dir is hdfs://-/s3a://-shaped,
-    * matching VectorIndex's marker/manifest convention.
+  /** The corpus VERSION key shared by the cached-store paths and the
+    * memoized corpus count: the digest of `dir`'s embeddings table
+    * [[Sources.Stamp]] (names, lengths and mtimes under it, listed through
+    * the Hadoop FS API, so hdfs://- or s3a://-shaped dirs work unchanged).
     */
-  private def embeddingsVersion(dir: String): Long = {
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sessionState.newHadoopConf()
-    def newest(fs: org.apache.hadoop.fs.FileSystem,
-        st: org.apache.hadoop.fs.FileStatus): Long =
-      if (st.isDirectory)
-        (st.getModificationTime +:
-          fs.listStatus(st.getPath).map(newest(fs, _)).toSeq).max
-      else st.getModificationTime
-    val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = p.getFileSystem(conf)
-    newest(fs, fs.getFileStatus(p))
+  private def embeddingsVersion(s: SparkSession, dir: String): Long = {
+    val path = s"$dir/embeddings.parquet"
+    Sources.stamp(s, path).getOrElse(throw new java.io.FileNotFoundException(path)).digest
   }
 
   /** Deterministic per-(corpus, config) store path: keyed on the sfDir
-    * path, the embeddings parquet's newest mtime, AND
+    * path, the embeddings table's version, AND
     * [[VectorIndex.FormatVersion]] — so a regenerated corpus at the same
     * path gets a FRESH store instead of probing a stale one, and a
     * code-generation change in the assignment semantics or the store
     * layout (version bump) invalidates every cached store instead of
     * serving lists older code wrote.
     */
-  private def ivfStorePath(dir: String, tag: String): String =
-    ivfStorePath(dir, tag, embeddingsVersion(dir))
+  private def ivfStorePath(s: SparkSession, dir: String, tag: String): String =
+    ivfStorePath(dir, tag, embeddingsVersion(s, dir))
 
-  /** Overload for callers that also need [[embeddingsCount]]: compute
-    * [[embeddingsVersion]] (a full recursive FS walk — a latency tax per
-    * call on an object store) ONCE per query build and pass it to both.
+  /** Overload for callers that also need [[embeddingsCount]]: one
+    * [[embeddingsVersion]] listing per query build serves both, so the
+    * store path and the count agree on the corpus version.
     */
-  private def ivfStorePath(dir: String, tag: String, mt: Long): String = {
+  private def ivfStorePath(dir: String, tag: String, ver: Long): String = {
     val key = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$dir|$mt"))
+      scala.util.hashing.MurmurHash3.stringHash(s"$dir|$ver"))
     s"$storeRoot/ivf_${tag}_v${VectorIndex.FormatVersion}_$key"
   }
 
   /** The SemDeDup k = ⌈√N⌉ contract's N, memoized per corpus VERSION
-    * (dir + embeddings mtime — the cached-store key discipline): the
+    * (dir + [[embeddingsVersion]] — the cached-store key discipline): the
     * count is a config constant of the corpus, so it runs as ONE
     * metadata-cheap scan-agg per corpus version instead of one eager job
     * per d12b/c/d/e query build — the "compute k once beside the store
@@ -924,9 +915,9 @@ object PipelineQueries {
   private val corpusNCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
   private def embeddingsCount(s: SparkSession, dir: String): Long =
-    embeddingsCount(s, dir, embeddingsVersion(dir))
-  private def embeddingsCount(s: SparkSession, dir: String, mt: Long): Long =
-    corpusNCache.computeIfAbsent((dir, mt),
+    embeddingsCount(s, dir, embeddingsVersion(s, dir))
+  private def embeddingsCount(s: SparkSession, dir: String, ver: Long): Long =
+    corpusNCache.computeIfAbsent((dir, ver),
       _ => t(s, dir, "embeddings").count())
 
   // the store BUILD as its own timed query (always overwrite — honest
@@ -934,7 +925,7 @@ object PipelineQueries {
   // membership histogram read BACK from disk, so the oracle checks what
   // was actually persisted, not the in-flight plan
   private val s23: Q = (s, dir) => {
-    val path = ivfStorePath(dir, "hier")
+    val path = ivfStorePath(s, dir, "hier")
     VectorIndex.writeIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), path, centroidStride = 50, maxCentroids = 256,
       hierarchical = true, superStride = 16, sProbe = 2)
@@ -950,7 +941,7 @@ object PipelineQueries {
   // timing row); result ≡ s19 (same geometry) — shared oracle by
   // construction
   private val s24: Q = (s, dir) => {
-    val path = ivfStorePath(dir, "hier")
+    val path = ivfStorePath(s, dir, "hier")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), path, hierarchical = true)
     VectorIndex.probeIvfIndex(s, path, queriesDf(s, dir), col("vec_id"),
@@ -966,7 +957,7 @@ object PipelineQueries {
   // the serving-batch trade at the hier tier's measured recall plateau
   // (BASELINE §17d)
   private val s38: Q = (s, dir) => {
-    val path = ivfStorePath(dir, "hier")
+    val path = ivfStorePath(s, dir, "hier")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), path, hierarchical = true)
     VectorIndex.probeIvfIndexHierAdaptive(s, path, queriesDf(s, dir),
@@ -982,7 +973,7 @@ object PipelineQueries {
   // store at s32's geometry → result ≡ s32 by construction (the probe's
   // selection rule is byte-identical to massProbed's): shared oracle.
   private val s34: Q = (s, dir) => {
-    val path = ivfStorePath(dir, "flat")
+    val path = ivfStorePath(s, dir, "flat")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), path, hierarchical = false)
     VectorIndex.probeIvfIndexAdaptive(s, path, queriesDf(s, dir),
@@ -996,7 +987,7 @@ object PipelineQueries {
   // selected partitions, and the result ≡ s33 by construction — shared
   // oracle, spec-pinned bit-identity
   private val s35: Q = (s, dir) => {
-    val path = ivfStorePath(dir, "pqr")
+    val path = ivfStorePath(s, dir, "pqr")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), path, hierarchical = false, pq = true,
       pqResidual = true)
@@ -1009,7 +1000,7 @@ object PipelineQueries {
   // the ONLY cost knob the caller holds (the result set is data-
   // dependent, so nothing else bounds the scan); shares s34's flat store
   private val s36: Q = (s, dir) => {
-    val path = ivfStorePath(dir, "flat")
+    val path = ivfStorePath(s, dir, "flat")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), path, hierarchical = false)
     VectorIndex.probeIvfRange(s, path, queriesDf(s, dir), col("vec_id"),
@@ -1028,7 +1019,7 @@ object PipelineQueries {
   // keeps its meaning under the predicate — the fraction of the
   // MATCHING corpus each query's pruned scan may touch
   private val s40: Q = (s, dir) => {
-    val path = ivfStorePath(dir, "fila")
+    val path = ivfStorePath(s, dir, "fila")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), path, hierarchical = false,
       payload = Seq(col("label")), statsCols = Seq("label"))
@@ -1044,7 +1035,7 @@ object PipelineQueries {
   // and probe the union. Rebuilt from scratch each run so the append is
   // replay-idempotent.
   private val s25: Q = (s, dir) => {
-    val path = ivfStorePath(dir, "app")
+    val path = ivfStorePath(s, dir, "app")
     val emb = t(s, dir, "embeddings")
     VectorIndex.writeIvfIndex(emb.filter(col("vec_id") % 7 =!= 0),
       col("vec_id"), col("embedding"), path, hierarchical = true)
@@ -1060,7 +1051,7 @@ object PipelineQueries {
   // probe. Result ≡ s25 by construction: compaction must never change a
   // probe — the oracle IS that invariant, hash-checked every round.
   private val s28: Q = (s, dir) => {
-    val path = ivfStorePath(dir, "cmp")
+    val path = ivfStorePath(s, dir, "cmp")
     val emb = t(s, dir, "embeddings")
     VectorIndex.writeIvfIndex(emb.filter(col("vec_id") % 7 =!= 0),
       col("vec_id"), col("embedding"), path, hierarchical = true)
@@ -1112,7 +1103,7 @@ object PipelineQueries {
   // PQ store probe: ADC candidates read ONLY (vec_id, codes) from ONLY
   // the probed partitions; result ≡ s20 — shared oracle
   private val s27: Q = (s, dir) => {
-    val path = ivfStorePath(dir, "pq")
+    val path = ivfStorePath(s, dir, "pq")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), path, hierarchical = true, pq = true)
     VectorIndex.probeIvfPqIndex(s, path, queriesDf(s, dir), col("vec_id"),
@@ -1126,7 +1117,7 @@ object PipelineQueries {
   // data filter on only the probed partitions, never a join against a
   // corpus-sized attribute table
   private val s29: Q = (s, dir) => {
-    val path = ivfStorePath(dir, "fil")
+    val path = ivfStorePath(s, dir, "fil")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), path, hierarchical = true,
       payload = Seq(col("label")))
@@ -1140,7 +1131,7 @@ object PipelineQueries {
   // so the probe is entirely exchange-free (the threshold replaces
   // top-k's one bounded exchange); shares the "hier" store artifact
   private val s30: Q = (s, dir) => {
-    val path = ivfStorePath(dir, "hier")
+    val path = ivfStorePath(s, dir, "hier")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), path, hierarchical = true)
     VectorIndex.probeIvfRange(s, path, queriesDf(s, dir), col("vec_id"),

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import graft.operators.JoinExecutor.unqual
+import graft.operators.JoinExecutor.{colRef, unqual}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,13 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object JsonlSink {
 
-  /** Restructure qualified columns `t__c` into nested `{c: {t: v}}` structs
-    * and write JSON lines. Returns the number of rows written, observed
-    * in-flight via `Dataset.observe` — NOT by re-reading the output (a
-    * second full pass over the result set, which at 100 TB doubles the
-    * sink cost and showed up as phantom "join" time in the executor's
-    * phase split).
-    */
   /** The nested-shape JSON projection shared by both writers: one string
     * column `value` holding `{col: {table: v}}` per row.
     */
@@ -35,12 +28,19 @@ object JsonlSink {
     val nested = grouped.toSeq.sortBy(_._1).map { case (c, qs) =>
       struct(qs.map { q =>
         val t = unqual(q)._1
-        df(q).as(if (t.isEmpty) "_" else t)
+        colRef(q).as(if (t.isEmpty) "_" else t)
       }: _*).as(c)
     }
     df.select(to_json(struct(nested: _*)).as("value"))
   }
 
+  /** Restructure qualified columns `t__c` into nested `{c: {t: v}}` structs
+    * and write JSON lines. Returns the number of rows written, observed
+    * in-flight via `Dataset.observe` — NOT by re-reading the output (a
+    * second full pass over the result set, which at 100 TB doubles the
+    * sink cost and showed up as phantom "join" time in the executor's
+    * phase split).
+    */
   def write(df: DataFrame, path: String): Long = {
     val obs = org.apache.spark.sql.Observation()
     jsonLines(df)

@@ -7,8 +7,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (reference: cassandra_joinlib/utils.py:461-472) — in Spark, schema comes
   * free from the source.
   *
-  * Implementations must be cheap to call repeatedly (Spark reads are lazy;
-  * the returned DataFrame is a plan, not data).
+  * Implementations must be cheap to call repeatedly: the join facade
+  * resolves every table of a pipeline on each `execute()`, and callers
+  * build a fresh resolver per pipeline. The returned DataFrame is a plan,
+  * not data. A catalog resolves names from metadata it already holds;
+  * [[ParquetResolver]] keeps the schema in [[Sources]], which infers it
+  * again only when the table's file listing (names, lengths, mtimes) or
+  * the session's parquet settings change.
   */
 trait TableResolver {
   def resolve(spark: SparkSession, table: String): DataFrame
@@ -18,10 +23,14 @@ trait TableResolver {
   * On a real deployment this would be swapped for a catalog-backed resolver
   * (e.g. the Spark Cassandra Connector's `CassandraCatalog`), with no change
   * to the executor facade.
+  *
+  * The schema is inferred once per table version and held by the
+  * [[Sources]] object, not by this instance, so resolvers built per
+  * pipeline share it. Every call lists the table's files anew.
   */
 final class ParquetResolver(dir: String) extends TableResolver {
   override def resolve(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
+    Sources.parquet(spark, s"$dir/$table.parquet")
 }
 
 /** Resolver over pre-registered DataFrames — used by tests to join

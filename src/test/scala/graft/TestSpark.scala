@@ -14,4 +14,22 @@ object TestSpark {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** The Spark jobs `body` launches, counted by a listener. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBridge.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerBridge.waitUntilListenerBusEmpty(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.TestSpark.jobsOf
 import graft.core.{Condition, TableInfo}
-import graft.sources.InMemoryResolver
+import graft.sources.{InMemoryResolver, ParquetResolver}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -135,5 +136,51 @@ class JoinExecutorSpec extends AnyFunSuite {
       .join(ti("users", "uid"), ti("orders", "uid"))
       .execute()
     assert(res.columns.toSet == Set("users__uid", "users__name", "orders__uid"))
+  }
+
+  test("projection and qualification treat a dotted column name as one column") {
+    val l = Seq((1L, "x"), (2L, "y")).toDF("k.id", "a.b")
+    val r = Seq((1L, 10.0), (3L, 30.0)).toDF("k.id", "v")
+    val ex = new HashJoinExecutor(spark, new InMemoryResolver(Map("l" -> l, "r" -> r)))
+      .select("l", Seq("k.id", "a.b"))
+      .join(TableInfo("l", "k.id"), TableInfo("r", "k.id"))
+      .filterBy(Condition(Condition.col("l", "a.b"), "=", "x"))
+    val res = ex.execute()
+    assert(res.columns.toSeq == Seq("l__k.id", "l__a.b", "r__k.id", "r__v"))
+    assert(res.select(JoinExecutor.colRef("l__a.b")).as[String].collect().toSeq == Seq("x"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-res").toString
+    assert(ex.saveResult("dotted", dir) == 1)
+  }
+
+  /** `users` / `orders` / a three-column `lineitem` as parquet tables in a
+    * fresh directory, for the facade over [[ParquetResolver]].
+    */
+  private def parquetDir(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-src").toString
+    users.write.parquet(s"$dir/users.parquet")
+    orders.write.parquet(s"$dir/orders.parquet")
+    Seq((1L, 1, 5.0), (1L, 2, 7.0), (2L, 1, 3.0)).toDF("l_orderkey", "l_linenumber", "l_quantity")
+      .write.parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  test("ParquetResolver: a repeated facade op skips both tables' schema inference") {
+    val dir = parquetDir()
+    val res = java.nio.file.Files.createTempDirectory("graft-res").toString
+    def op(): Unit = new HashJoinExecutor(spark, new ParquetResolver(dir))
+      .join(ti("users", "uid"), ti("orders", "uid")).saveResult("repeat", res)
+    val first = jobsOf(op())
+    val second = jobsOf(op())
+    assert(first - second == 2, s"first run $first jobs, second $second")
+  }
+
+  test("ParquetResolver: aliased composite self-join returns each line once") {
+    val out = new HashJoinExecutor(spark, new ParquetResolver(parquetDir()))
+      .join(TableInfo("lineitem", Seq("l_orderkey", "l_linenumber")),
+        TableInfo("lineitem", Seq("l_orderkey", "l_linenumber"), Some("li2")))
+      .execute()
+      .select("lineitem__l_orderkey", "lineitem__l_linenumber", "li2__l_quantity")
+      .as[(Long, Int, Double)].collect().sorted.toSeq
+    assert(out == Seq((1L, 1, 5.0), (1L, 2, 7.0), (2L, 1, 3.0)))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.TestSpark.jobsOf
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -40,24 +41,6 @@ class VectorIndexSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try body finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
-
-  /** The Spark jobs `body` launches, counted by a listener. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerBridge.waitUntilListenerBusEmpty(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.graft.ListenerBridge.waitUntilListenerBusEmpty(sc)
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
   }
 
   test("probe of a written hierarchical store is bit-identical to the in-flight s19 tier") {
