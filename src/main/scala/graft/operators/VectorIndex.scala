@@ -5,7 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  IntegerType, LongType, MapType, StructField, StructType}
 import org.json4s._
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
@@ -106,8 +107,15 @@ object VectorIndex {
     * manifest and was written by the mass-routed (r18) writer, and an
     * older store — an empty marker — is rebuilt by [[ensureIvfIndex]]
     * and rejected by probes and appends.
+    *
+    * v7: the manifest records the schemas the build wrote for `lists/`
+    * and `centroids/`, and every read-back of a store artifact takes its
+    * schema from there (`codebook/`'s is fixed) instead of running a
+    * parquet schema-inference job. The grid is v5's. A v6 manifest names
+    * no schemas, so a v6 store is rejected by probes and appends and
+    * rebuilt by [[ensureIvfIndex]].
     */
-  val FormatVersion = 6
+  val FormatVersion = 7
 
   /** The completeness marker, which IS the store manifest
     * ([[StoreManifest]]): one small JSON file at the store root, written
@@ -166,14 +174,14 @@ object VectorIndex {
     * under that type ([[histogramDf]]), values keep the column's type, so
     * a probe's `statsValues` match exactly the rows they match in lists.
     */
-  private case class Histogram(dataType: String, rows: List[JValue])
+  private[operators] case class Histogram(dataType: String, rows: List[JValue])
 
   /** The counts a manifest carries, taken from the lists ACTUALLY WRITTEN
     * ([[countLists]]): `n_list` per list id and the requested histograms
     * — config-sized metadata like the centroids, so no mass budget pays a
     * corpus pass at probe time.
     */
-  private case class Counts(sizes: Map[String, Long],
+  private[operators] case class Counts(sizes: Map[String, Long],
       stats: Map[String, Histogram]) {
     def listSizes: Seq[(Long, Long)] =
       sizes.toSeq.map { case (c, n) => (c.toLong, n) }.sortBy(_._1)
@@ -188,30 +196,87 @@ object VectorIndex {
     * don't). `payload` names the metadata columns stored inline with
     * each vector, so [[appendToIvfIndex]] selects the same columns from
     * every increment and a schema drift fails loudly at append time.
+    * `listsSchema` and `centroidsSchema` (`DataType.json`) are the
+    * schemas the build wrote for `lists/` (its `c_id` partition column
+    * included) and `centroids/`, which every read-back of those
+    * artifacts reads under ([[readBack]]).
     */
-  private case class StoreManifest(
+  private[operators] case class StoreManifest(
       version: Int, hierarchical: Boolean, superStride: Int, sProbe: Int,
       pq: Boolean, numSubspaces: Int, numCodes: Int, pqResidual: Boolean,
-      payload: List[String], counts: Counts) {
+      payload: List[String], listsSchema: String, centroidsSchema: String,
+      counts: Counts) {
     /** The assignment geometry in [[Similarity.assignLists]]' terms. */
     def hier: Option[(Int, Int)] =
       if (hierarchical) Some((superStride, sProbe)) else None
+    def lists: StructType = DataType.fromJson(listsSchema).asInstanceOf[StructType]
+    def centroids: StructType =
+      DataType.fromJson(centroidsSchema).asInstanceOf[StructType]
   }
+
+  /** `codebook/`'s schema: the exploded `(s, j, pos, val)` scalars every
+    * PQ build writes, the same for every store.
+    */
+  private[operators] val CodebookSchema = new StructType().add("s", IntegerType)
+    .add("j", LongType).add("pos", IntegerType).add("val", DoubleType)
+
+  /** `t` as a parquet read-back sees it: every field nullable, no field
+    * metadata — the form a manifest records and an append compares.
+    */
+  private def bare(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => StructField(f.name, bare(f.dataType))))
+    case a: ArrayType => ArrayType(bare(a.elementType))
+    case m: MapType => MapType(bare(m.keyType), bare(m.valueType))
+    case other => other
+  }
+
+  private def bareStruct(t: StructType): StructType =
+    bare(t).asInstanceOf[StructType]
+
+  /** The one reader of a store artifact (`lists`, `centroids`,
+    * `codebook`): under its recorded schema, so no read-back runs a
+    * schema-inference job.
+    */
+  private def readBack(spark: SparkSession, path: String, artifact: String,
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(s"$path/$artifact")
+
+  private[operators] def centroidsOf(spark: SparkSession, path: String,
+      meta: StoreManifest): DataFrame =
+    readBack(spark, path, "centroids", meta.centroids)
+
+  /** The store's inverted lists `(c_id, vec_id, v, …)` as written — every
+    * stored column (PQ `codes`, payload) under the schema the manifest
+    * records, `c_id` typed as built — for callers that consume the whole
+    * persisted assignment (the build's own membership read-back, SemDeDup
+    * over the stored lists). Requires a complete store of this
+    * generation.
+    */
+  def storedLists(spark: SparkSession, path: String): DataFrame =
+    readBack(spark, path, "lists", manifestOf(path).lists)
 
   private implicit val jsonFormats: Formats = DefaultFormats.withBigDecimal
 
   /** The manifest at `path`, or why none is servable: no store (no
-    * marker), a store of generation ≤ 5 (an EMPTY marker — what every
-    * earlier generation wrote), or a manifest that fails its checksum or
-    * does not parse (damaged — the write protocol can't produce it). Any
-    * other filesystem error PROPAGATES: answering "not servable" to a
-    * transient IO hiccup would trigger a full index rebuild.
+    * marker), a store of another generation (an EMPTY marker — what every
+    * generation ≤ 5 wrote — or a manifest whose `version` is not
+    * [[FormatVersion]]), or a manifest that fails its checksum or does not
+    * parse (damaged — the write protocol can't produce it). The version is
+    * read before the rest, so an older manifest's shape is never taken
+    * for damage. Any other filesystem error PROPAGATES: answering "not
+    * servable" to a transient IO hiccup would trigger a full index
+    * rebuild.
     */
   private def loadManifest(path: String): Either[String, StoreManifest] = {
     val m = markerPath(path)
     val fs = m.getFileSystem(hadoopConf())
     def damaged(why: String) = s"the manifest of the store at $path is " +
       s"damaged ($why) — rebuild with writeIvfIndex or ensureIvfIndex"
+    def generation(g: String) = s"store at $path was built under " +
+      s"assignment-semantics generation $g, this code is generation " +
+      s"$FormatVersion — its list membership would disagree with the " +
+      "probe's query assignment; rebuild with writeIvfIndex or ensureIvfIndex"
     val text =
       try {
         val in = fs.open(m)
@@ -222,13 +287,17 @@ object VectorIndex {
         case _: org.apache.hadoop.fs.ChecksumException =>
           Left(damaged("checksum mismatch"))
       }
+    def read[A](a: => A) =
+      scala.util.Try(a).toEither.left.map(e => damaged(e.getClass.getSimpleName))
     text.flatMap {
-      case "" => Left(s"store at $path was built under assignment-" +
-        "semantics generation ≤ 5 (its completeness marker carries no " +
-        s"manifest), this code is generation $FormatVersion — rebuild " +
-        "with writeIvfIndex or ensureIvfIndex")
-      case t => scala.util.Try(Serialization.read[StoreManifest](t))
-        .toEither.left.map(e => damaged(e.getClass.getSimpleName))
+      case "" => Left(generation("≤ 5 (its completeness marker carries no " +
+        "manifest)"))
+      case t => read(parse(t, useBigDecimalForDouble = true)).flatMap { j =>
+        j \ "version" match {
+          case JInt(v) if v != FormatVersion => Left(generation(v.toString))
+          case _ => read(j.extract[StoreManifest])
+        }
+      }
     }
   }
 
@@ -236,16 +305,9 @@ object VectorIndex {
     * probe's and mutation's precondition — or an
     * `IllegalArgumentException` naming `path`.
     */
-  private def manifestOf(path: String): StoreManifest = {
-    val m = loadManifest(path).fold(e => throw new IllegalArgumentException(e),
+  private[operators] def manifestOf(path: String): StoreManifest =
+    loadManifest(path).fold(e => throw new IllegalArgumentException(e),
       identity)
-    require(m.version == FormatVersion,
-      s"store at $path was built under assignment-semantics generation " +
-        s"${m.version}, this code is generation $FormatVersion — its " +
-        "list membership would disagree with the probe's query " +
-        "assignment; rebuild with writeIvfIndex")
-    m
-  }
 
   /** Write `m` as the store's manifest — LAST in every mutation — to a
     * temporary file renamed over the old one, so a concurrent probe reads
@@ -267,7 +329,7 @@ object VectorIndex {
     * callers managing their own build): a complete store of an older
     * generation must be REBUILT, where a probe/append of one must FAIL
     * (they do — loudly, on the manifest's recorded generation). A store
-    * whose manifest is empty (generation ≤ 5) or damaged is NOT servable
+    * of another generation, or with a damaged manifest, is NOT servable
     * rather than an error: the gate's callers want "rebuild".
     *
     * `payload`: when given, the store must ALSO have been built with
@@ -282,8 +344,7 @@ object VectorIndex {
   def isServable(spark: SparkSession, path: String,
       payload: Seq[String] = Nil,
       pqResidual: Option[Boolean] = None): Boolean =
-    loadManifest(path).exists(m => m.version == FormatVersion &&
-      (payload.isEmpty || m.payload == payload) &&
+    loadManifest(path).exists(m => (payload.isEmpty || m.payload == payload) &&
       pqResidual.forall(_ == m.pqResidual))
 
   /** Write the IVF index of `base` at `path`: inverted lists partitioned
@@ -392,9 +453,9 @@ object VectorIndex {
     // concurrent probe in that window must fail loudly on the missing
     // marker rather than read the NEW codebook against the OLD lists
     dropMarker(path)
-    val meta = StoreManifest(FormatVersion, hierarchical, superStride, sProbe,
-      pq, numSubspaces, numCodes, pqResidual, payNames.toList,
-      Counts(Map.empty, Map.empty))
+    val config = StoreManifest(FormatVersion, hierarchical, superStride,
+      sProbe, pq, numSubspaces, numCodes, pqResidual, payNames.toList, "",
+      "", Counts(Map.empty, Map.empty))
     val picked = centroids.map(_.select(col("c_id"), col("cv")))
       .getOrElse(Similarity.ivfCentroids(base.select(id.as("vec_id"),
         vec.as("v")), centroidStride, maxCentroids))
@@ -404,7 +465,7 @@ object VectorIndex {
     // fallback — keeps the frame)
     val cm = Similarity.collectCentModel(picked)
     val cents = cm.fold(picked)(_.localCents(spark))
-    val listed = Similarity.assignLists(base, id, vec, cents, meta.hier,
+    val listed = Similarity.assignLists(base, id, vec, cents, config.hier,
       model = cm)
     val rows =
       if (!pq) listed
@@ -427,12 +488,13 @@ object VectorIndex {
         Similarity.withCodes(listed, cents, cb, pqResidual)
       }
     val stored = if (payload.isEmpty) rows else rows.join(pay, Seq("vec_id"))
-    val written = writeLists(stored, base, listed,
-      cm.fold(cents.count())(_.ids.length.toLong), filesPerList,
-      targetFileBytes, path, "overwrite")
+    val meta = config.copy(
+      listsSchema = writeLists(stored, base, listed, cm, cents, filesPerList,
+        targetFileBytes, path, "overwrite", None).json,
+      centroidsSchema = bareStruct(cents.schema).json)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    putManifest(path,
-      meta.copy(counts = countLists(spark, path, statsCols, Some(written))))
+    putManifest(path, meta.copy(counts = countLists(spark, path, meta,
+      statsCols)))
   }
 
   private def requireRouting(filesPerList: Int, targetFileBytes: Long): Unit = {
@@ -445,32 +507,56 @@ object VectorIndex {
   /** Route `stored` rows to their lists and write them under `lists/` —
     * the layout rule the build and every append share: explicit
     * `filesPerList`, or per-list widths auto-sized from `input`'s bytes
-    * and `listed`'s sampled masses (see [[writeIvfIndex]]).
+    * and `listed`'s sampled masses (see [[writeIvfIndex]]). `recorded`
+    * is the store's `lists/` schema when appending: rows of another
+    * schema are rejected before anything is written, since a read under
+    * the recorded schema would misread their files.
     *
-    * @return the schema of the rows written, for the read-back
+    * @return the written schema as a read-back sees it ([[bare]])
     */
   private def writeLists(stored: DataFrame, input: DataFrame,
-      listed: DataFrame, nLists: => Long, filesPerList: Int,
-      targetFileBytes: Long, path: String, mode: String): StructType = {
+      listed: DataFrame, cm: Option[Similarity.CentModel], cents: DataFrame,
+      filesPerList: Int, targetFileBytes: Long, path: String, mode: String,
+      recorded: Option[StructType]): StructType = {
     val auto =
       if (filesPerList > 0) None
       else autoListFileCounts(input, listed, targetFileBytes)
     // the list count comes from the collected centroid model (a count job
     // only on the exchange fallback), and is taken only when a split can
-    // happen (explicit filesPerList = 1 never forces it)
+    // happen (explicit filesPerList = 1 never forces it); the one-file
+    // route's writer width needs no count job: unknown means many lists
     val routed = routeToLists(stored, auto.getOrElse(Map.empty),
-      filesPerList.max(1), nLists)
+      filesPerList.max(1), cm.fold(cents.count())(_.ids.length.toLong),
+      listWriters(stored.sparkSession, cm.map(_.ids.length.toLong)))
+    val schema = bareStruct(routed.schema)
+    recorded.foreach { want =>
+      def typeOf(t: StructType, c: String) =
+        t.find(_.name == c).fold("absent")(_.dataType.simpleString)
+      val drift = (schema.fields.toSeq.diff(want.fields.toSeq).map(_.name) ++
+        want.fieldNames.diff(schema.fieldNames)).distinct
+      require(drift.isEmpty, s"append to the store at $path would write " +
+        drift.map(c => s"$c as ${typeOf(schema, c)} (recorded: " +
+          s"${typeOf(want, c)})").mkString(", ") +
+        " — cast the increment to the recorded types")
+    }
     routed.write.mode(mode).partitionBy("c_id").parquet(s"$path/lists")
-    routed.schema
+    schema
+  }
+
+  /** The writer width of the one-file-per-list route: one task per list
+    * up to the session's cores — `nLists` when known without a job, else
+    * the cores.
+    */
+  private def listWriters(spark: SparkSession, nLists: Option[Long]): Int = {
+    val cores = spark.sparkContext.defaultParallelism
+    nLists.fold(cores)(n => n.min(cores.toLong).max(1L).toInt)
   }
 
   /** Count the lists ACTUALLY WRITTEN (read-back, the s23 honesty rule)
     * in ONE aggregation collected to the driver: grouping sets over
     * `(c_id)` and each `(c_id, statsCol)` give the per-list sizes and
     * every requested histogram from one scan of the partition column plus
-    * the histogram columns — never the vectors. `written` is the schema
-    * of the rows the same call just wrote (build, append): the read-back
-    * takes it instead of running a parquet schema-inference job.
+    * the histogram columns — never the vectors.
     *
     * The histograms are the zone-map-style metadata behind
     * [[probeIvfIndexFiltered]]: under a payload predicate the mass budget
@@ -482,10 +568,10 @@ object VectorIndex {
     * filter-stats key at any engine).
     */
   private def countLists(spark: SparkSession, path: String,
-      statsCols: Seq[String], written: Option[StructType] = None): Counts = {
+      meta: StoreManifest, statsCols: Seq[String]): Counts = {
     val cols = statsCols.distinct
     val keys = col("c_id") +: cols.indices.map(i => col(s"_s$i"))
-    val keyed = written.foldLeft(spark.read)(_.schema(_)).parquet(s"$path/lists")
+    val keyed = readBack(spark, path, "lists", meta.lists)
       .select((col("c_id").cast("long").as("c_id") +:
         cols.zipWithIndex.map { case (c, i) => col(c).as(s"_s$i") }): _*)
     val rows = keyed
@@ -537,7 +623,7 @@ object VectorIndex {
   private def statsOf(spark: SparkSession, path: String, m: StoreManifest,
       statsCol: String): DataFrame =
     histogramDf(spark, m.counts.stats.getOrElse(statsCol,
-      countLists(spark, path, Seq(statsCol)).stats(statsCol)))
+      countLists(spark, path, m, Seq(statsCol)).stats(statsCol)))
 
   /** 1-in-N deterministic hash slice for the auto route's per-list mass
     * estimate — the cost knob: the estimating pass assigns only
@@ -595,9 +681,14 @@ object VectorIndex {
     * route's mass-proportional counts ([[autoListFileCounts]]) or
     * compaction's bin counts.
     *
-    * When every width is 1 the exchange keys on `c_id` alone (each list
-    * lands wholly in one task — exactly one file, under any AQE
-    * coalescing). Otherwise the partition COUNT is pinned to the intended
+    * When every width is 1 the exchange keys on `c_id` alone into
+    * `writers` partitions (one per list up to the cores — see
+    * [[listWriters]]): each list lands wholly in one task, so exactly one
+    * file, and a partition COUNT is never coalesced by AQE, so a small
+    * store's lists still write on every core (AQE would merge a
+    * count-free `repartition(c_id)` of a few MB into ONE writer task,
+    * which then creates every list's directory and file serially).
+    * Otherwise the partition COUNT is pinned to the intended
     * writer parallelism (Σ listed widths + `dflt` for each of `nLists`
     * lists): an adaptive exchange would COALESCE the small sub-splits
     * back into shared tasks — same-list splits in one task merge into
@@ -607,9 +698,9 @@ object VectorIndex {
     * `targetFileBytes` proportionally — still bounded, never drizzle.
     */
   private def routeToLists(rows: DataFrame, listFiles: Map[Long, Int],
-      dflt: Int, nLists: => Long): DataFrame =
+      dflt: Int, nLists: => Long, writers: Int): DataFrame =
     if (dflt <= 1 && listFiles.values.forall(_ <= 1))
-      rows.repartition(col("c_id"))
+      rows.repartition(writers, col("c_id"))
     else {
       val parts = (listFiles.values.map(_.toLong).sum + nLists * dflt)
         .max(1L).min(65536L).toInt
@@ -668,7 +759,7 @@ object VectorIndex {
       val m = manifestOf(path)
       if (!statsCols.forall(m.counts.stats.contains))
         putManifest(path, m.copy(counts = countLists(base.sparkSession, path,
-          m.counts.stats.keys.toSeq ++ statsCols)))
+          m, m.counts.stats.keys.toSeq ++ statsCols)))
     }
     // callers with a TRAINED model check isServable themselves before
     // training (the model derivation may run eager jobs — an ensure that
@@ -696,7 +787,7 @@ object VectorIndex {
       targetFileBytes: Long = 128L << 20): Unit = {
     val spark = increment.sparkSession
     val meta = manifestOf(path)
-    val onDisk = spark.read.parquet(s"$path/centroids")
+    val onDisk = centroidsOf(spark, path, meta)
     val cm = Similarity.collectCentModel(onDisk)
     val cents = cm.fold(onDisk)(_.localCents(spark))
     val listed = Similarity.assignLists(increment, id, vec, cents, meta.hier,
@@ -720,20 +811,19 @@ object VectorIndex {
     // sampled masses: a small batch adds 1 file per touched list (which
     // keeps compaction occasional), a bulk or skewed backfill gets
     // block-sized files like a build would
-    val written = writeLists(stored, increment, listed,
-      cm.fold(cents.count())(_.ids.length.toLong), filesPerList,
-      targetFileBytes, path, "append")
+    writeLists(stored, increment, listed, cm, cents, filesPerList,
+      targetFileBytes, path, "append", Some(meta.lists))
     // recount AFTER the rows land, then swap the manifest: a crash
     // between the two leaves last batch's counts — a drift in the mass
     // budget's list SELECTION the next append heals, never a wrong
     // result. A full recount (not an increment merge) is what heals it.
-    putManifest(path, meta.copy(counts = countLists(spark, path,
-      meta.counts.stats.keys.toSeq, Some(written))))
+    putManifest(path, meta.copy(counts = countLists(spark, path, meta,
+      meta.counts.stats.keys.toSeq)))
   }
 
   private def readCodebook(spark: SparkSession, path: String,
       meta: StoreManifest): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$path/codebook").collect()
+    val rows = readBack(spark, path, "codebook", CodebookSchema).collect()
       .map(r => ((r.getAs[Int]("s"), r.getAs[Long]("j"), r.getAs[Int]("pos")),
         r.getAs[Double]("val"))).toMap
     val subDim = rows.keys.map(_._3).max
@@ -758,13 +848,14 @@ object VectorIndex {
     * `dropEmpty`). The budget's total is summed on the driver.
     */
   private def massProbedLists(
-      spark: SparkSession, path: String, queries: DataFrame,
-      id: Column, vec: Column, massPpm: Long, sizes: Seq[(Long, Long)],
+      spark: SparkSession, path: String, meta: StoreManifest,
+      queries: DataFrame, id: Column, vec: Column, massPpm: Long,
+      sizes: Seq[(Long, Long)],
       dropEmpty: Boolean = false): (DataFrame, Array[Long]) = {
     import spark.implicits._
     val n = sizes.map(_._2).sum
     require(n > 0, s"store at $path has no rows — nothing to probe")
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = centroidsOf(spark, path, meta)
       .select(col("c_id"), col("cv"))
     withIds(Similarity.massProbed(
       queries.select(id.as("q_id"), vec.as("qv")), cents,
@@ -781,10 +872,10 @@ object VectorIndex {
       spark: SparkSession, path: String, meta: StoreManifest,
       queries: DataFrame, id: Column, vec: Column, nProbe: Int,
       massPpm: Option[Long]): (DataFrame, Array[Long]) = massPpm match {
-    case Some(mp) => massProbedLists(spark, path, queries, id, vec, mp,
+    case Some(mp) => massProbedLists(spark, path, meta, queries, id, vec, mp,
       meta.counts.listSizes)
     case None => withIds(Similarity.nearestLists(queries, id, vec,
-      spark.read.parquet(s"$path/centroids"), nProbe, meta.hier))
+      centroidsOf(spark, path, meta), nProbe, meta.hier))
   }
 
   /** TWO-LEVEL mass-budget selection over the store's persisted model —
@@ -805,7 +896,7 @@ object VectorIndex {
     require(n > 0, s"store at $path has no rows — nothing to probe")
     withIds(Similarity.hierMassProbed(
       queries.select(id.as("q_id"), vec.as("qv")),
-      spark.read.parquet(s"$path/centroids").select(col("c_id"), col("cv")),
+      centroidsOf(spark, path, meta).select(col("c_id"), col("cv")),
       meta.counts.listSizes.toDF("c_id", "n_list"), n, meta.superStride,
       massPpm))
   }
@@ -813,15 +904,15 @@ object VectorIndex {
   /** The store's lists restricted to the probed ids, via a literal filter
     * ON THE PARTITION COLUMN — static partition pruning; only the probed
     * `c_id=` directories are listed or read. The literal is typed to the
-    * partition column's inferred type (directory values parse as INT when
-    * they fit — a long-typed literal would wrap the column in a cast and
-    * defeat pruning). `where` is a probe's payload pre-filter, pushed into
-    * the same scan as a parquet data filter.
+    * partition column's recorded type (a literal of another type would
+    * wrap the column in a cast and defeat pruning). `where` is a probe's
+    * payload pre-filter, pushed into the same scan as a parquet data
+    * filter.
     */
-  private def prunedLists(
-      spark: SparkSession, path: String, ids: Array[Long],
-      where: Option[Column] = None): DataFrame = {
-    val raw = spark.read.parquet(s"$path/lists")
+  private[operators] def prunedLists(
+      spark: SparkSession, path: String, meta: StoreManifest,
+      ids: Array[Long], where: Option[Column] = None): DataFrame = {
+    val raw = readBack(spark, path, "lists", meta.lists)
     val pruned = raw.schema("c_id").dataType match {
       case LongType =>
         raw.filter(col("c_id").isin(ids.toIndexedSeq: _*))
@@ -861,10 +952,11 @@ object VectorIndex {
       k: Int = 10,
       nProbe: Int = 2,
       where: Option[Column] = None): DataFrame = {
-    val (probed, ids) = selectLists(spark, path, manifestOf(path), queries,
-      id, vec, nProbe, None)
+    val meta = manifestOf(path)
+    val (probed, ids) = selectLists(spark, path, meta, queries, id, vec,
+      nProbe, None)
     Similarity.topK(Similarity.rescore(
-      prunedLists(spark, path, ids, where), broadcast(probed)), k)
+      prunedLists(spark, path, meta, ids, where), broadcast(probed)), k)
   }
 
   /** [[probeIvfIndex]] with [[Similarity.ivfTopKAdaptive]]'s MASS BUDGET
@@ -900,10 +992,11 @@ object VectorIndex {
       k: Int = 10,
       massPpm: Long = 150000L,
       where: Option[Column] = None): DataFrame = {
-    val (probed, ids) = selectLists(spark, path, manifestOf(path), queries,
-      id, vec, 0, Some(massPpm))
+    val meta = manifestOf(path)
+    val (probed, ids) = selectLists(spark, path, meta, queries, id, vec, 0,
+      Some(massPpm))
     Similarity.topK(Similarity.rescore(
-      prunedLists(spark, path, ids, where), broadcast(probed)), k)
+      prunedLists(spark, path, meta, ids, where), broadcast(probed)), k)
   }
 
   /** FILTERED top-k under the mass budget, with the budget run over
@@ -978,11 +1071,11 @@ object VectorIndex {
       .groupMapReduce(_._1)(_._2)(_ + _).toSeq
     require(fsizes.map(_._2).sum > 0,
       s"no stored rows match $statsCol IN (${statsValues.mkString(", ")})")
-    val (probed, ids) = massProbedLists(spark, path, queries, id, vec,
+    val (probed, ids) = massProbedLists(spark, path, meta, queries, id, vec,
       massPpm, fsizes, dropEmpty = true)
     val pred = where.foldLeft(col(statsCol).isin(statsValues: _*))(_ && _)
     Similarity.topK(Similarity.rescore(
-      prunedLists(spark, path, ids, Some(pred)), broadcast(probed)), k)
+      prunedLists(spark, path, meta, ids, Some(pred)), broadcast(probed)), k)
   }
 
   /** [[probeIvfIndexAdaptive]] with the TWO-LEVEL rank on the query side
@@ -1023,7 +1116,7 @@ object VectorIndex {
     val (probed, ids) =
       hierMassProbedLists(spark, path, meta, queries, id, vec, massPpm)
     Similarity.topK(Similarity.rescore(
-      prunedLists(spark, path, ids, where), broadcast(probed)), k)
+      prunedLists(spark, path, meta, ids, where), broadcast(probed)), k)
   }
 
   /** Radius (range) search against a persisted store: every candidate in
@@ -1063,11 +1156,13 @@ object VectorIndex {
     // range search the budget matters even more than for top-k: the
     // result set is data-dependent, so the probe's I/O bound is the ONLY
     // cost knob the caller holds
-    val (probed, ids) = selectLists(spark, path, manifestOf(path), queries,
-      id, vec, nProbe, massPpm)
+    val meta = manifestOf(path)
+    val (probed, ids) = selectLists(spark, path, meta, queries, id, vec,
+      nProbe, massPpm)
     // membership on the integer score itself (`udot ≥ minCosine·2⁴⁰`): a
     // candidate AT the bar must never hinge on a float boundary
-    Similarity.rescore(prunedLists(spark, path, ids, where), broadcast(probed))
+    Similarity.rescore(prunedLists(spark, path, meta, ids, where),
+      broadcast(probed))
       .filter(col("cos_ud") >= Similarity.cosineMicros2(minCosine))
   }
 
@@ -1156,7 +1251,8 @@ object VectorIndex {
     }.toMap
     if (needy.nonEmpty) {
       val rewrite = routeToLists(
-        prunedLists(spark, path, needy.keys.toArray.sorted), needy, 1, 0L)
+        prunedLists(spark, path, meta, needy.keys.toArray.sorted), needy, 1,
+        0L, listWriters(spark, Some(needy.size.toLong)))
       val conf = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       dropMarker(path)
       try {
@@ -1281,9 +1377,9 @@ object VectorIndex {
     // residual stores hold codes over v − centroid, so the LUT is
     // per-(query, probed list) over qv − centroid
     val probedLut = Similarity.withLut(probed,
-        spark.read.parquet(s"$path/centroids"), cb, meta.pqResidual)
+        centroidsOf(spark, path, meta), cb, meta.pqResidual)
       .select(col("c_id"), col("q_id"), col("lut"))
-    val all = prunedLists(spark, path, ids)
+    val all = prunedLists(spark, path, meta, ids)
     val lists = where.foldLeft(all)(_.filter(_))
     // candidate scan: codes only — the store's vectors are not read here
     val poolRows = Similarity.pqPool(

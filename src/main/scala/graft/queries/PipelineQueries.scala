@@ -559,7 +559,7 @@ object PipelineQueries {
             k = k, iters = 2, seedStride = 10, rankSeeds = true))))
     }
     Dedup.semanticKeepAssigned(
-      s.read.parquet(s"$path/lists")
+      VectorIndex.storedLists(s, path)
         .select(col("c_id").cast("long").as("c_id"), col("vec_id"), col("v")),
       minCosine = 0.4)
   }
@@ -899,9 +899,39 @@ object PipelineQueries {
     * store path and the count agree on the corpus version.
     */
   private def ivfStorePath(dir: String, tag: String, ver: Long): String = {
+    val root = storeRoot
+    if (!swept.getAndSet(true)) sweepSuperseded(root)
     val key = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(s"$dir|$ver"))
-    s"$storeRoot/ivf_${tag}_v${VectorIndex.FormatVersion}_$key"
+    s"$root/ivf_${tag}_v${VectorIndex.FormatVersion}_$key"
+  }
+
+  /** Set by the first [[ivfStorePath]] of the JVM, which sweeps first. */
+  private val swept = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Delete every cached store under `root` that an older code generation
+    * keyed (`ivf_<tag>_v<N>_<key>` with `N` below
+    * [[VectorIndex.FormatVersion]]): no path this code produces can name
+    * it again, so it would otherwise stay on disk for good. Current- and
+    * newer-generation stores, other names and caller-supplied store paths
+    * (never under this root's naming) are left alone. Runs through the
+    * Hadoop FS API, like the stores.
+    *
+    * @return the deleted store directories' names
+    */
+  private[queries] def sweepSuperseded(root: String): Seq[String] = {
+    val Superseded = """ivf_[A-Za-z0-9]+_v(\d{1,9})_[0-9a-f]+""".r
+    val dir = new org.apache.hadoop.fs.Path(root)
+    val fs = dir.getFileSystem(SparkSession.getActiveSession
+      .fold(new org.apache.hadoop.conf.Configuration())(
+        _.sessionState.newHadoopConf()))
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath)
+      .filter(p => p.getName match {
+        case Superseded(n) => n.toInt < VectorIndex.FormatVersion
+        case _ => false
+      })
+      .filter(fs.delete(_, true)).map(_.getName).sorted
   }
 
   /** The SemDeDup k = ⌈√N⌉ contract's N, memoized per corpus VERSION
@@ -929,7 +959,7 @@ object PipelineQueries {
     VectorIndex.writeIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), path, centroidStride = 50, maxCentroids = 256,
       hierarchical = true, superStride = 16, sProbe = 2)
-    s.read.parquet(s"$path/lists")
+    VectorIndex.storedLists(s, path)
       .groupBy(col("c_id").cast("long").as("c_id"))
       .agg(count(lit(1)).as("n_vecs"))
   }

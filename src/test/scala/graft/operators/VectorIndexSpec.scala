@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.TestSpark
-import graft.TestSpark.jobsOf
+import graft.TestSpark.{jobsOf, writeStageTasksOf}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -545,8 +545,9 @@ class VectorIndexSpec extends AnyFunSuite {
     // s28's store flow on the spec fixture, under this session's AQE
     // settings: 26 jobs before the chain was cut (route sampling on build
     // and append although the input fits one file, the compaction plan's
-    // window job, parquet schema inference on each read-back), 18 after.
-    // A regrowing chain fails here first.
+    // window job, parquet schema inference on each read-back), 18 after,
+    // 16 once append's centroids/ and compaction's lists/ read-backs took
+    // the manifest's schemas. A regrowing chain fails here first.
     val path = tmpStore("ivfbudget")
     val jobs = jobsOf {
       VectorIndex.writeIvfIndex(emb.filter(col("vec_id") % 7 =!= 0),
@@ -555,7 +556,7 @@ class VectorIndexSpec extends AnyFunSuite {
         col("vec_id"), col("embedding"), path)
       VectorIndex.compactIvfIndex(spark, path)
     }
-    assert(jobs <= 18, s"store flow launched $jobs jobs (budget 18)")
+    assert(jobs <= 16, s"store flow launched $jobs jobs (budget 16)")
   }
 
   test("auto route is mass-proportional on a skewed corpus: heavy list fans out, probes invariant") {
@@ -967,18 +968,33 @@ class VectorIndexSpec extends AnyFunSuite {
   test("a store built under another assignment-semantics generation is rejected, not silently probed") {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfgen")
-    VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      pq = true, payload = Seq(col("label")))
-    // reshape it into what the v5 writer left: an EMPTY completeness
-    // marker and a one-row meta/ table stamped format_version = 5
     val marker = new org.apache.hadoop.fs.Path(path, Marker)
     val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(marker, false)
-    fs.create(marker, true).close()
-    Seq((true, 16, 2, true, 8, 16, "label", 5, false))
-      .toDF("hierarchical", "super_stride", "s_probe", "pq", "num_subspaces",
-        "num_codes", "payload", "format_version", "pq_residual")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    // what the older writers left, by the generation a probe reports: v5's
+    // EMPTY completeness marker beside a one-row meta/ table stamped
+    // format_version = 5, and v6's manifest, which names no schemas
+    val olds: Seq[(String, () => Unit)] = Seq(
+      "≤ 5" -> (() => {
+        fs.delete(marker, false)
+        fs.create(marker, true).close()
+        Seq((true, 16, 2, true, 8, 16, "label", 5, false))
+          .toDF("hierarchical", "super_stride", "s_probe", "pq",
+            "num_subspaces", "num_codes", "payload", "format_version",
+            "pq_residual")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      }),
+      "6" -> (() => {
+        import org.json4s._
+        import org.json4s.jackson.JsonMethods.{compact, parse, render}
+        val in = fs.open(marker)
+        val v7 = try parse(new String(in.readAllBytes(), "UTF-8"))
+          finally in.close()
+        val v6 = v7.removeField(f =>
+            f._1 == "listsSchema" || f._1 == "centroidsSchema")
+          .replace(List("version"), JInt(6))
+        val out = fs.create(marker, true)
+        try out.write(compact(render(v6)).getBytes("UTF-8")) finally out.close()
+      }))
     val (id, vec) = (col("vec_id"), col("embedding"))
     val calls: Seq[(String, () => Any)] = Seq(
       "probeIvfIndex" -> (() =>
@@ -997,17 +1013,23 @@ class VectorIndexSpec extends AnyFunSuite {
         VectorIndex.probeIvfPqIndex(spark, path, queries, id, vec)),
       "appendToIvfIndex" -> (() =>
         VectorIndex.appendToIvfIndex(queries, id, vec, path)))
-    for ((name, call) <- calls) {
-      val e = intercept[IllegalArgumentException](call())
-      assert(e.getMessage.contains("generation"), s"$name: ${e.getMessage}")
+    for ((gen, reshape) <- olds) {
+      VectorIndex.writeIvfIndex(emb, id, vec, path, pq = true,
+        payload = Seq(col("label")))
+      reshape()
+      for ((name, call) <- calls) {
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(s"generation $gen"),
+          s"$gen/$name: ${e.getMessage}")
+      }
+      // ensure = build-if-needed: an older-generation store is REBUILT
+      // (probe/append fail, the serving gate refreshes)
+      assert(!VectorIndex.isServable(spark, path), gen)
+      VectorIndex.ensureIvfIndex(emb, id, vec, path)
+      assert(VectorIndex.isServable(spark, path), gen)
+      assert(ranking(VectorIndex.probeIvfIndex(spark, path, queries, id, vec))
+        .nonEmpty, gen)
     }
-    // ensure = build-if-needed: an older-generation store is REBUILT
-    // (probe/append fail, the serving gate refreshes)
-    assert(!VectorIndex.isServable(spark, path))
-    VectorIndex.ensureIvfIndex(emb, id, vec, path)
-    assert(VectorIndex.isServable(spark, path))
-    assert(ranking(VectorIndex.probeIvfIndex(spark, path, queries, id, vec))
-      .nonEmpty)
   }
 
   test("a damaged manifest is not servable: ensure rebuilds, probes and appends fail naming the store") {
@@ -1063,11 +1085,17 @@ class VectorIndexSpec extends AnyFunSuite {
     // the build slice keeps every stride-picked PQ codebook id (0,16,…,240)
     val build = corpus.filter(col("vec_id") < 250 || col("vec_id") >= 300)
     val inc = corpus.filter(col("vec_id") >= 250 && col("vec_id") < 300)
+    // each read-back's recorded schema must be parquet's own: names and
+    // types in read order, apart from lists/' `c_id` partition column,
+    // which a schema-free read types from the directory names
+    def shape(t: org.apache.spark.sql.types.StructType) =
+      t.fields.toSeq.map(f => (f.name, f.dataType))
     val stores = Seq(
-      ("plain", false, Nil),
-      ("pq", true, Nil),
-      ("stats", false, Seq("label", "tag")))
-    for ((name, pq, statsCols) <- stores) {
+      ("plain", false, false, Nil),
+      ("pq", true, false, Nil),
+      ("pqr", true, true, Nil),
+      ("stats", false, false, Seq("label", "tag")))
+    for ((name, pq, residual, statsCols) <- stores) {
       val path = tmpStore(s"ivflayout$name")
       def check(step: String): Unit = {
         // hidden entries are the local filesystem's .crc checksum sidecars
@@ -1086,16 +1114,100 @@ class VectorIndexSpec extends AnyFunSuite {
             s"$name/$step: $c type")
           assert(stats.collect().toSet == recount(c), s"$name/$step: $c")
         }
+        val m = VectorIndex.manifestOf(path)
+        assert(shape(VectorIndex.storedLists(spark, path).drop("c_id").schema) ==
+          shape(lists.drop("c_id").schema), s"$name/$step: lists schema")
+        assert(shape(VectorIndex.centroidsOf(spark, path, m).schema) ==
+          shape(spark.read.parquet(s"$path/centroids").schema),
+          s"$name/$step: centroids schema")
+        if (pq) assert(shape(VectorIndex.CodebookSchema) ==
+          shape(spark.read.parquet(s"$path/codebook").schema),
+          s"$name/$step: codebook schema")
       }
       VectorIndex.writeIvfIndex(build, col("vec_id"), col("embedding"), path,
-        hierarchical = false, pq = pq, payload = statsCols.map(col),
-        statsCols = statsCols)
+        hierarchical = false, pq = pq, pqResidual = residual,
+        payload = statsCols.map(col), statsCols = statsCols)
       check("build")
       VectorIndex.appendToIvfIndex(inc, col("vec_id"), col("embedding"), path)
       check("append")
       assert(!VectorIndex.compactIvfIndex(spark, path).isEmpty,
         s"$name: the append left nothing to compact")
       check("compact")
+    }
+  }
+
+  test("store read-backs run no Spark job: lists, probed lists and centroids read under the recorded schemas") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    val path = tmpStore("ivfreadjobs")
+    VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
+      payload = Seq(col("label")))
+    val m = VectorIndex.manifestOf(path)
+    val ids = m.counts.listSizes.map(_._1).take(2).toArray
+    // probes and compaction read probed lists and centroids; the build's
+    // membership read-back and SemDeDup read all lists
+    val jobs = jobsOf {
+      VectorIndex.storedLists(spark, path)
+      VectorIndex.prunedLists(spark, path, m, ids, Some(col("label") < 4))
+      VectorIndex.centroidsOf(spark, path, m)
+    }
+    assert(jobs == 0, s"read-backs launched $jobs jobs")
+  }
+
+  test("an append whose payload type drifts fails loudly, naming the column, and writes nothing") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    val path = tmpStore("ivfdrift")
+    VectorIndex.writeIvfIndex(emb.filter(col("vec_id") % 7 =!= 0),
+      col("vec_id"), col("embedding"), path, payload = Seq(col("label")))
+    def files(): Seq[String] =
+      new java.io.File(s"$path/lists").listFiles().toSeq
+        .filter(_.getName.startsWith("c_id="))
+        .flatMap(_.list().filter(_.endsWith(".parquet"))).sorted
+    val before = files()
+    val want = ranking(VectorIndex.probeIvfIndex(spark, path, queries,
+      col("vec_id"), col("embedding")))
+    val e = intercept[IllegalArgumentException] {
+      VectorIndex.appendToIvfIndex(emb.filter(col("vec_id") % 7 === 0)
+        .withColumn("label", col("label").cast("string")),
+        col("vec_id"), col("embedding"), path)
+    }
+    assert(e.getMessage.contains(path) && e.getMessage.contains("label as string"),
+      e.getMessage)
+    assert(files() == before)
+    assert(ranking(VectorIndex.probeIvfIndex(spark, path, queries,
+      col("vec_id"), col("embedding"))) == want)
+  }
+
+  test("one-file-per-list writes run min(lists, cores) tasks and leave one file per list, with fewer lists than cores and with more") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    val cores = spark.sparkContext.defaultParallelism
+    for (maxCentroids <- Seq(cores - 1, 256)) {
+      val path = tmpStore(s"ivfwidth$maxCentroids")
+      def filesPerDir(): Seq[Int] =
+        new java.io.File(s"$path/lists").listFiles().toSeq
+          .filter(_.getName.startsWith("c_id="))
+          .map(_.list().count(_.endsWith(".parquet")))
+      val build = writeStageTasksOf(VectorIndex.writeIvfIndex(
+        emb.filter(col("vec_id") % 7 =!= 0), col("vec_id"), col("embedding"),
+        path, hierarchical = false, maxCentroids = maxCentroids))
+      val lists = spark.read.parquet(s"$path/centroids").count().toInt
+      assert(filesPerDir().size == lists &&
+        (if (maxCentroids < cores) lists < cores else lists > cores),
+        s"maxCentroids $maxCentroids: $lists lists")
+      // lists/ first, then the one-task centroids/ write
+      assert(build == Seq(lists.min(cores), 1), s"$lists lists: build $build")
+      assert(filesPerDir().forall(_ == 1), s"$lists lists: ${filesPerDir()}")
+      val append = writeStageTasksOf(VectorIndex.appendToIvfIndex(
+        emb.filter(col("vec_id") % 7 === 0), col("vec_id"), col("embedding"),
+        path))
+      assert(append == Seq(lists.min(cores)), s"$lists lists: append $append")
+      var rewritten = 0L
+      val compact = writeStageTasksOf {
+        rewritten = VectorIndex.compactIvfIndex(spark, path)
+          .select("c_id").distinct().count()
+      }
+      assert(rewritten > 0 && compact == Seq(rewritten.min(cores)),
+        s"$lists lists, $rewritten rewritten: compact $compact")
+      assert(filesPerDir().forall(_ == 1), s"$lists lists: ${filesPerDir()}")
     }
   }
 
