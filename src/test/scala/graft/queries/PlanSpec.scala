@@ -737,6 +737,52 @@ class PlanSpec extends AnyFunSuite {
   }
 
   /** The plan lines of the subtree rooted at line `i`. */
+  /** Node name of each executed-plan line (tree markers and codegen stage
+    * ids stripped); the cached plans under `InMemoryRelation` print as
+    * inner children, so their nodes count too.
+    */
+  private val planNode = """^[\s:|+\-]*(?:\*\(\d+\)\s*)?(\w+)""".r
+
+  private def releaseAll(): Unit = {
+    graft.operators.Dedup.unpersistIntermediates()
+    graft.operators.Corpus.unpersistIntermediates()
+    spark.sharedState.cacheManager.clearCache()
+  }
+
+  test("dedup and span families: Exchange, BroadcastExchange, Window and InMemoryTableScan counts pinned") {
+    assume(new java.io.File(s"$dir/documents.parquet").exists())
+    // (query, Exchange, BroadcastExchange, Window, InMemoryTableScan) of
+    // the executed plan before any action (a cached plan prints under
+    // every scan of it, so its nodes count once per scan); each query
+    // starts from an empty cache so no earlier query's cached frame
+    // substitutes a scan
+    val pinned = Seq(
+      ("d2_ngram_jaccard", 7, 3, 0, 4),
+      ("d2b_ngram_capped", 15, 7, 0, 12),
+      ("d19_prefix_jaccard", 11, 5, 2, 8),
+      ("d21_containment", 11, 5, 2, 8),
+      ("d21b_containment_capped", 11, 5, 2, 8),
+      ("d21c_containment_approx", 6, 2, 1, 3),
+      ("d21d_containment_approx_eval", 38, 16, 6, 22),
+      ("d22_containment_keep", 14, 5, 2, 8),
+      ("d3_minhash_lsh", 7, 3, 0, 6),
+      ("d27_lsh_tuned", 7, 3, 0, 6),
+      ("d6_source_signatures", 4, 1, 0, 0),
+      ("c22_contamination_spans", 4, 1, 2, 0),
+      ("c24_contamination_bloom", 6, 1, 2, 1))
+    val got = pinned.map { case (name, _, _, _, _) =>
+      releaseAll()
+      val nodes = try {
+        planOf(name).linesIterator.flatMap(l =>
+          planNode.findFirstMatchIn(l).map(_.group(1))).toSeq
+      } finally releaseAll()
+      def n(node: String) = nodes.count(_ == node)
+      (name, n("Exchange"), n("BroadcastExchange"), n("Window"),
+        n("InMemoryTableScan"))
+    }
+    assert(got == pinned, s"plan counts moved:\n${got.mkString("\n")}")
+  }
+
   private def subtree(lines: IndexedSeq[String], i: Int): Seq[String] = {
     def depth(l: String) = l.indexWhere(_.isLetter)
     lines.drop(i + 1).takeWhile(depth(_) > depth(lines(i)))
