@@ -764,7 +764,6 @@ object Corpus {
     * — one long per partition), then assign `offset(partition) + local
     * position` in a single `mapPartitions` pass. The sorted input is
     * cached between the two jobs and registered for release via
-    * [[Dedup.unpersistIntermediates]]'s corpus-side twin
     * [[unpersistIntermediates]].
     */
   def epochOrder(df: DataFrame, id: Column, epoch: Int, partitions: Int = 0): DataFrame = {
@@ -865,26 +864,15 @@ object Corpus {
     spark.createDataset(keyed).toDF("doc_id", "dom", "order_key")
   }
 
-  // Cache registry for epochOrder's two-job sorted intermediate — same
-  // contract as Dedup's: callers (or Verify/Bench via clearCache) release.
-  private val intermediates = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-
-  private def cached(df: DataFrame): DataFrame = {
-    val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    intermediates.add(c)
-    c
-  }
-
-  /** Register a caller-built frame in the corpus cache registry — for
-    * multi-operator compositions whose shared intermediate (e.g. a scored
-    * corpus feeding both a percentile reduce and the gated pipeline) lives
-    * outside any single operator. Released by [[unpersistIntermediates]].
+  /** Persist `df` in the corpus family of [[Intermediates]] — the corpus
+    * operators' own shared intermediates (e.g. [[epochOrder]]'s two-job
+    * sorted input) and caller-built ones of multi-operator compositions
+    * (a scored corpus feeding both a percentile reduce and the gated
+    * pipeline). Released by [[unpersistIntermediates]].
     */
-  private[graft] def cacheIntermediate(df: DataFrame): DataFrame = cached(df)
+  private[graft] def cached(df: DataFrame): DataFrame =
+    Intermediates.persist("corpus")(df)
 
-  /** Release every intermediate the corpus operators have cached since the
-    * last call; returns the number of frames released.
-    */
   /** Length-bucketed batch assignment — the padding-efficiency packer:
     * within each hash shard, documents sort by token length and chop into
     * fixed-`batchSize` batches, so co-batched sequences have near-equal
@@ -920,6 +908,28 @@ object Corpus {
       .withColumn("pad_tokens", col("batch_max_tokens") - col("n_tokens"))
   }
 
+  /** All-integer counted-threshold tier map over a `(doc_id, _score)`
+    * frame: tier = ⌊(# rows with strictly smaller score) · tiers / N⌋ + 1
+    * for each DISTINCT score value. The one window runs over the
+    * distinct-score rows only (bounded by the value domain, never the
+    * corpus), thresholds are integer division end to end — no percentile
+    * interpolation, so every engine lands ties in the same tier. Shared
+    * by [[curriculumOrder]] and [[perplexityBuckets]].
+    */
+  private def countedTierMap(scored: DataFrame, tiers: Int): DataFrame = {
+    val counts = scored.groupBy(col("_score")).agg(count(lit(1)).as("_c"))
+    // cumulative count of strictly-smaller scores; window runs over the
+    // distinct-score rows only
+    val cum = counts.withColumn("_start",
+      sum(col("_c")).over(org.apache.spark.sql.expressions.Window
+        .orderBy(col("_score"))) - col("_c"))
+    val total = scored.agg(count(lit(1)).as("_n"))
+    cum.crossJoin(broadcast(total))
+      .select(col("_score"),
+        // integer div, never float: `/` would round-trip through double
+        expr(s"(_start * ${tiers.toLong} div _n) + 1L").as("tier"))
+  }
+
   /** Quality-curriculum training order: tier documents into `tiers`
     * equal-count score bands (tier 1 = lowest … `tiers` = highest) and
     * emit a deterministic consume key that walks tiers in the requested
@@ -947,28 +957,6 @@ object Corpus {
     * @param score     integer score column (e.g. quality ppm)
     * @param easyFirst true → ascending tiers (lowest band first)
     */
-  /** All-integer counted-threshold tier map over a `(doc_id, _score)`
-    * frame: tier = ⌊(# rows with strictly smaller score) · tiers / N⌋ + 1
-    * for each DISTINCT score value. The one window runs over the
-    * distinct-score rows only (bounded by the value domain, never the
-    * corpus), thresholds are integer division end to end — no percentile
-    * interpolation, so every engine lands ties in the same tier. Shared
-    * by [[curriculumOrder]] and [[perplexityBuckets]].
-    */
-  private def countedTierMap(scored: DataFrame, tiers: Int): DataFrame = {
-    val counts = scored.groupBy(col("_score")).agg(count(lit(1)).as("_c"))
-    // cumulative count of strictly-smaller scores; window runs over the
-    // distinct-score rows only
-    val cum = counts.withColumn("_start",
-      sum(col("_c")).over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("_score"))) - col("_c"))
-    val total = scored.agg(count(lit(1)).as("_n"))
-    cum.crossJoin(broadcast(total))
-      .select(col("_score"),
-        // integer div, never float: `/` would round-trip through double
-        expr(s"(_start * ${tiers.toLong} div _n) + 1L").as("tier"))
-  }
-
   def curriculumOrder(
       docs: DataFrame,
       id: Column,
@@ -976,7 +964,7 @@ object Corpus {
       tiers: Int = 10,
       easyFirst: Boolean = true): DataFrame = {
     require(tiers >= 2 && tiers <= 1000, s"tiers must be in [2,1000], got $tiers")
-    val scored = cacheIntermediate(
+    val scored = cached(
       docs.select(id.cast("long").as("doc_id"), score.cast("long").as("_score")))
     val tierMap = countedTierMap(scored, tiers)
     val dirTier = if (easyFirst) col("tier")
@@ -1009,7 +997,7 @@ object Corpus {
       buckets: Int = 3): DataFrame = {
     require(buckets >= 2 && buckets <= 1000,
       s"buckets must be in [2,1000], got $buckets")
-    val scored = cacheIntermediate(
+    val scored = cached(
       docs.select(id.cast("long").as("doc_id"),
         perplexity.cast("long").as("_score")))
     val labels =
@@ -1058,12 +1046,11 @@ object Corpus {
       .withColumn("keep", col("hits_ppm") <= maxHitsPpm)
   }
 
-  def unpersistIntermediates(blocking: Boolean = false): Int = {
-    var n = LocalCheckpoints.release("corpus", blocking)
-    var df = intermediates.poll()
-    while (df != null) { df.unpersist(blocking); n += 1; df = intermediates.poll() }
-    n
-  }
+  /** Release every intermediate the corpus operators have cached since the
+    * last call; returns the number of frames released.
+    */
+  def unpersistIntermediates(blocking: Boolean = false): Int =
+    Intermediates.release("corpus", blocking)
 
   /** Token-budget sequence packing: within each shard, documents in
     * ascending id order are greedily packed into consecutive packs of at

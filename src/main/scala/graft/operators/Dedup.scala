@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.TextFunctions._
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for LLM-training-data pipelines, each expressed
@@ -22,36 +23,36 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  // Persisted intermediates must outlive the lazily-returned frame until
-  // the CALLER's terminal action, so operators cannot unpersist them on
-  // exit. Every persist below registers here; `unpersistIntermediates()`
-  // is the release handle for long-lived sessions (Verify/Bench simply
-  // clear the whole cache between queries).
-  private val intermediates = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+  /** Persist `df` in the dedup family of [[Intermediates]]; released by
+    * [[unpersistIntermediates]] (operators cannot unpersist on exit: the
+    * frame must outlive the CALLER's terminal action).
+    */
+  private[graft] def cached(df: DataFrame): DataFrame =
+    Intermediates.persist("dedup")(df)
 
-  private[graft] def cached(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    intermediates.add(p)
-    p
-  }
-
-  /** Corpus-size-gated persist for DERIVED posting tables (the ranked
-    * prefix machinery behind d16/d19/d21x/d22) — r18 OPT, guide §5.
+  /** Corpus-size-gated persist for the ranked-prefix tiers' shared
+    * posting frame (d16/d19/d21x/d22) — r18 OPT, guide §5.
     *
-    * The prefix/containment candidate joins consume the ranked posting
-    * table on BOTH sides. Spark's exchange reuse would dedupe the two
-    * identical subtrees, but under AQE the reuse does not fire for these
-    * lambda-bearing cached plans (measured: `ReusedExchange=0` with AQE
-    * on, `=1` with AQE off, Spark 4.1), so the df-agg + join + window
-    * chain runs TWICE. Persisting the shared frame fixes that — but only
-    * pays while the corpus is small: measured 0.57× at sf0.1 (1.5 MB
-    * text), flat at sf1 (15 MB), and 1.4× at sf10 (150 MB, BASELINE
-    * §15 persist note) where the columnar cache build of the
-    * corpus-sized postings outweighs the recompute it saves. So the
-    * persist is gated on the SOURCE's plan-stat size: below the
+    * Their candidate joins read one derived posting frame on BOTH sides.
+    * Spark's exchange reuse would dedupe the two identical subtrees, but
+    * under AQE the reuse does not fire for these lambda-bearing cached
+    * plans (measured: `ReusedExchange=0` with AQE on, `=1` with AQE off,
+    * Spark 4.1), so the df-agg + join + window chain runs TWICE. Each tier
+    * persists the frame its two sides share, which differs by tier:
+    *  - [[prefixJaccardPairs]] persists the PREFIX SLICE — it feeds both
+    *    sides of the self-join (measured 0.48× on the cand+verify tail at
+    *    sf0.1). The ranked table above it is NOT persisted there: that
+    *    measured flat on d19 and ~40% slower on d21 at sf10.
+    *  - [[containmentPairs]] persists the RANKED table — the common parent
+    *    of the A-side prefix and the B-side full index (measured 0.57× at
+    *    sf0.1, flat at sf1).
+    * Either persist pays only while the corpus is small: at sf10 (150 MB
+    * text, BASELINE §15 persist note) the columnar cache build of the
+    * corpus-sized postings outweighs the recompute it saves (1.4×). So
+    * the persist is gated on the SOURCE's plan-stat size: below the
     * threshold (default 64 MB, `SPARK_GRAFT_POSTINGS_CACHE_BYTES`; 0
     * disables — the A/B hatch) the frame is cached like any other
-    * intermediate; above it the old recompute shape is kept verbatim.
+    * intermediate; above it the recompute shape is kept verbatim.
     * Results are identical either way — persist is semantically
     * transparent; only the plan changes.
     */
@@ -69,12 +70,98 @@ object Dedup {
     * Safe while other results are still in flight only if they came from
     * other operator families. Returns the number of frames released.
     */
-  def unpersistIntermediates(blocking: Boolean = false): Int = {
-    var n = LocalCheckpoints.release("dedup", blocking)
-    var df = intermediates.poll()
-    while (df != null) { df.unpersist(blocking); n += 1; df = intermediates.poll() }
-    n
-  }
+  def unpersistIntermediates(blocking: Boolean = false): Int =
+    Intermediates.release("dedup", blocking)
+
+  // ---- set-similarity candidate core --------------------------------
+  // The shingle-set tiers (prefixJaccardPairs, containmentPairs,
+  // containmentApproxPairs, minhashLshPairs) compose these helpers; each
+  // keeps only its own join condition and output columns.
+  // ngramJaccardPairs stays the self-contained reference formulation.
+
+  /** Per-document shingle SETS `(doc_id, sh)` — one tokenize+shingle
+    * evaluation per call, cached because postings, candidate
+    * generation and the exact verify all read it. Persisted BEFORE the
+    * empty-set filter: a filter under the persist would be pushed past
+    * the rebalance into the (single-split) scan and evaluate the whole
+    * shingle expression once per doc on one core; against the cache it's
+    * a cheap array-size check. Docs with no shingle are dropped (they can
+    * match nothing). `shingles` is `array_distinct`ed, so `size(sh)` is
+    * the set size.
+    */
+  private def shingleSets(docs: DataFrame, id: Column, text: Column,
+      n: Int): DataFrame =
+    cached(docs.select(id.as("doc_id"), shingles(tokens(text), n).as("sh")))
+      .filter(size(col("sh")) > 0)
+
+  /** Posting rows `(doc_id, n_sh, s)`: one row per shingle of each set. */
+  private def postings(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), size(col("sh")).as("n_sh"),
+      explode(col("sh")).as("s"))
+
+  /** Document frequency `(s, df)` as a partial-agg `groupBy("s")`: a
+    * stop-shingle's postings combine map-side, and joining `df` back is
+    * an AQE-splittable shuffle join — deliberately NOT a window over the
+    * shingle key, which would serialize the hot posting list into one
+    * window partition.
+    */
+  private def docFreq(post: DataFrame): DataFrame =
+    post.select("s").groupBy("s").agg(count(lit(1)).as("df"))
+
+  /** Postings ranked rarest-first per document: `(s, doc_id, n_sh, df,
+    * rk)`, `rk` the 1-based position in the GLOBAL (df asc, shingle asc)
+    * order — a total order, so every document ranks shared shingles
+    * consistently. One doc-keyed window: partitions are document-sized.
+    */
+  private def rankedPostings(post: DataFrame): DataFrame =
+    post.join(docFreq(post), Seq("s"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("doc_id").orderBy(col("df").asc, col("s").asc)))
+
+  /** The PPJoin prefix of a ranked posting table for threshold `ppm`: the
+    * `|s| − ⌈t·|s|⌉ + 1` rarest shingles (all-integer ceil). A set whose
+    * overlap with another reaches `⌈t·|s|⌉` cannot fit that overlap inside
+    * its `⌈t·|s|⌉ − 1` commonest shingles, so it shares one of these.
+    */
+  private def prefixSlice(ranked: DataFrame, ppm: Long): DataFrame =
+    ranked.filter(
+      col("rk") <= col("n_sh") - expr(s"(n_sh * $ppm + 999999) div 1000000") + 1)
+      .select(col("doc_id"), col("s"), col("n_sh"), col("rk"))
+
+  /** Positional bound inside a candidate join of ranked sides `a` and
+    * `b`: both rank in the SAME global order, so a shared shingle at ranks
+    * (i, j) bounds the whole intersection by
+    * min(i−1, j−1) + 1 + min(|A|−i, |B|−j) — shared shingles sort
+    * consistently, so they sit on the same side of it in both sets.
+    */
+  private def positionalBound: Column =
+    least(col("a.rk") - 1, col("b.rk") - 1) + 1 +
+      least(col("a.n_sh") - col("a.rk"), col("b.n_sh") - col("b.rk"))
+
+  /** Exact overlap of candidate pairs `(doc_a, doc_b)` over their FULL
+    * shingle sets: `(doc_a, doc_b, na, nb, inter)`. Sets are distinct, so
+    * `|A ∪ B| = na + nb − inter` exactly. Candidate-bounded: the
+    * `array_intersect` never runs over the corpus.
+    */
+  private def overlap(cand: DataFrame, sets: DataFrame): DataFrame =
+    cand
+      .join(sets.as("fa"), col("doc_a") === col("fa.doc_id"))
+      .join(sets.as("fb"), col("doc_b") === col("fb.doc_id"))
+      .select(col("doc_a"), col("doc_b"),
+        size(col("fa.sh")).as("na"), size(col("fb.sh")).as("nb"),
+        size(array_intersect(col("fa.sh"), col("fb.sh"))).as("inter"))
+
+  /** Jaccard cut over [[overlap]] rows: `(doc_a, doc_b, jaccard_ppm)` for
+    * pairs with J ≥ `ppm`/1e6. The threshold is pure integer
+    * (inter·1e6 ≥ ppm·union — the [[ngramJaccardPairs]] convention, so a
+    * tier verified here emits the same pairs as the reference), and the
+    * emitted `jaccard_ppm` is the floored quotient of the same counts.
+    */
+  private def jaccardAtLeast(ov: DataFrame, ppm: Long): DataFrame =
+    ov.withColumn("_uni", col("na") + col("nb") - col("inter"))
+      .filter(col("inter") * 1000000L >= lit(ppm) * col("_uni"))
+      .select(col("doc_a"), col("doc_b"),
+        expr("(inter * 1000000) div _uni").as("jaccard_ppm"))
 
   /** Exact dedup: one representative (minimum id) per distinct value of
     * `key`. A single hash aggregation — Spark plans partial aggregation
@@ -183,77 +270,29 @@ object Dedup {
       text: Column,
       n: Int = 3,
       minJaccardPpm: Long = 500000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(minJaccardPpm > 0 && minJaccardPpm <= 1000000L,
       s"minJaccardPpm out of (0, 1e6]: $minJaccardPpm")
-    // cache the PER-DOC shingle ARRAYS (one tokenize+shingle evaluation
-    // total); postings explode from the cache, set size is size(sh) — no
-    // count window — and the exact verify is a per-pair array_intersect
-    // against the same cache instead of a posting×posting join + count
-    // aggregation (the former top cost of this operator; same trade
-    // minhashLshPairs makes)
-    val base = cached(
-      docs.select(id.as("doc_id"), shingles(tokens(text), n).as("sh")))
-      .filter(size(col("sh")) > 0)
-    val sh = base.select(col("doc_id"), size(col("sh")).as("n_sh"),
-      explode(col("sh")).as("s"))
-    // document frequency as a partial-agg groupBy joined back on the
-    // shingle: the hot-key postings shuffle is a JOIN partition (AQE can
-    // split it) instead of a window partition (it cannot)
-    val dfs = sh.select("s").groupBy("s").agg(count(lit(1)).as("df"))
-    // `ranked` itself is NOT cached (a measured persist attempt was flat
-    // on d19 and ~40% SLOWER on d21 at sf10 — materialization cost
-    // without saved work at corpus scale), but the PREFIX slice feeds
-    // both sides of the candidate self-join and AQE's stage reuse does
-    // not dedupe the two lambda-bearing subtrees (see [[cachedIfSmall]]),
-    // so on small corpora the slice is persisted instead of computed
-    // twice — r18 OPT, measured 0.48× on the cand+verify tail at sf0.1
-    val ranked = sh.join(dfs, Seq("s"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("df").asc, col("s").asc)))
-    // prefix length |s| − ⌈t·|s|⌉ + 1, all-integer ceil
-    val prefix = cachedIfSmall(docs, ranked.filter(
-      col("rk") <= col("n_sh") -
-        expr(s"(n_sh * $minJaccardPpm + 999999) div 1000000") + 1)
-      .select(col("doc_id"), col("s"), col("n_sh"), col("rk")))
+    val sets = shingleSets(docs, id, text, n)
+    val prefix = cachedIfSmall(docs,
+      prefixSlice(rankedPostings(postings(sets)), minJaccardPpm))
     // two more LOSSLESS per-row filters from the same paper, evaluated
     // INSIDE the join so pruned rows never reach the distinct or the
     // verify join. Any TRUE pair (J ≥ t) passes both at every shared
     // token, so the surviving pair set is unchanged:
     //  - length filter: J ≤ min/max of the set sizes, so t·|A| ≤ |B|
     //    and t·|B| ≤ |A| (integer cross-multiplication);
-    //  - positional filter: both sides are ranked in the SAME global
-    //    (df, shingle) order, so a shared token at ranks (i, j) bounds
-    //    the whole intersection by min(i−1,j−1) + 1 + min(|A|−i,|B|−j)
-    //    — shared tokens sort consistently, so they sit on the same
-    //    side of s in both documents. J ≥ t needs
-    //    I·(1e6+ppm) ≥ ppm·(|A|+|B|); prune when even the bound fails.
-    val ubound =
-      least(col("a.rk") - 1, col("b.rk") - 1) + 1 +
-        least(col("a.n_sh") - col("a.rk"), col("b.n_sh") - col("b.rk"))
+    //  - positional filter: J ≥ t needs I·(1e6+ppm) ≥ ppm·(|A|+|B|);
+    //    prune when even the positional bound on I fails.
     val cand = prefix.as("a")
       .join(prefix.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id") &&
           col("a.n_sh") * minJaccardPpm <= col("b.n_sh") * 1000000L &&
           col("b.n_sh") * minJaccardPpm <= col("a.n_sh") * 1000000L &&
-          ubound * (1000000L + minJaccardPpm) >=
+          positionalBound * (1000000L + minJaccardPpm) >=
             (col("a.n_sh") + col("b.n_sh")) * minJaccardPpm)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    // exact verify over the candidates' FULL shingle sets
-    // integer threshold, identical to [[ngramJaccardPairs]]' — the two
-    // tiers must stay bit-identical (d19's losslessness claim is "same
-    // pairs as the exact formulation", so the deciding predicate is the
-    // SAME integer cross-multiplication, never a separately-rounded float)
-    cand
-      .join(base.as("fa"), col("doc_a") === col("fa.doc_id"))
-      .join(base.as("fb"), col("doc_b") === col("fb.doc_id"))
-      .withColumn("inter", size(array_intersect(col("fa.sh"), col("fb.sh"))))
-      .withColumn("_uni",
-        size(col("fa.sh")) + size(col("fb.sh")) - col("inter"))
-      .filter(col("inter") * 1000000L >= lit(minJaccardPpm) * col("_uni"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("(inter * 1000000) div _uni").as("jaccard_ppm"))
+    jaccardAtLeast(overlap(cand, sets), minJaccardPpm)
   }
 
   /** Exact shingle-set containment pairs — the ASYMMETRIC near-dup
@@ -283,8 +322,8 @@ object Dedup {
     * joined back (AQE-splittable), never a window over the shingle key.
     * Exact verification over the candidates' full sets keeps the
     * threshold exact.
-    */
-  /** @param maxDocFreq drops INDEX-side (B) postings of shingles occurring
+    *
+    * @param maxDocFreq drops INDEX-side (B) postings of shingles occurring
     *   in more than this many documents. The rarest-first A-prefix already
     *   keeps stop-shingles off the probe side, but the index side explodes
     *   FULL posting lists, so a pathological corpus (every doc sharing one
@@ -308,8 +347,8 @@ object Dedup {
     * columns ride the joins the verify step already makes, so the sized
     * variant costs nothing; [[containmentKeep]]'s dominance rule needs
     * them.
-    */
-  /** @param dominanceOnly restrict candidates to pairs where B DOMINATES A
+    *
+    * @param dominanceOnly restrict candidates to pairs where B DOMINATES A
     *   (|S_B| > |S_A|, or equal sizes and `doc_b < doc_a`) INSIDE the
     *   candidate join, before the exact verify. [[containmentKeep]]'s drop
     *   rule only ever reads dominating pairs, so for it this is LOSSLESS
@@ -328,42 +367,19 @@ object Dedup {
       minContainmentPpm: Long,
       maxDocFreq: Int = Int.MaxValue,
       dominanceOnly: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(minContainmentPpm > 0 && minContainmentPpm <= 1000000L,
       s"minContainmentPpm out of (0, 1e6]: $minContainmentPpm")
-    // same array-cache shape as prefixJaccardPairs: one tokenize+shingle
-    // evaluation, postings explode from the cache, array_intersect verify
-    val base = cached(
-      docs.select(id.as("doc_id"), shingles(tokens(text), n).as("sh")))
-      .filter(size(col("sh")) > 0)
-    val sh = base.select(col("doc_id"), size(col("sh")).as("n_sh"),
-      explode(col("sh")).as("s"))
-    val dfs = sh.select("s").groupBy("s").agg(count(lit(1)).as("df"))
-    // BOTH the A-side prefix and the B-side full index derive from this
-    // one ranked posting table, and AQE stage reuse does not dedupe the
-    // two subtrees (see [[cachedIfSmall]]) — on small corpora persist it
-    // once (r18 OPT, measured 0.57× at sf0.1, flat at sf1); at corpus
-    // scale keep the recompute shape (persisting measured ~40% slower at
-    // sf10 — the columnar cache build of the corpus-sized postings costs
-    // more than the recompute it saves). `df` rides along so the cap
-    // below is a column filter, not a join
-    val ranked = cachedIfSmall(docs, sh.join(dfs, Seq("s"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("df").asc, col("s").asc))))
-    // A-side prefix length |S_A| − ⌈t·|S_A|⌉ + 1, all-integer ceil
-    val prefix = ranked.filter(
-      col("rk") <= col("n_sh") -
-        expr(s"(n_sh * $minContainmentPpm + 999999) div 1000000") + 1)
-      .select(col("doc_id"), col("s"), col("n_sh"), col("rk"))
+    val sets = shingleSets(docs, id, text, n)
+    // `df` rides along so the cap below is a column filter, not a join
+    val ranked = cachedIfSmall(docs, rankedPostings(postings(sets)))
+    val prefix = prefixSlice(ranked, minContainmentPpm)
     // index side: B's FULL RANKED posting list (containment puts no
     // prefix bound on the containing document; the rank feeds the
     // positional filter below) — or, under the cap, those postings minus
-    // the stop-shingle offenders (df is already a column of the ranked
-    // postings, so the cap is a filter, not a join); the prefix ranking
-    // above always uses the UNCAPPED df so the A-side prefix is
-    // identical in both tiers and the oracle replay needs only one df
-    // table (the B-side rank, too, is always the rank within the FULL
-    // set)
+    // the stop-shingle offenders; the prefix ranking above always uses
+    // the UNCAPPED df so the A-side prefix is identical in both tiers and
+    // the oracle replay needs only one df table (the B-side rank, too, is
+    // always the rank within the FULL set)
     val idx = (if (maxDocFreq == Int.MaxValue) ranked
       else ranked.filter(col("df") <= maxDocFreq))
       .select(col("doc_id"), col("s"), col("n_sh"), col("rk"))
@@ -372,13 +388,8 @@ object Dedup {
     // surviving pair set is unchanged):
     //  - length filter: |S_A ∩ S_B| ≤ |S_B|, so ⌈t·|S_A|⌉ needs
     //    t·|S_A| ≤ |S_B| (integer cross-multiplication);
-    //  - positional filter: both sides rank in the SAME global
-    //    (df, shingle) order, so a shared shingle at ranks (i, j) bounds
-    //    the intersection by min(i−1,j−1) + 1 + min(|S_A|−i,|S_B|−j);
-    //    prune when even that bound misses t·|S_A|.
-    val ubound =
-      least(col("a.rk") - 1, col("b.rk") - 1) + 1 +
-        least(col("a.n_sh") - col("a.rk"), col("b.n_sh") - col("b.rk"))
+    //  - positional filter: prune when even the positional bound on the
+    //    intersection misses t·|S_A|.
     val domFilter =
       if (!dominanceOnly) lit(true)
       else col("b.n_sh") > col("a.n_sh") ||
@@ -387,16 +398,11 @@ object Dedup {
       .join(idx.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") =!= col("b.doc_id") &&
           col("a.n_sh") * minContainmentPpm <= col("b.n_sh") * 1000000L &&
-          ubound * 1000000L >= col("a.n_sh") * minContainmentPpm &&
+          positionalBound * 1000000L >= col("a.n_sh") * minContainmentPpm &&
           domFilter)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    cand
-      .join(base.as("fa"), col("doc_a") === col("fa.doc_id"))
-      .join(base.as("fb"), col("doc_b") === col("fb.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
-        size(col("fa.sh")).as("na"), size(col("fb.sh")).as("nb"),
-        size(array_intersect(col("fa.sh"), col("fb.sh"))).as("inter"))
+    overlap(cand, sets)
       .withColumn("containment_ppm", expr("inter * 1000000 div na"))
       .filter(col("containment_ppm") >= minContainmentPpm)
       .select("doc_a", "doc_b", "na", "nb", "containment_ppm")
@@ -466,31 +472,21 @@ object Dedup {
       k: Int = 64,
       minContainmentPpm: Long = 700000L,
       maxDocFreq: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k > 0, s"sample size k must be positive, got $k")
     require(minContainmentPpm > 0 && minContainmentPpm <= 1000000L,
       s"minContainmentPpm out of (0, 1e6]: $minContainmentPpm")
-    val base = cached(
-      docs.select(id.as("doc_id"), shingles(tokens(text), n).as("sh")))
-      .filter(size(col("sh")) > 0)
-    val sh = base.select(col("doc_id"), size(col("sh")).as("n_sh"),
-      explode(col("sh")).as("s"))
+    val sh = postings(shingleSets(docs, id, text, n))
     // bottom-k of S_A by (polyhash, shingle) — the per-doc window ranks
-    // each document's own shingles only (the same window shape the exact
-    // tier's prefix ranking uses), never a corpus-wide key
+    // each document's own shingles only, never a corpus-wide key
     val wD = Window.partitionBy(col("doc_id"))
       .orderBy(polyHash(col("s")).asc, col("s").asc)
     val sig = sh.withColumn("rk", row_number().over(wD)).filter(col("rk") <= k)
       .select(col("doc_id"), col("n_sh"), col("s"))
-    // index side: full postings, optionally df-capped (shared rule with
-    // containmentPairs so the two tiers' caps mean the same thing)
+    // index side: full postings, optionally df-capped
     val idx =
       if (maxDocFreq == Int.MaxValue) sh.select(col("doc_id"), col("s"))
-      else {
-        val dfs = sh.select("s").groupBy("s").agg(count(lit(1)).as("df"))
-        sh.join(dfs.filter(col("df") > maxDocFreq).select("s"),
-          Seq("s"), "left_anti").select(col("doc_id"), col("s"))
-      }
+      else sh.join(docFreq(sh).filter(col("df") > maxDocFreq).select("s"),
+        Seq("s"), "left_anti").select(col("doc_id"), col("s"))
     // shingle arrays are distinct per doc, so each sampled shingle found
     // in S_B contributes exactly one row: count(*) IS the hit count
     sig.as("a")
@@ -621,17 +617,12 @@ object Dedup {
       text: Column,
       k: Int = 8,
       minCount: Long = 2L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k >= 2, s"k must be >= 2, got $k")
     require(minCount >= 2L, s"minCount must be >= 2, got $minCount")
     // cached: the gram table feeds BOTH the corpus count and the
     // position join-back — without the persist each branch would re-run
     // the tokenize + k-slice-concat explode (the query's dominant CPU),
     // the d2b lesson
-    val grams = cached(docs
-      .select(id.as("doc_id"),
-        explode(graft.functions.TextFunctions.posGrams(tokens(text), k)).as("pg"))
-      .select(col("doc_id"), col("pg.pos").as("pos"), col("pg.g").as("g")))
+    val grams = cached(gramRows(docs, id, text, k))
     // corpus-wide occurrence count per gram (total occurrences, not
     // distinct docs: a passage repeated inside ONE document is duplicated
     // text all the same — the paper's self-repetition case)
@@ -652,7 +643,6 @@ object Dedup {
     * per sink batch or downstream).
     */
   def mergeSpans(dupPos: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("doc_id").orderBy("pos")
     dupPos
       .withColumn("brk",
@@ -683,13 +673,8 @@ object Dedup {
       text: Column,
       k: Int = 8,
       topN: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k >= 2, s"k must be >= 2, got $k")
     require(topN >= 1, s"topN must be >= 1, got $topN")
-    val grams = docs
-      .select(id.as("doc_id"),
-        explode(graft.functions.TextFunctions.posGrams(tokens(text), k)).as("pg"))
-      .select(col("doc_id"), col("pg.g").as("g"))
+    val grams = gramRows(docs, id, text, k).select(col("doc_id"), col("g"))
     // (g, doc) pre-collapse first: the distinct-doc count then rides a
     // plain count, and a stop-gram's postings combine map-side twice
     // rather than feeding a count(DISTINCT) expand
@@ -730,16 +715,9 @@ object Dedup {
       id: Column,
       text: Column,
       k: Int = 8): DataFrame = {
-    require(k >= 2, s"k must be >= 2, got $k")
-    val tg = train
-      .select(id.as("doc_id"),
-        explode(graft.functions.TextFunctions.posGrams(tokens(text), k)).as("pg"))
-      .select(col("doc_id"), col("pg.pos").as("pos"), col("pg.g").as("g"))
-    val bg = bench
-      .select(explode(graft.functions.TextFunctions.posGrams(tokens(text), k)).as("pg"))
-      .select(col("pg.g").as("g")).distinct()
-    mergeSpans(
-      tg.join(bg, Seq("g"), "left_semi").select(col("doc_id"), col("pos")), k)
+    mergeSpans(gramRows(train, id, text, k)
+      .join(benchGramSet(bench, text, k), Seq("g"), "left_semi")
+      .select(col("doc_id"), col("pos")), k)
   }
 
   /** [[contaminationSpans]] with a Bloom-filter prefilter on the train
@@ -769,7 +747,6 @@ object Dedup {
       k: Int = 8,
       expectedGrams: Long = 1L << 20,
       fpp: Double = 0.01): DataFrame = {
-    require(k >= 2, s"k must be >= 2, got $k")
     require(expectedGrams > 0, s"expectedGrams must be positive: $expectedGrams")
     val bg = cached(benchGramSet(bench, text, k))
     contaminationSpansBloom(train, id, text, bg,
@@ -784,11 +761,18 @@ object Dedup {
     * later batches and stream cold-starts then never re-scan the
     * benchmark text. Output: `(g)`.
     */
-  def benchGramSet(bench: DataFrame, text: Column, k: Int = 8): DataFrame = {
+  def benchGramSet(bench: DataFrame, text: Column, k: Int = 8): DataFrame =
+    gramRows(bench, lit(null), text, k) // no doc id: only the grams are kept
+      .select(col("g")).distinct()
+
+  /** Positional k-grams `(doc_id, pos, g)` of every document's token
+    * stream (`pos` 1-based) — the one gram source of the span family.
+    */
+  private def gramRows(docs: DataFrame, id: Column, text: Column,
+      k: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
-    bench
-      .select(explode(graft.functions.TextFunctions.posGrams(tokens(text), k)).as("pg"))
-      .select(col("pg.g").as("g")).distinct()
+    docs.select(id.as("doc_id"), explode(posGrams(tokens(text), k)).as("pg"))
+      .select(col("doc_id"), col("pg.pos").as("pos"), col("pg.g").as("g"))
   }
 
   /** [[contaminationSpansBloom]] against a PRE-BUILT benchmark: the
@@ -806,11 +790,7 @@ object Dedup {
       benchGrams: DataFrame,
       benchSketch: Array[Byte],
       k: Int): DataFrame = {
-    require(k >= 2, s"k must be >= 2, got $k")
-    val tg = train
-      .select(id.as("doc_id"),
-        explode(graft.functions.TextFunctions.posGrams(tokens(text), k)).as("pg"))
-      .select(col("doc_id"), col("pg.pos").as("pos"), col("pg.g").as("g"))
+    val tg = gramRows(train, id, text, k)
     // BloomJoin owns the sketch build + codegen'd probe (one
     // implementation for the fact-join and gram-gate tiers); an EMPTY
     // benchmark short-circuits to `filter(false)` inside prefilter
@@ -875,35 +855,20 @@ object Dedup {
       numHashes: Int = 16,
       bands: Int = 4,
       minJaccard: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-    // Persist BEFORE filtering: a filter under the persist would be pushed
-    // past the rebalance into the (single-split) scan and evaluate the
-    // whole shingle expression once per doc on one core; against the cache
-    // it's a cheap array-size check. Reused by the signature build and
-    // twice by the verify join.
-    val base = cached(docs.select(id.as("doc_id"), text.as("text"))
-      .withColumn("sh", shingles(tokens(col("text")), n)))
-      .filter(size(col("sh")) > 0)
+    requireBands(numHashes, bands) // fail before anything is cached
+    // read by the signature build and twice by the verify join
+    val sets = shingleSets(docs, id, text, n)
     // Signature via explode + k min-aggregates: each shingle is hashed
     // exactly ONCE and the k affine permutations are plain codegen'd
     // column arithmetic with map-side partial aggregation — the nested
     // array-lambda formulation recomputes the rolling hash k times per
     // shingle and resists whole-stage codegen.
     val sig = sigFromHashed(
-      base.select(col("doc_id"), explode(col("sh")).as("s"))
-        .select(col("doc_id"), polyHash(col("s")).as("h")),
+      postings(sets).select(col("doc_id"), polyHash(col("s")).as("h")),
       numHashes)
-    // one row per (doc, band): band b = signature[b*rows, (b+1)*rows).
     // Persisted: the band self-join would otherwise run the whole
     // explode+hash+k-min signature pipeline once per join side.
-    val banded = sig.select(
-      col("doc_id"),
-      explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"), slice(col("sig"), b * rows + 1, lit(rows)).as("bsig"))))
-        .as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
-    val bandedC = cached(banded)
+    val bandedC = cached(bandSlices(sig, numHashes, bands).drop("sig"))
     val candidates = bandedC.as("a")
       .join(bandedC.as("b"),
         col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
@@ -911,16 +876,7 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     // verify candidates with exact Jaccard on the shingle sets
-    val shs = base.select(col("doc_id"), col("sh"))
-    candidates
-      .join(shs.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(shs.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .withColumn("_int", size(array_intersect(col("sa.sh"), col("sb.sh"))))
-      .withColumn("_uni", size(array_union(col("sa.sh"), col("sb.sh"))))
-      // integer verify threshold (the ngramJaccardPairs convention)
-      .filter(col("_int") * 1000000L >= lit(Math.round(minJaccard * 1e6)) * col("_uni"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("(_int * 1000000) div _uni").as("jaccard_ppm"))
+    jaccardAtLeast(overlap(candidates, sets), Math.round(minJaccard * 1e6))
   }
 
   /** Duplicate-cluster assignment from near-dup pairs: connected
@@ -956,7 +912,7 @@ object Dedup {
         // for a 26M-pair graph were d18's measured sf10 heap floor
         // (BASELINE §16e); the labels below stay deserialized (vertex-
         // sized, rewritten each pass)
-        .transform(LocalCheckpoints("dedup", serialized = true))
+        .transform(Intermediates.checkpoint("dedup", serialized = true))
     // seed each vertex with its 1-hop minimum (self included): the same
     // one-aggregation cost as a bare `distinct()` init, but it folds the
     // first propagation round into the seed — duplicate clusters are
@@ -967,7 +923,7 @@ object Dedup {
     var labels = edges.groupBy(col("src").as("v"))
       .agg(min(col("dst")).as("_nmin"))
       .select(col("v"), least(col("v"), col("_nmin")).as("l"))
-      .transform(LocalCheckpoints("dedup"))
+      .transform(Intermediates.checkpoint("dedup"))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
@@ -987,12 +943,12 @@ object Dedup {
       // flat — see the edges comment above
       val next = contrib.groupBy(col("cv").as("v"))
         .agg(min(col("l")).as("l"), min(when(col("own"), col("l"))).as("ol"))
-        .transform(LocalCheckpoints("dedup"))
+        .transform(Intermediates.checkpoint("dedup"))
       val changed = next.filter(col("l") =!= col("ol")).count()
       // the count above materialized `next`, so the PREVIOUS iteration's
       // label blocks are dead — retire them now instead of accumulating
       // one executor-storage copy per iteration until the family release
-      LocalCheckpoints.drop(labels)
+      Intermediates.drop(labels)
       labels = next
       converged = changed == 0
       iter += 1
@@ -1065,7 +1021,6 @@ object Dedup {
     * unshuffled.
     */
   def keepBest(docs: DataFrame, id: Column, clusters: DataFrame, score: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // restrict to cluster members BEFORE evaluating the score: clusters only
     // contain docs that have duplicates, so the (possibly expensive) score
     // expression runs over the tiny member set, not the whole corpus
@@ -1129,27 +1084,12 @@ object Dedup {
         col("n_members"))
   }
 
-  /** Per-document MinHash signatures as `(doc_id, sig: array<long>)` —
-    * the building block for [[minhashLshPairs]] and for incremental
-    * group-level sketches via [[graft.functions.MinHashUnion]] (signatures
-    * union by elementwise min, so they can be maintained across batches).
-    */
-  def minhashSignatures(
-      docs: DataFrame,
-      id: Column,
-      text: Column,
-      n: Int = 3,
-      numHashes: Int = 16): DataFrame =
-    sigFromHashed(
-      docs.select(id.as("doc_id"), explode(shingles(tokens(text), n)).as("s"))
-        .select(col("doc_id"), polyHash(col("s")).as("h")),
-      numHashes)
-
   /** k-min signature from `(doc_id, h)` shingle-hash rows — the single
     * home of the affine permutation coefficients, which must stay in
     * lockstep with the d3/d6 DuckDB oracles.
     */
   private def sigFromHashed(hashed: DataFrame, numHashes: Int): DataFrame = {
+    requireHashes(numHashes)
     val minAggs = (0 until numHashes).map { i =>
       min((col("h") * (i * 2 + 1) + (i * i * 31 + 7)) % graft.functions.TextFunctions.HashP)
         .as(s"m$i")
@@ -1157,6 +1097,33 @@ object Dedup {
     hashed.groupBy("doc_id").agg(minAggs.head, minAggs.tail: _*)
       .select(col("doc_id"),
         array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
+  }
+
+  private def requireHashes(numHashes: Int): Unit =
+    require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
+
+  /** The one validation of a MinHash band geometry, run by every band
+    * entry point before it builds a plan: `numHashes` and `bands` ≥ 1,
+    * and `bands` divides `numHashes`.
+    */
+  private[graft] def requireBands(numHashes: Int, bands: Int): Unit = {
+    requireHashes(numHashes)
+    require(bands >= 1, s"bands must be >= 1, got $bands")
+    require(numHashes % bands == 0,
+      s"numHashes ($numHashes) must divide into bands ($bands)")
+  }
+
+  /** One row per (doc, band) of a `(doc_id, sig)` frame:
+    * `(doc_id, sig, band, bsig)`, band b = sig[b·rows, (b+1)·rows).
+    */
+  private def bandSlices(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    requireBands(numHashes, bands)
+    val rows = numHashes / bands
+    sig.select(col("doc_id"), col("sig"),
+      explode(transform(sequence(lit(0), lit(bands - 1)),
+        b => struct(b.as("band"), slice(col("sig"), b * rows + 1, lit(rows)).as("bsig"))))
+        .as("bb"))
+      .select(col("doc_id"), col("sig"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
   }
 
   /** 32-bit SimHash per document: each token votes ±1 on every bit position
@@ -1303,11 +1270,13 @@ object Dedup {
   /** Persistable MinHash signature store `(doc_id, sig)` — what a
     * continuous-ingestion deployment writes after admitting a batch, so
     * the next batch's dedup ([[incrementalDedup]]) costs the INCREMENT,
-    * not the corpus. Same hash-once explode + k min-aggs pipeline (and
-    * the same affine coefficients) as [[minhashLshPairs]], so a store
-    * built here is band-compatible with the batch path and the DuckDB
-    * oracle. Shingle-less docs carry no signature and are absent (they
-    * can never match anything).
+    * not the corpus; also the per-doc input of group-level sketches via
+    * [[graft.functions.MinHashUnion]] (signatures union by elementwise
+    * min, so they can be maintained across batches). Same hash-once
+    * explode + k min-aggs pipeline (and the same affine coefficients) as
+    * [[minhashLshPairs]], so a store built here is band-compatible with
+    * the batch path and the DuckDB oracle. Shingle-less docs carry no
+    * signature and are absent (they can never match anything).
     */
   def minhashStore(
       docs: DataFrame,
@@ -1331,32 +1300,6 @@ object Dedup {
         .select(col("doc_id"), polyHash(col("s")).as("h")),
       numHashes)
 
-  /** Incremental dedup decision for a NEW batch against an existing
-    * [[minhashStore]]: output one row per increment doc —
-    * `(doc_id, dup_of)` where `dup_of` is the smallest matching partner
-    * (any store doc, or an earlier-id doc of the same increment) and
-    * NULL means keep.
-    *
-    * The continuous-ingestion contract: per batch, signatures are
-    * computed for the increment ONLY; the store contributes its (already
-    * persisted) signatures to the band join, so cost tracks increment
-    * size + matched candidates — at 100 TB the store band table is a
-    * bucketed/bloom-prunable index, never recomputed. Verification uses
-    * the signature-agreement estimate (matching components ≥ `minAgree`
-    * of `numHashes` — the unbiased MinHash Jaccard estimator) because an
-    * incremental system does not retain old shingle sets; the batch path
-    * ([[minhashLshPairs]]) keeps its exact-Jaccard verify. All integer
-    * arithmetic, oracle-replayable.
-    *
-    * Increment and store ids must be disjoint (the caller's id
-    * discipline, same as every keep operator here).
-    */
-  /** @param withinBatch when true (default, the ingestion semantics),
-    *   earlier-id docs of the same increment also count as partners; set
-    *   false for pure batch-vs-store matching — cross-corpus
-    *   decontamination, where increment-internal duplicates are the
-    *   dedup pass's business, not the contamination gate's.
-    */
   /** Pick the (bands, rowsPerBand) factorization of `numHashes` whose LSH
     * S-curve best matches a target Jaccard `threshold` — the config-time
     * companion to [[minhashLshPairs]] (same criterion as the standard
@@ -1416,33 +1359,6 @@ object Dedup {
     minhashLshPairs(docs, id, text, n, numHashes, bands, minJaccard = threshold)
   }
 
-  /** [[incrementalDedup]] with [[lshParams]]-picked band geometry and the
-    * agreement cut derived from the same target: the MinHash agreement
-    * fraction is an unbiased Jaccard estimator, so `minAgree =
-    * ⌈threshold · numHashes⌉` verifies at the threshold the bands were
-    * tuned for. The (16-hash, 0.5) default reproduces the hand-set
-    * (bands=4, minAgree=8) geometry exactly. `fpWeight`/`fnWeight`
-    * forward to [[lshParams]] — the same knobs
-    * [[minhashLshPairsTuned]] exposes, so the two tuned entry points
-    * cannot silently pick different band geometries.
-    */
-  def incrementalDedupTuned(
-      increment: DataFrame,
-      store: DataFrame,
-      id: Column,
-      text: Column,
-      n: Int = 3,
-      numHashes: Int = 16,
-      threshold: Double = 0.5,
-      withinBatch: Boolean = true,
-      fpWeight: Double = 0.5,
-      fnWeight: Double = 0.5): DataFrame = {
-    val (bands, _) = lshParams(threshold, numHashes, fpWeight, fnWeight)
-    val minAgree = math.max(1, math.ceil(threshold * numHashes).toInt)
-    incrementalDedup(increment, store, id, text, n, numHashes, bands,
-      minAgree, withinBatch)
-  }
-
   /** Banded signature table from a [[minhashStore]] frame: one row per
     * (doc, band) carrying the band slice, the FULL signature, and a
     * derived `band_key` (xxhash64 of the band id + slice) — the single
@@ -1455,18 +1371,9 @@ object Dedup {
     * decision identically. Bucketing on the scalar key instead of the
     * array slice keeps the table writable by any engine's bucket layout.
     */
-  def bandSignatures(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-    sig.select(
-      col("doc_id"), col("sig"),
-      explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"), slice(col("sig"), b * rows + 1, lit(rows)).as("bsig"))))
-        .as("bb"))
-      .select(col("doc_id"), col("sig"),
-        col("bb.band").as("band"), col("bb.bsig").as("bsig"),
-        xxhash64(col("bb.band"), col("bb.bsig")).as("band_key"))
-  }
+  def bandSignatures(sig: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    bandSlices(sig, numHashes, bands)
+      .withColumn("band_key", xxhash64(col("band"), col("bsig")))
 
   /** Write a [[bandSignatures]] table bucketed on `band_key` — the
     * persisted index a continuous-ingestion deployment keeps between
@@ -1484,6 +1391,32 @@ object Dedup {
       bandSignatures(sig, numHashes, bands), table,
       keys = Seq("band_key"), buckets = buckets)
 
+  /** Incremental dedup decision for a NEW batch against an existing
+    * [[minhashStore]]: output one row per increment doc —
+    * `(doc_id, dup_of)` where `dup_of` is the smallest matching partner
+    * (any store doc, or an earlier-id doc of the same increment) and
+    * NULL means keep.
+    *
+    * The continuous-ingestion contract: per batch, signatures are
+    * computed for the increment ONLY; the store contributes its (already
+    * persisted) signatures to the band join, so cost tracks increment
+    * size + matched candidates — at 100 TB the store band table is a
+    * bucketed/bloom-prunable index, never recomputed. Verification uses
+    * the signature-agreement estimate (matching components ≥ `minAgree`
+    * of `numHashes` — the unbiased MinHash Jaccard estimator) because an
+    * incremental system does not retain old shingle sets; the batch path
+    * ([[minhashLshPairs]]) keeps its exact-Jaccard verify. All integer
+    * arithmetic, oracle-replayable.
+    *
+    * Increment and store ids must be disjoint (the caller's id
+    * discipline, same as every keep operator here).
+    *
+    * @param withinBatch when true (default, the ingestion semantics),
+    *   earlier-id docs of the same increment also count as partners; set
+    *   false for pure batch-vs-store matching — cross-corpus
+    *   decontamination, where increment-internal duplicates are the
+    *   dedup pass's business, not the contamination gate's.
+    */
   def incrementalDedup(
       increment: DataFrame,
       store: DataFrame,
@@ -1511,7 +1444,7 @@ object Dedup {
       bands: Int = 4,
       minAgree: Int = 8,
       withinBatch: Boolean = true): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
+    requireBands(numHashes, bands) // fail before anything is cached
     require(minAgree >= 1 && minAgree <= numHashes,
       s"minAgree must be in [1, $numHashes], got $minAgree")
     val incSig = cached(minhashStore(increment, id, text, n, numHashes))

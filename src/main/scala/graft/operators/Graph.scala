@@ -26,7 +26,7 @@ object Graph {
     * between queries alongside the other families' release handles.
     */
   def unpersistIntermediates(blocking: Boolean = false): Int =
-    LocalCheckpoints.release("graph", blocking)
+    Intermediates.release("graph", blocking)
 
   /** Fixed-point PageRank over the undirected graph induced by a
     * canonical (a < b) pair table. Output `(v, score)` — one row per
@@ -80,8 +80,8 @@ object Graph {
         // serialized: the same big-static-edge-set rationale as
         // Dedup.clusterPairs (BASELINE §16e) — the per-iteration score
         // snapshots below stay deserialized (vertex-sized)
-        .transform(LocalCheckpoints("graph", serialized = true))
-    val nodes = outEdges.select(col("src").as("v")).distinct().transform(LocalCheckpoints("graph"))
+        .transform(Intermediates.checkpoint("graph", serialized = true))
+    val nodes = outEdges.select(col("src").as("v")).distinct().transform(Intermediates.checkpoint("graph"))
 
     // Enforce the overflow contract instead of documenting it: total mass
     // is conserved (Σ score ≤ N·scale), so every product the iteration
@@ -122,7 +122,7 @@ object Graph {
       scores = contribs.select(col("dst").as("v"),
         (base + expr(s"$dampNum * contrib_sum div $dampDen")).as("score"))
       // bound the un-truncated join depth for long runs
-      if (i % 8 == 0 && i < iterations) scores = scores.transform(LocalCheckpoints("graph"))
+      if (i % 8 == 0 && i < iterations) scores = scores.transform(Intermediates.checkpoint("graph"))
     }
     scores
   }

@@ -107,7 +107,7 @@ object NgramLm {
     val lmUni =
       if (limit > 0 &&
           gateOn.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(limit))
-        Corpus.cacheIntermediate(lmUni0)
+        Corpus.cached(lmUni0)
       else lmUni0
     val vocab = lmUni.agg(count(lit(1)).as("v"))
     val pairs = docs.select(id.as("doc_id"), TextFunctions.tokens(text).as("tk"))

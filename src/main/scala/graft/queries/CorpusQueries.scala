@@ -199,7 +199,7 @@ object CorpusQueries {
     // the whole LSH pipeline); without the cache each branch re-evaluates it
     // over the full corpus, and the gate's isnotnull pre-filter gets pushed
     // into the scan for a fourth evaluation
-    val scored = Corpus.cacheIntermediate(
+    val scored = Corpus.cached(
       docs.select(col("doc_id"), col("text"),
         qualityScorePpm(col("text")).as("qual_ppm")))
     val gated = Corpus.percentileGate(scored, col("qual_ppm"), 0.1)

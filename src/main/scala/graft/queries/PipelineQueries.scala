@@ -25,18 +25,12 @@ object PipelineQueries {
 
   private type Q = (SparkSession, String) => DataFrame
 
-  /** The testdata parquet files are written as a SINGLE row group, so a
-    * bare scan is one task no matter how `maxPartitionBytes` is tuned —
-    * and these pipelines do heavy per-row expression work (tokenize,
-    * shingle, hash, dot products) BEFORE their first shuffle, which would
-    * all run on one core. A round-robin rebalance right after the scan
-    * spreads that map work across the cluster for the price of shuffling
-    * a few MB. On production multi-row-group files the scan itself
-    * provides the splits and this repartition can be dropped.
-    */
   /** Rebalance a fresh SOURCE scan: the local testdata files are single
-    * row groups, so a bare scan is ONE task and every per-row-heavy stage
-    * above it would run on one core (SURVEY §8.1). But the repartition is
+    * row groups, so a bare scan is ONE task no matter how
+    * `maxPartitionBytes` is tuned, and every per-row-heavy stage above it
+    * (tokenize, shingle, hash, dot products) would run on one core
+    * (SURVEY §8.1); a round-robin rebalance spreads that map work for the
+    * price of shuffling a few MB. But the repartition is
     * only the remedy for UNDER-SPLIT inputs — on a production-sized
     * source the scan already yields ≥ cores of splits and a round-robin
     * exchange is a pure full-corpus reshuffle. So it is SKIPPED when the
@@ -196,7 +190,7 @@ object PipelineQueries {
   // alternative to ntile, whose unpartitioned window would global-sort
   // the corpus into a single task.
   private val t14: Q = (s, dir) => {
-    val scored = graft.operators.Corpus.cacheIntermediate(
+    val scored = graft.operators.Corpus.cached(
       t(s, dir, "documents").select(col("doc_id"),
         qualityScorePpm(col("text")).as("qual_ppm")))
     val thr = scored.agg(percentile(col("qual_ppm"),
@@ -216,7 +210,7 @@ object PipelineQueries {
     // (percentile reduce + filter), and without the cache boundary the
     // filter's inferred isnotnull(qualityScorePpm(text)) is pushed into
     // the single-split scan — the whole tokenize pipeline, serially
-    val scored = graft.operators.Corpus.cacheIntermediate(
+    val scored = graft.operators.Corpus.cached(
       t(s, dir, "documents").select(col("doc_id"),
         qualityScorePpm(col("text")).as("qual_ppm")))
     graft.operators.Corpus.percentileGate(scored, col("qual_ppm"), 0.1)
@@ -236,7 +230,7 @@ object PipelineQueries {
   // the (already corpus-bounded) vocab table with a deterministic
   // (count desc, term asc) tiebreak the oracle replays.
   private val t13: Q = (s, dir) => {
-    val tc = graft.operators.Corpus.cacheIntermediate(
+    val tc = graft.operators.Corpus.cached(
       t(s, dir, "documents")
         .select(explode(tokens(col("text"))).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("c")))
@@ -282,7 +276,7 @@ object PipelineQueries {
       org.apache.spark.sql.Encoders.scalaLong)
     // two consumers (sketch agg + exact probe counts): persist the token
     // stream or both branches re-scan and re-tokenize the corpus
-    val toks = Corpus.cacheIntermediate(
+    val toks = Corpus.cached(
       t(s, dir, "documents").select(explode(tokens(col("text"))).as("term")))
     val sk = toks.agg(cms(polyHash(col("term"))).as("sk"))
     val probes = s.createDataFrame(
@@ -656,10 +650,10 @@ object PipelineQueries {
     // ngramJaccardPairs' pair set bit-for-bit (identical oracle), and the
     // prefix tier has no Σ df² posting self-join — so the recall gate
     // itself stays scale-safe while measuring the same exact truth
-    val exact = graft.operators.Corpus.cacheIntermediate(
+    val exact = graft.operators.Corpus.cached(
       Dedup.prefixJaccardPairs(docs, col("doc_id"), col("text"),
         n = 3, minJaccardPpm = 500000L).select("doc_a", "doc_b"))
-    val lsh = graft.operators.Corpus.cacheIntermediate(
+    val lsh = graft.operators.Corpus.cached(
       Dedup.minhashLshPairs(docs, col("doc_id"), col("text"),
         n = 3, numHashes = 32, bands = 4, minJaccard = 0.5)
         .select("doc_a", "doc_b"))
@@ -720,7 +714,7 @@ object PipelineQueries {
   // incremental fleet-dedup building block
   private val d6: Q = (s, dir) => {
     val docs = t(s, dir, "documents")
-    val sigs = Dedup.minhashSignatures(docs, col("doc_id"), col("text"), 3, 16)
+    val sigs = Dedup.minhashStore(docs, col("doc_id"), col("text"), 3, 16)
     val mhu = udaf(new graft.functions.MinHashUnion(16))
     docs.select(col("doc_id"), col("source"))
       .join(sigs, "doc_id")
@@ -2367,7 +2361,6 @@ object PipelineQueries {
        |  WHERE l.vec_id <> p.q_id)
        |WHERE rn <= 10""".stripMargin
 
-  /** s19's hierarchical-IVF replay — also the candidate side of s21. */
   /** Shared containment CTEs: tokenized shingles, per-doc set sizes,
     * corpus df, and the df≤50 capped index — the common prefix of the
     * exact (d21b), sampling (d21c), and eval (d21d) replays.
@@ -2479,6 +2472,7 @@ object PipelineQueries {
        |SELECT vec_id, c_id FROM listed
        |WHERE vec_id NOT IN (SELECT vec_id FROM dropped)""".stripMargin
 
+  /** s19's hierarchical-IVF replay — also the candidate side of s21. */
   private val sqlS19HierIvf = s"WITH $sqlHierIvfCtes\n$sqlIvfRescoreTail"
 
   /** s37's two-level mass-adaptive replay over [[sqlHierIvfCtes]]: leaf

@@ -44,7 +44,7 @@ object DocStreams {
       numHashes: Int = 16,
       bands: Int = 4,
       minAgree: Int = 8): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
+    graft.operators.Dedup.requireBands(numHashes, bands)
     require(minAgree >= 1 && minAgree <= numHashes,
       s"minAgree must be in [1, $numHashes], got $minAgree")
     val sig = docs

@@ -484,17 +484,23 @@ class DedupSpec extends AnyFunSuite {
       n = 3, numHashes = 16, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSet
     assert(tuned == raw && raw.nonEmpty)
-    // incremental: bands=4 and minAgree=ceil(0.5*16)=8 reproduce exactly
-    val inc = docs.filter(col("doc_id") <= 2)
-    val store = Dedup.minhashStore(docs.filter(col("doc_id") > 2)
-      .withColumn("doc_id", col("doc_id") + 100), col("doc_id"), col("text"))
-    val rawInc = Dedup.incrementalDedup(inc, store, col("doc_id"), col("text"),
-      numHashes = 16, bands = 4, minAgree = 8)
-      .collect().map(r => (r.getLong(0), Option(r.get(1)))).toSet
-    val tunedInc = Dedup.incrementalDedupTuned(inc, store,
-      col("doc_id"), col("text"), numHashes = 16, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), Option(r.get(1)))).toSet
-    assert(tunedInc == rawInc)
+    Dedup.unpersistIntermediates(blocking = true)
+  }
+
+  test("MinHash band geometry: numHashes < 1, bands < 1 and a non-dividing split fail at the call, naming the argument") {
+    def rejects(arg: String)(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(arg), e.getMessage)
+    }
+    val (id, text) = (col("doc_id"), col("text"))
+    rejects("bands")(Dedup.minhashLshPairs(docs, id, text, 3, 16, bands = 0))
+    rejects("bands")(Dedup.minhashLshPairs(docs, id, text, 3, 16, bands = -4))
+    rejects("bands")(Dedup.minhashLshPairs(docs, id, text, 3, 16, bands = 5))
+    rejects("numHashes")(Dedup.minhashLshPairs(docs, id, text, 3, 0, bands = 4))
+    rejects("numHashes")(Dedup.minhashStore(docs, id, text, 3, numHashes = 0))
+    val store = Dedup.minhashStore(docs, id, text)
+    rejects("bands")(Dedup.bandSignatures(store, 16, bands = -4))
+    rejects("bands")(Dedup.incrementalDedup(docs, store, id, text, bands = 0))
     Dedup.unpersistIntermediates(blocking = true)
   }
 

@@ -176,7 +176,7 @@ class WindowOrderTotalitySpec extends AnyFunSuite {
     val pinned = Map(
       "operators/AsOfJoin.scala" -> 1,
       "operators/Corpus.scala" -> 7,
-      "operators/Dedup.scala" -> 8,
+      "operators/Dedup.scala" -> 7,
       "operators/Layout.scala" -> 3,
       "operators/Search.scala" -> 3,
       "operators/Similarity.scala" -> 16,
