@@ -801,7 +801,18 @@ class PlanSpec extends AnyFunSuite {
       ("s24_ann_ivf_store", 1, 1, true),
       ("s34_ann_store_adaptive", 1, 3, true),
       ("s38_ann_store_hier_adaptive", 1, 9, true),
-      ("s35_ann_pqstore_residual", 1, 4, true))
+      ("s35_ann_pqstore_residual", 1, 4, true),
+      ("s10_ann_ivf_trained", 1, 1, false),
+      ("s14_ann_ivfpq", 1, 1, false),
+      ("s20_ann_ivfpq_hier", 1, 1, false),
+      ("s31_ann_ivfpq_residual", 1, 3, false),
+      ("s39_ann_ivf_trained_adaptive", 1, 3, false),
+      ("s27_ann_ivfpq_store", 1, 2, true),
+      ("s29_ann_store_filtered", 1, 1, true),
+      ("s30_ann_store_range", 0, 0, true),
+      ("s36_ann_store_range_adaptive", 0, 2, true),
+      ("s40_ann_store_filtered_adaptive", 1, 3, true),
+      ("s28_ivf_store_compact", 1, 1, true))
     for ((name, windows, exchanges, store) <- pinned) {
       val plan = planOf(name)
       val lines = plan.linesIterator.toIndexedSeq
