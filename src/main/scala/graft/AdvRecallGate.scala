@@ -39,6 +39,7 @@ object AdvRecallGate {
     val outPath = if (args.length > 1) args(1) else "tmp/adv_recall_gate.json"
     val spark = Mains.session(defaultCpus = 32, logLevel = "ERROR")
     import graft.operators.Similarity
+    import graft.operators.Similarity.{Hier, HierMass, Mass, Nearest}
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 5) // the suite's queriesDf
@@ -56,28 +57,28 @@ object AdvRecallGate {
       (r, (System.nanoTime() - t0) / 1e9)
     }
     val (s3, w3) = timed(meanRecall(Similarity.ivfTopK(emb, queries, id, v,
-      k = 10, centroidStride = 50, nProbe = 2)))
-    val (s32, w32) = timed(meanRecall(Similarity.ivfTopKAdaptive(emb,
-      queries, id, v, k = 10, centroidStride = 50, massPpm = 150000L)))
+      k = 10, centroidStride = 50, probe = Nearest(2))))
+    val (s32, w32) = timed(meanRecall(Similarity.ivfTopK(emb,
+      queries, id, v, k = 10, centroidStride = 50, probe = Mass(150000L))))
     val (s33, w33) = timed(meanRecall(Similarity.ivfPqTopK(emb, queries,
       id, v, k = 10, centroidStride = 50, numSubspaces = 8, numCodes = 16,
-      codeStride = 16, residual = true, massPpm = Some(150000L),
+      codeStride = 16, residual = true, probe = Mass(150000L),
       poolPpm = Some(500000L))))
-    val (s19, w19) = timed(meanRecall(Similarity.ivfTopKHierarchical(emb,
-      queries, id, v, k = 10, centroidStride = 50, nProbe = 2,
-      superStride = 16, sProbe = 2)))
-    val (s37, w37) = timed(meanRecall(Similarity.ivfTopKHierarchicalAdaptive(
-      emb, queries, id, v, k = 10, centroidStride = 50, superStride = 16,
-      sProbe = 2, massPpm = 150000L)))
+    val (s19, w19) = timed(meanRecall(Similarity.ivfTopK(emb,
+      queries, id, v, k = 10, centroidStride = 50, probe = Nearest(2),
+      hier = Some(Hier(16, 2)))))
+    val (s37, w37) = timed(meanRecall(Similarity.ivfTopK(
+      emb, queries, id, v, k = 10, centroidStride = 50,
+      probe = HierMass(150000L), hier = Some(Hier(16, 2)))))
     val trained = Similarity.kmeansCentroids(
       Similarity.kmeansTrain(emb, id, v, k = 64, iters = 2,
         seedStride = 10, rankSeeds = true))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     trained.count()
     val (tf, wtf) = timed(meanRecall(Similarity.ivfTopK(emb, queries, id, v,
-      k = 10, nProbe = 2, centroids = Some(trained))))
-    val (ta, wta) = timed(meanRecall(Similarity.ivfTopKAdaptive(emb, queries,
-      id, v, k = 10, massPpm = 150000L, centroids = Some(trained))))
+      k = 10, probe = Nearest(2), centroids = Some(trained))))
+    val (ta, wta) = timed(meanRecall(Similarity.ivfTopK(emb, queries,
+      id, v, k = 10, probe = Mass(150000L), centroids = Some(trained))))
     println(f"s3 fixed nProbe=2: $s3 ppm ($w3%.1f s)  " +
       f"s32 adaptive 15%%: $s32 ppm ($w32%.1f s)  " +
       f"s33 adaptive pool: $s33 ppm ($w33%.1f s)  " +

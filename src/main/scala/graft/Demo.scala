@@ -89,7 +89,8 @@ object Demo {
       graft.operators.Similarity.kmeansTrain(emb, col("vec_id"), col("embedding"),
         k = 8, iters = 2, seedStride = 50))
     val ivfHits = graft.operators.Similarity.ivfTopK(emb, queriesDf,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2,
+      col("vec_id"), col("embedding"), k = 10,
+      probe = graft.operators.Similarity.Nearest(2),
       centroids = Some(trained)).count()
     println(s"[demo] trained-IVF (k-means, 2 Lloyd iterations) ranked $ivfHits rows for 5 queries")
     // the CCNet-shaped LM filter: score the corpus against a clean slice

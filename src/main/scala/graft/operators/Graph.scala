@@ -45,8 +45,8 @@ object Graph {
     * term. Overflow headroom: num * Σ contribs ≤ 85 · N · scale, safe in
     * BIGINT up to N ≈ 10^5 at the default scale; shrink `scale` for
     * larger graphs (the oracle replays whatever is passed).
-    */
-  /** @param weight optional positive integer edge weight (e.g. Jaccard in
+    *
+    * @param weight optional positive integer edge weight (e.g. Jaccard in
     *   micro-units): a neighbor's contribution becomes
     *   `score·w div Σw(src)` instead of the uniform `score div outdeg`.
     *   OVERFLOW contract: `max_score · max_w` must fit in BIGINT — with

@@ -959,34 +959,6 @@ object Similarity {
       .select(col("c_id"), col("vec_id"), col("v"))
   }
 
-  /** [[ivfTopK]] with BOTH sides assigned hierarchically — the shape for
-    * a capped index whose flat assignment dominates the wall (s3's sf10
-    * profile: 19.8 of 20.7 s was the rows × 256 pass, BASELINE.md §9).
-    * The stored lists come from [[ivfAssignHierarchical]] (rows ×
-    * (256/superStride + sProbe·superStride) instead of rows × 256) and
-    * each query probes its `nProbe` lists through the same two-level
-    * rank. Doubly approximate — list membership AND list choice carry
-    * the super-probe trade — so it has its own oracle and its recall
-    * rides [[recallAtK]] like every other tier.
-    */
-  def ivfTopKHierarchical(
-      base: DataFrame,
-      queries: DataFrame,
-      id: Column,
-      vec: Column,
-      k: Int = 10,
-      centroidStride: Int = 50,
-      nProbe: Int = 2,
-      maxCentroids: Int = 256,
-      superStride: Int = 16,
-      sProbe: Int = 2): DataFrame = {
-    val cents = ivfCentroids(base.select(id.as("vec_id"), vec.as("v")),
-      centroidStride, maxCentroids)
-    val hier = Some((superStride, sProbe))
-    topK(rescore(assignLists(base, id, vec, cents, hier),
-      nearestLists(queries, id, vec, cents, nProbe, hier)), k)
-  }
-
   /** Flat product-quantization ANN (Jégou et al., "Product quantization
     * for nearest neighbor search", TPAMI 2011): base vectors are PQ-coded
     * (`numSubspaces` sub-vectors, each snapped to its nearest codebook
@@ -1076,13 +1048,16 @@ object Similarity {
   }
 
   /** IVF×PQ — the billion-scale composition (Jégou et al. 2011's IVFADC):
-    * the coarse quantizer prunes candidates to the query's `nProbe`
-    * inverted lists ([[ivfTopK]]'s join on the list key ≡ partition
-    * pruning of the stored index), the PQ ADC estimate ranks ONLY those
-    * candidates from `numSubspaces` small ints per vector, and the top
-    * `pool` survivors get an exact cosine rescore. Per query the
-    * full-precision vectors touched are `pool` rows; everything between
-    * is the broadcast centroid rank plus one join keyed on the list id.
+    * the coarse quantizer prunes candidates to the lists `probe` selects
+    * ([[ivfTopK]]'s join on the list key ≡ partition pruning of the
+    * stored index), the PQ ADC estimate ranks ONLY those candidates from
+    * `numSubspaces` small ints per vector, and the top `pool` survivors
+    * get an exact cosine rescore. Per query the full-precision vectors
+    * touched are `pool` rows; everything between is the broadcast
+    * centroid rank plus one join keyed on the list id. `hier` swaps the
+    * flat rows × centroids assignment for the two-level one (the s19
+    * trade — the PQ machinery is independent of how list membership was
+    * decided).
     *
     * The codebook deliberately comes from the FULL base corpus (not the
     * probed subset) — the stored codes must be probe-independent, exactly
@@ -1091,17 +1066,12 @@ object Similarity {
     * ADC/rescore ties broken on ascending id), so the DuckDB oracle
     * replays it bit-for-bit.
     *
-    * Recall measured at the 100× copy (256 lists, r11 probe, BASELINE.md
-    * §9): recall@10 = 0.94 / 0.98 / 0.96 at nProbe 2 / 8 / 32 — note the
-    * DIP at 32: past ~8 probes the fixed `pool` ADC-rescore cut becomes
-    * the binding constraint (more candidates compete for the same `pool`
-    * slots and ADC estimate error evicts true neighbors), so `pool` must
-    * scale with `nProbe`. That contract is ENFORCED, not advisory: the
-    * effective pool is `max(pool, k·nProbe)` — raising `nProbe` alone can
-    * no longer silently construct the measured dip configuration
-    * (`pool=50` binding at `nProbe=32`), and the benched configs
-    * (k=10 · nProbe=2 = 20 ≤ 50) are unchanged. Spec-pinned: a
-    * deliberately tiny `pool` still yields full-k result sets.
+    * The effective fixed pool is `max(pool, floor)`, the floor being
+    * `k·nProbe` under [[Nearest]] and `k` under a mass budget: raising
+    * `nProbe` alone can never construct the measured dip configuration
+    * (see [[Nearest]]), and the benched configs (k=10 · nProbe=2 = 20 ≤
+    * 50) are unchanged. Spec-pinned: a deliberately tiny `pool` still
+    * yields full-k result sets.
     *
     * RESIDUAL CONTRACT (r17, measured on the adversarial
     * clustered/anisotropic corpus — BASELINE §16c): raw-vector ADC
@@ -1114,15 +1084,11 @@ object Similarity {
     * raw codebook 0.02, pool 500 only 0.22, unitizing 0.06).
     * `residual = true` is Jégou's actual IVFADC: codes and LUT are
     * computed on `v − centroid(list)`, so the cells resolve
-    * within-list variation. Measured on the same corpus/config:
-    * see BASELINE §16c. Default stays false — the pinned oracle rows
+    * within-list variation. Default stays false — the pinned oracle rows
     * replay the raw-space formulation.
     *
-    * ADAPTIVE CONTRACT (r18 — the other half of §16c's finding; §16h
-    * fixed nProbe, this fixes the pool): `massPpm` replaces the fixed
-    * `nProbe` with [[ivfTopKAdaptive]]'s per-query mass budget (probe
-    * lists in centroid-cosine order until the PRECEDING probed mass
-    * covers `massPpm` of the corpus), and `poolPpm` replaces the fixed
+    * ADAPTIVE POOL (r18 — the other half of §16c's finding; [[Mass]]
+    * fixes the probe, this fixes the pool): `poolPpm` replaces the fixed
     * `pool` with a cut that SCALES with each query's probed candidate
     * volume: candidate survives the ADC rank iff `ern ≤ k` (the floor —
     * a full result set always reaches the rescore) or
@@ -1133,19 +1099,8 @@ object Similarity {
     * and wasteful for the other (recall 0.04 at pool=50, and even 500
     * only bought 0.38); with the pool a constant FRACTION of what was
     * probed, P(true-k ⊂ pool) stops depending on which cluster the
-    * query landed in. Both knobs are all-integer decisions the oracle
-    * replays bit-for-bit; with `massPpm` set the query side ranks ALL
-    * centroids flat (the budget needs every list's mass anyway), so
-    * `hierarchical` then only accelerates the STORED-row assignment.
-    * Measured (BASELINE §17a, 200k-vector corpora): residual
-    * + 15% mass + 50% pool reads 0.92 on the adversarial corpus where
-    * every fixed config in the §16c ladder sat ≤ 0.38 (and 1.00 on
-    * uniform sf10), at a wall flat across the whole fraction sweep
-    * (23–30 s — the fixed-knob band). On the adversarial shape recall
-    * is ~linear in the fraction (§16c's resolution finding: within-
-    * cluster ADC margins are sub-resolution, so the estimate barely
-    * orders a cluster's members) — the fraction IS the recall dial,
-    * priced in rescore reads, not wall.
+    * query landed in. All-integer, replayed bit-for-bit by the oracle;
+    * its measured recall with a [[Mass]] probe is on [[Mass]].
     */
   def ivfPqTopK(
       base: DataFrame,
@@ -1154,171 +1109,164 @@ object Similarity {
       vec: Column,
       k: Int = 10,
       centroidStride: Int = 50,
-      nProbe: Int = 2,
+      probe: Probe = Nearest(2),
       numSubspaces: Int = 8,
       numCodes: Int = 16,
       codeStride: Int = 16,
       pool: Int = 50,
       maxCentroids: Int = 256,
-      hierarchical: Boolean = false,
-      superStride: Int = 16,
-      sProbe: Int = 2,
+      hier: Option[Hier] = None,
       codebook: Option[Array[Array[Array[Double]]]] = None,
       residual: Boolean = false,
-      massPpm: Option[Long] = None,
       poolPpm: Option[Long] = None): DataFrame = {
     val b = base.select(id.as("vec_id"), vec.as("v"))
     val cents = ivfCentroids(b, centroidStride, maxCentroids)
     // the stored index rows: list id + PQ codes (+ the full vector, read
-    // again only by the pool-bounded rescore). `hierarchical` swaps the
-    // flat rows × centroids assignment for the two-level
-    // [[ivfAssignHierarchical]] on BOTH sides (the s19 trade — the PQ
-    // machinery below is independent of how list membership was decided).
-    val hier = if (hierarchical) Some((superStride, sProbe)) else None
+    // again only by the pool-bounded rescore)
     val listed = assignLists(base, id, vec, cents, hier)
-    val probed = massPpm match {
-      // mass-adaptive probing (see ADAPTIVE CONTRACT): list masses come
-      // from the SAME assignment that files the stored rows, so the
-      // budget counts exactly the candidates the probe join will read
-      case Some(mp) =>
-        val sizes = listed.groupBy("c_id").agg(count(lit(1)).as("n_list"))
-        massProbed(queries.select(id.as("q_id"), vec.as("qv")),
-          cents, sizes, b.count(), mp)
-          .select(col("c_id"), col("q_id"), col("qv"))
-      case None => nearestLists(queries, id, vec, cents, nProbe, hier)
-    }
+    val probed = probeLists(queries, id, vec, cents, sizesOf(listed),
+      b.count(), probe, hier)
     val cb = codebook.getOrElse(listCodebook(base, id, vec, listed, cents,
       residual, numSubspaces, numCodes, codeStride))
     require(cb.length == numSubspaces && cb.forall(_.length == numCodes),
       s"ivfPqTopK: codebook shape ${cb.length}×${cb.headOption.fold(0)(_.length)} " +
         s"does not match numSubspaces=$numSubspaces numCodes=$numCodes")
     // each base row lives in exactly ONE list, so a (query, candidate)
-    // pair appears at most once — no dedup needed before the pool rank;
-    // k·nProbe is the pool floor of the pool-vs-nProbe contract (see
-    // scaladoc)
+    // pair appears at most once — no dedup needed before the pool rank
     val cut = pqPool(withCodes(listed, cents, cb, residual)
         .join(withLut(probed, cents, cb, residual), Seq("c_id"))
         .filter(col("q_id") =!= col("vec_id")),
-      Seq("v", "qv"), numSubspaces, numCodes, k, pool, k * nProbe, poolPpm)
+      Seq("v", "qv"), numSubspaces, numCodes, k, pool, probe.poolFloor(k),
+      poolPpm)
     topK(cut.select(col("q_id"), col("vec_id"),
       unitDot(unitMicros(col("qv")), unitMicros(col("v"))).as("cos_ud")), k)
   }
 
-  /** IVF top-k with MASS-ADAPTIVE probing — the fixed-nProbe knob's
-    * answer to IMBALANCED lists (r17, BASELINE §16c/§16h): on a
-    * Zipf-clustered corpus a fixed nProbe=2 reads 0.62 recall because a
-    * heavy cluster's mass spans dozens of lists while a light cluster
-    * fits in one — the right probe count is a property of the QUERY's
-    * neighborhood, not a global constant. Each query probes its lists in
-    * descending centroid-cosine order and stops at the first list whose
-    * PRECEDING probed mass already covers `massPpm` of the corpus
-    * (always ≥ 1 list): heavy-cluster queries fan out, light-cluster
-    * queries stop immediately, and the EXPECTED probed volume is
-    * ~massPpm·N regardless of skew — the budget is explicit instead of
-    * emergent. All-integer decision (`cum_before · 1e6 < massPpm · N`),
-    * oracle-replayable; one corpus count (config-sized, the d12b
-    * precedent) fixes N.
+  /** How an IVF top-k or store probe picks each query's lists: one value
+    * where a probe count and an optional mass budget used to sit side by
+    * side. Each case checks its argument when it is built and names it
+    * when it throws; [[probeLists]] is the one interpreter.
     */
-  def ivfTopKAdaptive(
-      base: DataFrame,
-      queries: DataFrame,
-      id: Column,
-      vec: Column,
-      k: Int = 10,
-      centroidStride: Int = 50,
-      massPpm: Long = 150000L,
-      centroids: Option[DataFrame] = None,
-      maxCentroids: Int = 256): DataFrame = {
-    val b = base.select(id.as("vec_id"), vec.as("v"))
-    val cents = centroids
-      .map(_.select(col("c_id"), col("cv")))
-      .getOrElse(ivfCentroids(b, centroidStride, maxCentroids))
-    val listed = assignLists(base, id, vec, cents, None)
-    val sizes = listed.groupBy("c_id").agg(count(lit(1)).as("n_list"))
-    topK(rescore(listed, massProbed(queries.select(id.as("q_id"), vec.as("qv")),
-      cents, sizes, b.count(), massPpm)), k)
+  sealed trait Probe {
+    /** The fixed-pool floor of the PQ candidate cut ([[pqPool]]). */
+    private[operators] def poolFloor(k: Int): Int = k
   }
 
-  /** [[ivfTopKHierarchical]] with MASS-ADAPTIVE probing at BOTH levels —
-    * the last fixed-knob probe surface after r17/r18 closed the flat
-    * (`ivfTopKAdaptive`), PQ-pool (`poolPpm`), and store tiers. The hier
-    * tier's fixed `sProbe`/`nProbe` carry the same §16c failure one
-    * level up: on a Zipf-clustered corpus a heavy cluster's mass spans
-    * several SUPER-lists, so a fixed sProbe=2 silently caps the leaf
-    * lists a query can even see, and no leaf-level budget can recover
-    * candidates its super filter already dropped.
-    *
-    * The fix is [[massProbed]]'s all-integer gate applied twice with ONE
-    * budget:
-    *  1. supers probed in super-dot order while the PRECEDING super mass
-    *     (leaf list sizes rolled up through the [[hierC2s]] filing) is
-    *     under `massPpm` of the corpus — so the probed supers always
-    *     hold ≥ the budget's mass (or the whole corpus);
-    *  2. the probed supers' leaf centroids, dot-ranked ACROSS their
-    *     union per query, kept while the preceding LEAF mass is under
-    *     the same budget — guaranteed satisfiable by (1), so the leaf
-    *     stage never starves the way a fixed super cap can.
-    * Rank 1 survives at both levels (preceding mass 0), so every query
-    * gets ≥ 1 list — the same no-row-loss guarantee as the fixed tier.
-    *
-    * Cost shape: queries × (k/superStride) super dots + queries ×
-    * (probed-super centroids) leaf dots — the hier assignment saving is
-    * kept; only the CUT moved from rank to mass. The stored side is
-    * [[ivfAssignHierarchical]] at the build geometry (`sProbe`),
-    * unchanged — this is a query-time knob, index-compatible with s19's
-    * lists. All-integer decisions, oracle-replayable (s37).
-    */
-  def ivfTopKHierarchicalAdaptive(
-      base: DataFrame,
-      queries: DataFrame,
-      id: Column,
-      vec: Column,
-      k: Int = 10,
-      centroidStride: Int = 50,
-      maxCentroids: Int = 256,
-      superStride: Int = 16,
-      sProbe: Int = 2,
-      massPpm: Long = 150000L): DataFrame = {
-    val b = base.select(id.as("vec_id"), vec.as("v"))
-    val cents = ivfCentroids(b, centroidStride, maxCentroids)
-    val listed = assignLists(base, id, vec, cents, Some((superStride, sProbe)))
-    val sizes = listed.groupBy("c_id").agg(count(lit(1)).as("n_list"))
-    topK(rescore(listed, hierMassProbed(queries.select(id.as("q_id"), vec.as("qv")),
-      cents, sizes, b.count(), superStride, massPpm)), k)
-  }
-
-  /** IVF ANN: coarse centroids are the base vectors whose id ≡ 0 (mod
-    * `centroidStride`) — deterministic, no k-means dependency; production
-    * would train real centroids but the *plan shape* is identical. Every
-    * base vector is assigned to its nearest centroid (the "inverted list");
-    * a query probes the `nProbe` nearest lists only. At scale the lists
-    * become partition keys of the stored table and probing = partition
-    * pruning.
-    *
-    * Recall contract: on well-clustered corpora recall concentrates in the
-    * first probed lists; on (near-)isotropic data — like the driver
-    * testdata, whose intra-label cosine ≈ inter-label — NO coarse
-    * quantizer can beat the scanned fraction (verified empirically:
-    * Lloyd-trained centroids leave recall unchanged there), and `nProbe`
-    * is the recall/cost knob (SimilaritySpec measures ~0.48 → ~0.84 going
-    * 2 → 6 probes of ~10 lists). LSH ([[lshTopK]]) stays accurate on such
-    * data because its `tables` independent partitions multiply coverage.
-    *
-    * `centroids`: optional trained coarse quantizer `(c_id, cv)` — e.g.
-    * [[kmeansCentroids]] of [[kmeansTrain]] — replacing the stride-picked
-    * default. Same plan either way; centroids are config-scale and
-    * broadcast.
+  /** Each query probes its `nProbe` nearest lists, ranked in the
+    * assignment geometry (flat, or two-level under a [[Hier]]).
     *
     * Recall contract at the capped list count: `nProbe / lists` is the
-    * scanned fraction, so at `maxCentroids = 256` the default `nProbe=2`
-    * scans 2/256 of the corpus — MEASURED at the 100× copy (200k rows,
-    * 256 stride lists, r11 probe, BASELINE.md §9): recall@10 = 0.94 at
+    * scanned fraction, so at `maxCentroids = 256` `Nearest(2)` scans
+    * 2/256 of the corpus — MEASURED at the 100× copy (200k rows, 256
+    * stride lists, r11 probe, BASELINE.md §9): recall@10 = 0.94 at
     * nProbe 2, 0.98 at 8, 1.00 at 32, with near-flat wall (the flat
     * assignment dominates; the scanned slice is secondary). Raise
-    * `nProbe` with the list count if you cap tighter — recall tracks
-    * the scanned fraction, not the corpus size. [[recallAtK]] is the
-    * eval that produced these numbers; re-run it after any index-shape
-    * change.
+    * `nProbe` with the list count if you cap tighter — recall tracks the
+    * scanned fraction, not the corpus size. On (near-)isotropic data —
+    * like the driver testdata, whose intra-label cosine ≈ inter-label —
+    * no coarse quantizer beats the scanned fraction (Lloyd-trained
+    * centroids leave recall unchanged there; SimilaritySpec measures
+    * ~0.48 → ~0.84 going 2 → 6 probes of ~10 lists). On IMBALANCED lists
+    * a fixed count fails: 0.62 at nProbe 2 on a Zipf-clustered corpus
+    * (BASELINE §16c), since a heavy cluster's mass spans dozens of lists
+    * while a light one fits in one — see [[Mass]].
+    *
+    * Under [[ivfPqTopK]]'s fixed pool the floor is `k·nProbe`: the 100×
+    * copy measured recall@10 = 0.94 / 0.98 / 0.96 at nProbe 2 / 8 / 32
+    * with `pool = 50`, the dip at 32 being the pool cut binding once
+    * more candidates compete for its slots (ADC estimate error evicts
+    * true neighbors), so the pool must scale with `nProbe`.
+    */
+  final case class Nearest(nProbe: Int) extends Probe {
+    requirePositive("nProbe", nProbe)
+    override private[operators] def poolFloor(k: Int): Int = k * nProbe
+  }
+
+  /** MASS-ADAPTIVE probing (r17, BASELINE §16c/§16h): each query ranks
+    * ALL lists flat by centroid cosine and probes them in that order
+    * until the mass probed BEFORE a list already covers `massPpm` of the
+    * corpus (rank 1 always survives). Heavy-cluster queries fan out,
+    * light-cluster ones stop at once, and the EXPECTED probed volume is
+    * ~massPpm·N regardless of skew — the budget is explicit instead of
+    * emergent. All-integer decision (`cum_before · 1e6 < massPpm · N`),
+    * oracle-replayable. In memory the list masses come from the same
+    * assignment that files the rows (one corpus count fixes N); in a
+    * store they come from its manifest, and the selected set IS the
+    * partition filter, so `massPpm` bounds the BYTES each query's pruned
+    * scan touches — a skew-proof I/O budget where a fixed count's cost
+    * silently varies with list imbalance. Under a [[Hier]] geometry only
+    * the stored rows are filed two-level; the query side still ranks
+    * every list.
+    *
+    * Measured (BASELINE §17a, 200k-vector corpora) with [[ivfPqTopK]]'s
+    * `residual` codes and `poolPpm`: 15% mass + 50% pool reads 0.92 on
+    * the adversarial corpus where every fixed config in the §16c ladder
+    * sat ≤ 0.38 (and 1.00 on uniform sf10), at a wall flat across the
+    * whole fraction sweep (23–30 s — the fixed-knob band). On the
+    * adversarial shape recall is ~linear in the fraction (within-cluster
+    * ADC margins are sub-resolution), so the fraction IS the recall
+    * dial, priced in rescore reads, not wall. A fixed pool's floor under
+    * a budget is `k`, the `poolPpm` rule's own floor.
+    */
+  final case class Mass(massPpm: Long) extends Probe {
+    requirePpm("massPpm", massPpm)
+  }
+
+  /** [[Mass]]'s budget at BOTH levels of a [[Hier]] geometry (which it
+    * requires — a flat geometry has no super filing to probe). A fixed
+    * `sProbe` carries §16c's failure one level up: a heavy cluster's mass
+    * spans several SUPER-lists, so a fixed sProbe silently caps the leaf
+    * lists a query can even see. Here supers are probed in super-dot
+    * order while the PRECEDING super mass (leaf sizes rolled up through
+    * the filing) is under the budget, then the probed supers' leaf
+    * centroids are ranked ACROSS their union per query under the same
+    * gate — satisfiable by the first level, so the leaf stage never
+    * starves. Rank 1 survives at both levels, so every query gets ≥ 1
+    * list. Per-query dots drop from `lists` to `lists/superStride +
+    * probed supers' centroids`; the stored filing is the build geometry,
+    * unchanged.
+    *
+    * When to pick it over [[Mass]] — MEASURED (BASELINE §17f, 200k
+    * corpus, 256 lists, 2000-query batch, store-served): 1.12× faster at
+    * the pinned 15% budget, SLOWER at 1% (9.5 vs 7.0 s — the extra gate
+    * costs more than the dots it saves), and a recall plateau of
+    * 0.96–0.98 vs the flat rank's 1.00 (§17d). So at list counts like
+    * the default 256 prefer [[Mass]]; the two-level saving only outgrows
+    * its overhead at 10³–10⁵ lists, where the flat per-query rank over
+    * ALL lists stops being config-sized.
+    */
+  final case class HierMass(massPpm: Long) extends Probe {
+    requirePpm("massPpm", massPpm)
+  }
+
+  /** A two-level assignment geometry ([[ivfAssignHierarchical]]): lists
+    * grouped under every `superStride`-th centroid, each row filed
+    * within its `sProbe` nearest super-lists — the shape for a capped
+    * index whose flat assignment dominates the wall (s3's sf10 profile:
+    * 19.8 of 20.7 s was the rows × 256 pass, BASELINE.md §9). Under a
+    * [[Nearest]] probe the queries take the same two-level rank, so
+    * membership AND list choice carry the super-probe trade; recall
+    * rides [[recallAtK]] like every other tier.
+    */
+  final case class Hier(superStride: Int, sProbe: Int) {
+    requirePositive("superStride", superStride)
+    requirePositive("sProbe", sProbe)
+  }
+
+  /** IVF ANN: every base vector is filed under its nearest coarse
+    * centroid (the "inverted list" — flat, or two-level under `hier`), a
+    * query probes the lists `probe` selects, and the candidates get an
+    * exact integer-dot rescore and top-k. Centroids are the base vectors
+    * whose id ≡ 0 (mod `centroidStride`), capped at `maxCentroids` —
+    * deterministic, no k-means dependency — or a trained `(c_id, cv)`
+    * quantizer via `centroids` (e.g. [[kmeansCentroids]] of
+    * [[kmeansTrain]]); same plan either way, centroids are config-scale
+    * and broadcast. At scale the lists become partition keys of the
+    * stored table and probing = partition pruning ([[VectorIndex]]).
+    * LSH ([[lshTopK]]) stays accurate on isotropic data because its
+    * `tables` independent partitions multiply coverage. The recall
+    * contracts are on the [[Probe]] cases; [[recallAtK]] is the eval
+    * that produced them — re-run it after any index-shape change.
     */
   def ivfTopK(
       base: DataFrame,
@@ -1327,15 +1275,16 @@ object Similarity {
       vec: Column,
       k: Int = 10,
       centroidStride: Int = 50,
-      nProbe: Int = 2,
+      probe: Probe = Nearest(2),
+      hier: Option[Hier] = None,
       centroids: Option[DataFrame] = None,
       maxCentroids: Int = 256): DataFrame = {
-    val cents = centroids
-      .map(_.select(col("c_id"), col("cv")))
-      .getOrElse(ivfCentroids(base.select(id.as("vec_id"), vec.as("v")),
-        centroidStride, maxCentroids))
-    topK(rescore(assignLists(base, id, vec, cents, None),
-      nearestLists(queries, id, vec, cents, nProbe, None)), k)
+    val b = base.select(id.as("vec_id"), vec.as("v"))
+    val cents = centroids.map(_.select(col("c_id"), col("cv")))
+      .getOrElse(ivfCentroids(b, centroidStride, maxCentroids))
+    val listed = assignLists(base, id, vec, cents, hier)
+    topK(rescore(listed, probeLists(queries, id, vec, cents, sizesOf(listed),
+      b.count(), probe, hier)), k)
   }
 
   // ------------------------------------------------------------------
@@ -1351,29 +1300,48 @@ object Similarity {
     require(n > 0, s"$name must be positive, got $n")
 
   /** `(c_id, vec_id, v)`: `input` filed under its `keep` nearest lists —
-    * the flat argmax, or the two-level [[ivfAssignHierarchical]] at
-    * `hier = Some((superStride, sProbe))`. `model` is the already-collected
-    * centroid model of `cents`, if any.
+    * the flat argmax, or the two-level [[ivfAssignHierarchical]] under
+    * `hier`. `model` is the already-collected centroid model of `cents`,
+    * if any.
     */
   private[operators] def assignLists(
       input: DataFrame, id: Column, vec: Column, cents: DataFrame,
-      hier: Option[(Int, Int)], keep: Int = 1,
+      hier: Option[Hier], keep: Int = 1,
       model: Option[CentModel] = None): DataFrame = hier match {
-    case Some((superStride, sProbe)) => ivfAssignHierarchical(input, id, vec,
-      cents, superStride, sProbe, keep, model)
+    case Some(Hier(superStride, sProbe)) => ivfAssignHierarchical(input, id,
+      vec, cents, superStride, sProbe, keep, model)
     case None => ivfAssignTo(cents, input.select(id.as("vec_id"), vec.as("v")),
       "v", "vec_id", keep, model)
   }
 
-  /** The fixed-`nProbe` list selection: each query's `nProbe` nearest
-    * lists `(c_id, q_id, qv)` in the given geometry (see [[assignLists]]).
+  /** The per-list row counts `(c_id, n_list)` of a listed assignment. */
+  private def sizesOf(listed: DataFrame): DataFrame =
+    listed.groupBy("c_id").agg(count(lit(1)).as("n_list"))
+
+  /** Each query's probed lists `(c_id, q_id, qv)` under `probe`, in the
+    * `hier` geometry the lists were filed in: [[Nearest]]'s rank, or
+    * [[massProbed]] / [[hierMassProbed]] over the list masses `sizes`
+    * `(c_id, n_list)` of a corpus of `n` rows (read only by a budget).
+    * `dropEmpty` is [[massProbed]]'s filtered-mass rule.
     */
-  private[operators] def nearestLists(
+  private[operators] def probeLists(
       queries: DataFrame, id: Column, vec: Column, cents: DataFrame,
-      nProbe: Int, hier: Option[(Int, Int)]): DataFrame = {
-    requirePositive("nProbe", nProbe)
-    assignLists(queries, id, vec, cents, hier, nProbe)
-      .select(col("c_id"), col("vec_id").as("q_id"), col("v").as("qv"))
+      sizes: => DataFrame, n: => Long, probe: Probe, hier: Option[Hier],
+      dropEmpty: Boolean = false): DataFrame = {
+    def qs = queries.select(id.as("q_id"), vec.as("qv"))
+    probe match {
+      case Nearest(nProbe) =>
+        assignLists(queries, id, vec, cents, hier, nProbe)
+          .select(col("c_id"), col("vec_id").as("q_id"), col("v").as("qv"))
+      case Mass(massPpm) =>
+        massProbed(qs, cents, sizes, n, massPpm, dropEmpty)
+          .select(col("c_id"), col("q_id"), col("qv"))
+      case HierMass(massPpm) =>
+        val h = hier.getOrElse(throw new IllegalArgumentException(
+          "HierMass probes a two-level geometry, but hier is None (a flat " +
+            "store or tier has no super filing) — probe it with Mass"))
+        hierMassProbed(qs, cents, sizes, n, h.superStride, massPpm)
+    }
   }
 
   /** The all-integer mass-budget gate: per query, `ranked` lists
@@ -1386,7 +1354,6 @@ object Similarity {
   private def massGate(ranked: DataFrame, sizes: DataFrame, n: Long,
       massPpm: Long, dropEmpty: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    requirePpm("massPpm", massPpm)
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("c_dot").desc, col("c_id").asc)
     ranked.join(broadcast(sizes), Seq("c_id"), if (dropEmpty) "inner" else "left")
@@ -1396,9 +1363,8 @@ object Similarity {
       .filter(col("cum_before") * 1000000L < lit(massPpm) * n)
   }
 
-  /** The mass-budget list selection shared by [[ivfTopKAdaptive]],
-    * [[ivfPqTopK]]'s adaptive mode, and (re-expressed over the persisted
-    * sizes) [[VectorIndex]]'s adaptive probe: per (query, centroid) the
+  /** [[Mass]]'s list selection, in memory and (over the persisted
+    * sizes) in every store probe: per (query, centroid) the
     * flat unit-grid dot ranks ALL centroids, a window cumsum carries the
     * mass probed BEFORE each list, and a list survives while that
     * preceding mass is still under `massPpm` of `n` (rank 1 always
@@ -1438,8 +1404,7 @@ object Similarity {
       sizes, n, massPpm, dropEmpty)
       .select(col("c_id"), col("q_id"), col("qv"), col("_qu"))
 
-  /** The TWO-LEVEL mass-budget selection of [[ivfTopKHierarchicalAdaptive]]
-    * and [[VectorIndex.probeIvfIndexHierAdaptive]]: the super geometry is
+  /** [[HierMass]]'s TWO-LEVEL list selection: the super geometry is
     * derived from `cents` ([[hierSupers]]/[[hierC2s]] at `superStride` —
     * deterministic in the centroids, so a store needs no extra artifact),
     * leaf `sizes` `(c_id, n_list)` roll up through the filing to super
@@ -1574,8 +1539,8 @@ object Similarity {
     * is summed in subspace order (a left-to-right fold — the oracle
     * replays the identical sequence via list_reduce over ORDER BY s) and
     * ranks each query's candidates `(est asc, vec_id asc)`. Survivors:
-    * the first `max(pool, floor)` (`floor` = k·nProbe for the IVF tiers —
-    * the pool-vs-nProbe contract), or under `poolPpm` the ADAPTIVE rule
+    * the first `max(pool, floor)` (`floor` is the probe's
+    * [[Probe.poolFloor]] for the IVF tiers), or under `poolPpm` the ADAPTIVE rule
     * `ern ≤ k || ern·1e6 ≤ poolPpm·cand_n` with `cand_n` the query's
     * candidate count (an order-insensitive whole-partition count over the
     * same `q_id` partitioning — no extra exchange). Output
@@ -1844,57 +1809,6 @@ object Similarity {
         sum(pmod(col("_p"), lit(1000000007L))).as("fp"))
   }
 
-  /** Deterministic distributed Lloyd k-means over a float-vector column —
-    * the trainer that produces REAL coarse centroids for [[ivfTopK]] and
-    * codebooks for [[pqTopK]] (both default to stride-picked rows with the
-    * identical plan shape; this closes the "production would train"
-    * loop). Reference has no ANN tier at all — this extends the surface.
-    *
-    * Everything is exact integer arithmetic so any engine replays it
-    * bit-for-bit (the established micros pattern):
-    *  - vectors land in integer micros: `floor(x·10⁶ + 0.5)` per component
-    *    (half-up via floor — `round()` half-up/half-even conventions
-    *    differ across engines, floor never does);
-    *  - assignment is exact squared-L2 over longs, computed as
-    *    `‖a‖² + ‖c‖² − 2·a·c` with three codegen'd [[VectorDot]] folds —
-    *    no per-pair difference array is ever materialized; ties break on
-    *    ascending centroid id;
-    *  - the update is the floored integer mean per component
-    *    (`floor(Σ/n)`, exact: |Σ| < 2⁵³ through any realistic corpus ×
-    *    micros range);
-    *  - a cluster that captures no vectors keeps its previous centroid
-    *    (the standard empty-cluster rule, and the deterministic one).
-    *
-    * Seeds are the `k` stride-picked base vectors (id ≡ 0 mod
-    * `seedStride`, id/seedStride < k) — deterministic init, no RNG state.
-    *
-    * Iteration shape (the MLlib-standard loop): centroids live on the
-    * DRIVER between iterations — k·dim longs, a model artifact exactly
-    * like [[pqTopK]]'s codebook, never a data collect. Each iteration is
-    * ONE job: the literal centroid table broadcasts into the scored join
-    * (narrow); the argmin is a `groupBy` on the vector id —
-    * `min(struct(dist, c_id, mv))` — so map-side partial aggregation
-    * collapses the k scored copies of each vector before the exchange (a
-    * window would shuffle all N·k rows); the component sums explode to
-    * (c_id, pos) AFTER the argmin and partial-aggregate map-side to
-    * ≤ k·dim rows per task, so the update exchange is config-sized
-    * regardless of corpus size, and only k·dim partials return to the
-    * driver. Iterations therefore compose LINEARLY — a fully-lazy
-    * unrolled chain would re-reference iteration i's subtree from both
-    * consumers of iteration i+1 and re-evaluate it 2^(iters−i) times.
-    *
-    * Output: the trained centroids EXPLODED to scalars
-    * `(c_id, pos (1-based), val)` in micros — config-scale, directly
-    * comparable across engines (no array-format ambiguity), and
-    * reassembled by [[kmeansCentroids]] for consumption by the ANN tiers.
-    */
-  /** `convergeTol`: optional early stop — end the loop once no centroid
-    * component moved by more than this many micros in an iteration
-    * (`Some(0L)` = exact fixed point). Converged iterations are no-ops,
-    * so stopping early returns the identical model while skipping whole
-    * corpus passes; leave `None` when a FIXED iteration count must be
-    * replayed (the oracle contract of s9/s10).
-    */
   /** Integer-grid projection of a float-vector column:
     * `floor(x·2²⁰ + 0.5)` per component (half-up via floor; the
     * power-of-two scale makes the multiply an exact exponent shift —
@@ -2056,7 +1970,58 @@ object Similarity {
     cents
   }
 
-  /** `rankSeeds = false` (the s9/s10 replay contract): seeds are the ids
+  /** Deterministic distributed Lloyd k-means over a float-vector column —
+    * the trainer that produces REAL coarse centroids for [[ivfTopK]] and
+    * codebooks for [[pqTopK]] (both default to stride-picked rows with the
+    * identical plan shape; this closes the "production would train"
+    * loop). Reference has no ANN tier at all — this extends the surface.
+    *
+    * Everything is exact integer arithmetic so any engine replays it
+    * bit-for-bit (the established micros pattern):
+    *  - vectors land in integer micros: `floor(x·10⁶ + 0.5)` per component
+    *    (half-up via floor — `round()` half-up/half-even conventions
+    *    differ across engines, floor never does);
+    *  - assignment is exact squared-L2 over longs, computed as
+    *    `‖a‖² + ‖c‖² − 2·a·c` with three codegen'd [[VectorDot]] folds —
+    *    no per-pair difference array is ever materialized; ties break on
+    *    ascending centroid id;
+    *  - the update is the floored integer mean per component
+    *    (`floor(Σ/n)`, exact: |Σ| < 2⁵³ through any realistic corpus ×
+    *    micros range);
+    *  - a cluster that captures no vectors keeps its previous centroid
+    *    (the standard empty-cluster rule, and the deterministic one).
+    *
+    * Seeds are the `k` stride-picked base vectors (id ≡ 0 mod
+    * `seedStride`, id/seedStride < k) — deterministic init, no RNG state.
+    *
+    * Iteration shape (the MLlib-standard loop): centroids live on the
+    * DRIVER between iterations — k·dim longs, a model artifact exactly
+    * like [[pqTopK]]'s codebook, never a data collect. Each iteration is
+    * ONE job: the literal centroid table broadcasts into the scored join
+    * (narrow); the argmin is a `groupBy` on the vector id —
+    * `min(struct(dist, c_id, mv))` — so map-side partial aggregation
+    * collapses the k scored copies of each vector before the exchange (a
+    * window would shuffle all N·k rows); the component sums explode to
+    * (c_id, pos) AFTER the argmin and partial-aggregate map-side to
+    * ≤ k·dim rows per task, so the update exchange is config-sized
+    * regardless of corpus size, and only k·dim partials return to the
+    * driver. Iterations therefore compose LINEARLY — a fully-lazy
+    * unrolled chain would re-reference iteration i's subtree from both
+    * consumers of iteration i+1 and re-evaluate it 2^(iters−i) times.
+    *
+    * Output: the trained centroids EXPLODED to scalars
+    * `(c_id, pos (1-based), val)` in micros — config-scale, directly
+    * comparable across engines (no array-format ambiguity), and
+    * reassembled by [[kmeansCentroids]] for consumption by the ANN tiers.
+    *
+    * `convergeTol`: optional early stop — end the loop once no centroid
+    * component moved by more than this many micros in an iteration
+    * (`Some(0L)` = exact fixed point). Converged iterations are no-ops,
+    * so stopping early returns the identical model while skipping whole
+    * corpus passes; leave `None` when a FIXED iteration count must be
+    * replayed (the oracle contract of s9/s10).
+    *
+    * `rankSeeds = false` (the s9/s10 replay contract): seeds are the ids
     * {0, seedStride, …, (k−1)·seedStride} and `c_id = id div seedStride`
     * — an ABSOLUTE bound, which on an offset/sparse id space selects
     * fewer than k seeds and fails the length check (by design: loud).

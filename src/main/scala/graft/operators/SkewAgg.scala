@@ -20,17 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object SkewAgg {
 
-  /** Per-key totals and exact distinct-value counts, two-stage:
-    * output (key, n, sum_value, n_distinct).
-    *
-    * NULL semantics match SQL `COUNT(DISTINCT v) ... GROUP BY key` on both
-    * axes: null VALUES are excluded before the stage-1 dedup (a bare
-    * `distinct()` would keep one null row per key and over-count by 1); a
-    * key whose values are ALL null still appears with n_distinct = 0 via
-    * the left join + coalesce; and a null KEY is a real SQL group, so the
-    * join is null-safe (`<=>`) — a plain equi-join would never match the
-    * null-key group and silently zero its distinct count.
-    */
   /** Join-key skew profile: the `topN` heaviest keys with each key's row
     * count, share of all rows, and cumulative share (exact integer ppm),
     * plus the table's distinct-key count — the diagnostic that decides
@@ -60,6 +49,17 @@ object SkewAgg {
       .select("rank", "key", "n", "share_ppm", "cum_share_ppm", "n_keys")
   }
 
+  /** Per-key totals and exact distinct-value counts, two-stage:
+    * output (key, n, sum_value, n_distinct).
+    *
+    * NULL semantics match SQL `COUNT(DISTINCT v) ... GROUP BY key` on both
+    * axes: null VALUES are excluded before the stage-1 dedup (a bare
+    * `distinct()` would keep one null row per key and over-count by 1); a
+    * key whose values are ALL null still appears with n_distinct = 0 via
+    * the left join + coalesce; and a null KEY is a real SQL group, so the
+    * join is null-safe (`<=>`) — a plain equi-join would never match the
+    * null-key group and silently zero its distinct count.
+    */
   def distinctAndTotals(df: DataFrame, key: Column, value: Column, distinctOn: Column): DataFrame = {
     val totals = df.groupBy(key.as("key"))
       .agg(count(lit(1)).as("n"),

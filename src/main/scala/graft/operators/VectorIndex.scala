@@ -12,6 +12,8 @@ import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
 import org.json4s.jackson.Serialization
 
+import Similarity.{Hier, Mass, Nearest, Probe}
+
 /** The PERSISTED form of the IVF / IVF×PQ index — the missing piece
   * between [[Similarity]]'s in-flight ANN tiers and a 100 TB deployment.
   *
@@ -207,8 +209,8 @@ object VectorIndex {
       payload: List[String], listsSchema: String, centroidsSchema: String,
       counts: Counts) {
     /** The assignment geometry in [[Similarity.assignLists]]' terms. */
-    def hier: Option[(Int, Int)] =
-      if (hierarchical) Some((superStride, sProbe)) else None
+    def hier: Option[Hier] =
+      if (hierarchical) Some(Hier(superStride, sProbe)) else None
     def lists: StructType = DataType.fromJson(listsSchema).asInstanceOf[StructType]
     def centroids: StructType =
       DataType.fromJson(centroidsSchema).asInstanceOf[StructType]
@@ -347,15 +349,20 @@ object VectorIndex {
     loadManifest(path).exists(m => (payload.isEmpty || m.payload == payload) &&
       pqResidual.forall(_ == m.pqResidual))
 
+  /** The two-level geometry a store is built with unless the caller
+    * passes another (s19's: 16 centroids per super-list, 2 super-probes).
+    */
+  private val DefaultHier = Hier(16, 2)
+
   /** Write the IVF index of `base` at `path`: inverted lists partitioned
     * by `c_id` (+ PQ codes when `pq`), the centroid model, and — last —
     * the manifest. One pass over the corpus.
     *
-    * `hierarchical = true` (default) builds the lists with the two-level
+    * `hier` (default `Some(Hier(16, 2))`) builds the lists with the two-level
     * assignment ([[Similarity.ivfAssignHierarchical]] — rows ×
     * (√k·… ) instead of rows × k cosines, the s19 trade measured at 2.65×
-    * on the sf10 copy); `false` is the exact flat argmax (s3 semantics).
-    * Probes replay whichever mode the manifest records, so store and
+    * on the sf10 copy); `None` is the exact flat argmax (s3 semantics).
+    * Probes replay whichever geometry the manifest records, so store and
     * probe assignment can never disagree.
     *
     * `pq = true` additionally stores the `numSubspaces` PQ codes per
@@ -416,9 +423,7 @@ object VectorIndex {
       path: String,
       centroidStride: Int = 50,
       maxCentroids: Int = 256,
-      hierarchical: Boolean = true,
-      superStride: Int = 16,
-      sProbe: Int = 2,
+      hier: Option[Hier] = Some(DefaultHier),
       pq: Boolean = false,
       numSubspaces: Int = 8,
       numCodes: Int = 16,
@@ -453,9 +458,11 @@ object VectorIndex {
     // concurrent probe in that window must fail loudly on the missing
     // marker rather than read the NEW codebook against the OLD lists
     dropMarker(path)
-    val config = StoreManifest(FormatVersion, hierarchical, superStride,
-      sProbe, pq, numSubspaces, numCodes, pqResidual, payNames.toList, "",
-      "", Counts(Map.empty, Map.empty))
+    // a flat store records the default geometry, which no probe reads
+    val geometry = hier.getOrElse(DefaultHier)
+    val config = StoreManifest(FormatVersion, hier.isDefined,
+      geometry.superStride, geometry.sProbe, pq, numSubspaces, numCodes,
+      pqResidual, payNames.toList, "", "", Counts(Map.empty, Map.empty))
     val picked = centroids.map(_.select(col("c_id"), col("cv")))
       .getOrElse(Similarity.ivfCentroids(base.select(id.as("vec_id"),
         vec.as("v")), centroidStride, maxCentroids))
@@ -722,9 +729,7 @@ object VectorIndex {
       path: String,
       centroidStride: Int = 50,
       maxCentroids: Int = 256,
-      hierarchical: Boolean = true,
-      superStride: Int = 16,
-      sProbe: Int = 2,
+      hier: Option[Hier] = Some(DefaultHier),
       pq: Boolean = false,
       numSubspaces: Int = 8,
       numCodes: Int = 16,
@@ -746,11 +751,10 @@ object VectorIndex {
     // simply unread), so pass a requirement, not the default
     if (!isServable(base.sparkSession, path, payNames,
         if (pq) Some(pqResidual) else None))
-      writeIvfIndex(base, id, vec, path, centroidStride, maxCentroids,
-        hierarchical, superStride, sProbe, pq, numSubspaces, numCodes,
-        codeStride, payload = payload, filesPerList = filesPerList,
-        targetFileBytes = targetFileBytes, pqResidual = pqResidual,
-        statsCols = statsCols)
+      writeIvfIndex(base, id, vec, path, centroidStride, maxCentroids, hier,
+        pq, numSubspaces, numCodes, codeStride, payload = payload,
+        filesPerList = filesPerList, targetFileBytes = targetFileBytes,
+        pqResidual = pqResidual, statsCols = statsCols)
     else {
       // servable store, possibly built before these histograms were
       // requested: recount from the lists already on disk and rewrite the
@@ -839,66 +843,27 @@ object VectorIndex {
     (probed, probed.select(col("c_id").cast("long")).distinct()
       .collect().map(_.getLong(0)).sorted)
 
-  /** The MASS-BUDGET probe selection over a store's persisted model
-    * artifacts — [[Similarity.massProbed]]'s rule fed by `centroids/` and
-    * per-list masses, shared by every adaptive probe
-    * ([[probeIvfIndexAdaptive]], [[probeIvfPqIndex]]'s and
-    * [[probeIvfRange]]'s `massPpm` over the manifest's sizes;
-    * [[probeIvfIndexFiltered]] over its matching masses, with
-    * `dropEmpty`). The budget's total is summed on the driver.
-    */
-  private def massProbedLists(
-      spark: SparkSession, path: String, meta: StoreManifest,
-      queries: DataFrame, id: Column, vec: Column, massPpm: Long,
-      sizes: Seq[(Long, Long)],
-      dropEmpty: Boolean = false): (DataFrame, Array[Long]) = {
-    import spark.implicits._
-    val n = sizes.map(_._2).sum
-    require(n > 0, s"store at $path has no rows — nothing to probe")
-    val cents = centroidsOf(spark, path, meta)
-      .select(col("c_id"), col("cv"))
-    withIds(Similarity.massProbed(
-      queries.select(id.as("q_id"), vec.as("qv")), cents,
-      sizes.toDF("c_id", "n_list"), n, massPpm, dropEmpty)
-      .select(col("c_id"), col("q_id"), col("qv")))
-  }
-
-  /** The list selection of the single-level probes: the `nProbe`
-    * nearest lists in the store's own geometry (≤ `|queries| · nProbe`
-    * ids), or — given `massPpm` — the mass budget over the manifest's
-    * sizes.
+  /** The list selection of every store probe: [[Similarity.probeLists]]
+    * over `centroids/`, in the geometry the manifest records, with the
+    * list masses a budget reads taken from `sizes` — the manifest's
+    * ([[listSizes]]), or [[probeIvfIndexFiltered]]'s matching counts with
+    * `dropEmpty`. The budget's total is summed on the driver; a
+    * [[Nearest]] probe reads neither.
     */
   private def selectLists(
       spark: SparkSession, path: String, meta: StoreManifest,
-      queries: DataFrame, id: Column, vec: Column, nProbe: Int,
-      massPpm: Option[Long]): (DataFrame, Array[Long]) = massPpm match {
-    case Some(mp) => massProbedLists(spark, path, meta, queries, id, vec, mp,
-      meta.counts.listSizes)
-    case None => withIds(Similarity.nearestLists(queries, id, vec,
-      centroidsOf(spark, path, meta), nProbe, meta.hier))
-  }
-
-  /** TWO-LEVEL mass-budget selection over the store's persisted model —
-    * the in-flight s37 rule ([[Similarity.hierMassProbed]]) served from
-    * `centroids/` + [[listSizes]] at the recorded `superStride`.
-    * Per-query centroid dots drop from `lists` to
-    * `lists/superStride + probed-supers' centroids` — the saving that
-    * matters when the probe BATCH is large (serving-scale inference),
-    * where the flat rank's `|queries| × lists` assignment dots dominate
-    * the budget-bounded scan.
-    */
-  private def hierMassProbedLists(
-      spark: SparkSession, path: String, meta: StoreManifest,
-      queries: DataFrame, id: Column, vec: Column,
-      massPpm: Long): (DataFrame, Array[Long]) = {
+      queries: DataFrame, id: Column, vec: Column, probe: Probe,
+      sizes: Seq[(Long, Long)],
+      dropEmpty: Boolean = false): (DataFrame, Array[Long]) = {
     import spark.implicits._
-    val n = meta.counts.listSizes.map(_._2).sum
-    require(n > 0, s"store at $path has no rows — nothing to probe")
-    withIds(Similarity.hierMassProbed(
-      queries.select(id.as("q_id"), vec.as("qv")),
+    def n = {
+      val total = sizes.map(_._2).sum
+      require(total > 0, s"store at $path has no rows — nothing to probe")
+      total
+    }
+    withIds(Similarity.probeLists(queries, id, vec,
       centroidsOf(spark, path, meta).select(col("c_id"), col("cv")),
-      meta.counts.listSizes.toDF("c_id", "n_list"), n, meta.superStride,
-      massPpm))
+      sizes.toDF("c_id", "n_list"), n, probe, meta.hier, dropEmpty))
   }
 
   /** The store's lists restricted to the probed ids, via a literal filter
@@ -925,14 +890,19 @@ object VectorIndex {
       _.filter(_))
   }
 
-  /** Probe a persisted IVF store: assign `queries` to their `nProbe`
-    * nearest lists in the store's own geometry, read ONLY those
-    * partitions, broadcast the query assignment onto them, and return the
-    * exact-cosine top-k — [[Similarity.ivfTopK]] /
-    * [[Similarity.ivfTopKHierarchical]] output shape
-    * (`q_id, vec_id, cos, rn`), bit-identical to the in-flight tier that
-    * shares the store's geometry (spec-pinned), with probe IO that tracks
-    * the probed lists instead of the corpus.
+  /** Probe a persisted IVF store: select each query's lists under
+    * `probe` in the store's own geometry, read ONLY those partitions,
+    * broadcast the query assignment onto them, and return the
+    * exact-cosine top-k — [[Similarity.ivfTopK]]'s output shape
+    * (`q_id, vec_id, cos_ud, rn`), bit-identical to the in-flight tier at
+    * the store's geometry and the same `probe` (spec-pinned; the
+    * shared-oracle identities behind s24, s34 and s38), with probe IO
+    * that tracks the probed lists instead of the corpus. A budget probe
+    * ([[Similarity.Mass]], [[Similarity.HierMass]]) reads its list masses
+    * from the manifest ([[listSizes]]), so it never pays a corpus pass;
+    * [[Similarity.HierMass]] needs a store built with a `hier` geometry
+    * — probing a flat store two-level would INVENT a filing the stored
+    * lists never had, so it is rejected.
     *
     * `where` is PRE-FILTERED vector search over the store's inline
     * payload columns (see [[writeIvfIndex]]): the predicate restricts the
@@ -940,8 +910,8 @@ object VectorIndex {
     * survivors among matching rows (post-filtering a plain top-k would
     * return < k and miss matches outside the unfiltered top) — and it
     * evaluates inside the pruned list scan as a pushed parquet data
-    * filter, so a filtered probe reads the same `nProbe`-pruned
-    * partitions and never joins a corpus-sized attribute table.
+    * filter, so a filtered probe reads the same pruned partitions and
+    * never joins a corpus-sized attribute table.
     */
   def probeIvfIndex(
       spark: SparkSession,
@@ -950,51 +920,11 @@ object VectorIndex {
       id: Column,
       vec: Column,
       k: Int = 10,
-      nProbe: Int = 2,
+      probe: Probe = Nearest(2),
       where: Option[Column] = None): DataFrame = {
     val meta = manifestOf(path)
     val (probed, ids) = selectLists(spark, path, meta, queries, id, vec,
-      nProbe, None)
-    Similarity.topK(Similarity.rescore(
-      prunedLists(spark, path, meta, ids, where), broadcast(probed)), k)
-  }
-
-  /** [[probeIvfIndex]] with [[Similarity.ivfTopKAdaptive]]'s MASS BUDGET
-    * in place of the fixed `nProbe` — the steady-state 100 TB answer to
-    * §16c's finding, applied where it pays most: with lists stored
-    * `partitionBy(c_id)`, the budget-selected list set IS the partition
-    * filter, so `massPpm` bounds the BYTES each query's pruned scan
-    * touches — an explicit, skew-proof per-query I/O budget where fixed
-    * nProbe's actual cost silently varies with list imbalance (a heavy
-    * cluster's 2 lists can be 100× a light one's). List masses come from
-    * the per-list sizes in the store's manifest ([[listSizes]]) — the
-    * probe never pays a corpus pass — and the selection rule is
-    * byte-identical to the in-flight tier's ([[Similarity.massProbed]]:
-    * flat unit-grid centroid rank, window cumsum, all-integer gate), so
-    * a probe of a FLAT store replays bit-for-bit against
-    * `ivfTopKAdaptive` on the same corpus (spec-pinned; the shared-oracle
-    * identity behind s34_ann_store_adaptive). On a HIERARCHICAL store
-    * the stored filing is whatever the build recorded; this probe still
-    * ranks all lists flat on the query side (masses are config metadata
-    * either way), so it trades `|queries| × lists` assignment dots for
-    * the flat tier's recall. [[probeIvfIndexHierAdaptive]] is the
-    * two-level-ranked sibling (r18) — measured SLOWER-or-even at the
-    * 256-list default (BASELINE §17f), it earns its keep only at large
-    * list counts where the flat rank stops being config-sized. `where`
-    * is the same pushed payload pre-filter as [[probeIvfIndex]]'s.
-    */
-  def probeIvfIndexAdaptive(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      id: Column,
-      vec: Column,
-      k: Int = 10,
-      massPpm: Long = 150000L,
-      where: Option[Column] = None): DataFrame = {
-    val meta = manifestOf(path)
-    val (probed, ids) = selectLists(spark, path, meta, queries, id, vec, 0,
-      Some(massPpm))
+      probe, meta.counts.listSizes)
     Similarity.topK(Similarity.rescore(
       prunedLists(spark, path, meta, ids, where), broadcast(probed)), k)
   }
@@ -1012,7 +942,7 @@ object VectorIndex {
     * every candidate dies on the scan predicate, and filtered recall
     * collapses while the unfiltered contracts all stay green.
     *
-    * The rule here is [[Similarity.massProbed]]'s gate fed by FILTERED
+    * The rule here is [[Similarity.Mass]]'s gate fed by FILTERED
     * per-list masses from the `statsCol` histogram in the store's
     * manifest ([[listStats]] — config-sized, counted at build, recounted
     * on append; a store built without it is counted by the same
@@ -1037,7 +967,7 @@ object VectorIndex {
     * the selective dimension as the stats column; residual predicates
     * should be the mild ones).
     *
-    * 100 TB shape: identical to [[probeIvfIndexAdaptive]] — the
+    * 100 TB shape: identical to a [[Similarity.Mass]] [[probeIvfIndex]] — the
     * budget-selected list set IS the partition filter and the predicate
     * a parquet data filter inside only those partitions. The one new
     * scale knob is stats cardinality (lists × distinct values; see
@@ -1071,52 +1001,11 @@ object VectorIndex {
       .groupMapReduce(_._1)(_._2)(_ + _).toSeq
     require(fsizes.map(_._2).sum > 0,
       s"no stored rows match $statsCol IN (${statsValues.mkString(", ")})")
-    val (probed, ids) = massProbedLists(spark, path, meta, queries, id, vec,
-      massPpm, fsizes, dropEmpty = true)
+    val (probed, ids) = selectLists(spark, path, meta, queries, id, vec,
+      Mass(massPpm), fsizes, dropEmpty = true)
     val pred = where.foldLeft(col(statsCol).isin(statsValues: _*))(_ && _)
     Similarity.topK(Similarity.rescore(
       prunedLists(spark, path, meta, ids, Some(pred)), broadcast(probed)), k)
-  }
-
-  /** [[probeIvfIndexAdaptive]] with the TWO-LEVEL rank on the query side
-    * — the store-served [[Similarity.ivfTopKHierarchicalAdaptive]]
-    * (s37): one `massPpm`, two applications of the gate (supers by
-    * rolled-up mass, then the probed supers' leaf centroids across
-    * their union), budget-selected lists as the partition filter. A
-    * hierarchical store at s37's geometry probed this way is s37 by
-    * construction (shared oracle, s38) — same lists (the build filing
-    * IS `ivfAssignHierarchical` at the recorded `superStride`/`sProbe`),
-    * same selection rule, same exact rescore.
-    *
-    * When to pick which — MEASURED (BASELINE §17f, 200k corpus, 256
-    * lists, 2000-query batch): 1.12× faster at the pinned 15% budget,
-    * SLOWER at 1% (9.5 vs 7.0 s — the extra gate costs more than the
-    * dots it saves), and a recall plateau of 0.96–0.98 vs the flat
-    * rank's 1.00 (§17d). So at list counts like the default 256 prefer
-    * [[probeIvfIndexAdaptive]]; the two-level saving only outgrows its
-    * overhead at 10³–10⁵ lists, where the flat per-query rank over ALL
-    * lists stops being config-sized. Requires the store's recorded
-    * super geometry (`hierarchical = true` build) — probing a flat
-    * store two-level would INVENT a filing the stored lists never had.
-    */
-  def probeIvfIndexHierAdaptive(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      id: Column,
-      vec: Column,
-      k: Int = 10,
-      massPpm: Long = 150000L,
-      where: Option[Column] = None): DataFrame = {
-    val meta = manifestOf(path)
-    require(meta.hierarchical,
-      "two-level adaptive probe needs the store's recorded super " +
-        "geometry (hierarchical build) — probe flat stores with " +
-        "probeIvfIndexAdaptive")
-    val (probed, ids) =
-      hierMassProbedLists(spark, path, meta, queries, id, vec, massPpm)
-    Similarity.topK(Similarity.rescore(
-      prunedLists(spark, path, meta, ids, where), broadcast(probed)), k)
   }
 
   /** Radius (range) search against a persisted store: every candidate in
@@ -1138,9 +1027,11 @@ object VectorIndex {
     * and no float reaches the output), exactly as the top-k tiers emit
     * theirs. Result size is
     * data-dependent by definition — callers bound it with `minCosine`
-    * (and `nProbe`), not `k`. APPROXIMATE like every IVF probe: a
+    * (and `probe`), not `k`; a [[Similarity.Mass]] budget matters even
+    * more here than for top-k, since the probe's I/O bound is the ONLY
+    * cost knob the caller holds. APPROXIMATE like every IVF probe: a
     * neighbor above the bar whose list is unprobed is missed — recall
-    * rides the same nProbe knob the top-k tiers measure.
+    * rides the same `probe` the top-k tiers measure.
     */
   def probeIvfRange(
       spark: SparkSession,
@@ -1149,16 +1040,11 @@ object VectorIndex {
       id: Column,
       vec: Column,
       minCosine: Double,
-      nProbe: Int = 2,
-      where: Option[Column] = None,
-      massPpm: Option[Long] = None): DataFrame = {
-    // massPpm swaps the fixed-nProbe selection for the mass budget — for
-    // range search the budget matters even more than for top-k: the
-    // result set is data-dependent, so the probe's I/O bound is the ONLY
-    // cost knob the caller holds
+      probe: Probe = Nearest(2),
+      where: Option[Column] = None): DataFrame = {
     val meta = manifestOf(path)
     val (probed, ids) = selectLists(spark, path, meta, queries, id, vec,
-      nProbe, massPpm)
+      probe, meta.counts.listSizes)
     // membership on the integer score itself (`udot ≥ minCosine·2⁴⁰`): a
     // candidate AT the bar must never hinge on a float boundary
     Similarity.rescore(prunedLists(spark, path, meta, ids, where),
@@ -1314,14 +1200,14 @@ object VectorIndex {
       path: String,
       onResults: (DataFrame, Long) => Unit,
       k: Int = 10,
-      nProbe: Int = 2,
+      probe: Probe = Nearest(2),
       where: Option[Column] = None): org.apache.spark.sql.streaming.StreamingQuery =
     queries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty)
           onResults(probeIvfIndex(batch.sparkSession, path, batch, id, vec,
-            k, nProbe, where), batchId)
+            k, probe, where), batchId)
       }
       .start()
 
@@ -1332,23 +1218,22 @@ object VectorIndex {
     * the vector), the pool survivors are broadcast back onto the same
     * pruned partitions to fetch full vectors for the exact rescore, and
     * the result is bit-identical to [[Similarity.ivfPqTopK]] over the
-    * same geometry (spec-pinned). The pool floor `max(pool, k·nProbe)`
-    * matches `ivfPqTopK`'s enforced contract.
+    * same geometry and `probe` (spec-pinned). The pool floor — `k·nProbe`
+    * under [[Similarity.Nearest]], `k` under a budget — matches
+    * `ivfPqTopK`'s enforced contract.
     *
     * r18: serves RESIDUAL stores transparently (`writeIvfIndex(pq =
     * true, pqResidual = true)` — codes over `v − centroid(list)`, the
     * IVFADC layout §16c showed clustered corpora need): the manifest
     * routes the LUT to per-(query, probed-list) residual space. And both
-    * adaptive knobs compose:
-    * `massPpm` replaces the fixed nProbe with the mass budget over the
+    * adaptive knobs compose: a [[Similarity.Mass]] probe over the
     * manifest's sizes (the budget then bounds the BYTES the codes scan
-    * touches), `poolPpm` replaces the fixed pool with the candidate-
-    * scaled cut — a residual store probed with both is the store-served
-    * s33 (shared oracle, s35).
+    * touches) and `poolPpm` in place of the fixed pool — a residual
+    * store probed with both is the store-served s33 (shared oracle, s35).
     *
     * `where` pre-filters candidates on the store's inline payload
     * columns, exactly as in [[probeIvfIndex]] — applied BEFORE the ADC
-    * pool cut, so the pool holds `max(pool, k·nProbe)` MATCHING candidates (filtering
+    * pool cut, so the pool holds `max(pool, floor)` MATCHING candidates (filtering
     * after the cut would shrink the rescore pool below its floor). The
     * candidate scan then reads the predicate's columns beside
     * `(vec_id, codes)`; payload stays unread when `where` is empty.
@@ -1360,20 +1245,16 @@ object VectorIndex {
       id: Column,
       vec: Column,
       k: Int = 10,
-      nProbe: Int = 2,
+      probe: Probe = Nearest(2),
       pool: Int = 50,
       where: Option[Column] = None,
-      massPpm: Option[Long] = None,
       poolPpm: Option[Long] = None): DataFrame = {
     val meta = manifestOf(path)
     require(meta.pq, s"store at $path was written without PQ codes — " +
       "probe with probeIvfIndex or rebuild with pq = true")
     val cb = readCodebook(spark, path, meta)
-    // probe selection: fixed nProbe in the store's own geometry, or the
-    // mass budget over the manifest's sizes (see [[probeIvfIndexAdaptive]]
-    // — same rule, so massPpm bounds the bytes the codes scan touches)
-    val (probed, ids) =
-      selectLists(spark, path, meta, queries, id, vec, nProbe, massPpm)
+    val (probed, ids) = selectLists(spark, path, meta, queries, id, vec,
+      probe, meta.counts.listSizes)
     // residual stores hold codes over v − centroid, so the LUT is
     // per-(query, probed list) over qv − centroid
     val probedLut = Similarity.withLut(probed,
@@ -1386,7 +1267,8 @@ object VectorIndex {
       lists.select(col("c_id"), col("vec_id"), col("codes"))
         .join(broadcast(probedLut), Seq("c_id"))
         .filter(col("q_id") =!= col("vec_id")),
-      Nil, meta.numSubspaces, meta.numCodes, k, pool, k * nProbe, poolPpm)
+      Nil, meta.numSubspaces, meta.numCodes, k, pool, probe.poolFloor(k),
+      poolPpm)
     // rescore fetch: pool·|queries| rows broadcast back onto the SAME
     // pruned partitions — full vectors are read only for survivors
     // (pool rows already satisfy `where`; re-filtering here would only

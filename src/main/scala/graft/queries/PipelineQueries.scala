@@ -3,6 +3,7 @@ package graft.queries
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import graft.operators.{Corpus, Dedup, Multimodal, Similarity, VectorIndex}
+import graft.operators.Similarity.{Hier, HierMass, Mass, Nearest}
 import graft.sources.Sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -546,7 +547,7 @@ object PipelineQueries {
       val k = math.ceil(math.sqrt(embeddingsCount(s, dir, ver).toDouble)).toInt
       val superStride = math.ceil(math.sqrt(k.toDouble)).toInt
       VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-        hierarchical = true, superStride = superStride, sProbe = 2,
+        hier = Some(Hier(superStride, 2)),
         centroids = Some(Similarity.kmeansCentroids(
           Similarity.kmeansTrain(emb.filter(col("vec_id") % 5 === 0),
             col("vec_id"), col("embedding"),
@@ -787,16 +788,17 @@ object PipelineQueries {
 
   private val s3: Q = (s, dir) =>
     Similarity.ivfTopK(t(s, dir, "embeddings"), queriesDf(s, dir),
-      col("vec_id"), col("embedding"), k = 10, centroidStride = 50, nProbe = 2)
+      col("vec_id"), col("embedding"), k = 10, centroidStride = 50,
+      probe = Nearest(2))
 
   // s3 with hierarchical assignment on BOTH sides (list build + probe):
   // the rows × 256 flat assignment — 96% of s3's sf10 wall — drops to
   // rows × (16 + 2·16); sub-16-centroid test corpora degenerate to one
   // super-list (= exact flat), so the approximation only engages at scale
   private val s19: Q = (s, dir) =>
-    Similarity.ivfTopKHierarchical(t(s, dir, "embeddings"), queriesDf(s, dir),
-      col("vec_id"), col("embedding"), k = 10, centroidStride = 50, nProbe = 2,
-      maxCentroids = 256, superStride = 16, sProbe = 2)
+    Similarity.ivfTopK(t(s, dir, "embeddings"), queriesDf(s, dir),
+      col("vec_id"), col("embedding"), k = 10, centroidStride = 50,
+      probe = Nearest(2), hier = Some(Hier(16, 2)), maxCentroids = 256)
 
   // mass-adaptive probing: probe lists in centroid-cosine order until
   // the PRECEDING probed mass covers 15% of the corpus — the per-query
@@ -804,9 +806,9 @@ object PipelineQueries {
   // Zipf-clustered corpus because the heavy cluster spans dozens of
   // lists; the budget here is explicit mass, not a global constant)
   private val s32: Q = (s, dir) =>
-    Similarity.ivfTopKAdaptive(t(s, dir, "embeddings"), queriesDf(s, dir),
+    Similarity.ivfTopK(t(s, dir, "embeddings"), queriesDf(s, dir),
       col("vec_id"), col("embedding"), k = 10, centroidStride = 50,
-      massPpm = 150000L)
+      probe = Mass(150000L))
 
   // s14 with RESIDUAL encoding — Jégou's actual IVFADC (codes and
   // per-(query, probed-list) LUTs over v − centroid(list)): the variant
@@ -816,7 +818,7 @@ object PipelineQueries {
   private val s31: Q = (s, dir) =>
     Similarity.ivfPqTopK(t(s, dir, "embeddings"), queriesDf(s, dir),
       col("vec_id"), col("embedding"), k = 10, centroidStride = 50,
-      nProbe = 2, numSubspaces = 8, numCodes = 16, codeStride = 16,
+      probe = Nearest(2), numSubspaces = 8, numCodes = 16, codeStride = 16,
       pool = 50, residual = true)
 
   // the FULL adaptive composition — both halves of §16c closed in one
@@ -832,7 +834,7 @@ object PipelineQueries {
     Similarity.ivfPqTopK(t(s, dir, "embeddings"), queriesDf(s, dir),
       col("vec_id"), col("embedding"), k = 10, centroidStride = 50,
       numSubspaces = 8, numCodes = 16, codeStride = 16, residual = true,
-      massPpm = Some(S33MassPpm), poolPpm = Some(S33PoolPpm))
+      probe = Mass(S33MassPpm), poolPpm = Some(S33PoolPpm))
 
   // s19 with MASS-ADAPTIVE probing at both levels — one budget, two
   // applications of s32's gate: supers probed while the preceding
@@ -844,18 +846,18 @@ object PipelineQueries {
   // what the leaf stage can even see. Query-time knob only: the stored
   // lists are s19's (index-compatible).
   private val s37: Q = (s, dir) =>
-    Similarity.ivfTopKHierarchicalAdaptive(t(s, dir, "embeddings"),
+    Similarity.ivfTopK(t(s, dir, "embeddings"),
       queriesDf(s, dir), col("vec_id"), col("embedding"), k = 10,
-      centroidStride = 50, superStride = 16, sProbe = 2,
-      massPpm = S33MassPpm)
+      centroidStride = 50, probe = HierMass(S33MassPpm),
+      hier = Some(Hier(16, 2)))
 
   // s14 with the same two-level assignment on both sides — the PQ
   // encode/ADC/pool-rescore tail is untouched
   private val s20: Q = (s, dir) =>
     Similarity.ivfPqTopK(t(s, dir, "embeddings"), queriesDf(s, dir),
-      col("vec_id"), col("embedding"), k = 10, centroidStride = 50, nProbe = 2,
-      numSubspaces = 8, numCodes = 16, codeStride = 16, pool = 50,
-      hierarchical = true, superStride = 16, sProbe = 2)
+      col("vec_id"), col("embedding"), k = 10, centroidStride = 50,
+      probe = Nearest(2), numSubspaces = 8, numCodes = 16, codeStride = 16,
+      pool = 50, hier = Some(Hier(16, 2)))
 
   // ------------------------------------------------------------------
   // Persisted vector index (VectorIndex store queries)
@@ -952,7 +954,7 @@ object PipelineQueries {
     val path = ivfStorePath(s, dir, "hier")
     VectorIndex.writeIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
       col("embedding"), path, centroidStride = 50, maxCentroids = 256,
-      hierarchical = true, superStride = 16, sProbe = 2)
+      hier = Some(Hier(16, 2)))
     VectorIndex.storedLists(s, path)
       .groupBy(col("c_id").cast("long").as("c_id"))
       .agg(count(lit(1)).as("n_vecs"))
@@ -967,9 +969,9 @@ object PipelineQueries {
   private val s24: Q = (s, dir) => {
     val path = ivfStorePath(s, dir, "hier")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
-      col("embedding"), path, hierarchical = true)
+      col("embedding"), path, hier = Some(Hier(16, 2)))
     VectorIndex.probeIvfIndex(s, path, queriesDf(s, dir), col("vec_id"),
-      col("embedding"), k = 10, nProbe = 2)
+      col("embedding"), k = 10, probe = Nearest(2))
   }
 
   // the store-served s37: the hier store (s23/s24's artifact, same
@@ -983,9 +985,9 @@ object PipelineQueries {
   private val s38: Q = (s, dir) => {
     val path = ivfStorePath(s, dir, "hier")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
-      col("embedding"), path, hierarchical = true)
-    VectorIndex.probeIvfIndexHierAdaptive(s, path, queriesDf(s, dir),
-      col("vec_id"), col("embedding"), k = 10, massPpm = S33MassPpm)
+      col("embedding"), path, hier = Some(Hier(16, 2)))
+    VectorIndex.probeIvfIndex(s, path, queriesDf(s, dir),
+      col("vec_id"), col("embedding"), k = 10, probe = HierMass(S33MassPpm))
   }
 
   // the persisted-store probe under s32's mass budget — the steady-state
@@ -999,9 +1001,9 @@ object PipelineQueries {
   private val s34: Q = (s, dir) => {
     val path = ivfStorePath(s, dir, "flat")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
-      col("embedding"), path, hierarchical = false)
-    VectorIndex.probeIvfIndexAdaptive(s, path, queriesDf(s, dir),
-      col("vec_id"), col("embedding"), k = 10, massPpm = 150000L)
+      col("embedding"), path, hier = None)
+    VectorIndex.probeIvfIndex(s, path, queriesDf(s, dir),
+      col("vec_id"), col("embedding"), k = 10, probe = Mass(150000L))
   }
 
   // the store-served s33: a RESIDUAL-codes PQ store (Jégou's IVFADC as
@@ -1013,10 +1015,10 @@ object PipelineQueries {
   private val s35: Q = (s, dir) => {
     val path = ivfStorePath(s, dir, "pqr")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
-      col("embedding"), path, hierarchical = false, pq = true,
+      col("embedding"), path, hier = None, pq = true,
       pqResidual = true)
     VectorIndex.probeIvfPqIndex(s, path, queriesDf(s, dir), col("vec_id"),
-      col("embedding"), k = 10, massPpm = Some(150000L),
+      col("embedding"), k = 10, probe = Mass(150000L),
       poolPpm = Some(500000L))
   }
 
@@ -1026,9 +1028,9 @@ object PipelineQueries {
   private val s36: Q = (s, dir) => {
     val path = ivfStorePath(s, dir, "flat")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
-      col("embedding"), path, hierarchical = false)
+      col("embedding"), path, hier = None)
     VectorIndex.probeIvfRange(s, path, queriesDf(s, dir), col("vec_id"),
-      col("embedding"), minCosine = 0.25, massPpm = Some(150000L))
+      col("embedding"), minCosine = 0.25, probe = Mass(150000L))
   }
 
   // FILTERED ANN under the FILTERED mass budget (BASELINE §18a): the
@@ -1045,7 +1047,7 @@ object PipelineQueries {
   private val s40: Q = (s, dir) => {
     val path = ivfStorePath(s, dir, "fila")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
-      col("embedding"), path, hierarchical = false,
+      col("embedding"), path, hier = None,
       payload = Seq(col("label")), statsCols = Seq("label"))
     VectorIndex.probeIvfIndexFiltered(s, path, queriesDf(s, dir),
       col("vec_id"), col("embedding"), statsCol = "label",
@@ -1062,11 +1064,11 @@ object PipelineQueries {
     val path = ivfStorePath(s, dir, "app")
     val emb = t(s, dir, "embeddings")
     VectorIndex.writeIvfIndex(emb.filter(col("vec_id") % 7 =!= 0),
-      col("vec_id"), col("embedding"), path, hierarchical = true)
+      col("vec_id"), col("embedding"), path, hier = Some(Hier(16, 2)))
     VectorIndex.appendToIvfIndex(emb.filter(col("vec_id") % 7 === 0),
       col("vec_id"), col("embedding"), path)
     VectorIndex.probeIvfIndex(s, path, queriesDf(s, dir), col("vec_id"),
-      col("embedding"), k = 10, nProbe = 2)
+      col("embedding"), k = 10, probe = Nearest(2))
   }
 
   // store maintenance as a standing contract: build on the %7!=0 slice,
@@ -1078,12 +1080,12 @@ object PipelineQueries {
     val path = ivfStorePath(s, dir, "cmp")
     val emb = t(s, dir, "embeddings")
     VectorIndex.writeIvfIndex(emb.filter(col("vec_id") % 7 =!= 0),
-      col("vec_id"), col("embedding"), path, hierarchical = true)
+      col("vec_id"), col("embedding"), path, hier = Some(Hier(16, 2)))
     VectorIndex.appendToIvfIndex(emb.filter(col("vec_id") % 7 === 0),
       col("vec_id"), col("embedding"), path)
     VectorIndex.compactIvfIndex(s, path)
     VectorIndex.probeIvfIndex(s, path, queriesDf(s, dir), col("vec_id"),
-      col("embedding"), k = 10, nProbe = 2)
+      col("embedding"), k = 10, probe = Nearest(2))
   }
 
   // assignment-fidelity curve for the two-level assignment: ppm of rows
@@ -1129,9 +1131,9 @@ object PipelineQueries {
   private val s27: Q = (s, dir) => {
     val path = ivfStorePath(s, dir, "pq")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
-      col("embedding"), path, hierarchical = true, pq = true)
+      col("embedding"), path, hier = Some(Hier(16, 2)), pq = true)
     VectorIndex.probeIvfPqIndex(s, path, queriesDf(s, dir), col("vec_id"),
-      col("embedding"), k = 10, nProbe = 2, pool = 50)
+      col("embedding"), k = 10, probe = Nearest(2), pool = 50)
   }
 
   // METADATA-FILTERED vector search against the persisted store: the
@@ -1143,10 +1145,10 @@ object PipelineQueries {
   private val s29: Q = (s, dir) => {
     val path = ivfStorePath(s, dir, "fil")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
-      col("embedding"), path, hierarchical = true,
+      col("embedding"), path, hier = Some(Hier(16, 2)),
       payload = Seq(col("label")))
     VectorIndex.probeIvfIndex(s, path, queriesDf(s, dir), col("vec_id"),
-      col("embedding"), k = 10, nProbe = 2,
+      col("embedding"), k = 10, probe = Nearest(2),
       where = Some(col("label") < 4))
   }
 
@@ -1157,9 +1159,9 @@ object PipelineQueries {
   private val s30: Q = (s, dir) => {
     val path = ivfStorePath(s, dir, "hier")
     VectorIndex.ensureIvfIndex(t(s, dir, "embeddings"), col("vec_id"),
-      col("embedding"), path, hierarchical = true)
+      col("embedding"), path, hier = Some(Hier(16, 2)))
     VectorIndex.probeIvfRange(s, path, queriesDf(s, dir), col("vec_id"),
-      col("embedding"), minCosine = 0.25, nProbe = 2)
+      col("embedding"), minCosine = 0.25, probe = Nearest(2))
   }
 
   // int8 quantize → integer-dot candidate ranking → exact rescore of the
@@ -1187,7 +1189,7 @@ object PipelineQueries {
   // production loop (train → index → probe) as one declarative plan
   private val s10: Q = (s, dir) =>
     Similarity.ivfTopK(t(s, dir, "embeddings"), queriesDf(s, dir),
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2,
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2),
       centroids = Some(Similarity.kmeansCentroids(
         Similarity.kmeansTrain(t(s, dir, "embeddings"),
           col("vec_id"), col("embedding"), k = 8, iters = 2, seedStride = 50))))
@@ -1200,8 +1202,8 @@ object PipelineQueries {
   // fixed, s32 pins stride + adaptive; this row pins that the two
   // compose oracle-exactly (train → index → budget-probe end-to-end)
   private val s39: Q = (s, dir) =>
-    Similarity.ivfTopKAdaptive(t(s, dir, "embeddings"), queriesDf(s, dir),
-      col("vec_id"), col("embedding"), k = 10, massPpm = S33MassPpm,
+    Similarity.ivfTopK(t(s, dir, "embeddings"), queriesDf(s, dir),
+      col("vec_id"), col("embedding"), k = 10, probe = Mass(S33MassPpm),
       centroids = Some(Similarity.kmeansCentroids(
         Similarity.kmeansTrain(t(s, dir, "embeddings"),
           col("vec_id"), col("embedding"), k = 8, iters = 2, seedStride = 50))))
@@ -1212,8 +1214,9 @@ object PipelineQueries {
   // codebook comes from the FULL corpus (probe-independent stored codes)
   private val s14: Q = (s, dir) =>
     Similarity.ivfPqTopK(t(s, dir, "embeddings"), queriesDf(s, dir),
-      col("vec_id"), col("embedding"), k = 10, centroidStride = 50, nProbe = 2,
-      numSubspaces = 8, numCodes = 16, codeStride = 16, pool = 50)
+      col("vec_id"), col("embedding"), k = 10, centroidStride = 50,
+      probe = Nearest(2), numSubspaces = 8, numCodes = 16, codeStride = 16,
+      pool = 50)
 
   // lexical search over the corpus: rare-term-weighted exact-integer
   // relevance ("dup" hits ~5% of docs and dominates; "spark"/"merge"
@@ -1563,12 +1566,12 @@ object PipelineQueries {
     "s8_recall_eval" -> ((s, dir) => Similarity.recallAtK(
       s1(s, dir), s2(s, dir), k = 10)),
     // same eval over the capped-IVF tier: the 256-list recall contract
-    // (ivfTopK scaladoc, BASELINE.md §9) hash-checked every round
+    // (Similarity.Nearest scaladoc, BASELINE.md §9) hash-checked every round
     "s17_recall_ivf" -> ((s, dir) => Similarity.recallAtK(
       s1(s, dir), s3(s, dir), k = 10)),
     // and over the IVF×PQ tier, whose recall is pool-bound past ~8
-    // probes (the measured nProbe=32 dip, ivfPqTopK scaladoc) — pinned
-    // here at the benched nProbe=2/pool=50 config
+    // probes (the measured nProbe=32 dip, Similarity.Nearest scaladoc) —
+    // pinned here at the benched nProbe=2/pool=50 config
     "s18_recall_ivfpq" -> ((s, dir) => Similarity.recallAtK(
       s1(s, dir), s14(s, dir), k = 10)),
     // the same standing-recall contract over the HIERARCHICAL tiers —
@@ -3636,8 +3639,8 @@ object PipelineQueries {
     // parity-by-construction claim as s24
     "s27_ann_ivfpq_store" -> sqlS20HierIvfPq,
     // recall@10 of the capped-IVF ranking vs exact — the s8 pattern over
-    // s3, so the 256-list recall contract (ivfTopK scaladoc, BASELINE.md
-    // §9) is hash-checked every round, not just probed once
+    // s3, so the 256-list recall contract (Similarity.Nearest scaladoc,
+    // BASELINE.md §9) is hash-checked every round, not just probed once
     "s17_recall_ivf" ->
       s"""WITH exact AS (SELECT * FROM ($sqlS1Exact)),
          |approx AS (SELECT * FROM ($sqlS3Ivf))

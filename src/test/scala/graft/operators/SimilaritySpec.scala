@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.operators.Similarity.{Hier, HierMass, Mass, Nearest}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -49,7 +50,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("IVF top-k probes lists and never returns the query itself") {
     val q = vecs.filter(col("vec_id") < 2)
     val rows = Similarity.ivfTopK(vecs, q, col("vec_id"), col("embedding"),
-      k = 3, centroidStride = 2, nProbe = 2)
+      k = 3, centroidStride = 2, probe = Nearest(2))
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSeq
     assert(rows.nonEmpty)
     assert(rows.forall { case (qid, vid) => qid != vid })
@@ -147,9 +148,18 @@ class SimilaritySpec extends AnyFunSuite {
     // keeps a full top-10 per query — the dip configuration (pool
     // binding as nProbe grows) is no longer constructible silently
     val perQuery = Similarity.ivfPqTopK(emb, q, col("vec_id"),
-        col("embedding"), k = 10, nProbe = 2, pool = 1)
+        col("embedding"), k = 10, probe = Nearest(2), pool = 1)
       .groupBy("q_id").count().select("count").as[Long].collect().toSeq
     assert(perQuery.nonEmpty && perQuery.forall(_ == 10L))
+    // under a mass budget there is no probe count: the floor is k, the
+    // poolPpm rule's floor — pool = 1 keeps exactly k candidates, the
+    // same cut as pool = k, and still a full top-10 per query
+    def ranked(pool: Int) = Similarity.ivfPqTopK(emb, q, col("vec_id"),
+        col("embedding"), k = 10, probe = Mass(150000L), pool = pool)
+      .select("q_id", "vec_id", "rn").as[(Long, Long, Long)].collect().toSet
+    val floored = ranked(1)
+    assert(floored.groupBy(_._1).values.map(_.size).toSet == Set(10))
+    assert(floored == ranked(10))
   }
 
   test("ivfPqTopK residual mode: well-formed rankings, and the pool=all endpoint equals exact IVF") {
@@ -160,7 +170,7 @@ class SimilaritySpec extends AnyFunSuite {
     // residual codes + per-(query, list) residual LUTs still produce one
     // dense top-k ranking per query with no self-matches
     val rows = Similarity.ivfPqTopK(emb, q, col("vec_id"), col("embedding"),
-        k = 10, nProbe = 2, residual = true)
+        k = 10, probe = Nearest(2), residual = true)
       .select("q_id", "vec_id", "rn").as[(Long, Long, Long)].collect()
     assert(rows.groupBy(_._1).keySet == Set(0L, 1L, 2L))
     assert(rows.forall { case (qid, vid, _) => qid != vid })
@@ -170,10 +180,10 @@ class SimilaritySpec extends AnyFunSuite {
     // residual tier's result set must equal ivfTopK's exact-rescore
     // ranking at the same nProbe (the §16c ladder's logical endpoint)
     val all = Similarity.ivfPqTopK(emb, q, col("vec_id"), col("embedding"),
-        k = 10, nProbe = 2, pool = 1000000, residual = true)
+        k = 10, probe = Nearest(2), pool = 1000000, residual = true)
       .select("q_id", "vec_id", "rn").as[(Long, Long, Long)].collect().toSet
     val ivf = Similarity.ivfTopK(emb, q, col("vec_id"), col("embedding"),
-        k = 10, nProbe = 2)
+        k = 10, probe = Nearest(2))
       .select("q_id", "vec_id", "rn").as[(Long, Long, Long)].collect().toSet
     assert(all == ivf, "pool=all residual PQ must coincide with exact IVF")
   }
@@ -188,16 +198,16 @@ class SimilaritySpec extends AnyFunSuite {
     // massPpm = 1e6: the running-mass gate can never stop before every
     // list is probed, so the candidate set is the whole corpus and the
     // ranking must equal the exact brute force
-    val all = rows(Similarity.ivfTopKAdaptive(emb, q, col("vec_id"),
-      col("embedding"), k = 10, massPpm = 1000000L))
+    val all = rows(Similarity.ivfTopK(emb, q, col("vec_id"),
+      col("embedding"), k = 10, probe = Mass(1000000L)))
     val brute = rows(Similarity.bruteForceTopK(emb, q, col("vec_id"),
       col("embedding"), k = 10))
     assert(all == brute, "full-budget adaptive must equal brute force")
     // massPpm = 1: cum_before of rank 1 is 0 < target, so exactly the
     // best list is probed — results exist for every query (the always-≥1
     // guarantee), each a dense rank prefix
-    val one = Similarity.ivfTopKAdaptive(emb, q, col("vec_id"),
-      col("embedding"), k = 10, massPpm = 1L)
+    val one = Similarity.ivfTopK(emb, q, col("vec_id"),
+      col("embedding"), k = 10, probe = Mass(1L))
       .select("q_id", "rn").as[(Long, Long)].collect()
     assert(one.map(_._1).toSet == Set(0L, 1L, 2L))
     one.groupBy(_._1).values.foreach(g =>
@@ -215,15 +225,17 @@ class SimilaritySpec extends AnyFunSuite {
     // is always < N), so every super and every leaf list is probed and
     // the keep=1 assignment partitions the corpus — must equal brute
     // force exactly, hier filing notwithstanding
-    val all = rows(Similarity.ivfTopKHierarchicalAdaptive(emb, q,
-      col("vec_id"), col("embedding"), k = 10, massPpm = 1000000L))
+    val all = rows(Similarity.ivfTopK(emb, q,
+      col("vec_id"), col("embedding"), k = 10, probe = HierMass(1000000L),
+      hier = Some(Hier(16, 2))))
     val brute = rows(Similarity.bruteForceTopK(emb, q, col("vec_id"),
       col("embedding"), k = 10))
     assert(all == brute, "full-budget hier-adaptive must equal brute force")
     // massPpm = 1: rank-1 survives at BOTH levels (preceding mass 0), so
     // every query probes ≥ 1 list and emits a dense rank prefix
-    val one = Similarity.ivfTopKHierarchicalAdaptive(emb, q, col("vec_id"),
-      col("embedding"), k = 10, massPpm = 1L)
+    val one = Similarity.ivfTopK(emb, q, col("vec_id"),
+      col("embedding"), k = 10, probe = HierMass(1L),
+      hier = Some(Hier(16, 2)))
       .select("q_id", "rn").as[(Long, Long)].collect()
     assert(one.map(_._1).toSet == Set(0L, 1L, 2L))
     one.groupBy(_._1).values.foreach(g =>
@@ -235,8 +247,9 @@ class SimilaritySpec extends AnyFunSuite {
     // budget-of-mass demands OR the whole corpus. Weaker observable
     // proxy (no probe introspection surface): every query still emits a
     // full k-deep dense prefix at the pinned 15% budget
-    val mid = Similarity.ivfTopKHierarchicalAdaptive(emb, q, col("vec_id"),
-      col("embedding"), k = 10, massPpm = 150000L)
+    val mid = Similarity.ivfTopK(emb, q, col("vec_id"),
+      col("embedding"), k = 10, probe = HierMass(150000L),
+      hier = Some(Hier(16, 2)))
       .select("q_id", "rn").as[(Long, Long)].collect()
     assert(mid.map(_._1).toSet == Set(0L, 1L, 2L))
     mid.groupBy(_._1).values.foreach(g =>
@@ -252,19 +265,19 @@ class SimilaritySpec extends AnyFunSuite {
       df.select("q_id", "vec_id", "rn").as[(Long, Long, Long)].collect().toSet
     // poolPpm = 1e6: ern ≤ cand_n always holds, so EVERY probed candidate
     // is rescored exactly — the full-adaptive PQ tier must coincide with
-    // ivfTopKAdaptive at the same mass budget (§16c's pool=∞ identity,
+    // ivfTopK's Mass probe at the same budget (§16c's pool=∞ identity,
     // re-pinned as the poolPpm endpoint)
     val pqAll = rows(Similarity.ivfPqTopK(emb, q, col("vec_id"),
       col("embedding"), k = 10, residual = true,
-      massPpm = Some(150000L), poolPpm = Some(1000000L)))
-    val ivfAd = rows(Similarity.ivfTopKAdaptive(emb, q, col("vec_id"),
-      col("embedding"), k = 10, massPpm = 150000L))
+      probe = Mass(150000L), poolPpm = Some(1000000L)))
+    val ivfAd = rows(Similarity.ivfTopK(emb, q, col("vec_id"),
+      col("embedding"), k = 10, probe = Mass(150000L)))
     assert(pqAll == ivfAd && pqAll.nonEmpty,
       "full-fraction adaptive pool must equal the exact rescore of the probed set")
     // poolPpm = 1: only the k-floor survives the cut — each query still
     // gets a dense rank prefix (never an empty or ragged result set)
     val tiny = Similarity.ivfPqTopK(emb, q, col("vec_id"), col("embedding"),
-        k = 10, residual = true, massPpm = Some(150000L), poolPpm = Some(1L))
+        k = 10, residual = true, probe = Mass(150000L), poolPpm = Some(1L))
       .select("q_id", "rn").as[(Long, Long)].collect()
     assert(tiny.map(_._1).toSet == Set(0L, 1L, 2L))
     tiny.groupBy(_._1).values.foreach(g =>
@@ -301,16 +314,32 @@ class SimilaritySpec extends AnyFunSuite {
       rejects("k")(Similarity.bruteForceTopK(vecs, q, id, v, k = bad))
       rejects("k")(Similarity.ivfTopK(vecs, q, id, v, k = bad, centroidStride = 2))
       rejects("nProbe")(Similarity.ivfTopK(vecs, q, id, v, centroidStride = 2,
-        nProbe = bad))
-      rejects("nProbe")(Similarity.ivfTopKHierarchical(vecs, q, id, v,
-        centroidStride = 2, nProbe = bad))
-      rejects("k")(Similarity.ivfTopKAdaptive(vecs, q, id, v, k = bad,
-        centroidStride = 2))
+        probe = Nearest(bad)))
+      rejects("nProbe")(Similarity.ivfTopK(vecs, q, id, v,
+        centroidStride = 2, probe = Nearest(bad), hier = Some(Hier(16, 2))))
+      rejects("k")(Similarity.ivfTopK(vecs, q, id, v, k = bad,
+        centroidStride = 2, probe = Mass(150000L)))
       rejects("pool")(Similarity.pqTopK(vecs, q, id, v, numSubspaces = 1,
         numCodes = 2, codebook = cb, pool = bad))
       rejects("pool")(Similarity.ivfPqTopK(vecs, q, id, v, centroidStride = 2,
         numSubspaces = 1, numCodes = 2, codebook = cb, pool = bad))
     }
+    def rejectsNaming(arg: String)(call: => DataFrame): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(arg), e.getMessage)
+    }
+    for (bad <- Seq(0L, 1000001L)) {
+      rejectsNaming("massPpm")(Similarity.ivfTopK(vecs, q, id, v,
+        centroidStride = 2, probe = Mass(bad)))
+      rejectsNaming("massPpm")(Similarity.ivfTopK(vecs, q, id, v,
+        centroidStride = 2, probe = HierMass(bad), hier = Some(Hier(16, 2))))
+    }
+    // a two-level budget on a flat geometry has no super filing to probe
+    rejectsNaming("hier")(Similarity.ivfTopK(vecs, q, id, v,
+      centroidStride = 2, probe = HierMass(150000L)))
+    rejectsNaming("hier")(Similarity.ivfPqTopK(vecs, q, id, v,
+      centroidStride = 2, numSubspaces = 1, numCodes = 2, codebook = cb,
+      probe = HierMass(150000L)))
   }
 
   test("IVF index stored partitionBy(c_id): probing = partition pruning (the 100 TB path)") {
@@ -446,7 +475,7 @@ class SimilaritySpec extends AnyFunSuite {
     val exact = sets(Similarity.bruteForceTopK(emb, q, col("vec_id"), col("embedding"), k = 10))
     def recall(nProbe: Int): Double = {
       val ivf = sets(Similarity.ivfTopK(emb, q, col("vec_id"), col("embedding"),
-        k = 10, centroidStride = 50, nProbe = nProbe))
+        k = 10, centroidStride = 50, probe = Nearest(nProbe)))
       val rs = exact.map { case (qid, ex) =>
         ivf.getOrElse(qid, Set.empty).intersect(ex).size.toDouble / ex.size
       }
@@ -813,7 +842,7 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.kmeansTrain(emb, col("vec_id"), col("embedding"),
         k = 8, iters = 2, seedStride = 50))
     val rows = Similarity.ivfTopK(emb, q, col("vec_id"), col("embedding"),
-      k = 5, nProbe = 2, centroids = Some(trained))
+      k = 5, probe = Nearest(2), centroids = Some(trained))
       .select("q_id", "vec_id", "rn").as[(Long, Long, Long)].collect()
     assert(rows.nonEmpty)
     assert(rows.forall { case (qid, vid, _) => qid != vid })

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.TestSpark
 import graft.TestSpark.{jobsOf, writeStageTasksOf}
+import graft.operators.Similarity.{Hier, HierMass, Mass, Nearest}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -47,14 +48,13 @@ class VectorIndexSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfstore")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      centroidStride = 50, maxCentroids = 256, hierarchical = true,
-      superStride = 16, sProbe = 2)
+      centroidStride = 50, maxCentroids = 256, hier = Some(Hier(16, 2)))
     assert(VectorIndex.isComplete(path))
     val stored = VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2)
-    val inflight = Similarity.ivfTopKHierarchical(emb, queries,
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2))
+    val inflight = Similarity.ivfTopK(emb, queries,
       col("vec_id"), col("embedding"), k = 10, centroidStride = 50,
-      nProbe = 2, maxCentroids = 256, superStride = 16, sProbe = 2)
+      probe = Nearest(2), hier = Some(Hier(16, 2)), maxCentroids = 256)
     assert(ranking(stored) == ranking(inflight) && ranking(stored).nonEmpty)
   }
 
@@ -62,11 +62,11 @@ class VectorIndexSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfflat")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false)
+      hier = None)
     val stored = VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2)
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2))
     val inflight = Similarity.ivfTopK(emb, queries, col("vec_id"),
-      col("embedding"), k = 10, centroidStride = 50, nProbe = 2)
+      col("embedding"), k = 10, centroidStride = 50, probe = Nearest(2))
     assert(ranking(stored) == ranking(inflight) && ranking(stored).nonEmpty)
   }
 
@@ -80,7 +80,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // ONE query × nProbe=2 → at most 2 of the store's lists may be read
     val probe = VectorIndex.probeIvfIndex(spark, path,
       emb.filter(col("vec_id") === 0), col("vec_id"), col("embedding"),
-      k = 10, nProbe = 2)
+      k = 10, probe = Nearest(2))
     // collect(), not a noop write: the write would execute a FRESH
     // QueryExecution and leave probe's own scan metrics at 0, making the
     // partition-count pin below pass vacuously (r18 fix — the adaptive
@@ -109,11 +109,11 @@ class VectorIndexSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfadapt")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false)
-    val stored = VectorIndex.probeIvfIndexAdaptive(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, massPpm = 150000L)
-    val inflight = Similarity.ivfTopKAdaptive(emb, queries, col("vec_id"),
-      col("embedding"), k = 10, centroidStride = 50, massPpm = 150000L)
+      hier = None)
+    val stored = VectorIndex.probeIvfIndex(spark, path, queries,
+      col("vec_id"), col("embedding"), k = 10, probe = Mass(150000L))
+    val inflight = Similarity.ivfTopK(emb, queries, col("vec_id"),
+      col("embedding"), k = 10, centroidStride = 50, probe = Mass(150000L))
     assert(ranking(stored) == ranking(inflight) && ranking(stored).nonEmpty)
   }
 
@@ -123,15 +123,15 @@ class VectorIndexSpec extends AnyFunSuite {
     // writeIvfIndex defaults ARE s37's geometry (hier, superStride 16,
     // sProbe 2, stride-50 centroids capped at 256)
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path)
-    val stored = VectorIndex.probeIvfIndexHierAdaptive(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, massPpm = 150000L)
-    val inflight = Similarity.ivfTopKHierarchicalAdaptive(emb, queries,
-      col("vec_id"), col("embedding"), k = 10, massPpm = 150000L)
+    val stored = VectorIndex.probeIvfIndex(spark, path, queries,
+      col("vec_id"), col("embedding"), k = 10, probe = HierMass(150000L))
+    val inflight = Similarity.ivfTopK(emb, queries,
+      col("vec_id"), col("embedding"), k = 10, probe = HierMass(150000L), hier = Some(Hier(16, 2)))
     assert(ranking(stored) == ranking(inflight) && ranking(stored).nonEmpty)
     // full budget through the store ≡ brute force (the s37 endpoint,
     // store-served)
-    val all = ranking(VectorIndex.probeIvfIndexHierAdaptive(spark, path,
-      queries, col("vec_id"), col("embedding"), k = 10, massPpm = 1000000L))
+    val all = ranking(VectorIndex.probeIvfIndex(spark, path,
+      queries, col("vec_id"), col("embedding"), k = 10, probe = HierMass(1000000L)))
     val brute = ranking(Similarity.bruteForceTopK(emb, queries,
       col("vec_id"), col("embedding"), k = 10))
     assert(all == brute)
@@ -139,10 +139,10 @@ class VectorIndexSpec extends AnyFunSuite {
     // never probed with an invented filing
     val flat = tmpStore("ivfhieradaptflat")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), flat,
-      hierarchical = false)
+      hier = None)
     intercept[IllegalArgumentException] {
-      VectorIndex.probeIvfIndexHierAdaptive(spark, flat, queries,
-        col("vec_id"), col("embedding"))
+      VectorIndex.probeIvfIndex(spark, flat, queries,
+        col("vec_id"), col("embedding"), probe = HierMass(150000L))
     }
   }
 
@@ -150,7 +150,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfadaptprune")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false)
+      hier = None)
     // the manifest's sizes = a recount of the persisted lists
     val persisted = VectorIndex.listSizes(spark, path)
       .select(col("c_id"), col("n_list"))
@@ -171,8 +171,8 @@ class VectorIndexSpec extends AnyFunSuite {
         persisted.values.sum, 150000L)
       .select("c_id").distinct().count()
     withoutAqe {
-      val probe = VectorIndex.probeIvfIndexAdaptive(spark, path, oneQ,
-        col("vec_id"), col("embedding"), k = 10, massPpm = 150000L)
+      val probe = VectorIndex.probeIvfIndex(spark, path, oneQ,
+        col("vec_id"), col("embedding"), k = 10, probe = Mass(150000L))
       // collect() executes THIS DataFrame's own executedPlan, so the
       // scan metrics below are populated (a noop write would build a
       // fresh QueryExecution and leave these at 0 — an equality pin
@@ -198,7 +198,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfsizesapp")
     VectorIndex.writeIvfIndex(emb.filter(col("vec_id") % 7 =!= 0),
-      col("vec_id"), col("embedding"), path, hierarchical = false)
+      col("vec_id"), col("embedding"), path, hier = None)
     val beforeN = VectorIndex.listSizes(spark, path)
       .agg(sum(col("n_list"))).as[Long].collect().head
     VectorIndex.appendToIvfIndex(emb.filter(col("vec_id") % 7 === 0),
@@ -213,13 +213,13 @@ class VectorIndexSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfpqres")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false, pq = true, pqResidual = true)
+      hier = None, pq = true, pqResidual = true)
     val stored = VectorIndex.probeIvfPqIndex(spark, path, queries,
       col("vec_id"), col("embedding"), k = 10,
-      massPpm = Some(150000L), poolPpm = Some(500000L))
+      probe = Mass(150000L), poolPpm = Some(500000L))
     val inflight = Similarity.ivfPqTopK(emb, queries, col("vec_id"),
       col("embedding"), k = 10, centroidStride = 50, residual = true,
-      massPpm = Some(150000L), poolPpm = Some(500000L))
+      probe = Mass(150000L), poolPpm = Some(500000L))
     assert(ranking(stored) == ranking(inflight) && ranking(stored).nonEmpty)
   }
 
@@ -227,14 +227,14 @@ class VectorIndexSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfpqmode")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false, pq = true)
+      hier = None, pq = true)
     assert(VectorIndex.isServable(spark, path, pqResidual = Some(false)))
     assert(!VectorIndex.isServable(spark, path, pqResidual = Some(true)),
       "a raw-codes store must not satisfy a residual-encoding requirement")
     // plain (encoding-agnostic) callers keep being served
     assert(VectorIndex.isServable(spark, path))
     VectorIndex.ensureIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false, pq = true, pqResidual = true)
+      hier = None, pq = true, pqResidual = true)
     assert(VectorIndex.isServable(spark, path, pqResidual = Some(true)),
       "ensure must have rebuilt the store in residual space")
   }
@@ -247,7 +247,7 @@ class VectorIndexSpec extends AnyFunSuite {
     VectorIndex.writeIvfIndex(
       emb.filter(col("vec_id") < 250 || col("vec_id") >= 300),
       col("vec_id"), col("embedding"), path,
-      hierarchical = false, pq = true, pqResidual = true)
+      hier = None, pq = true, pqResidual = true)
     VectorIndex.appendToIvfIndex(
       emb.filter(col("vec_id") >= 250 && col("vec_id") < 300),
       col("vec_id"), col("embedding"), path)
@@ -258,7 +258,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // codebook — every query still gets a dense rank prefix
     val got = VectorIndex.probeIvfPqIndex(spark, path, queries,
         col("vec_id"), col("embedding"), k = 10,
-        massPpm = Some(150000L), poolPpm = Some(500000L))
+        probe = Mass(150000L), poolPpm = Some(500000L))
       .select("q_id", "rn").as[(Long, Long)].collect()
     assert(got.map(_._1).toSet == queries.select("vec_id")
       .as[Long].collect().toSet)
@@ -270,21 +270,21 @@ class VectorIndexSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfrangeadapt")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false)
+      hier = None)
     def rows(df: DataFrame) = df.select("q_id", "vec_id")
       .as[(Long, Long)].collect().toSet
     val nLists = new java.io.File(s"$path/lists").listFiles()
       .count(_.getName.startsWith("c_id="))
     val full = rows(VectorIndex.probeIvfRange(spark, path, queries,
       col("vec_id"), col("embedding"), minCosine = 0.25,
-      massPpm = Some(1000000L)))
+      probe = Mass(1000000L)))
     val allFixed = rows(VectorIndex.probeIvfRange(spark, path, queries,
-      col("vec_id"), col("embedding"), minCosine = 0.25, nProbe = nLists))
+      col("vec_id"), col("embedding"), minCosine = 0.25, probe = Nearest(nLists)))
     assert(full == allFixed && full.nonEmpty,
       "full-budget adaptive range must equal the every-list fixed probe")
     val tiny = rows(VectorIndex.probeIvfRange(spark, path, queries,
       col("vec_id"), col("embedding"), minCosine = 0.25,
-      massPpm = Some(1L)))
+      probe = Mass(1L)))
     assert(tiny.subsetOf(full),
       "a smaller budget may only shrink the result set")
   }
@@ -297,7 +297,7 @@ class VectorIndexSpec extends AnyFunSuite {
     VectorIndex.writeIvfIndex(batch1, col("vec_id"), col("embedding"), path)
     VectorIndex.appendToIvfIndex(batch2, col("vec_id"), col("embedding"), path)
     val stored = VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2)
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2))
     // expected: the full corpus assigned against batch1's FIXED centroid
     // model (the append contract — the model never retrains), probed the
     // same way. Build it in-flight from the same parts.
@@ -328,14 +328,14 @@ class VectorIndexSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfpq")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = true, pq = true)
+      hier = Some(Hier(16, 2)), pq = true)
     val inflight = Similarity.ivfPqTopK(emb, queries, col("vec_id"),
-      col("embedding"), k = 10, centroidStride = 50, nProbe = 2,
+      col("embedding"), k = 10, centroidStride = 50, probe = Nearest(2),
       numSubspaces = 8, numCodes = 16, codeStride = 16, pool = 50,
-      hierarchical = true, superStride = 16, sProbe = 2)
+      hier = Some(Hier(16, 2)))
     withoutAqe {
     val stored = VectorIndex.probeIvfPqIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2, pool = 50)
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2), pool = 50)
     assert(ranking(stored) == ranking(inflight) && ranking(stored).nonEmpty)
     // the ADC scan must not read the vector column: its scan schema is
     // (vec_id, codes) only — column pruning × partition pruning is the
@@ -366,7 +366,7 @@ class VectorIndexSpec extends AnyFunSuite {
       .groupBy("c_id").count().as[(Long, Long)].collect().toMap
     assert(before.values.max > 1, s"appends produced no drizzle: $before")
     val probeBefore = ranking(VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2))
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2)))
     val plan = VectorIndex.compactIvfIndex(spark, path)
     // the returned plan covers exactly the lists that had mergeable bins
     val planned = plan.select("c_id").distinct().as[Long].collect().toSet
@@ -381,7 +381,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // rows and probe results are untouched
     assert(spark.read.parquet(s"$path/lists").count() == emb.count())
     val probeAfter = ranking(VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2))
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2)))
     assert(probeAfter == probeBefore && probeAfter.nonEmpty)
     // a store with nothing to merge is a no-op plan
     assert(VectorIndex.compactIvfIndex(spark, path).isEmpty)
@@ -429,11 +429,11 @@ class VectorIndexSpec extends AnyFunSuite {
     // PQ model (codebook) trained on the BUILD slice — appended rows must
     // be encoded with the stored model, never a retrained one
     VectorIndex.writeIvfIndex(base, col("vec_id"), col("embedding"), path,
-      hierarchical = true, pq = true)
+      hier = Some(Hier(16, 2)), pq = true)
     VectorIndex.appendToIvfIndex(emb.filter(col("vec_id") >= 250 && col("vec_id") < 300),
       col("vec_id"), col("embedding"), path)
     val beforeCompact = ranking(VectorIndex.probeIvfPqIndex(spark, path,
-      queries, col("vec_id"), col("embedding"), k = 10, nProbe = 2, pool = 50))
+      queries, col("vec_id"), col("embedding"), k = 10, probe = Nearest(2), pool = 50))
     assert(beforeCompact.nonEmpty)
     // every stored row (built + appended) carries codes of the same width
     val widths = spark.read.parquet(s"$path/lists")
@@ -443,7 +443,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // compaction rewrites files, codes ride along, probe is bit-identical
     VectorIndex.compactIvfIndex(spark, path)
     val afterCompact = ranking(VectorIndex.probeIvfPqIndex(spark, path,
-      queries, col("vec_id"), col("embedding"), k = 10, nProbe = 2, pool = 50))
+      queries, col("vec_id"), col("embedding"), k = 10, probe = Nearest(2), pool = 50))
     assert(afterCompact == beforeCompact)
   }
 
@@ -463,7 +463,7 @@ class VectorIndexSpec extends AnyFunSuite {
         got ++= res.select("q_id", "vec_id", "rn")
           .as[(Long, Long, Long)].collect()
       },
-      k = 10, nProbe = 2)
+      k = 10, probe = Nearest(2))
     try {
       val (b1, b2) = qs.splitAt(2)
       stream.addData(b1: _*)
@@ -475,7 +475,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // per-batch serving ≡ one batch probe of all queries: probing is
     // stateless, the store is the state
     val batch = ranking(VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2))
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2)))
     assert(got.sortBy(r => (r._1, r._3)).toSeq == batch && batch.nonEmpty)
   }
 
@@ -585,7 +585,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // lists × target
     val path = tmpStore("ivfskew")
     VectorIndex.writeIvfIndex(skew.repartition(16), col("vec_id"),
-      col("embedding"), path, hierarchical = false, targetFileBytes = 1024L)
+      col("embedding"), path, hier = None, targetFileBytes = 1024L)
     val counts = filesPerDir(path)
     val heavyList = spark.read.parquet(s"$path/lists")
       .groupBy(col("c_id").cast("long")).count()
@@ -599,12 +599,12 @@ class VectorIndexSpec extends AnyFunSuite {
     // the single-file route
     val ref = tmpStore("ivfskewref")
     VectorIndex.writeIvfIndex(skew, col("vec_id"), col("embedding"), ref,
-      hierarchical = false, filesPerList = 1)
+      hier = None, filesPerList = 1)
     val skewQueries = skew.filter(col("vec_id") >= 8 && col("vec_id") < 13)
     val a = ranking(VectorIndex.probeIvfIndex(spark, path, skewQueries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2))
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2)))
     val b = ranking(VectorIndex.probeIvfIndex(spark, ref, skewQueries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2))
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2)))
     assert(a == b && a.nonEmpty)
   }
 
@@ -623,7 +623,7 @@ class VectorIndexSpec extends AnyFunSuite {
     val skew = spark.read.parquet(s"$skewDir/embeddings.parquet")
     val path = tmpStore("ivfskewapp")
     VectorIndex.writeIvfIndex(skew.filter(col("vec_id") % 10 < 3),
-      col("vec_id"), col("embedding"), path, hierarchical = false,
+      col("vec_id"), col("embedding"), path, hier = None,
       targetFileBytes = 1024L)
     def filesPerDir(): Map[Long, Int] =
       new java.io.File(s"$path/lists").listFiles().toSeq
@@ -652,7 +652,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // target small enough that some single file is > 2× target
     val path = tmpStore("ivfsplit")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false, filesPerList = 1)
+      hier = None, filesPerList = 1)
     val before = VectorIndex.listManifest(spark, path)
       .as[(Long, String, Long)].collect()
     assert(before.groupBy(_._1).values.forall(_.size == 1))
@@ -660,7 +660,7 @@ class VectorIndexSpec extends AnyFunSuite {
     val oversized = before.filter(_._3 > 2L * target).map(_._1).toSet
     assert(oversized.nonEmpty, s"fixture too small: ${before.toSeq}")
     val probeBefore = ranking(VectorIndex.probeIvfIndex(spark, path,
-      queries, col("vec_id"), col("embedding"), k = 10, nProbe = 2))
+      queries, col("vec_id"), col("embedding"), k = 10, probe = Nearest(2)))
     val plan = VectorIndex.compactIvfIndex(spark, path, targetBytes = target)
     val planned = plan.select(col("c_id").cast("long")).distinct()
       .as[Long].collect().toSet
@@ -678,7 +678,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // rows and probe results are untouched by the rewrite
     assert(spark.read.parquet(s"$path/lists").count() == emb.count())
     val probeAfter = ranking(VectorIndex.probeIvfIndex(spark, path,
-      queries, col("vec_id"), col("embedding"), k = 10, nProbe = 2))
+      queries, col("vec_id"), col("embedding"), k = 10, probe = Nearest(2)))
     assert(probeAfter == probeBefore && probeAfter.nonEmpty)
   }
 
@@ -688,7 +688,7 @@ class VectorIndexSpec extends AnyFunSuite {
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
       payload = Seq(col("label")))
     val filtered = VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2,
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2),
       where = Some(col("label") < 4))
     val labels = emb.select(col("vec_id"), col("label"))
       .as[(Long, Int)].collect().toMap
@@ -698,7 +698,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // same store per query and re-ranking the survivors is the same
     // top-10 — the filter restricts candidates, it never costs a match
     val all = ranking(VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 1000000, nProbe = 2))
+      col("vec_id"), col("embedding"), k = 1000000, probe = Nearest(2)))
     val expected = all.groupBy(_._1).toSeq.flatMap { case (q, rows) =>
       rows.sortBy(_._3).filter(r => labels(r._2) < 4).take(10)
         .zipWithIndex.map { case (r, i) => (q, r._2, (i + 1).toLong) }
@@ -709,7 +709,7 @@ class VectorIndexSpec extends AnyFunSuite {
     withoutAqe {
       val one = VectorIndex.probeIvfIndex(spark, path,
         emb.filter(col("vec_id") === 0), col("vec_id"), col("embedding"),
-        k = 10, nProbe = 2, where = Some(col("label") < 4))
+        k = 10, probe = Nearest(2), where = Some(col("label") < 4))
       one.write.mode("overwrite").format("noop").save()
       val scans = one.queryExecution.executedPlan.collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec
@@ -730,13 +730,13 @@ class VectorIndexSpec extends AnyFunSuite {
       payload = Seq(col("label")))
     val t = 0.25
     val range = VectorIndex.probeIvfRange(spark, path, queries,
-      col("vec_id"), col("embedding"), minCosine = t, nProbe = 2)
+      col("vec_id"), col("embedding"), minCosine = t, probe = Nearest(2))
       .select("q_id", "vec_id", "cos_ud").as[(Long, Long, Long)]
       .collect().sortBy(r => (r._1, r._2)).toSeq
     // same candidates as an uncapped top-k probe of the same store,
     // cut by threshold instead of rank (the integer bar BOTH paths use)
     val viaTopK = VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 1000000, nProbe = 2)
+      col("vec_id"), col("embedding"), k = 1000000, probe = Nearest(2))
       .filter(col("cos_ud") >= Similarity.cosineMicros2(t))
       .select("q_id", "vec_id", "cos_ud").as[(Long, Long, Long)]
       .collect().sortBy(r => (r._1, r._2)).toSeq
@@ -748,9 +748,9 @@ class VectorIndexSpec extends AnyFunSuite {
     def planOf(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.executedPlan.toString
     val rangePlan = planOf(VectorIndex.probeIvfRange(spark, path, queries,
-      col("vec_id"), col("embedding"), minCosine = t, nProbe = 2))
+      col("vec_id"), col("embedding"), minCosine = t, probe = Nearest(2)))
     val topkPlan = planOf(VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2))
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2)))
     def count(s: String, token: String) = s.sliding(token.length).count(_ == token)
     // the query-ASSIGNMENT's windows (partitioned by the query id) exist
     // in both plans; the per-query RESULT rank (partitioned by q_id) only
@@ -763,7 +763,7 @@ class VectorIndexSpec extends AnyFunSuite {
     val labels = emb.select(col("vec_id"), col("label"))
       .as[(Long, Int)].collect().toMap
     val filtered = VectorIndex.probeIvfRange(spark, path, queries,
-      col("vec_id"), col("embedding"), minCosine = t, nProbe = 2,
+      col("vec_id"), col("embedding"), minCosine = t, probe = Nearest(2),
       where = Some(col("label") < 4))
       .select("q_id", "vec_id").as[(Long, Long)].collect()
     assert(filtered.nonEmpty && filtered.forall(r => labels(r._2) < 4))
@@ -789,13 +789,13 @@ class VectorIndexSpec extends AnyFunSuite {
         got ++= res.select("q_id", "vec_id", "rn")
           .as[(Long, Long, Long)].collect()
       },
-      k = 10, nProbe = 2, where = pred)
+      k = 10, probe = Nearest(2), where = pred)
     try {
       stream.addData(qs: _*)
       q.processAllAvailable()
     } finally q.stop()
     val batch = ranking(VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2, where = pred))
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2), where = pred))
     assert(got.sortBy(r => (r._1, r._3)).toSeq == batch && batch.nonEmpty)
   }
 
@@ -809,10 +809,10 @@ class VectorIndexSpec extends AnyFunSuite {
     // rescore ranks ALL matching candidates — must equal the flat
     // filtered probe over the same store
     val pq = ranking(VectorIndex.probeIvfPqIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2, pool = 1000000,
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2), pool = 1000000,
       where = pred))
     val flat = ranking(VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2, where = pred))
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2), where = pred))
     assert(pq == flat && pq.nonEmpty)
     val labels = emb.select(col("vec_id"), col("label"))
       .as[(Long, Int)].collect().toMap
@@ -823,7 +823,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivffila")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false, payload = Seq(col("label")),
+      hier = None, payload = Seq(col("label")),
       statsCols = Seq("label"))
     // massPpm = 1e6 covers every matching list → the probe must be the
     // exact cosine top-k among matching rows (the filtered ground truth)
@@ -854,11 +854,11 @@ class VectorIndexSpec extends AnyFunSuite {
     val df = vecs.toDF("vec_id", "embedding", "label")
     val path = tmpStore("ivfanti")
     VectorIndex.writeIvfIndex(df, col("vec_id"), col("embedding"), path,
-      hierarchical = false, centroidStride = 10, payload = Seq(col("label")),
+      hier = None, centroidStride = 10, payload = Seq(col("label")),
       statsCols = Seq("label"))
     val q = df.filter(col("vec_id") === 0) // deep inside the heavy cluster
-    val raw = VectorIndex.probeIvfIndexAdaptive(spark, path, q,
-      col("vec_id"), col("embedding"), k = 10, massPpm = 200000L,
+    val raw = VectorIndex.probeIvfIndex(spark, path, q,
+      col("vec_id"), col("embedding"), k = 10, probe = Mass(200000L),
       where = Some(col("label") === 1))
     assert(raw.isEmpty,
       "raw-mass budget unexpectedly reached the rare label's list — " +
@@ -878,14 +878,14 @@ class VectorIndexSpec extends AnyFunSuite {
     // built WITHOUT statsCols — the probe recounts from the lists'
     // (c_id, label) columns and must decide identically
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false, payload = Seq(col("label")))
+      hier = None, payload = Seq(col("label")))
     val noStats = ranking(VectorIndex.probeIvfIndexFiltered(spark, path,
       queries, col("vec_id"), col("embedding"), statsCol = "label",
       statsValues = Seq(3), k = 10, massPpm = 300000L))
     // ensure on the servable store counts the missing histogram into
     // the manifest without a rebuild; the probe then reads it — same rows
     VectorIndex.ensureIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false, payload = Seq(col("label")),
+      hier = None, payload = Seq(col("label")),
       statsCols = Seq("label"))
     val withStats = ranking(VectorIndex.probeIvfIndexFiltered(spark, path,
       queries, col("vec_id"), col("embedding"), statsCol = "label",
@@ -899,7 +899,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // base slice excludes label 9 entirely; the filtered probe must
     // fail LOUDLY (no matching rows), not return an empty result
     VectorIndex.writeIvfIndex(emb.filter(col("label") =!= 9),
-      col("vec_id"), col("embedding"), path, hierarchical = false,
+      col("vec_id"), col("embedding"), path, hier = None,
       payload = Seq(col("label")), statsCols = Seq("label"))
     val ex = intercept[IllegalArgumentException] {
       VectorIndex.probeIvfIndexFiltered(spark, path, queries,
@@ -923,7 +923,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivffild")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false)
+      hier = None)
     val ex = intercept[IllegalArgumentException] {
       VectorIndex.probeIvfIndexFiltered(spark, path, queries,
         col("vec_id"), col("embedding"), statsCol = "label",
@@ -933,7 +933,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // and statsCols on the build must name payload columns
     val ex2 = intercept[IllegalArgumentException] {
       VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"),
-        tmpStore("ivffile"), hierarchical = false,
+        tmpStore("ivffile"), hier = None,
         statsCols = Seq("label"))
     }
     assert(ex2.getMessage.contains("statsCols must name payload columns"))
@@ -952,7 +952,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(lists.filter(col("label").isNull).count() == 0)
     // the filtered probe sees appended rows through the same predicate
     val got = ranking(VectorIndex.probeIvfIndex(spark, path, queries,
-      col("vec_id"), col("embedding"), k = 10, nProbe = 2,
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2),
       where = Some(col("label") < 4)))
     assert(got.nonEmpty)
     // increments must carry the build's payload schema — a missing
@@ -999,13 +999,15 @@ class VectorIndexSpec extends AnyFunSuite {
     val calls: Seq[(String, () => Any)] = Seq(
       "probeIvfIndex" -> (() =>
         VectorIndex.probeIvfIndex(spark, path, queries, id, vec)),
-      "probeIvfIndexAdaptive" -> (() =>
-        VectorIndex.probeIvfIndexAdaptive(spark, path, queries, id, vec)),
+      "probeIvfIndex Mass" -> (() =>
+        VectorIndex.probeIvfIndex(spark, path, queries, id, vec,
+          probe = Mass(150000L))),
       "probeIvfIndexFiltered" -> (() =>
         VectorIndex.probeIvfIndexFiltered(spark, path, queries, id, vec,
           statsCol = "label", statsValues = Seq(3))),
-      "probeIvfIndexHierAdaptive" -> (() =>
-        VectorIndex.probeIvfIndexHierAdaptive(spark, path, queries, id, vec)),
+      "probeIvfIndex HierMass" -> (() =>
+        VectorIndex.probeIvfIndex(spark, path, queries, id, vec,
+          probe = HierMass(150000L))),
       "probeIvfRange" -> (() =>
         VectorIndex.probeIvfRange(spark, path, queries, id, vec,
           minCosine = 0.25)),
@@ -1125,7 +1127,7 @@ class VectorIndexSpec extends AnyFunSuite {
           s"$name/$step: codebook schema")
       }
       VectorIndex.writeIvfIndex(build, col("vec_id"), col("embedding"), path,
-        hierarchical = false, pq = pq, pqResidual = residual,
+        hier = None, pq = pq, pqResidual = residual,
         payload = statsCols.map(col), statsCols = statsCols)
       check("build")
       VectorIndex.appendToIvfIndex(inc, col("vec_id"), col("embedding"), path)
@@ -1188,7 +1190,7 @@ class VectorIndexSpec extends AnyFunSuite {
           .map(_.list().count(_.endsWith(".parquet")))
       val build = writeStageTasksOf(VectorIndex.writeIvfIndex(
         emb.filter(col("vec_id") % 7 =!= 0), col("vec_id"), col("embedding"),
-        path, hierarchical = false, maxCentroids = maxCentroids))
+        path, hier = None, maxCentroids = maxCentroids))
       val lists = spark.read.parquet(s"$path/centroids").count().toInt
       assert(filesPerDir().size == lists &&
         (if (maxCentroids < cores) lists < cores else lists > cores),
@@ -1215,7 +1217,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfargs")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hierarchical = false, pq = true)
+      hier = None, pq = true)
     val (id, v) = (col("vec_id"), col("embedding"))
     def rejects(arg: String)(call: => DataFrame): Unit = {
       val e = intercept[IllegalArgumentException](call)
@@ -1224,16 +1226,50 @@ class VectorIndexSpec extends AnyFunSuite {
     for (bad <- Seq(0, -1)) {
       rejects("k")(VectorIndex.probeIvfIndex(spark, path, queries, id, v, k = bad))
       rejects("nProbe")(VectorIndex.probeIvfIndex(spark, path, queries, id, v,
-        nProbe = bad))
-      rejects("k")(VectorIndex.probeIvfIndexAdaptive(spark, path, queries, id, v,
-        k = bad))
+        probe = Nearest(bad)))
+      rejects("k")(VectorIndex.probeIvfIndex(spark, path, queries, id, v,
+        k = bad, probe = Mass(150000L)))
       rejects("nProbe")(VectorIndex.probeIvfRange(spark, path, queries, id, v,
-        minCosine = 0.5, nProbe = bad))
+        minCosine = 0.5, probe = Nearest(bad)))
       rejects("k")(VectorIndex.probeIvfPqIndex(spark, path, queries, id, v,
         k = bad))
       rejects("pool")(VectorIndex.probeIvfPqIndex(spark, path, queries, id, v,
         pool = bad))
     }
+    def rejectsNaming(arg: String)(call: => DataFrame): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(arg), e.getMessage)
+    }
+    for (bad <- Seq(0L, 1000001L)) {
+      rejectsNaming("massPpm")(VectorIndex.probeIvfIndex(spark, path, queries,
+        id, v, probe = Mass(bad)))
+      rejectsNaming("massPpm")(VectorIndex.probeIvfPqIndex(spark, path,
+        queries, id, v, probe = Mass(bad)))
+      rejectsNaming("massPpm")(VectorIndex.probeIvfRange(spark, path, queries,
+        id, v, minCosine = 0.5, probe = HierMass(bad)))
+    }
+    // the store is flat: a two-level budget has no recorded super filing
+    rejectsNaming("hier")(VectorIndex.probeIvfIndex(spark, path, queries, id,
+      v, probe = HierMass(150000L)))
+    rejectsNaming("hier")(VectorIndex.probeIvfPqIndex(spark, path, queries,
+      id, v, probe = HierMass(150000L)))
+  }
+
+  test("a mass-budget PQ probe floors a fixed pool at k, in memory and in a store alike") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    val path = tmpStore("ivfpqmassfloor")
+    VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
+      hier = None, pq = true)
+    // pool = 1 under Mass: the floor is k (no probe count to multiply)
+    val stored = VectorIndex.probeIvfPqIndex(spark, path, queries,
+      col("vec_id"), col("embedding"), k = 10, probe = Mass(150000L),
+      pool = 1)
+    val inflight = Similarity.ivfPqTopK(emb, queries, col("vec_id"),
+      col("embedding"), k = 10, centroidStride = 50, probe = Mass(150000L),
+      pool = 1)
+    val perQuery = ranking(stored).groupBy(_._1).values.map(_.size).toSet
+    assert(perQuery == Set(10), s"rows per query: $perQuery")
+    assert(ranking(stored) == ranking(inflight))
   }
 
   test("loud failures: probing an incomplete store, PQ-probing a non-PQ store, appending to nothing") {

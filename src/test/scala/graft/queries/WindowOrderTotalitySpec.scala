@@ -74,39 +74,17 @@ class WindowOrderTotalitySpec extends AnyFunSuite {
     ("documents", Seq("doc_id"), "Dedup/Corpus/Search doc-id tiebreaks"),
     // every Similarity/VectorIndex rank: (cos_ud desc, vec_id asc) and
     // friends; centroid ids c_id/s_id derive from vec_id stride picks.
-    // r17 ivfTopKAdaptive adds two sites, both UNIQUE: the probe-mass
-    // cumsum (per-query partition ordered by (c_dot desc, c_id asc) —
-    // each centroid appears once per query, so c_id is a singleton
-    // tiebreak; now shared via Similarity.massProbed, also the
-    // VectorIndex adaptive probe's selection) and its rescore rank
-    // ((cos_ud desc, vec_id asc)). r18 adds three: the pqTopK/ivfPqTopK
-    // adaptive-pool cand_n counts (whole-q_id-partition count —
-    // ORDER-INSENSITIVE) and probeIvfIndexAdaptive's rescore rank
-    // ((cos_ud desc, vec_id asc) — UNIQUE via vec_id), plus
-    // probeIvfPqIndex's adaptive-pool cand_n count (whole-q_id-partition
-    // count — ORDER-INSENSITIVE, same class as the in-flight pair).
-    // r18 s37 (ivfTopKHierarchicalAdaptive) adds two, both UNIQUE: the
-    // leaf-level probe-mass cumsum (per-query partition ordered by
-    // (c_dot desc, c_id asc) — each probed super's centroids appear once
-    // per query, so c_id is a singleton tiebreak; the super-level gate
-    // reuses massProbed's already-classified window) and its rescore
-    // rank ((cos_ud desc, vec_id asc)). s38 (the store-served s37)
-    // adds the same two in VectorIndex — hierMassProbedLists' leaf
-    // cumsum and probeIvfIndexHierAdaptive's rescore rank, both UNIQUE
-    // by the same columns.
-    // r18 s40 (probeIvfIndexFiltered) adds one in VectorIndex: its
-    // rescore rank ((cos_ud desc, vec_id asc) — UNIQUE via vec_id,
-    // same class as every rescore window); its selection reuses
-    // massProbed's already-classified cumsum (the inner-join dropEmpty
-    // variant orders the same (c_dot desc, c_id asc) singleton ranks).
-    // The IVF probe core in Similarity now holds every one of these
-    // rules once, for the in-memory tiers and VectorIndex's store probes
-    // alike (VectorIndex has no window of its own): `topK`, the one
-    // result rank ((cos_ud desc, vec_id asc), UNIQUE via vec_id — also
-    // the brute-force and RP tails); `massGate`, the one probe-mass
-    // cumsum ((c_dot desc, c_id asc), UNIQUE — the flat, super and leaf
-    // gates); and `pqPool`, the one ADC rank ((est asc, vec_id asc),
-    // UNIQUE via vec_id) with its cand_n count (ORDER-INSENSITIVE).
+    // The IVF probe core in Similarity holds every IVF window once, for
+    // the in-memory tiers and VectorIndex's store probes alike
+    // (VectorIndex has no window of its own): `topK`, the one result rank
+    // ((cos_ud desc, vec_id asc), UNIQUE via vec_id — also the
+    // brute-force and RP tails); `massGate`, the one probe-mass cumsum of
+    // the Mass and HierMass probes ((c_dot desc, c_id asc), UNIQUE: each
+    // centroid appears once per query — the flat, super and leaf gates,
+    // and the filtered probe's inner-join variant); and `pqPool`, the one
+    // ADC rank ((est asc, vec_id asc), UNIQUE via vec_id) with its
+    // adaptive-pool cand_n count (whole-q_id-partition count —
+    // ORDER-INSENSITIVE).
     ("embeddings", Seq("vec_id"), "Similarity/VectorIndex rank tiebreaks"),
     ("customer", Seq("c_custkey"), "fuzzy-join id tiebreaks"),
     ("part", Seq("p_partkey"), "join/agg determinism"),
