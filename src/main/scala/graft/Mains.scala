@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * mains (`Bench`, `Verify`, `ScaleUp`, `AdvRecallGate`, `Demo`).
   */
 object Mains {
-  /** A local session with UTC timestamps, AQE on and no UI, read from the
+  /** A local session with UTC timestamps, AQE on, no UI and the
+    * fork-free local filesystem ([[graft.io.LocalFs]]), read from the
     * environment:
     *  - `SPARK_GRAFT_CPUS` (default `defaultCpus`): the `local[N]` cores;
     *  - `SPARK_GRAFT_SHUFFLE_PARTITIONS` (default: the core count).
@@ -21,7 +22,14 @@ object Mains {
     */
   def session(defaultCpus: Int, logLevel: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    // the fork-free local filesystem (graft.io.LocalFs) for every `file:`
+    // read and write of the session, unless a `spark.hadoop.` system
+    // property already chooses the key
+    val submitted = new org.apache.spark.SparkConf()
+    val localFs = graft.io.LocalFs.settings.map { case (k, v) => s"spark.hadoop.$k" -> v }
+      .filterNot { case (k, _) => submitted.contains(k) }
     val spark = SparkSession.builder()
+      .config(localFs.toMap)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))

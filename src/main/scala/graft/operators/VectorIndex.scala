@@ -12,6 +12,8 @@ import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
 import org.json4s.jackson.Serialization
 
+import graft.io.LocalFs
+
 import Similarity.{Hier, Mass, Nearest, Probe}
 
 /** The PERSISTED form of the IVF / IVF×PQ index — the missing piece
@@ -315,8 +317,10 @@ object VectorIndex {
     * temporary file renamed over the old one, so a concurrent probe reads
     * either the old manifest or the new one, never a partial file.
     */
-  private def putManifest(path: String, m: StoreManifest): Unit = {
-    val conf = hadoopConf()
+  private def putManifest(spark: SparkSession, path: String,
+      m: StoreManifest): Unit = {
+    LocalFs.register(spark)
+    val conf = spark.sessionState.newHadoopConf()
     val dst = markerPath(path)
     val tmp = new Path(path, s"$OkMarker.tmp")
     val fs = dst.getFileSystem(conf)
@@ -342,12 +346,17 @@ object VectorIndex {
     * raw-codes store served to a residual-expecting ensure (or vice
     * versa) would probe self-consistently — the manifest drives the LUT
     * — but in the wrong encoding space from the caller's standpoint.
+    * `hier`, when the caller states a requirement, must match the
+    * recorded assignment geometry (`Some(None)`: flat): probes replay the
+    * recorded filing, so a store of another geometry would serve the
+    * caller's probes under list membership it did not ask for.
     */
   def isServable(spark: SparkSession, path: String,
       payload: Seq[String] = Nil,
-      pqResidual: Option[Boolean] = None): Boolean =
+      pqResidual: Option[Boolean] = None,
+      hier: Option[Option[Hier]] = None): Boolean =
     loadManifest(path).exists(m => (payload.isEmpty || m.payload == payload) &&
-      pqResidual.forall(_ == m.pqResidual))
+      pqResidual.forall(_ == m.pqResidual) && hier.forall(_ == m.hier))
 
   /** The two-level geometry a store is built with unless the caller
     * passes another (s19's: 16 centroids per super-list, 2 super-probes).
@@ -435,6 +444,7 @@ object VectorIndex {
       pqResidual: Boolean = false,
       statsCols: Seq[String] = Nil): Unit = {
     val spark = base.sparkSession
+    LocalFs.register(spark)
     require(!pqResidual || pq,
       "pqResidual is a PQ-codes encoding mode — set pq = true with it")
     // payload validation FIRST: a name collision (see ReservedNames)
@@ -500,7 +510,7 @@ object VectorIndex {
         targetFileBytes, path, "overwrite", None).json,
       centroidsSchema = bareStruct(cents.schema).json)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    putManifest(path, meta.copy(counts = countLists(spark, path, meta,
+    putManifest(spark, path, meta.copy(counts = countLists(spark, path, meta,
       statsCols)))
   }
 
@@ -748,9 +758,10 @@ object VectorIndex {
       else base.select((id.as("vec_id") +: payload): _*).columns.toSeq.drop(1)
     // the encoding-space requirement only binds for PQ ensures — a plain
     // ensure must keep serving existing PQ stores (their codes are
-    // simply unread), so pass a requirement, not the default
+    // simply unread), so pass a requirement, not the default; the
+    // geometry always binds
     if (!isServable(base.sparkSession, path, payNames,
-        if (pq) Some(pqResidual) else None))
+        if (pq) Some(pqResidual) else None, Some(hier)))
       writeIvfIndex(base, id, vec, path, centroidStride, maxCentroids, hier,
         pq, numSubspaces, numCodes, codeStride, payload = payload,
         filesPerList = filesPerList, targetFileBytes = targetFileBytes,
@@ -762,8 +773,8 @@ object VectorIndex {
       // runs corpus-pass-free)
       val m = manifestOf(path)
       if (!statsCols.forall(m.counts.stats.contains))
-        putManifest(path, m.copy(counts = countLists(base.sparkSession, path,
-          m, m.counts.stats.keys.toSeq ++ statsCols)))
+        putManifest(base.sparkSession, path, m.copy(counts = countLists(
+          base.sparkSession, path, m, m.counts.stats.keys.toSeq ++ statsCols)))
     }
     // callers with a TRAINED model check isServable themselves before
     // training (the model derivation may run eager jobs — an ensure that
@@ -790,6 +801,7 @@ object VectorIndex {
       filesPerList: Int = 0,
       targetFileBytes: Long = 128L << 20): Unit = {
     val spark = increment.sparkSession
+    LocalFs.register(spark)
     val meta = manifestOf(path)
     val onDisk = centroidsOf(spark, path, meta)
     val cm = Similarity.collectCentModel(onDisk)
@@ -821,7 +833,7 @@ object VectorIndex {
     // between the two leaves last batch's counts — a drift in the mass
     // budget's list SELECTION the next append heals, never a wrong
     // result. A full recount (not an increment merge) is what heals it.
-    putManifest(path, meta.copy(counts = countLists(spark, path, meta,
+    putManifest(spark, path, meta.copy(counts = countLists(spark, path, meta,
       meta.counts.stats.keys.toSeq)))
   }
 
@@ -1117,6 +1129,7 @@ object VectorIndex {
       path: String,
       targetBytes: Long = 128L << 20): DataFrame = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
+    LocalFs.register(spark)
     // read before the marker drop: compaction changes no row, so the same
     // manifest goes back afterwards
     val meta = manifestOf(path)
@@ -1149,7 +1162,7 @@ object VectorIndex {
         conf.fold(spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
           spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
       }
-      putManifest(path, meta)
+      putManifest(spark, path, meta)
     }
     import spark.implicits._
     plan.filter(p => needy.contains(p._1)).flatMap { case (c, bins) =>
@@ -1175,13 +1188,15 @@ object VectorIndex {
       vecs: DataFrame,
       id: Column,
       vec: Column,
-      path: String): org.apache.spark.sql.streaming.StreamingQuery =
+      path: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    LocalFs.register(vecs.sparkSession)
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) appendToIvfIndex(batch, id, vec, path)
       }
       .start()
+  }
 
   /** Continuous serving against a persisted store: each micro-batch of
     * `(id, vec)` query rows is probed via [[probeIvfIndex]] and the
@@ -1201,7 +1216,8 @@ object VectorIndex {
       onResults: (DataFrame, Long) => Unit,
       k: Int = 10,
       probe: Probe = Nearest(2),
-      where: Option[Column] = None): org.apache.spark.sql.streaming.StreamingQuery =
+      where: Option[Column] = None): org.apache.spark.sql.streaming.StreamingQuery = {
+    LocalFs.register(queries.sparkSession)
     queries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1210,6 +1226,7 @@ object VectorIndex {
             k, probe, where), batchId)
       }
       .start()
+  }
 
   /** Probe a PQ store ([[writeIvfIndex]] with `pq = true`): the ADC
     * candidate ranking reads ONLY `(vec_id, codes)` from ONLY the probed

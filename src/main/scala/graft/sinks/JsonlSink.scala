@@ -42,6 +42,7 @@ object JsonlSink {
     * phase split).
     */
   def write(df: DataFrame, path: String): Long = {
+    graft.io.LocalFs.register(df.sparkSession)
     val obs = org.apache.spark.sql.Observation()
     jsonLines(df)
       .observe(obs, count(lit(1)).as("rows_written"))

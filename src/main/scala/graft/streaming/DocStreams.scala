@@ -1,13 +1,15 @@
 package graft.streaming
 
 import graft.functions.TextFunctions._
+import graft.io.LocalFs
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Structured-Streaming operators over a DOCUMENT stream — the continuous-
   * ingestion half of the corpus pipeline, probing the same persisted
-  * artifacts the batch tier writes.
+  * artifacts the batch tier writes. Every entry point registers
+  * [[graft.io.LocalFs]] on its input's session, as `EventStreams` does.
   */
 object DocStreams {
 
@@ -47,6 +49,7 @@ object DocStreams {
     graft.operators.Dedup.requireBands(numHashes, bands)
     require(minAgree >= 1 && minAgree <= numHashes,
       s"minAgree must be in [1, $numHashes], got $minAgree")
+    LocalFs.register(docs.sparkSession)
     val sig = docs
       .select(id.as("doc_id"),
         minhashSignature(shingles(tokens(text), n), numHashes).as("sig"))
@@ -124,6 +127,7 @@ object DocStreams {
       text: Column,
       k: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
+    LocalFs.register(docs.sparkSession)
     val tg = docs
       .select(id.as("doc_id"),
         explode(graft.functions.TextFunctions.posGrams(tokens(text), k)).as("pg"))

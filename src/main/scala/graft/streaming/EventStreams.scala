@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.io.LocalFs
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -16,6 +18,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * watermark bounds state retention, and the shuffle key is `user_id` —
   * the same partitioning a 1000-executor cluster would use. No collect,
   * no driver state.
+  *
+  * Every entry point registers [[graft.io.LocalFs]] on its input's
+  * session, so a stream started from its result writes its offset,
+  * commit and state-store files without a process fork per file.
   */
 object EventStreams {
 
@@ -50,6 +56,7 @@ object EventStreams {
     * input the identical plan runs without it.
     */
   def windowedTypeCounts(events: DataFrame, watermarkDelay: String = "2 hours"): DataFrame = {
+    LocalFs.register(events.sparkSession)
     val src = if (events.isStreaming) events.withWatermark("ts", watermarkDelay) else events
     src.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -64,9 +71,11 @@ object EventStreams {
     * dropped). The streaming counterpart of `Dedup.exact` — at-least-once
     * sources become effectively-once sinks.
     */
-  def dedupStream(events: DataFrame, watermarkDelay: String = "1 hour"): DataFrame =
+  def dedupStream(events: DataFrame, watermarkDelay: String = "1 hour"): DataFrame = {
+    LocalFs.register(events.sparkSession)
     events.withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark("event_id")
+  }
 
   /** Streaming sessionization: a session closes after `gapSeconds` of
     * user inactivity. Events are BUFFERED in keyed state until the
@@ -80,6 +89,7 @@ object EventStreams {
     * The input must already carry a watermark on `ts`.
     */
   def sessionize(events: Dataset[Event], gapSeconds: Long = 1800): Dataset[Session] = {
+    LocalFs.register(events.sparkSession)
     import events.sparkSession.implicits._
     events
       .groupByKey(_.user_id)
@@ -139,6 +149,7 @@ object EventStreams {
       gapSeconds: Long): Dataset[FunnelOutcome] = {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(steps.distinct == steps, s"steps must be distinct, got $steps")
+    LocalFs.register(events.sparkSession)
     import events.sparkSession.implicits._
     val n = steps.size
     val gapUs = gapSeconds * 1000000L
@@ -205,6 +216,7 @@ object EventStreams {
       leftType: String,
       rightType: String): Dataset[AsOfRow] = {
     require(leftType != rightType, "left and right event types must differ")
+    LocalFs.register(events.sparkSession)
     import events.sparkSession.implicits._
     events.toDF()
       .filter(col("event_type").isin(leftType, rightType))
@@ -242,6 +254,7 @@ object EventStreams {
       windowSeconds: Long,
       watermarkDelay: String = "10 minutes"): DataFrame = {
     require(intervalType != pointType, "interval and point types must differ")
+    LocalFs.register(events.sparkSession)
     val w = windowSeconds * 1000000L // bucket width = window length, µs
     def bucket(c: org.apache.spark.sql.Column) =
       graft.operators.IntervalJoin.bucketOf(unix_micros(c), w)
@@ -293,6 +306,7 @@ object EventStreams {
     require(windowSeconds > 0,
       s"attribution window must be positive seconds, got $windowSeconds " +
         "(a non-positive window makes the join predicate unsatisfiable)")
+    LocalFs.register(clicks.sparkSession)
     val c = clicks
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"))
@@ -475,6 +489,7 @@ object EventStreams {
       bands: Int = 4,
       minAgree: Int = 8): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Dedup
+    LocalFs.register(docs.sparkSession)
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -524,7 +539,8 @@ object EventStreams {
   def lmScoreStream(
       docs: DataFrame,
       modelPath: String,
-      onScores: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+      onScores: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+    LocalFs.register(docs.sparkSession)
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -539,4 +555,5 @@ object EventStreams {
           graft.operators.Corpus.unpersistIntermediates()
       }
       .start()
+  }
 }

@@ -4,15 +4,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Switch inventory: the environment variables and system properties the
   * library layers read, pinned by a source scan (the style of
-  * WindowOrderTotalitySpec's window inventory). A new switch in an
-  * operator, function, query, source, sink or stream has to be declared
-  * here, so a one-off A/B knob cannot stay behind unnoticed. The runnable
+  * WindowOrderTotalitySpec's window inventory). A new switch in the
+  * local filesystem, an operator, function, query, source, sink or stream
+  * has to be declared here, so a one-off A/B knob cannot stay behind
+  * unnoticed. The runnable
   * mains in package `graft` are outside the scan: their variables are the
   * documented run configuration.
   */
 class SwitchInventorySpec extends AnyFunSuite {
   private val layers =
-    Seq("operators", "functions", "queries", "sources", "sinks", "streaming")
+    Seq("io", "operators", "functions", "queries", "sources", "sinks", "streaming")
 
   /** The size-gate thresholds and the store's deployment path. */
   private val declared = Set(

@@ -5,6 +5,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
+import jdk.jfr.consumer.RecordingStream
+
+import scala.jdk.CollectionConverters._
+
 /** One shared local SparkSession for the whole forked test JVM (never
   * stopped — the JVM exit cleans up; stopping it mid-run would break the
   * other suites sharing it).
@@ -53,4 +57,39 @@ object TestSpark {
     })(body)
     tasks.toArray.toSeq.map(_.asInstanceOf[Int])
   }
+
+  /** `body`'s result and the processes it starts through Hadoop's `Shell`
+    * (a `chmod`, `readlink` or `ls` fork of the local filesystem), as
+    * `command <- innermost frames`, from JFR's `jdk.ProcessStart` events.
+    * A marker event committed after `body` bounds the count: the stream
+    * delivers events in time order, so every fork of `body` arrives
+    * before it.
+    */
+  def shellForksOf[A](body: => A): (A, Seq[String]) = {
+    // Shell's class initializer forks a `setsid` probe once per JVM
+    Class.forName("org.apache.hadoop.util.Shell")
+    val forks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val rs = new RecordingStream()
+    try {
+      rs.enable("jdk.ProcessStart").withStackTrace()
+      rs.enable(classOf[EndOfCount])
+      rs.onEvent("jdk.ProcessStart", { e =>
+        val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+          .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+        if (frames.exists(_.startsWith("org.apache.hadoop.util.Shell.")))
+          forks.add(s"${e.getString("command")} <- ${frames.take(8).mkString(" < ")}")
+      })
+      rs.onEvent(classOf[EndOfCount].getName, _ => done.countDown())
+      rs.startAsync()
+      val result = body
+      new EndOfCount().commit()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "JFR did not deliver the end-of-count event")
+      (result, forks.asScala.toSeq)
+    } finally rs.close()
+  }
 }
+
+/** The JFR event that closes a [[TestSpark.shellForksOf]] count. */
+final class EndOfCount extends jdk.jfr.Event

@@ -239,6 +239,33 @@ class VectorIndexSpec extends AnyFunSuite {
       "ensure must have rebuilt the store in residual space")
   }
 
+  test("ensure distinguishes assignment geometries: a flat ensure rebuilds a two-level store, and the reverse") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    val path = tmpStore("ivfgeometry")
+    VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
+      hier = Some(Hier(16, 2)))
+    assert(VectorIndex.isServable(spark, path, hier = Some(Some(Hier(16, 2)))))
+    assert(!VectorIndex.isServable(spark, path, hier = Some(None)),
+      "a two-level store must not satisfy a flat requirement")
+    assert(!VectorIndex.isServable(spark, path, hier = Some(Some(Hier(8, 2)))),
+      "nor one of another super-geometry")
+    // geometry-agnostic callers keep being served
+    assert(VectorIndex.isServable(spark, path))
+    VectorIndex.ensureIvfIndex(emb, col("vec_id"), col("embedding"), path,
+      hier = None)
+    assert(VectorIndex.isServable(spark, path, hier = Some(None)),
+      "a flat ensure must have rebuilt the store flat")
+    val flat = VectorIndex.probeIvfIndex(spark, path, queries,
+      col("vec_id"), col("embedding"), k = 10, probe = Nearest(2))
+    val inflight = Similarity.ivfTopK(emb, queries, col("vec_id"),
+      col("embedding"), k = 10, centroidStride = 50, probe = Nearest(2))
+    assert(ranking(flat) == ranking(inflight) && ranking(flat).nonEmpty)
+    VectorIndex.ensureIvfIndex(emb, col("vec_id"), col("embedding"), path,
+      hier = Some(Hier(16, 2)))
+    assert(VectorIndex.isServable(spark, path, hier = Some(Some(Hier(16, 2)))),
+      "a two-level ensure must have rebuilt the flat store")
+  }
+
   test("residual PQ append: increment encoded in residual space with the stored codebook; sizes refresh") {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivfpqresapp")
