@@ -558,15 +558,11 @@ object Similarity {
     */
   private[operators] def ivfCentroids(
       b: DataFrame, centroidStride: Int, maxCentroids: Int): DataFrame = {
-    def emptyMsg =
-      s"ivfCentroids: no id is a multiple of centroidStride=$centroidStride — " +
-        "the centroid set is empty and every probe would return zero rows; " +
-        "pick a stride that selects some ids or supply trained centroids"
     val qualifying = b.filter(col("vec_id") % centroidStride === 0)
     if (maxCentroids == Int.MaxValue) {
       // caller manages the bound (SemDeDup's stride contract) — no cap,
       // and the limit(1) probe stops at the first qualifying row
-      require(!qualifying.limit(1).isEmpty, emptyMsg)
+      require(!qualifying.limit(1).isEmpty, noStrideIds(centroidStride))
       qualifying.select(col("vec_id").as("c_id"), col("v").as("cv"))
     } else {
       // only the BOUNDARY id (the maxCentroids-th smallest) comes back to
@@ -577,12 +573,57 @@ object Similarity {
         .orderBy(col("vec_id")).limit(maxCentroids)
         .agg(max(col("vec_id")).as("max_id"))
         .collect().head
-      require(!boundaryRow.isNullAt(0), emptyMsg)
-      b.filter(col("vec_id") % centroidStride === 0 &&
-          col("vec_id") <= boundaryRow.getLong(0))
-        .select(col("vec_id").as("c_id"), col("v").as("cv"))
+      require(!boundaryRow.isNullAt(0), noStrideIds(centroidStride))
+      strideUpTo(b, centroidStride, boundaryRow.getLong(0))
     }
   }
+
+  private def noStrideIds(centroidStride: Int): String =
+    s"ivfCentroids: no id is a multiple of centroidStride=$centroidStride — " +
+      "the centroid set is empty and every probe would return zero rows; " +
+      "pick a stride that selects some ids or supply trained centroids"
+
+  /** The stride-picked `(c_id, cv)` rows with id ≤ `boundary`. */
+  private def strideUpTo(b: DataFrame, centroidStride: Int,
+      boundary: Long): DataFrame =
+    b.filter(col("vec_id") % centroidStride === 0 && col("vec_id") <= boundary)
+      .select(col("vec_id").as("c_id"), col("v").as("cv"))
+
+  /** [[ivfCentroids]]' picked set and its [[CentModel]] from ONE collect:
+    * the first `min(maxCentroids, MaxInlineCentroids) + 1` qualifying rows
+    * in id order, unit vectors included, answer both the boundary and the
+    * model, so a store build runs neither a separate boundary collect nor
+    * a model collect over `b`. The picked set stays {qualifying rows with
+    * id ≤ the `maxCentroids`-th smallest id}; with a model it is returned
+    * as a local relation of the collected rows. A duplicate id at the
+    * boundary (the set reaches past the collected rows), a model
+    * [[collectCentModel]] would refuse (duplicate ids, a NULL or ragged
+    * unit vector) or a non-integral id type keeps the boundary-filter
+    * frame with no model — the exchange fallback; a set above
+    * [[MaxInlineCentroids]] also takes [[ivfCentroids]]' boundary collect.
+    */
+  private[operators] def pickCentroids(b: DataFrame, centroidStride: Int,
+      maxCentroids: Int): (DataFrame, Option[CentModel]) =
+    if (!integralId(b.schema("vec_id").dataType))
+      (ivfCentroids(b, centroidStride, maxCentroids), None)
+    else {
+      val cap = math.min(maxCentroids, MaxInlineCentroids)
+      val projected = modelColumns(b.filter(col("vec_id") % centroidStride === 0)
+        .select(col("vec_id").as("c_id"), col("v").as("cv")))
+      val rows = projected.orderBy(col("_cl")).limit(cap + 1).collect()
+      // a cap of 0 picks nothing, which ivfCentroids reports the same way
+      require(rows.nonEmpty && cap > 0, noStrideIds(centroidStride))
+      if (rows.length > cap && cap < maxCentroids)
+        (ivfCentroids(b, centroidStride, maxCentroids), None)
+      else {
+        val picked = rows.take(cap)
+        val boundary = picked.last.getLong(2)
+        val tie = rows.length > cap && rows(cap).getLong(2) == boundary
+        val cm = if (tie) None else modelOf(picked, projected.schema)
+        (cm.fold(strideUpTo(b, centroidStride, boundary))(
+          _.localCents(b.sparkSession)), cm)
+      }
+    }
 
   /** Nearest-`keep` centroid assignment of each row in `df` (whose vector
     * column is `v` and row id is `idc`) — broadcast centroids, window rank.
@@ -669,17 +710,33 @@ object Similarity {
     }
   }
 
-  private[operators] def collectCentModel(cents: DataFrame): Option[CentModel] = {
-    import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
-    val idType = cents.schema("c_id").dataType
+  private[operators] def collectCentModel(cents: DataFrame): Option[CentModel] =
     // only integral id types: the model sorts by the long-cast id, which
     // must agree with the exchange path's native `col(idc).asc` ordering
-    if (!Set[org.apache.spark.sql.types.DataType](
-        ByteType, ShortType, IntegerType, LongType).contains(idType))
-      return None
-    val projected = cents.select(col("c_id"), col("cv"),
-      col("c_id").cast("long").as("_cl"), unitMicros(col("cv")).as("_cu"))
-    val all = projected.collect()
+    if (!integralId(cents.schema("c_id").dataType)) None
+    else {
+      val projected = modelColumns(cents)
+      modelOf(projected.collect(), projected.schema)
+    }
+
+  private def integralId(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
+    Set[org.apache.spark.sql.types.DataType](ByteType, ShortType, IntegerType,
+      LongType).contains(t)
+  }
+
+  /** `(c_id, cv)` plus what a [[CentModel]] is built from: the long id
+    * `_cl` and the unit vector `_cu`.
+    */
+  private def modelColumns(cents: DataFrame): DataFrame =
+    cents.select(col("c_id"), col("cv"), col("c_id").cast("long").as("_cl"),
+      unitMicros(col("cv")).as("_cu"))
+
+  /** The [[CentModel]] of collected [[modelColumns]] rows, or `None` where
+    * [[CentModel]] says the exchange formulation must run.
+    */
+  private def modelOf(all: Array[org.apache.spark.sql.Row],
+      projected: org.apache.spark.sql.types.StructType): Option[CentModel] =
     if (all.isEmpty || all.length > MaxInlineCentroids ||
         all.exists(r => r.isNullAt(2) || r.isNullAt(3)))
       None
@@ -693,14 +750,12 @@ object Similarity {
       }
       if (dim == 0 || dup || sorted.exists(_._2.length != dim)) None
       else {
-        val schema = org.apache.spark.sql.types.StructType(
-          projected.schema.take(2))
+        val schema = org.apache.spark.sql.types.StructType(projected.take(2))
         val rows = all.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1)))
         Some(CentModel(rows, schema, sorted.map(_._1),
-          sorted.flatMap(_._2), idType))
+          sorted.flatMap(_._2), projected("c_id").dataType))
       }
     }
-  }
 
   /** `array<long>` empty literal — [[graft.functions.TopDotIds]]' "all
     * model centroids" candidate sentinel.
@@ -1322,16 +1377,17 @@ object Similarity {
     * `hier` geometry the lists were filed in: [[Nearest]]'s rank, or
     * [[massProbed]] / [[hierMassProbed]] over the list masses `sizes`
     * `(c_id, n_list)` of a corpus of `n` rows (read only by a budget).
-    * `dropEmpty` is [[massProbed]]'s filtered-mass rule.
+    * `dropEmpty` is [[massProbed]]'s filtered-mass rule; `model` is the
+    * already-collected centroid model of `cents`, if any.
     */
   private[operators] def probeLists(
       queries: DataFrame, id: Column, vec: Column, cents: DataFrame,
       sizes: => DataFrame, n: => Long, probe: Probe, hier: Option[Hier],
-      dropEmpty: Boolean = false): DataFrame = {
+      dropEmpty: Boolean = false, model: Option[CentModel] = None): DataFrame = {
     def qs = queries.select(id.as("q_id"), vec.as("qv"))
     probe match {
       case Nearest(nProbe) =>
-        assignLists(queries, id, vec, cents, hier, nProbe)
+        assignLists(queries, id, vec, cents, hier, nProbe, model)
           .select(col("c_id"), col("vec_id").as("q_id"), col("v").as("qv"))
       case Mass(massPpm) =>
         massProbed(qs, cents, sizes, n, massPpm, dropEmpty)
@@ -1453,16 +1509,29 @@ object Similarity {
     * exact integer unit-grid dot (each side's unit vector computed once).
     * The emitted `cos_ud` IS that integer score (`/2⁴⁰ ≈ cosine`) — no
     * float column enters the output hash. The join strategy is the
-    * caller's: store probes pass `broadcast(probed)`, the in-memory tiers
-    * leave it to the planner (a library caller may pass a corpus-sized
-    * query set).
+    * caller's: the in-memory tiers leave it to the planner (a library
+    * caller may pass a corpus-sized query set), a store probe with a
+    * collected assignment takes the [[rescoreLookup]] form.
     */
   private[operators] def rescore(lists: DataFrame, probed: DataFrame): DataFrame =
-    lists.withColumn("_vu", unitMicros(col("v")))
+    scored(lists.withColumn("_vu", unitMicros(col("v")))
       .join(probed.select(col("c_id"), col("q_id"),
           unitMicros(col("qv")).as("_qu")),
-        Seq("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
+        Seq("c_id")))
+
+  /** [[rescore]] against a query assignment the driver holds: `probing`
+    * gives each list row the `array<struct<q_id, _qu>>` of the queries that
+    * probe its list (`_qu` the query's unit vector), and the row meets each
+    * of them in a generator — the same pairs and scores as the join, with
+    * no join and so no exchange or job for the query side.
+    */
+  private[operators] def rescoreLookup(lists: DataFrame,
+      probing: Column): DataFrame =
+    scored(lists.withColumn("_vu", unitMicros(col("v")))
+      .select(col("*"), inline(probing)))
+
+  private def scored(pairs: DataFrame): DataFrame =
+    pairs.filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
         unitDot(col("_qu"), col("_vu")).as("cos_ud"))
 

@@ -1,10 +1,15 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
   IntegerType, LongType, MapType, StructField, StructType}
 import org.json4s._
@@ -12,9 +17,11 @@ import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
 import org.json4s.jackson.Serialization
 
+import graft.functions.BroadcastLookup
 import graft.io.LocalFs
+import graft.sources.Sources
 
-import Similarity.{Hier, Mass, Nearest, Probe}
+import Similarity.{CentModel, Hier, Mass, Nearest, Probe}
 
 /** The PERSISTED form of the IVF / IVF×PQ index — the missing piece
   * between [[Similarity]]'s in-flight ANN tiers and a 100 TB deployment.
@@ -34,8 +41,10 @@ import Similarity.{Hier, Mass, Nearest, Probe}
   *    static partition pruning turns into "touch only those directories":
   *    probe IO tracks `nProbe/lists × corpus`, not the corpus
   *    (plan-pinned in `VectorIndexSpec`, partition-count-pinned at runtime).
-  *  - the store side of the probe join never shuffles: the probed query
-  *    assignment is broadcast, so the only exchange in the whole probe is
+  *  - the store side of the probe never shuffles: the probed query
+  *    assignment is collected once and broadcast to the list scan (a
+  *    lookup on `c_id`, [[graft.functions.BroadcastLookup]]; PQ stores
+  *    broadcast-join it), so the only exchange in the whole probe is
   *    the final `k·|queries|`-bounded top-k window — the vector analog of
   *    the banded dedup store ([[Dedup.writeBandStore]]) and of the
   *    reference's partition-restricted DSE direct join
@@ -249,6 +258,39 @@ object VectorIndex {
   private[operators] def centroidsOf(spark: SparkSession, path: String,
       meta: StoreManifest): DataFrame =
     readBack(spark, path, "centroids", meta.centroids)
+
+  /** The collected centroid model of each store version, keyed by the
+    * qualified `centroids/` path with the [[Sources.Stamp]] it was
+    * collected at: part-file names carry the writing job's id, so a
+    * rebuild at the same path changes the stamp and the next read
+    * collects the new model. One entry per path; `None` is a model
+    * [[Similarity.collectCentModel]] refused (the exchange fallback).
+    */
+  private val models =
+    new ConcurrentHashMap[String, (Sources.Stamp, Option[CentModel])]()
+
+  private def remember(spark: SparkSession, path: String,
+      cm: Option[CentModel]): Unit =
+    Sources.locate(spark, s"$path/centroids").foreach { case (key, stamp) =>
+      models.put(key, (stamp, cm))
+    }
+
+  /** `centroids/` and its model: the memoized model of this store version
+    * (no job), else one collect that seeds the memo. With a model the
+    * centroids are its local relation, so no consumer rescans
+    * `centroids/`.
+    */
+  private[operators] def storedModel(spark: SparkSession, path: String,
+      meta: StoreManifest): (DataFrame, Option[CentModel]) = {
+    val cm = Sources.locate(spark, s"$path/centroids").flatMap {
+      case (key, stamp) => Option(models.get(key)).filter(_._1 == stamp).map(_._2)
+    }.getOrElse {
+      val collected = Similarity.collectCentModel(centroidsOf(spark, path, meta))
+      remember(spark, path, collected)
+      collected
+    }
+    (cm.fold(centroidsOf(spark, path, meta))(_.localCents(spark)), cm)
+  }
 
   /** The store's inverted lists `(c_id, vec_id, v, …)` as written — every
     * stored column (PQ `codes`, payload) under the schema the manifest
@@ -473,15 +515,18 @@ object VectorIndex {
     val config = StoreManifest(FormatVersion, hier.isDefined,
       geometry.superStride, geometry.sProbe, pq, numSubspaces, numCodes,
       pqResidual, payNames.toList, "", "", Counts(Map.empty, Map.empty))
-    val picked = centroids.map(_.select(col("c_id"), col("cv")))
-      .getOrElse(Similarity.ivfCentroids(base.select(id.as("vec_id"),
-        vec.as("v")), centroidStride, maxCentroids))
-    // the centroid model is collected ONCE: the assignment, the residual
-    // join, the list count and `centroids/` all read it, so none of them
-    // re-runs the centroid pick over `base` (no model — the exchange
-    // fallback — keeps the frame)
-    val cm = Similarity.collectCentModel(picked)
-    val cents = cm.fold(picked)(_.localCents(spark))
+    // the centroid model is collected ONCE — for stride centroids by the
+    // same collect that picks them: the assignment, the residual join, the
+    // list count and `centroids/` all read it, so none of them re-runs the
+    // centroid pick over `base` (no model — the exchange fallback — keeps
+    // the frame)
+    val (cents, cm) = centroids.fold(Similarity.pickCentroids(
+        base.select(id.as("vec_id"), vec.as("v")), centroidStride,
+        maxCentroids)) { c =>
+      val picked = c.select(col("c_id"), col("cv"))
+      val m = Similarity.collectCentModel(picked)
+      (m.fold(picked)(_.localCents(spark)), m)
+    }
     val listed = Similarity.assignLists(base, id, vec, cents, config.hier,
       model = cm)
     val rows =
@@ -510,6 +555,7 @@ object VectorIndex {
         targetFileBytes, path, "overwrite", None).json,
       centroidsSchema = bareStruct(cents.schema).json)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    remember(spark, path, cm)
     putManifest(spark, path, meta.copy(counts = countLists(spark, path, meta,
       statsCols)))
   }
@@ -570,10 +616,12 @@ object VectorIndex {
   }
 
   /** Count the lists ACTUALLY WRITTEN (read-back, the s23 honesty rule)
-    * in ONE aggregation collected to the driver: grouping sets over
-    * `(c_id)` and each `(c_id, statsCol)` give the per-list sizes and
-    * every requested histogram from one scan of the partition column plus
-    * the histogram columns — never the vectors.
+    * in ONE job with no exchange: each scan task counts its distinct
+    * `(c_id, statsCol…)` rows, and the driver merges the partial counts
+    * into the per-list sizes and every requested histogram — one scan of
+    * the partition column plus the histogram columns, never the vectors.
+    * Values reach the driver as Spark's JSON writer renders them, the form
+    * a manifest stores.
     *
     * The histograms are the zone-map-style metadata behind
     * [[probeIvfIndexFiltered]]: under a payload predicate the mass budget
@@ -587,25 +635,26 @@ object VectorIndex {
   private def countLists(spark: SparkSession, path: String,
       meta: StoreManifest, statsCols: Seq[String]): Counts = {
     val cols = statsCols.distinct
-    val keys = col("c_id") +: cols.indices.map(i => col(s"_s$i"))
     val keyed = readBack(spark, path, "lists", meta.lists)
       .select((col("c_id").cast("long").as("c_id") +:
         cols.zipWithIndex.map { case (c, i) => col(c).as(s"_s$i") }): _*)
-    val rows = keyed
-      .groupingSets(Seq(keys.take(1)) ++
-        cols.indices.map(i => Seq(keys.head, keys(i + 1))), keys: _*)
-      .agg(count(lit(1)).as("n_list"),
-        cols.indices.map(i => grouping(s"_s$i").as(s"_g$i")): _*)
+    val partial = keyed.mapPartitions { rows =>
+        val n = scala.collection.mutable.HashMap.empty[Row, Long]
+        rows.foreach(r => n(r) = n.getOrElse(r, 0L) + 1L)
+        n.iterator.map { case (r, c) => Row.fromSeq(r.toSeq :+ c) }
+      }(Encoders.row(keyed.schema.add("n_list", LongType, nullable = false)))
       .toJSON.collect().toList.map(parse(_, useBigDecimalForDouble = true))
-    def in(r: JValue, i: Int) = (r \ s"_g$i").extract[Int] == 0
+    def merged[K](key: JValue => K): Map[K, Long] =
+      partial.groupMapReduce(key)(r => (r \ "n_list").extract[Long])(_ + _)
+    def cId(r: JValue) = (r \ "c_id").extract[Long]
     Counts(
-      rows.filterNot(r => cols.indices.exists(in(r, _))).map(r =>
-        (r \ "c_id").extract[Long].toString -> (r \ "n_list").extract[Long])
-        .toMap,
+      merged(cId).map { case (c, n) => c.toString -> n },
       cols.zipWithIndex.map { case (c, i) =>
         c -> Histogram(keyed.schema(s"_s$i").dataType.json,
-          rows.filter(in(_, i)).map(r => ("c_id" -> (r \ "c_id")) ~
-            ("sval" -> (r \ s"_s$i")) ~ ("n_list" -> (r \ "n_list"))))
+          merged(r => (cId(r), r \ s"_s$i")).toList
+            .sortBy { case ((cid, v), _) => (cid, v.toString) }
+            .map { case ((cid, v), n) =>
+              ("c_id" -> cid) ~ ("sval" -> v) ~ ("n_list" -> n): JValue })
       }.toMap)
   }
 
@@ -803,9 +852,7 @@ object VectorIndex {
     val spark = increment.sparkSession
     LocalFs.register(spark)
     val meta = manifestOf(path)
-    val onDisk = centroidsOf(spark, path, meta)
-    val cm = Similarity.collectCentModel(onDisk)
-    val cents = cm.fold(onDisk)(_.localCents(spark))
+    val (cents, cm) = storedModel(spark, path, meta)
     val listed = Similarity.assignLists(increment, id, vec, cents, meta.hier,
       model = cm)
     // PQ stores encode with the STORED codebook (residual stores against
@@ -847,35 +894,68 @@ object VectorIndex {
       Array.tabulate(subDim)(p => rows((s, j.toLong, p + 1)))))
   }
 
-  /** A probed query assignment `(c_id, q_id, qv)` plus its distinct list
-    * ids — the one driver collect of every probe (config-sized, and it is
-    * the partition-pruning literal, not data).
-    */
-  private def withIds(probed: DataFrame): (DataFrame, Array[Long]) =
-    (probed, probed.select(col("c_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted)
-
   /** The list selection of every store probe: [[Similarity.probeLists]]
-    * over `centroids/`, in the geometry the manifest records, with the
-    * list masses a budget reads taken from `sizes` — the manifest's
-    * ([[listSizes]]), or [[probeIvfIndexFiltered]]'s matching counts with
-    * `dropEmpty`. The budget's total is summed on the driver; a
-    * [[Nearest]] probe reads neither.
+    * over the stored centroid model ([[storedModel]]), in the geometry the
+    * manifest records, with the list masses a budget reads taken from
+    * `sizes` — the manifest's ([[listSizes]]), or
+    * [[probeIvfIndexFiltered]]'s matching counts with `dropEmpty`. The
+    * budget's total is summed on the driver; a [[Nearest]] probe reads
+    * neither.
+    *
+    * The probed query assignment is collected ONCE — config-sized, the
+    * rows every probe broadcasts whole — so the probe's own query neither
+    * rescans nor re-assigns the queries.
     */
   private def selectLists(
       spark: SparkSession, path: String, meta: StoreManifest,
       queries: DataFrame, id: Column, vec: Column, probe: Probe,
-      sizes: Seq[(Long, Long)],
-      dropEmpty: Boolean = false): (DataFrame, Array[Long]) = {
+      sizes: Seq[(Long, Long)], dropEmpty: Boolean = false): Assigned = {
     import spark.implicits._
     def n = {
       val total = sizes.map(_._2).sum
       require(total > 0, s"store at $path has no rows — nothing to probe")
       total
     }
-    withIds(Similarity.probeLists(queries, id, vec,
-      centroidsOf(spark, path, meta).select(col("c_id"), col("cv")),
-      sizes.toDF("c_id", "n_list"), n, probe, meta.hier, dropEmpty))
+    val (cents, cm) = storedModel(spark, path, meta)
+    val probed = Similarity.probeLists(queries, id, vec,
+      cents.select(col("c_id"), col("cv")), sizes.toDF("c_id", "n_list"), n,
+      probe, meta.hier, dropEmpty, cm)
+    val withKeys = probed.select(col("*"), col("c_id").cast("long").as("_cl"),
+      Similarity.unitMicros(col("qv")).as("_qu"))
+    new Assigned(spark, withKeys.collect(), withKeys.schema)
+  }
+
+  /** A store probe's collected query assignment: rows of `(c_id, q_id,
+    * qv)` plus each row's list id `_cl` and unit query vector `_qu`.
+    */
+  private final class Assigned(spark: SparkSession, rows: Array[Row],
+      schema: StructType) {
+    private def at(name: String) = schema.fieldIndex(name)
+
+    /** The distinct probed list ids — the partition-pruning literal. */
+    val ids: Array[Long] = rows.map(_.getLong(at("_cl"))).distinct.sorted
+
+    /** `(c_id, q_id, qv)` as a local relation. */
+    def relation: DataFrame = spark.createDataFrame(rows.toSeq.asJava, schema)
+      .select(col("c_id"), col("q_id"), col("qv"))
+
+    /** The queries probing a list row's `c_id`, as
+      * [[Similarity.rescoreLookup]] takes them: one broadcast variable,
+      * which no Spark job ships.
+      */
+    private def probing: Column = {
+      val t = ArrayType(StructType(Seq(schema("q_id"), schema("_qu"))))
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(t)
+      val table: Map[Long, Any] = rows.groupBy(_.getLong(at("_cl"))).map {
+        case (c, rs) => c -> toCatalyst(rs.toSeq.map(r =>
+          Row(r.get(at("q_id")), r.get(at("_qu")))))
+      }
+      ColumnBridge.column(BroadcastLookup(ColumnBridge.expression(col("c_id")),
+        spark.sparkContext.broadcast(table), t))
+    }
+
+    def rescore(lists: DataFrame): DataFrame =
+      Similarity.rescoreLookup(lists, probing)
   }
 
   /** The store's lists restricted to the probed ids, via a literal filter
@@ -935,10 +1015,10 @@ object VectorIndex {
       probe: Probe = Nearest(2),
       where: Option[Column] = None): DataFrame = {
     val meta = manifestOf(path)
-    val (probed, ids) = selectLists(spark, path, meta, queries, id, vec,
-      probe, meta.counts.listSizes)
-    Similarity.topK(Similarity.rescore(
-      prunedLists(spark, path, meta, ids, where), broadcast(probed)), k)
+    val probed = selectLists(spark, path, meta, queries, id, vec, probe,
+      meta.counts.listSizes)
+    Similarity.topK(probed.rescore(
+      prunedLists(spark, path, meta, probed.ids, where)), k)
   }
 
   /** FILTERED top-k under the mass budget, with the budget run over
@@ -1013,11 +1093,11 @@ object VectorIndex {
       .groupMapReduce(_._1)(_._2)(_ + _).toSeq
     require(fsizes.map(_._2).sum > 0,
       s"no stored rows match $statsCol IN (${statsValues.mkString(", ")})")
-    val (probed, ids) = selectLists(spark, path, meta, queries, id, vec,
+    val probed = selectLists(spark, path, meta, queries, id, vec,
       Mass(massPpm), fsizes, dropEmpty = true)
     val pred = where.foldLeft(col(statsCol).isin(statsValues: _*))(_ && _)
-    Similarity.topK(Similarity.rescore(
-      prunedLists(spark, path, meta, ids, Some(pred)), broadcast(probed)), k)
+    Similarity.topK(probed.rescore(
+      prunedLists(spark, path, meta, probed.ids, Some(pred))), k)
   }
 
   /** Radius (range) search against a persisted store: every candidate in
@@ -1029,8 +1109,8 @@ object VectorIndex {
     * assignment, optional `where` pre-filter on payload columns — but no
     * per-query RESULT window at all: the threshold replaces the rank, so
     * top-k's one `k·|queries|`-bounded rank exchange disappears and the
-    * store side flows scan→filter→join→project with no shuffle (the only
-    * remaining exchanges are the config-sized query-assignment's own).
+    * store side flows scan→filter→lookup→project with no exchange at all
+    * (the query assignment is collected before the probe's own query).
     * Membership decides on the exact integer unit-grid dot
     * (`minCosine` scaled to the 2⁴⁰ dot scale — see
     * [[Similarity.cosineMicros2]]), never on a float boundary; output is
@@ -1055,12 +1135,11 @@ object VectorIndex {
       probe: Probe = Nearest(2),
       where: Option[Column] = None): DataFrame = {
     val meta = manifestOf(path)
-    val (probed, ids) = selectLists(spark, path, meta, queries, id, vec,
-      probe, meta.counts.listSizes)
+    val probed = selectLists(spark, path, meta, queries, id, vec, probe,
+      meta.counts.listSizes)
     // membership on the integer score itself (`udot ≥ minCosine·2⁴⁰`): a
     // candidate AT the bar must never hinge on a float boundary
-    Similarity.rescore(prunedLists(spark, path, meta, ids, where),
-      broadcast(probed))
+    probed.rescore(prunedLists(spark, path, meta, probed.ids, where))
       .filter(col("cos_ud") >= Similarity.cosineMicros2(minCosine))
   }
 
@@ -1152,16 +1231,11 @@ object VectorIndex {
       val rewrite = routeToLists(
         prunedLists(spark, path, meta, needy.keys.toArray.sorted), needy, 1,
         0L, listWriters(spark, Some(needy.size.toLong)))
-      val conf = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       dropMarker(path)
-      try {
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        rewrite.write.mode("overwrite").partitionBy("c_id")
-          .parquet(s"$path/lists")
-      } finally {
-        conf.fold(spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-      }
+      // the per-write option, never the session conf: a concurrent write
+      // on the caller's session must keep its own overwrite mode
+      rewrite.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("c_id").parquet(s"$path/lists")
       putManifest(spark, path, meta)
     }
     import spark.implicits._
@@ -1270,14 +1344,14 @@ object VectorIndex {
     require(meta.pq, s"store at $path was written without PQ codes — " +
       "probe with probeIvfIndex or rebuild with pq = true")
     val cb = readCodebook(spark, path, meta)
-    val (probed, ids) = selectLists(spark, path, meta, queries, id, vec,
-      probe, meta.counts.listSizes)
+    val probed = selectLists(spark, path, meta, queries, id, vec, probe,
+      meta.counts.listSizes)
     // residual stores hold codes over v − centroid, so the LUT is
     // per-(query, probed list) over qv − centroid
-    val probedLut = Similarity.withLut(probed,
-        centroidsOf(spark, path, meta), cb, meta.pqResidual)
+    val probedLut = Similarity.withLut(probed.relation,
+        storedModel(spark, path, meta)._1, cb, meta.pqResidual)
       .select(col("c_id"), col("q_id"), col("lut"))
-    val all = prunedLists(spark, path, meta, ids)
+    val all = prunedLists(spark, path, meta, probed.ids)
     val lists = where.foldLeft(all)(_.filter(_))
     // candidate scan: codes only — the store's vectors are not read here
     val poolRows = Similarity.pqPool(

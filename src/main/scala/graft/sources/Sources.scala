@@ -71,8 +71,10 @@ object Sources {
   def stamp(spark: SparkSession, path: String): Option[Stamp] =
     locate(spark, path).map(_._2)
 
-  /** The qualified path and [[Stamp]] of the table at `path`. */
-  private def locate(spark: SparkSession, path: String): Option[(String, Stamp)] =
+  /** The qualified path and [[Stamp]] of the table at `path`, or None when
+    * it cannot be listed.
+    */
+  private[graft] def locate(spark: SparkSession, path: String): Option[(String, Stamp)] =
     try {
       val p = new Path(path)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())

@@ -574,7 +574,10 @@ class VectorIndexSpec extends AnyFunSuite {
     // and append although the input fits one file, the compaction plan's
     // window job, parquet schema inference on each read-back), 18 after,
     // 16 once append's centroids/ and compaction's lists/ read-backs took
-    // the manifest's schemas. A regrowing chain fails here first.
+    // the manifest's schemas, 12 once the build picked its centroids and
+    // model in one collect, the append read the memoized model and each
+    // recount ran as one job. Two of the 12 are the fixture's own schema
+    // inference (`emb` is read twice). A regrowing chain fails here first.
     val path = tmpStore("ivfbudget")
     val jobs = jobsOf {
       VectorIndex.writeIvfIndex(emb.filter(col("vec_id") % 7 =!= 0),
@@ -583,7 +586,153 @@ class VectorIndexSpec extends AnyFunSuite {
         col("vec_id"), col("embedding"), path)
       VectorIndex.compactIvfIndex(spark, path)
     }
-    assert(jobs <= 16, s"store flow launched $jobs jobs (budget 16)")
+    assert(jobs <= 12, s"store flow launched $jobs jobs (budget 12)")
+  }
+
+  test("one probe of a built store stays within its job budget") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    val path = tmpStore("ivfprobebudget")
+    VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path)
+    // the probed query assignment's one collect, then the probe itself:
+    // the top-k window's shuffle stage and the result stage. The collected
+    // rows reach the list scan as a broadcast variable, not through a
+    // BroadcastExchange, which collects even a local relation through a
+    // job. The stored model comes from the memo the build seeded, and the
+    // list ids from the collected rows.
+    val qs = queries
+    val jobs = jobsOf {
+      VectorIndex.probeIvfIndex(spark, path, qs, col("vec_id"),
+        col("embedding")).write.format("noop").mode("overwrite").save()
+    }
+    assert(jobs <= 3, s"one probe launched $jobs jobs (budget 3)")
+  }
+
+  test("compaction sets its dynamic overwrite per write: untouched lists stay, the session's static mode is left alone") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val path = tmpStore("ivfcompactstatic")
+    VectorIndex.writeIvfIndex(emb.filter(col("vec_id") % 7 =!= 0),
+      col("vec_id"), col("embedding"), path, hier = None)
+    VectorIndex.appendToIvfIndex(emb.filter(col("vec_id") % 7 === 0 &&
+      col("vec_id") < 15), col("vec_id"), col("embedding"), path)
+    def files(): Map[Long, Set[String]] =
+      VectorIndex.listManifest(spark, path).as[(Long, String, Long)].collect()
+        .groupBy(_._1).map { case (c, fs) => c -> fs.map(_._2).toSet }
+    val before = files()
+    val untouched = before.filter(_._2.size == 1)
+    assert(untouched.nonEmpty && untouched.size < before.size,
+      s"the append must leave some lists alone: $before")
+    val want = ranking(VectorIndex.probeIvfIndex(spark, path, queries,
+      col("vec_id"), col("embedding")))
+    val stored = spark.read.parquet(s"$path/lists").count()
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      assert(!VectorIndex.compactIvfIndex(spark, path).isEmpty)
+      assert(spark.conf.get(key) == "static")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val after = files()
+    assert(untouched.forall { case (c, fs) => after.get(c).contains(fs) },
+      s"a static overwrite replaced untouched lists: $before -> $after")
+    assert(spark.read.parquet(s"$path/lists").count() == stored)
+    assert(ranking(VectorIndex.probeIvfIndex(spark, path, queries,
+      col("vec_id"), col("embedding"))) == want)
+  }
+
+  test("the one-collect build writes the lists and centroids of the in-memory tier and probes like it, on both sides of the model gate") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    def rows(df: DataFrame, cols: String*): Seq[String] =
+      df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
+    def gate(name: String, base: DataFrame, stride: Int, maxCentroids: Int,
+        hier: Option[Hier]): Unit = {
+      val path = tmpStore(s"ivfgate$name")
+      VectorIndex.writeIvfIndex(base, col("vec_id"), col("embedding"), path,
+        centroidStride = stride, maxCentroids = maxCentroids, hier = hier)
+      val b = base.select(col("vec_id"), col("embedding").as("v"))
+      val cents = Similarity.ivfCentroids(b, stride, maxCentroids)
+      assert(rows(spark.read.parquet(s"$path/centroids"), "c_id", "cv") ==
+        rows(cents, "c_id", "cv"), s"$name: centroids/")
+      assert(rows(spark.read.parquet(s"$path/lists"), "c_id", "vec_id", "v") ==
+        rows(Similarity.assignLists(base, col("vec_id"), col("embedding"),
+          cents, hier), "c_id", "vec_id", "v"), s"$name: lists/")
+      val qs = base.filter(col("vec_id") < 5)
+      val stored = ranking(VectorIndex.probeIvfIndex(spark, path, qs,
+        col("vec_id"), col("embedding"), probe = Nearest(2)))
+      assert(stored.nonEmpty && stored == ranking(Similarity.ivfTopK(base, qs,
+        col("vec_id"), col("embedding"), centroidStride = stride,
+        probe = Nearest(2), hier = hier, maxCentroids = maxCentroids)),
+        s"$name: probe")
+    }
+    // the model path: the collected rows are the picked set
+    gate("model", emb, 50, 15, Some(Hier(16, 2)))
+    // a duplicate id AT the boundary: the picked set reaches past the
+    // collected rows (ids 0, 50, …, 200 plus a second 200)
+    gate("tie", emb.unionByName(emb.filter(col("vec_id") === 200)), 50, 5, None)
+    // more picked rows than a model may hold: stride 1 over 8,300 rows
+    val wide = spark.range(8300).select(col("id").as("vec_id"),
+      transform(sequence(lit(1), lit(4)),
+        i => sin(col("id") * i).cast("float")).as("embedding"))
+    gate("wide", wide, 1, 9000, Some(Hier(128, 1)))
+    // a NULL vector among the picked rows
+    gate("null", emb.withColumn("embedding",
+      when(col("vec_id") =!= 100, col("embedding"))), 50, 20, None)
+  }
+
+  test("the stored model is read once per store version: append, compaction and probes reuse it, a rebuild from another corpus replaces it") {
+    assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
+    def build(corpus: DataFrame, path: String): Unit = {
+      VectorIndex.writeIvfIndex(corpus.filter(col("vec_id") % 7 > 1),
+        col("vec_id"), col("embedding"), path)
+      VectorIndex.appendToIvfIndex(corpus.filter(col("vec_id") % 7 === 0),
+        col("vec_id"), col("embedding"), path)
+    }
+    def probe(path: String): DataFrame = VectorIndex.probeIvfIndex(spark, path,
+      queries, col("vec_id"), col("embedding"))
+    def modelJobs(path: String): Int = jobsOf(VectorIndex.storedModel(spark,
+      path, VectorIndex.manifestOf(path)))
+    // the same rows written again: a new store version of the same model,
+    // so the next model read must collect once more
+    def rewriteCentroids(path: String): Unit = {
+      spark.read.parquet(s"$path/centroids").write.parquet(s"$path/centroids.new")
+      val dir = new java.io.File(s"$path/centroids")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+      assert(new java.io.File(s"$path/centroids.new").renameTo(dir))
+    }
+    val path = tmpStore("ivfmemo")
+    VectorIndex.writeIvfIndex(emb.filter(col("vec_id") % 7 > 1),
+      col("vec_id"), col("embedding"), path)
+    assert(modelJobs(path) == 0, "the build seeds the memo")
+    // an append on the memoized model runs one job fewer than the same
+    // append on a version the memo has not seen: zero model collects
+    val warmAppend = jobsOf(VectorIndex.appendToIvfIndex(
+      emb.filter(col("vec_id") % 7 === 0), col("vec_id"), col("embedding"), path))
+    rewriteCentroids(path)
+    val coldAppend = jobsOf(VectorIndex.appendToIvfIndex(
+      emb.filter(col("vec_id") % 7 === 1), col("vec_id"), col("embedding"), path))
+    assert(coldAppend == warmAppend + 1,
+      s"append: $warmAppend jobs on the memoized model, $coldAppend on a new version")
+    assert(!VectorIndex.compactIvfIndex(spark, path).isEmpty)
+    assert(modelJobs(path) == 0, "compaction keeps the store version")
+    val warmProbe = jobsOf(probe(path))
+    val want = ranking(probe(path))
+    rewriteCentroids(path)
+    val coldProbe = jobsOf(probe(path))
+    assert(coldProbe == warmProbe + 1,
+      s"probe: $warmProbe jobs on the memoized model, $coldProbe on a new version")
+    assert(ranking(probe(path)) == want)
+    // the same ids over other vectors, rebuilt at the same path: its
+    // append and probes must use the new model, exactly like a store
+    // built from that corpus at a path the memo has never seen
+    val flipped = emb.withColumn("embedding", reverse(col("embedding")))
+    build(flipped, path)
+    val fresh = tmpStore("ivfmemofresh")
+    build(flipped, fresh)
+    def lists(p: String) = spark.read.parquet(s"$p/lists")
+      .select(col("c_id").cast("long"), col("vec_id").cast("long"))
+      .collect().toSet
+    assert(lists(path) == lists(fresh), "the append must assign against the rebuilt model")
+    val rebuilt = ranking(probe(path))
+    assert(rebuilt == ranking(probe(fresh)) && rebuilt != want)
   }
 
   test("auto route is mass-proportional on a skewed corpus: heavy list fans out, probes invariant") {

@@ -790,29 +790,33 @@ class PlanSpec extends AnyFunSuite {
 
   test("ANN probes: result-rank windows and key exchanges pinned; store probes broadcast the query side") {
     assume(new java.io.File(s"$dir/embeddings.parquet").exists())
-    // (query, result-rank windows, hash exchanges, served from a store);
-    // the store plans count their dynamic-pruning subquery's exchanges too
+    // (query, result-rank windows, hash exchanges, how a store serves the
+    // query side: "" in memory). A store probe collects its query
+    // assignment before its own plan, so the budget probes' selection
+    // windows run there and only the top-k (and PQ pool) exchanges remain;
+    // a plain store probe looks the collected queries up in a broadcast
+    // variable ("lookup"), a PQ store probe broadcast-joins them ("join")
     val pinned = Seq(
-      ("s3_ann_ivf", 1, 1, false),
-      ("s19_ann_ivf_hier", 1, 1, false),
-      ("s32_ann_ivf_adaptive", 1, 2, false),
-      ("s37_ann_ivf_hier_adaptive", 1, 6, false),
-      ("s33_ann_ivfpq_adaptive", 1, 5, false),
-      ("s24_ann_ivf_store", 1, 1, true),
-      ("s34_ann_store_adaptive", 1, 3, true),
-      ("s38_ann_store_hier_adaptive", 1, 9, true),
-      ("s35_ann_pqstore_residual", 1, 4, true),
-      ("s10_ann_ivf_trained", 1, 1, false),
-      ("s14_ann_ivfpq", 1, 1, false),
-      ("s20_ann_ivfpq_hier", 1, 1, false),
-      ("s31_ann_ivfpq_residual", 1, 3, false),
-      ("s39_ann_ivf_trained_adaptive", 1, 3, false),
-      ("s27_ann_ivfpq_store", 1, 2, true),
-      ("s29_ann_store_filtered", 1, 1, true),
-      ("s30_ann_store_range", 0, 0, true),
-      ("s36_ann_store_range_adaptive", 0, 2, true),
-      ("s40_ann_store_filtered_adaptive", 1, 3, true),
-      ("s28_ivf_store_compact", 1, 1, true))
+      ("s3_ann_ivf", 1, 1, ""),
+      ("s19_ann_ivf_hier", 1, 1, ""),
+      ("s32_ann_ivf_adaptive", 1, 2, ""),
+      ("s37_ann_ivf_hier_adaptive", 1, 6, ""),
+      ("s33_ann_ivfpq_adaptive", 1, 5, ""),
+      ("s24_ann_ivf_store", 1, 1, "lookup"),
+      ("s34_ann_store_adaptive", 1, 1, "lookup"),
+      ("s38_ann_store_hier_adaptive", 1, 1, "lookup"),
+      ("s35_ann_pqstore_residual", 1, 2, "join"),
+      ("s10_ann_ivf_trained", 1, 1, ""),
+      ("s14_ann_ivfpq", 1, 1, ""),
+      ("s20_ann_ivfpq_hier", 1, 1, ""),
+      ("s31_ann_ivfpq_residual", 1, 3, ""),
+      ("s39_ann_ivf_trained_adaptive", 1, 3, ""),
+      ("s27_ann_ivfpq_store", 1, 2, "join"),
+      ("s29_ann_store_filtered", 1, 1, "lookup"),
+      ("s30_ann_store_range", 0, 0, "lookup"),
+      ("s36_ann_store_range_adaptive", 0, 0, "lookup"),
+      ("s40_ann_store_filtered_adaptive", 1, 1, "lookup"),
+      ("s28_ivf_store_compact", 1, 1, "lookup"))
     for ((name, windows, exchanges, store) <- pinned) {
       val plan = planOf(name)
       val lines = plan.linesIterator.toIndexedSeq
@@ -820,7 +824,7 @@ class PlanSpec extends AnyFunSuite {
       assert(rank == windows, s"$name: result-rank windows $rank:\n$plan")
       val keyEx = lines.count(_.contains("Exchange hashpartitioning"))
       assert(keyEx == exchanges, s"$name: hash exchanges $keyEx:\n$plan")
-      if (store) {
+      if (store == "join") {
         // the candidate join reads the lists scan on its streamed side and
         // takes the probed queries from a BroadcastExchange child
         def depth(i: Int) = lines(i).indexWhere(_.isLetter)
@@ -836,6 +840,19 @@ class PlanSpec extends AnyFunSuite {
             }
         }
         assert(broadcastProbe, s"$name: the query side must broadcast:\n$plan")
+      }
+      if (store == "lookup") {
+        // the lists scan streams into the lookup of the probing queries
+        // with no join or exchange below it, and nothing is broadcast
+        // through the plan
+        val lookupProbe = lines.indices.exists { j =>
+          val sub = subtree(lines, j)
+          lines(j).contains("Generate inline(graft_broadcast_lookup(c_id") &&
+            sub.exists(_.contains("/lists]")) &&
+            !sub.exists(l => l.contains("Exchange") || l.contains("Join"))
+        }
+        assert(lookupProbe && !plan.contains("BroadcastExchange"),
+          s"$name: the lists must stream into the query lookup:\n$plan")
       }
     }
   }
