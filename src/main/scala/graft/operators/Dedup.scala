@@ -49,21 +49,22 @@ object Dedup {
     * Either persist pays only while the corpus is small: at sf10 (150 MB
     * text, BASELINE §15 persist note) the columnar cache build of the
     * corpus-sized postings outweighs the recompute it saves (1.4×). So
-    * the persist is gated on the SOURCE's plan-stat size: below the
-    * threshold (default 64 MB, `SPARK_GRAFT_POSTINGS_CACHE_BYTES`; 0
-    * disables — the A/B hatch) the frame is cached like any other
+    * the persist is gated on the SOURCE's plan-stat size: at or below
+    * [[PostingsCacheBytes]] the frame is cached like any other
     * intermediate; above it the recompute shape is kept verbatim.
     * Results are identical either way — persist is semantically
     * transparent; only the plan changes.
     */
-  private def cachedIfSmall(src: DataFrame, df: DataFrame): DataFrame = {
-    val limit = sys.env.get("SPARK_GRAFT_POSTINGS_CACHE_BYTES").map(_.toLong)
-      .getOrElse(64L * 1024 * 1024)
-    if (limit > 0 &&
-        src.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(limit))
+  private def cachedIfSmall(src: DataFrame, df: DataFrame): DataFrame =
+    if (src.queryExecution.optimizedPlan.stats.sizeInBytes <= PostingsCacheBytes)
       cached(df)
     else df
-  }
+
+  /** [[cachedIfSmall]]'s source-size bound: 64 MB sits between the
+    * corpora where the persist measured faster (0.48–0.57× at sf0.1) and
+    * sf10's 150 MB, where it measured 1.4× slower.
+    */
+  private val PostingsCacheBytes = BigInt(64L * 1024 * 1024)
 
   /** Unpersist every intermediate the dedup operators have cached since the
     * last call. Call after the terminal action on an operator's result.
@@ -1542,34 +1543,35 @@ object Dedup {
       centroidStride: Int = 50,
       centroids: Option[DataFrame] = None,
       maxFlatCentroids: Int = 4096): DataFrame = {
-    // Eager centroid-count probe (one filtered scan, only on the
-    // stride path): fail loudly when the stride matches NO id — the empty
-    // centroid set would otherwise flow through the inner assignment join
-    // and silently return an empty keep-set, a dedup operator deleting
-    // 100% of the corpus — and fail loudly PAST the flat-assignment bound
-    // (see scaladoc; the only scale-killer-by-default this operator had).
-    // A trained centroid table (Similarity.kmeansCentroids — the paper's
-    // actual k-means clustering) bypasses the stride contract entirely.
-    val cents = centroids.getOrElse {
-      val strided =
-        emb.filter(id.cast("long") % centroidStride === 0)
-          .select(id.as("c_id"), vec.as("cv"))
-      val nCents = strided.count()
-      require(nCents > 0,
-        s"semanticKeep: no id is a multiple of centroidStride=$centroidStride — " +
-          "the centroid set is empty and every row would be dropped; pick a " +
-          "stride that selects some ids")
+    // Eager centroid pick (one collect of at most maxFlatCentroids + 1
+    // stride rows, only on the stride path): fail loudly when the stride
+    // matches NO id — the empty centroid set would otherwise flow through
+    // the inner assignment join and silently return an empty keep-set, a
+    // dedup operator deleting 100% of the corpus — and fail loudly PAST
+    // the flat-assignment bound (see scaladoc; the only
+    // scale-killer-by-default this operator had). The same collect is the
+    // centroid model of the assignment. A trained centroid table
+    // (Similarity.kmeansCentroids — the paper's actual k-means
+    // clustering) bypasses the stride contract entirely.
+    val b = emb.select(id.as("vec_id"), vec.as("v"))
+    val (cents, model) = centroids.fold {
+      val (picked, cm) = Similarity.pickCentroids(b, centroidStride,
+        if (maxFlatCentroids == Int.MaxValue) Int.MaxValue
+        else maxFlatCentroids + 1)
+      // only a picked set without a model (a boundary tie, a NULL
+      // vector, a cap above the inline bound) is counted
+      val nCents = cm.fold(picked.count())(_.ids.length.toLong)
       require(nCents <= maxFlatCentroids,
-        s"semanticKeep: centroidStride=$centroidStride picks $nCents centroids — " +
-          s"past maxFlatCentroids=$maxFlatCentroids the flat nearest-centroid " +
-          "assignment is rows × centroids ≈ N²/stride (quadratic in the corpus). " +
-          "Supply trained fixed-k centroids (Similarity.kmeansTrain → " +
-          "kmeansCentroids; pick k ≈ √N to balance assignment against the " +
-          "within-cluster prune, and train on an id-stride sample at scale " +
-          "— the d12b/d12c routes, measured in BASELINE.md §9) or raise " +
-          "maxFlatCentroids deliberately")
-      strided
-    }
+        s"semanticKeep: centroidStride=$centroidStride picks more than " +
+          s"maxFlatCentroids=$maxFlatCentroids centroids — past it the flat " +
+          "nearest-centroid assignment is rows × centroids ≈ N²/stride " +
+          "(quadratic in the corpus). Supply trained fixed-k centroids " +
+          "(Similarity.kmeansTrain → kmeansCentroids; pick k ≈ √N to " +
+          "balance assignment against the within-cluster prune, and train " +
+          "on an id-stride sample at scale — the d12b/d12c routes, measured " +
+          "in BASELINE.md §9) or raise maxFlatCentroids deliberately")
+      (picked, cm)
+    }(c => (c.select(col("c_id"), col("cv")), None))
     // three consumers (both join sides + the anti-join probe): persist the
     // centroid assignment or each branch re-runs the broadcast-rank pass.
     // The centroid set is deliberately UNCAPPED here, unlike the ANN
@@ -1583,12 +1585,8 @@ object Dedup {
     // `centroids`, the paper's k-means) or route the assignment through
     // an ANN index over the centroid set — the knob exists precisely
     // because no flat SemDeDup avoids an N² term on one side or the other.
-    // `cents` is already validated above (the guard's count IS the probe),
-    // so ivfAssign never re-probes the stride filter.
     semanticKeepAssigned(
-      Similarity.ivfAssign(emb, id, vec, centroidStride, Some(cents),
-        maxCentroids = Int.MaxValue),
-      minCosine)
+      Similarity.ivfAssignTo(cents, b, "v", "vec_id", 1, model), minCosine)
   }
 
   /** SemDeDup's within-cluster prune over a CALLER-SUPPLIED centroid

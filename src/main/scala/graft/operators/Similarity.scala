@@ -263,35 +263,9 @@ object Similarity {
       k: Int = 10,
       tables: Int = 24,
       bits: Int = 4,
-      maxDim: Int = 1024): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // the unit vector is materialized in a select BELOW the explode: a
-    // select-sibling of posexplode lands in the Project ABOVE the
-    // Generate and re-evaluates once per OUTPUT row — `tables`× the
-    // per-component work (the §7-lesson-14 generator trap)
-    def bucketed(df: DataFrame, idName: String, vName: String, uName: String) =
-      df.select(col(idName), col(vName), unitMicros(col(vName)).as(uName))
-        .select(col(idName), col(vName), col(uName),
-          posexplode(bucketIds(col(vName), tables, bits, maxDim)).as(Seq("tbl", "bucket")))
-    val bb = bucketed(base.select(id.as("vec_id"), vec.as("v")), "vec_id", "v", "_vu")
-    val qb = bucketed(queries.select(id.as("q_id"), vec.as("qv")), "q_id", "qv", "_qu")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_ud").desc, col("vec_id").asc)
-    bb.as("a")
-      .join(qb.hint("broadcast").as("qq"),
-        col("a.tbl") === col("qq.tbl") && col("a.bucket") === col("qq.bucket") &&
-          col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-      // duplicate copies of a pair (one per colliding table) are identical
-      // and adjacent under the window order; dense_rank = rank among
-      // distinct pairs, lag keeps only each pair's first copy — both run in
-      // the SAME WindowExec, so dedup costs no extra shuffle
-      .withColumn("rn", dense_rank().over(w).cast("long"))
-      .withColumn("_dup", lag(col("vec_id"), 1).over(w) === col("vec_id"))
-      .filter(col("rn") <= k && !coalesce(col("_dup"), lit(false)))
-      .drop("_dup")
-  }
+      maxDim: Int = 1024): DataFrame =
+    lshCandidateTopK(base, queries, id, vec, k, tables, bits, maxDim,
+      flips = false)
 
   /** Multi-probe LSH ANN: like [[lshTopK]], but each query probes its own
     * sign bucket PLUS every bucket at Hamming distance 1 (one hyperplane's
@@ -321,22 +295,37 @@ object Similarity {
       k: Int = 10,
       tables: Int = 6,
       bits: Int = 4,
-      maxDim: Int = 1024): DataFrame = {
+      maxDim: Int = 1024): DataFrame =
+    lshCandidateTopK(base, queries, id, vec, k, tables, bits, maxDim,
+      flips = true)
+
+  /** The candidate body of [[lshTopK]] (`flips = false`: each query
+    * probes its own bucket per table) and [[lshMultiProbeTopK]] (`flips =
+    * true`: its own bucket plus the `bits` Hamming-1 flips — queries ×
+    * tables × (bits+1) rows, still broadcast-sized). The base is bucketed
+    * once for every table; the query side is broadcast, so the candidate
+    * join shuffles nothing, and the top-k window dedups the copies of a
+    * pair in place.
+    */
+  private def lshCandidateTopK(base: DataFrame, queries: DataFrame,
+      id: Column, vec: Column, k: Int, tables: Int, bits: Int, maxDim: Int,
+      flips: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // unit vectors below the explodes — same generator-trap avoidance as
-    // [[lshTopK]]'s bucketed()
-    val bb = base.select(id.as("vec_id"), vec.as("v"), unitMicros(vec).as("_vu"))
-      .select(col("vec_id"), col("v"), col("_vu"),
-        posexplode(bucketIds(col("v"), tables, bits, maxDim)).as(Seq("tbl", "bucket")))
-    // query side: own bucket + the `bits` Hamming-1 flips, exploded —
-    // queries × tables × (bits+1) rows, still broadcast-sized
-    val probeSet = (c: Column) => array(c +: (0 until bits).map(j =>
-      c.bitwiseXOR(lit(1L << j))): _*)
-    val qb = queries.select(id.as("q_id"), vec.as("qv"), unitMicros(vec).as("_qu"))
-      .select(col("q_id"), col("qv"), col("_qu"),
-        posexplode(bucketIds(col("qv"), tables, bits, maxDim)).as(Seq("tbl", "qbucket")))
-      .select(col("q_id"), col("qv"), col("_qu"), col("tbl"),
-        explode(probeSet(col("qbucket"))).as("bucket"))
+    // the unit vector is materialized in a select BELOW the explode: a
+    // select-sibling of posexplode lands in the Project ABOVE the
+    // Generate and re-evaluates once per OUTPUT row — `tables`× the
+    // per-component work (the §7-lesson-14 generator trap)
+    def bucketed(df: DataFrame, idName: String, vName: String, uName: String) =
+      df.select(col(idName), col(vName), unitMicros(col(vName)).as(uName))
+        .select(col(idName), col(vName), col(uName),
+          posexplode(bucketIds(col(vName), tables, bits, maxDim)).as(Seq("tbl", "bucket")))
+    val bb = bucketed(base.select(id.as("vec_id"), vec.as("v")), "vec_id", "v", "_vu")
+    val own = bucketed(queries.select(id.as("q_id"), vec.as("qv")), "q_id", "qv", "_qu")
+    val qb =
+      if (!flips) own
+      else own.select(col("q_id"), col("qv"), col("_qu"), col("tbl"),
+        explode(array(col("bucket") +: (0 until bits).map(j =>
+          col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_ud").desc, col("vec_id").asc)
     bb.as("a")
@@ -345,9 +334,10 @@ object Similarity {
           col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
         unitDot(col("_qu"), col("_vu")).as("cos_ud"))
-      // same in-window dedup as lshTopK: copies of a pair (several probe
-      // hits) are adjacent under the order; dense_rank + lag drop them
-      // without an extra shuffle
+      // duplicate copies of a pair (one per colliding table or probe hit)
+      // are identical and adjacent under the window order; dense_rank =
+      // rank among distinct pairs, lag keeps only each pair's first copy —
+      // both run in the SAME WindowExec, so dedup costs no extra shuffle
       .withColumn("rn", dense_rank().over(w).cast("long"))
       .withColumn("_dup", lag(col("vec_id"), 1).over(w) === col("vec_id"))
       .filter(col("rn") <= k && !coalesce(col("_dup"), lit(false)))
@@ -579,9 +569,9 @@ object Similarity {
   }
 
   private def noStrideIds(centroidStride: Int): String =
-    s"ivfCentroids: no id is a multiple of centroidStride=$centroidStride — " +
-      "the centroid set is empty and every probe would return zero rows; " +
-      "pick a stride that selects some ids or supply trained centroids"
+    s"no id is a multiple of centroidStride=$centroidStride — the " +
+      "centroid set is empty and no row would be assigned a list; pick a " +
+      "stride that selects some ids or supply trained centroids"
 
   /** The stride-picked `(c_id, cv)` rows with id ≤ `boundary`. */
   private def strideUpTo(b: DataFrame, centroidStride: Int,
@@ -1887,6 +1877,11 @@ object Similarity {
     transform(vec.cast("array<double>"),
       x => floor(x * lit(1048576.0) + lit(0.5)).cast("long"))
 
+  /** [[lloydLoop]]'s point-table bound for the TopDot assignment (see
+    * the measurements there).
+    */
+  private val TopDotMinBytes = BigInt(4L * 1024 * 1024)
+
   /** The shared driver-iterated Lloyd loop over GROUPED point sets —
     * `pts` is `(grp, pid, mv)` and every group trains its own centroid
     * set simultaneously, so ONE job per iteration covers all groups
@@ -1913,24 +1908,19 @@ object Similarity {
     // overflow semantics), centroids are already driver-side arrays, so
     // the per-iteration job becomes projection → component aggregation
     // with a model-sized exchange. SIZE-GATED on the point table's plan
-    // stats (default 4 MiB, `SPARK_GRAFT_KMEANS_TOPDOT_BYTES`; 0 = always
-    // fast): below the threshold the tiny per-iteration shuffle is free
-    // and the projection's per-row array allocations measured NET SLOWER
-    // (trained family 12.6 → 13.3 s at sf0.1), above it the removed
-    // corpus-sized exchange wins (d12b 4.18 → 3.65 s at sf1, and the gap
-    // is the corpus:model size ratio at 100 TB). Fallback (ragged or
-    // oversized seed sets): the join formulation verbatim below. Results
-    // identical on every path.
+    // stats ([[TopDotMinBytes]]): below the threshold the tiny
+    // per-iteration shuffle is free and the projection's per-row array
+    // allocations measured NET SLOWER (trained family 12.6 → 13.3 s at
+    // sf0.1), above it the removed corpus-sized exchange wins (d12b
+    // 4.18 → 3.65 s at sf1, and the gap is the corpus:model size ratio at
+    // 100 TB). Fallback (ragged or oversized seed sets): the join
+    // formulation verbatim below. Results identical on every path (the
+    // oracle corpus sits below the gate, so KmeansPropertiesSpec pins the
+    // fast path's bit-identity, taking each arm by the input's provenance).
     val dims = seeds.map(_._2.length).distinct
-    // sys.props first so the equivalence spec can force either path in
-    // one JVM (the oracle corpus sits below the gate, so the fast path's
-    // bit-identity is pinned by KmeansPropertiesSpec, not the sf0.01 gate)
-    val tdMinBytes = sys.props.get("SPARK_GRAFT_KMEANS_TOPDOT_BYTES")
-      .orElse(sys.env.get("SPARK_GRAFT_KMEANS_TOPDOT_BYTES"))
-      .map(_.toLong).getOrElse(4L * 1024 * 1024)
     val useTopDot = seeds.nonEmpty && seeds.length <= MaxInlineCentroids &&
       dims.length == 1 &&
-      pts.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(tdMinBytes)
+      pts.queryExecution.optimizedPlan.stats.sizeInBytes >= TopDotMinBytes
     val groups = seeds.map(_._1._1).distinct.sorted
     val cidStride = if (seeds.isEmpty) 1L else seeds.map(_._1._2).max + 1
     val dim = dims.headOption.getOrElse(0)

@@ -442,30 +442,25 @@ object VectorIndex {
     * `base` — the payload join is an inner join of two projections of
     * `base` on `vec_id`, so a duplicated id SQUARES its stored rows.
     *
-    * `filesPerList` bounds the file count per `c_id=` directory: rows
-    * are routed by a deterministic `xxhash64(vec_id) % filesPerList`
-    * split co-partitioned with `c_id` before the write (the
-    * [[compactIvfIndex]] bin trick applied AT BUILD TIME). Without it a
-    * partitionBy write fans every upstream task across every list —
-    * `tasks × lists` drizzle files (81,920 at the 100× gate: ~20 s of
-    * file-open tax on the build's own read-back, and per-file open cost
-    * on every probe thereafter).
-    *
-    * The DEFAULT (`filesPerList = 0`) AUTO-SIZES from the data, PER
-    * LIST (r18): each list routes to `ceil(itsBytes / targetFileBytes)`
-    * splits, with per-list bytes estimated from a deterministic
-    * 1/[[RouteSampleStride]] hash slice of the assignment scaled by the
-    * input size (Catalyst's file-index estimate) — so a file ≈ one HDFS
-    * block / row-group at ANY corpus size AND any skew. (A global-mean
-    * width sized a Zipf-heavy list's files at `heavyShare × lists ×` the
-    * target, its one writer task the build's straggler; a fixed 1 means
-    * ~400 GB single files per list at 100 TB.) An input whose size
-    * estimate is at most `targetFileBytes` takes the 1-file route with
-    * no sampling job — no list can estimate above the whole input, so
-    * the sample could only answer 1. Sources without a real size
-    * estimate fall back to 1 too, and per-list counts are clamped to
-    * [1, 4096] (≈ a 512 GB list at the 128 MB default target — past
-    * that, raise `targetFileBytes` deliberately).
+    * The file count per `c_id=` directory is sized from the data, PER
+    * LIST: rows are routed by a deterministic `xxhash64(vec_id)` split
+    * co-partitioned with `c_id` before the write (the [[compactIvfIndex]]
+    * bin trick applied AT BUILD TIME), each list to `ceil(itsBytes /
+    * targetFileBytes)` splits, with per-list bytes estimated from a
+    * deterministic 1/[[RouteSampleStride]] hash slice of the assignment
+    * scaled by the input size (Catalyst's file-index estimate) — so a
+    * file ≈ one HDFS block / row-group at ANY corpus size AND any skew.
+    * (An unrouted partitionBy write fans every upstream task across every
+    * list — `tasks × lists` drizzle files, 81,920 at the 100× gate; a
+    * global-mean width sized a Zipf-heavy list's files at `heavyShare ×
+    * lists ×` the target, its one writer task the build's straggler; a
+    * fixed 1 means ~400 GB single files per list at 100 TB.) An input
+    * whose size estimate is at most `targetFileBytes` takes the 1-file
+    * route with no sampling job — no list can estimate above the whole
+    * input, so the sample could only answer 1. Sources without a real
+    * size estimate take the 1-file route too, and per-list counts are
+    * clamped to [1, 4096] (≈ a 512 GB list at the 128 MB default target
+    * — past that, raise `targetFileBytes` deliberately).
     */
   def writeIvfIndex(
       base: DataFrame,
@@ -481,7 +476,6 @@ object VectorIndex {
       codeStride: Int = 16,
       centroids: Option[DataFrame] = None,
       payload: Seq[Column] = Nil,
-      filesPerList: Int = 0,
       targetFileBytes: Long = 128L << 20,
       pqResidual: Boolean = false,
       statsCols: Seq[String] = Nil): Unit = {
@@ -504,7 +498,7 @@ object VectorIndex {
     require(badStats.isEmpty,
       s"statsCols must name payload columns (add them to `payload`): " +
         badStats.mkString(", "))
-    requireRouting(filesPerList, targetFileBytes)
+    requireTarget(targetFileBytes)
     // invalidate BEFORE any artifact is touched: a rebuild of an existing
     // complete store overwrites the codebook eagerly below, and a
     // concurrent probe in that window must fail loudly on the missing
@@ -551,7 +545,7 @@ object VectorIndex {
       }
     val stored = if (payload.isEmpty) rows else rows.join(pay, Seq("vec_id"))
     val meta = config.copy(
-      listsSchema = writeLists(stored, base, listed, cm, cents, filesPerList,
+      listsSchema = writeLists(stored, base, listed, cm, cents,
         targetFileBytes, path, "overwrite", None).json,
       centroidsSchema = bareStruct(cents.schema).json)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
@@ -560,36 +554,31 @@ object VectorIndex {
       statsCols)))
   }
 
-  private def requireRouting(filesPerList: Int, targetFileBytes: Long): Unit = {
-    require(filesPerList >= 0,
-      s"filesPerList must be positive (or 0 = auto), got $filesPerList")
+  private def requireTarget(targetFileBytes: Long): Unit =
     require(targetFileBytes > 0,
       s"targetFileBytes must be positive, got $targetFileBytes")
-  }
 
   /** Route `stored` rows to their lists and write them under `lists/` —
-    * the layout rule the build and every append share: explicit
-    * `filesPerList`, or per-list widths auto-sized from `input`'s bytes
-    * and `listed`'s sampled masses (see [[writeIvfIndex]]). `recorded`
-    * is the store's `lists/` schema when appending: rows of another
-    * schema are rejected before anything is written, since a read under
-    * the recorded schema would misread their files.
+    * the layout rule the build and every append share: per-list widths
+    * auto-sized from `input`'s bytes and `listed`'s sampled masses (see
+    * [[writeIvfIndex]]). `recorded` is the store's `lists/` schema when
+    * appending: rows of another schema are rejected before anything is
+    * written, since a read under the recorded schema would misread their
+    * files.
     *
     * @return the written schema as a read-back sees it ([[bare]])
     */
   private def writeLists(stored: DataFrame, input: DataFrame,
       listed: DataFrame, cm: Option[Similarity.CentModel], cents: DataFrame,
-      filesPerList: Int, targetFileBytes: Long, path: String, mode: String,
+      targetFileBytes: Long, path: String, mode: String,
       recorded: Option[StructType]): StructType = {
-    val auto =
-      if (filesPerList > 0) None
-      else autoListFileCounts(input, listed, targetFileBytes)
     // the list count comes from the collected centroid model (a count job
     // only on the exchange fallback), and is taken only when a split can
-    // happen (explicit filesPerList = 1 never forces it); the one-file
-    // route's writer width needs no count job: unknown means many lists
-    val routed = routeToLists(stored, auto.getOrElse(Map.empty),
-      filesPerList.max(1), cm.fold(cents.count())(_.ids.length.toLong),
+    // happen; the one-file route's writer width needs no count job:
+    // unknown means many lists
+    val routed = routeToLists(stored,
+      autoListFileCounts(input, listed, targetFileBytes).getOrElse(Map.empty),
+      cm.fold(cents.count())(_.ids.length.toLong),
       listWriters(stored.sparkSession, cm.map(_.ids.length.toLong)))
     val schema = bareStruct(routed.schema)
     recorded.foreach { want =>
@@ -699,8 +688,8 @@ object VectorIndex {
     */
   private val RouteSampleStride = 64L
 
-  /** PER-LIST file counts for the auto route (see [[writeIvfIndex]]'s
-    * `filesPerList`): each list gets `ceil(listBytes / targetFileBytes)`
+  /** PER-LIST file counts of the store's route (see [[writeIvfIndex]]):
+    * each list gets `ceil(listBytes / targetFileBytes)`
     * files, with `listBytes` estimated as `inputBytes × (sampled list
     * rows / sampled total)` from a deterministic 1/[[RouteSampleStride]]
     * hash slice of the SAME assignment that files the rows — never a
@@ -740,7 +729,7 @@ object VectorIndex {
 
   /** Co-partition rows with their target list plus a deterministic
     * `xxhash64(vec_id) % files(c_id)` sub-split — `files` is
-    * `listFiles(c_id)`, else `dflt` — so the partitionBy writer emits
+    * `listFiles(c_id)`, else 1 — so the partitionBy writer emits
     * `≤ files(c_id)` files per `c_id=` directory instead of one per
     * upstream task per list. Row content is untouched — routing only
     * decides WHICH file a row lands in. Per-list widths are the auto
@@ -755,7 +744,7 @@ object VectorIndex {
     * count-free `repartition(c_id)` of a few MB into ONE writer task,
     * which then creates every list's directory and file serially).
     * Otherwise the partition COUNT is pinned to the intended
-    * writer parallelism (Σ listed widths + `dflt` for each of `nLists`
+    * writer parallelism (Σ listed widths + 1 for each of `nLists`
     * lists): an adaptive exchange would COALESCE the small sub-splits
     * back into shared tasks — same-list splits in one task merge into
     * one file — and silently undo the sizing (measured: a 76-way split
@@ -764,15 +753,15 @@ object VectorIndex {
     * `targetFileBytes` proportionally — still bounded, never drizzle.
     */
   private def routeToLists(rows: DataFrame, listFiles: Map[Long, Int],
-      dflt: Int, nLists: => Long, writers: Int): DataFrame =
-    if (dflt <= 1 && listFiles.values.forall(_ <= 1))
+      nLists: => Long, writers: Int): DataFrame =
+    if (listFiles.values.forall(_ <= 1))
       rows.repartition(writers, col("c_id"))
     else {
-      val parts = (listFiles.values.map(_.toLong).sum + nLists * dflt)
+      val parts = (listFiles.values.map(_.toLong).sum + nLists)
         .max(1L).min(65536L).toInt
       rows.withColumn(RouteCol, pmod(xxhash64(col("vec_id")),
           coalesce(element_at(typedLit(listFiles), col("c_id").cast("long")),
-            lit(dflt)).cast("long")))
+            lit(1)).cast("long")))
         .repartition(parts, col("c_id"), col(RouteCol))
         .drop(RouteCol)
     }
@@ -794,7 +783,6 @@ object VectorIndex {
       numCodes: Int = 16,
       codeStride: Int = 16,
       payload: Seq[Column] = Nil,
-      filesPerList: Int = 0,
       targetFileBytes: Long = 128L << 20,
       pqResidual: Boolean = false,
       statsCols: Seq[String] = Nil): Unit = {
@@ -813,7 +801,7 @@ object VectorIndex {
         if (pq) Some(pqResidual) else None, Some(hier)))
       writeIvfIndex(base, id, vec, path, centroidStride, maxCentroids, hier,
         pq, numSubspaces, numCodes, codeStride, payload = payload,
-        filesPerList = filesPerList, targetFileBytes = targetFileBytes,
+        targetFileBytes = targetFileBytes,
         pqResidual = pqResidual, statsCols = statsCols)
     else {
       // servable store, possibly built before these histograms were
@@ -847,7 +835,6 @@ object VectorIndex {
       id: Column,
       vec: Column,
       path: String,
-      filesPerList: Int = 0,
       targetFileBytes: Long = 128L << 20): Unit = {
     val spark = increment.sparkSession
     LocalFs.register(spark)
@@ -869,13 +856,13 @@ object VectorIndex {
       else rows.join(
         increment.select((id.as("vec_id") +: meta.payload.map(col)): _*),
         Seq("vec_id"))
-    requireRouting(filesPerList, targetFileBytes)
+    requireTarget(targetFileBytes)
     // same routing as the build, sized by the INCREMENT's bytes and
     // sampled masses: a small batch adds 1 file per touched list (which
     // keeps compaction occasional), a bulk or skewed backfill gets
     // block-sized files like a build would
-    writeLists(stored, increment, listed, cm, cents, filesPerList,
-      targetFileBytes, path, "append", Some(meta.lists))
+    writeLists(stored, increment, listed, cm, cents, targetFileBytes, path,
+      "append", Some(meta.lists))
     // recount AFTER the rows land, then swap the manifest: a crash
     // between the two leaves last batch's counts — a drift in the mass
     // budget's list SELECTION the next append heals, never a wrong
@@ -1229,7 +1216,7 @@ object VectorIndex {
     }.toMap
     if (needy.nonEmpty) {
       val rewrite = routeToLists(
-        prunedLists(spark, path, meta, needy.keys.toArray.sorted), needy, 1,
+        prunedLists(spark, path, meta, needy.keys.toArray.sorted), needy,
         0L, listWriters(spark, Some(needy.size.toLong)))
       dropMarker(path)
       // the per-write option, never the session conf: a concurrent write

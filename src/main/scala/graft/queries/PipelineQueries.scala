@@ -751,8 +751,10 @@ object PipelineQueries {
   // Similarity search
   // ------------------------------------------------------------------
 
+  // read straight from the source: the five query rows need no rebalance
+  // of the whole embeddings table
   private def queriesDf(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings").filter(col("vec_id") < 5)
+    Sources.parquet(s, s"$dir/embeddings.parquet").filter(col("vec_id") < 5)
 
   private val s1: Q = (s, dir) =>
     Similarity.bruteForceTopK(t(s, dir, "embeddings"), queriesDf(s, dir),

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import jdk.jfr.consumer.RecordingStream
 
@@ -44,6 +46,35 @@ object TestSpark {
     })(body)
     jobs.get()
   }
+
+  /** The executed plan of every query `body` runs to an action (failed
+    * ones too), as plan-tree strings in completion order.
+    */
+  def plansOf(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.executedPlan.toString)
+    }
+    val sc = spark.sparkContext
+    ListenerBridge.waitUntilListenerBusEmpty(sc)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBridge.waitUntilListenerBusEmpty(sc)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  /** `df`'s rows as an RDD-backed frame: the same rows with no size
+    * estimate, so its plan stats read the session's `defaultSizeInBytes`
+    * and every size gate takes its large-input arm (a local `Seq.toDF`
+    * frame reports its real, small size).
+    */
+  def unsized(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.rdd, df.schema)
 
   /** The task count of each stage `body` runs that writes output (a file
     * sink's stage), in completion order.

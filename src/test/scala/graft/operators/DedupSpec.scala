@@ -299,6 +299,37 @@ class DedupSpec extends AnyFunSuite {
     Dedup.unpersistIntermediates(blocking = true)
   }
 
+  test("posting-cache gate: the cached and the recompute arm give identical pairs") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // the gate reads the docs' plan stats: the local frame is small (the
+    // cached arm), its RDD-backed twin reports defaultSizeInBytes (the
+    // recompute arm)
+    val plus = docs.union(Seq(
+      (6L, base.replace("fox", "cat")),
+      (7L, "the quick brown fox has left while rain falls on the hill tonight"))
+      .toDF("doc_id", "text"))
+    def caches(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case r: InMemoryRelation => r.cacheBuilder
+    }.distinct.size
+    Seq[(String, DataFrame => DataFrame)](
+      "prefixJaccardPairs" -> (d =>
+        Dedup.prefixJaccardPairs(d, col("doc_id"), col("text"), 3, 500000L)),
+      "containmentPairs" -> (d =>
+        Dedup.containmentPairs(d, col("doc_id"), col("text"), 3, 500000L))
+    ).foreach { case (tier, pairs) =>
+      val cachedArm = pairs(plus)
+      val recompute = pairs(TestSpark.unsized(plus))
+      // the shingle sets are cached on both arms; only the small arm adds
+      // the shared posting frame
+      assert(caches(cachedArm) == 2 && caches(recompute) == 1,
+        s"$tier: ${caches(cachedArm)} vs ${caches(recompute)} cached frames")
+      val a = cachedArm.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+      val b = recompute.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+      assert(a == b && a.nonEmpty, s"$tier: $a vs $b")
+      Dedup.unpersistIntermediates(blocking = true)
+    }
+  }
+
   test("unpersistIntermediates releases every cache the operators registered") {
     spark.catalog.clearCache()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)

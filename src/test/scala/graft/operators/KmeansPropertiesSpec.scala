@@ -2,10 +2,13 @@ package graft.operators
 
 import graft.TestSpark
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.util.Try
 
 /** Property-based invariants for the k-means trainer and the bigram-LM
   * scorer over random inputs (seeded generators, failures reproduce):
@@ -236,18 +239,24 @@ class KmeansPropertiesSpec extends AnyFunSuite {
     assert(msgs(e).exists(_.contains("reference")), s"got: ${msgs(e).mkString(" | ")}")
   }
 
-  /** Run `f` with the lloydLoop size gate forced via the sys.props seam
-    * (r18 OPT): "0" = the TopDot projection path on any input size, a
-    * huge value = the join formulation. Always restores the prop.
+  /** `train` run on each arm of lloydLoop's size gate, chosen by the
+    * input's provenance: the local frame `df` reports its real size (the
+    * join formulation), its RDD-backed twin reports the session's
+    * `defaultSizeInBytes` (the TopDot projection). The executed plans show
+    * which arm ran. Returns (TopDot result, join result).
     */
-  private def withTopDotGate[A](bytes: String)(f: => A): A = {
-    val key = "SPARK_GRAFT_KMEANS_TOPDOT_BYTES"
-    val old = sys.props.get(key)
-    sys.props(key) = bytes
-    try f finally old match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props -= key
+  private def bothArms[A](df: DataFrame)(train: DataFrame => A): (A, A) = {
+    def run(in: DataFrame): (Try[A], Seq[String]) = {
+      var out: Try[A] = null
+      val plans = TestSpark.plansOf { out = Try(train(in)) }
+      (out, plans)
     }
+    val (fast, fastPlans) = run(TestSpark.unsized(df))
+    val (exch, exchPlans) = run(df)
+    def topDot(plans: Seq[String]) = plans.exists(_.contains("graft_top_dot_ids"))
+    assert(topDot(fastPlans), "the RDD-backed input must take the TopDot arm")
+    assert(!topDot(exchPlans), "the local input must take the join arm")
+    (fast.get, exch.get)
   }
 
   test("r18 OPT: lloydLoop TopDot path is bit-identical to the join formulation " +
@@ -260,13 +269,8 @@ class KmeansPropertiesSpec extends AnyFunSuite {
       val df = vs.zipWithIndex.map { case (v, id) => (id.toLong, v) }
         .toDF("vec_id", "embedding")
       val k = math.min(1 + i % 4, vs.size)
-      val fast = withTopDotGate("0") {
-        Similarity.kmeansTrain(df, col("vec_id"), col("embedding"),
-          k = k, iters = 1 + i % 3, seedStride = 1, rankSeeds = i % 3 == 0)
-          .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._2))
-      }
-      val exch = withTopDotGate(Long.MaxValue.toString) {
-        Similarity.kmeansTrain(df, col("vec_id"), col("embedding"),
+      val (fast, exch) = bothArms(df) { in =>
+        Similarity.kmeansTrain(in, col("vec_id"), col("embedding"),
           k = k, iters = 1 + i % 3, seedStride = 1, rankSeeds = i % 3 == 0)
           .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._2))
       }
@@ -280,17 +284,17 @@ class KmeansPropertiesSpec extends AnyFunSuite {
       (1L, Array(0.3f, 0.4f)),
       (2L, Array(0.5f, 0.6f, 0.7f))). // ragged
       toDF("vec_id", "embedding")
-    Seq("0", Long.MaxValue.toString).foreach { gate =>
-      val e = intercept[Exception] {
-        withTopDotGate(gate) {
-          Similarity.kmeansTrain(df, col("vec_id"), col("embedding"),
-            k = 2, iters = 1, seedStride = 1).collect()
-        }
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    val (fast, exch) = bothArms(df) { in =>
+      intercept[Exception] {
+        Similarity.kmeansTrain(in, col("vec_id"), col("embedding"),
+          k = 2, iters = 1, seedStride = 1).collect()
       }
-      def msgs(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    }
+    Seq("TopDot" -> fast, "join" -> exch).foreach { case (arm, e) =>
       assert(msgs(e).exists(_.contains("ragged")),
-        s"gate=$gate got: ${msgs(e).mkString(" | ")}")
+        s"$arm arm got: ${msgs(e).mkString(" | ")}")
     }
   }
 
@@ -298,13 +302,8 @@ class KmeansPropertiesSpec extends AnyFunSuite {
     val vs = sampleVecs(55L).map(v => (v ++ v ++ v ++ v).take(8)) // dim 8
     val df = vs.zipWithIndex.map { case (v, id) => (id.toLong, v) }
       .toDF("vec_id", "embedding")
-    val fast = withTopDotGate("0") {
-      Similarity.pqTrainCodebook(df, col("vec_id"), col("embedding"),
-        numSubspaces = 4, numCodes = math.min(3, vs.size), iters = 2,
-        seedStride = 1)
-    }
-    val exch = withTopDotGate(Long.MaxValue.toString) {
-      Similarity.pqTrainCodebook(df, col("vec_id"), col("embedding"),
+    val (fast, exch) = bothArms(df) { in =>
+      Similarity.pqTrainCodebook(in, col("vec_id"), col("embedding"),
         numSubspaces = 4, numCodes = math.min(3, vs.size), iters = 2,
         seedStride = 1)
     }

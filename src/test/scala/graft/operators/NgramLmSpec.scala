@@ -25,6 +25,36 @@ class NgramLmSpec extends AnyFunSuite {
     assert(out.size == 3)
   }
 
+  test("model-cache gate: the cached and the recompute arm score identically") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // the gate reads the model source's plan stats: the local reference
+    // frame is small (both consumers recompute the unigram table), its
+    // RDD-backed twin reports defaultSizeInBytes (the table is cached)
+    val lm = Seq((100L, "a b a c"), (101L, "b c a b")).toDF("doc_id", "text")
+    val docs = Seq((1L, "a b c"), (2L, "x"), (3L, "c a b d"))
+      .toDF("doc_id", "text")
+    def cached(df: DataFrame) = df.queryExecution.optimizedPlan.exists {
+      case _: InMemoryRelation => true
+      case _ => false
+    }
+    def rows(df: DataFrame) =
+      df.as[(Long, Long, Option[Long])].collect().sortBy(_._1).toSeq
+    Seq[(String, DataFrame => DataFrame)](
+      "bigramScore" -> (ref =>
+        NgramLm.bigramScore(docs, col("doc_id"), col("text"), ref, col("text"))),
+      "scoreWith" -> (ref => NgramLm.scoreWith(
+        NgramLm.bigramModel(ref, col("text")), docs, col("doc_id"), col("text")))
+    ).foreach { case (entry, score) =>
+      val recompute = score(lm)
+      val cachedArm = score(TestSpark.unsized(lm))
+      assert(!cached(recompute) && cached(cachedArm), entry)
+      assert(rows(recompute) == rows(cachedArm) && rows(recompute).size == 3,
+        entry)
+      Corpus.unpersistIntermediates(blocking = true)
+    }
+  }
+
   test("scoring the reference corpus against itself beats random text") {
     val lm = Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick dog runs over the brown fox")).toDF("doc_id", "text")

@@ -506,7 +506,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(got.sortBy(r => (r._1, r._3)).toSeq == batch && batch.nonEmpty)
   }
 
-  test("build and append write ≤ filesPerList files per list, not one per upstream task") {
+  test("build and append write one file per list, not one per upstream task") {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     val path = tmpStore("ivffiles")
     // many upstream partitions: the un-routed failure mode would emit up
@@ -521,50 +521,52 @@ class VectorIndexSpec extends AnyFunSuite {
     val afterBuild = filesPerDir()
     assert(afterBuild.nonEmpty && afterBuild.values.max <= 1, afterBuild.toString)
     VectorIndex.appendToIvfIndex(emb.repartition(16).filter(col("vec_id") % 7 === 0),
-      col("vec_id"), col("embedding"), path, filesPerList = 2)
+      col("vec_id"), col("embedding"), path)
     val afterAppend = filesPerDir()
-    // a touched list gains at most filesPerList new files per batch
-    assert(afterAppend.values.max <= 1 + 2, afterAppend.toString)
+    // a touched list gains at most one new file per batch
+    assert(afterAppend.values.max <= 1 + 1, afterAppend.toString)
   }
 
-  test("auto filesPerList sizes from the data: a tight byte target splits lists, the default does not") {
+  test("the store route sizes from the data: a tight byte target splits lists, the default does not") {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     def filesPerDir(path: String): Map[String, Int] =
       new java.io.File(s"$path/lists").listFiles().toSeq
         .filter(_.getName.startsWith("c_id="))
         .map(d => d.getName -> d.listFiles()
           .count(f => f.getName.endsWith(".parquet"))).toMap
-    def build(path: String, filesPerList: Int = 0,
-        targetFileBytes: Long = 128L << 20): Int = jobsOf(
-      VectorIndex.writeIvfIndex(emb.repartition(16), col("vec_id"),
-        col("embedding"), path, filesPerList = filesPerList,
-        targetFileBytes = targetFileBytes))
-    // the explicit single-file route never samples: its job count is the
-    // reference for "no sampling job"
-    val singleJobs = build(tmpStore("ivfautosingle"), filesPerList = 1)
-    // the sf0.001 corpus is a few hundred KB over ≤256 lists: a 256-byte
-    // target forces ceil(listBytes/target) > 1 splits per list — the
-    // build must choose >1 file on its own (filesPerList left at auto),
-    // which takes the sampling job
+    // the route's sampling query is the only one that filters on the
+    // 1/64 hash slice of the assignment
+    def samples(plans: Seq[String]) = plans.count(_.contains(", 64) = 0)"))
+    def build(path: String, targetFileBytes: Long = 128L << 20): (Int, Int) = {
+      var jobs = 0
+      val plans = TestSpark.plansOf {
+        jobs = jobsOf(VectorIndex.writeIvfIndex(emb.repartition(16),
+          col("vec_id"), col("embedding"), path,
+          targetFileBytes = targetFileBytes))
+      }
+      (jobs, samples(plans))
+    }
+    // the 128 MB default on the sf0.001 corpus: the whole input fits one
+    // file, so the route is the single-file one with NO sampling query,
+    // and one file per list
+    val loose = tmpStore("ivfautoloose")
+    val (looseJobs, looseSamples) = build(loose)
+    assert(looseSamples == 0, "an input under the target must not sample")
+    assert(filesPerDir(loose).values.max <= 1)
+    // the corpus is a few hundred KB over ≤256 lists: a 256-byte target
+    // forces ceil(listBytes/target) > 1 splits per list — the build must
+    // choose >1 file on its own, which takes the sampling job
     val tight = tmpStore("ivfautotight")
-    val tightJobs = build(tight, targetFileBytes = 256L)
+    val (tightJobs, tightSamples) = build(tight, targetFileBytes = 256L)
     val tightCounts = filesPerDir(tight)
     assert(tightCounts.nonEmpty && tightCounts.values.max > 1,
       s"auto sizing should split lists at a 256-byte target: $tightCounts")
-    assert(tightJobs > singleJobs,
-      s"a tight target must sample: $tightJobs jobs vs $singleJobs single-file")
+    assert(tightSamples == 1 && tightJobs > looseJobs,
+      s"a tight target must sample: $tightJobs jobs ($tightSamples " +
+        s"sampling queries) vs $looseJobs single-file")
     // ...and the file count stays bounded by the routed split, never
     // tasks × lists (16 upstream tasks would otherwise give up to 16)
     assert(tightCounts.values.max <= 4096)
-    // the 128 MB default on the same corpus: the whole input fits one
-    // file, so the route is the single-file one with NO sampling job —
-    // exactly the explicit route's jobs — and one file per list
-    val loose = tmpStore("ivfautoloose")
-    val looseJobs = build(loose)
-    assert(looseJobs == singleJobs,
-      s"an input under the target must not sample: $looseJobs jobs vs " +
-        s"$singleJobs single-file")
-    assert(filesPerDir(loose).values.max <= 1)
   }
 
   test("the build + append + compact chain stays within its job budget") {
@@ -772,10 +774,10 @@ class VectorIndexSpec extends AnyFunSuite {
       counts.values.min < counts(heavyList),
       s"file counts should track list mass: $counts (heavy=$heavyList)")
     // layout is invisible to results: probe ≡ the same store built with
-    // the single-file route
+    // the single-file route (the default target on this corpus)
     val ref = tmpStore("ivfskewref")
     VectorIndex.writeIvfIndex(skew, col("vec_id"), col("embedding"), ref,
-      hier = None, filesPerList = 1)
+      hier = None)
     val skewQueries = skew.filter(col("vec_id") >= 8 && col("vec_id") < 13)
     val a = ranking(VectorIndex.probeIvfIndex(spark, path, skewQueries,
       col("vec_id"), col("embedding"), k = 10, probe = Nearest(2)))
@@ -824,11 +826,12 @@ class VectorIndexSpec extends AnyFunSuite {
   test("compaction also SPLITS an oversized file, and the rewrite right-sizes it") {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists())
     // force the failure the merge-only rule could never fix: every list
-    // written as ONE file (explicit filesPerList = 1), then compact at a
-    // target small enough that some single file is > 2× target
+    // written as ONE file (the default target on this corpus), then
+    // compact at a target small enough that some single file is > 2×
+    // target
     val path = tmpStore("ivfsplit")
     VectorIndex.writeIvfIndex(emb, col("vec_id"), col("embedding"), path,
-      hier = None, filesPerList = 1)
+      hier = None)
     val before = VectorIndex.listManifest(spark, path)
       .as[(Long, String, Long)].collect()
     assert(before.groupBy(_._1).values.forall(_.size == 1))

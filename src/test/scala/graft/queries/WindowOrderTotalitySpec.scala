@@ -37,6 +37,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `max(dense_rank)` emulation, Layout's bin aggregates). Documented
   *    in the registry, nothing to assert.
   *
+  * A window with NO partition key runs in one task over its whole input,
+  * so that input must be bounded by something other than the corpus. The
+  * UNPARTITIONED registry names each such site's bound; its guard counts
+  * the sites per file, and the limit-bounded ones are checked in the
+  * plan.
+  *
   * COMPLETENESS GUARD: the per-file `.over(` call-site counts in
   * src/main are pinned below. Adding (or removing) a window anywhere
   * fails this spec until the new site is classified into the registry —
@@ -147,6 +153,17 @@ class WindowOrderTotalitySpec extends AnyFunSuite {
     try s.mkString finally s.close()
   }
 
+  /** Every Scala source under src/main as (path below `graft/`, text). */
+  private def mainSources(): Seq[(String, String)] = {
+    val root = new java.io.File("src/main/scala/graft")
+    assume(root.isDirectory, "spec must run from the repo root")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    walk(root).map(f =>
+      f.getPath.stripPrefix("src/main/scala/graft/") -> src(f.getPath))
+  }
+
   test("completeness guard: per-file .over( call-site counts are pinned") {
     // Counts as of round 16. On mismatch: classify the new/changed
     // window into this spec's registry (UNIQUE / TIE-IDENTICAL /
@@ -157,24 +174,83 @@ class WindowOrderTotalitySpec extends AnyFunSuite {
       "operators/Dedup.scala" -> 7,
       "operators/Layout.scala" -> 3,
       "operators/Search.scala" -> 3,
-      "operators/Similarity.scala" -> 16,
+      "operators/Similarity.scala" -> 14,
       "operators/SkewAgg.scala" -> 1,
       "queries/AnalyticsQueries.scala" -> 9,
       "queries/PipelineQueries.scala" -> 9)
-    val root = new java.io.File("src/main/scala/graft")
-    assume(root.isDirectory, "spec must run from the repo root")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val actual = walk(root).map { f =>
-      f.getPath.stripPrefix("src/main/scala/graft/") ->
-        src(f.getPath).sliding(".over(".length).count(_ == ".over(")
+    val actual = mainSources().map { case (f, text) =>
+      f -> text.sliding(".over(".length).count(_ == ".over(")
     }.filter(_._2 > 0).toMap
     assert(actual == pinned,
       s"window call-site inventory changed — classify the new sites in " +
         s"WindowOrderTotalitySpec, then re-pin.\n  added/changed: " +
         s"${(actual.toSet -- pinned.toSet).toSeq.sorted}\n  removed: " +
         s"${(pinned.toSet -- actual.toSet).toSeq.sorted}")
+  }
+
+  /** UNPARTITIONED windows per file: (site count, what bounds each
+    * site's input). A site is a `Window.orderBy(` with no partitionBy,
+    * an empty `.over()`, or a Spark SQL `over (order by` in an `expr`.
+    */
+  private val unpartitioned: Map[String, (Int, String)] = Map(
+    "operators/SkewAgg.scala" -> (2, "skewReport's rank and its SQL " +
+      "`sum(n) over (order by …)` cumulative share: the limit(topN) rows"),
+    "operators/Dedup.scala" -> (1, "boilerplateReport's rank: the " +
+      "limit(topN) rows"),
+    "operators/Similarity.scala" -> (1, "hierSupers' centroid rank: the " +
+      "centroid set (config-sized)"),
+    "operators/Corpus.scala" -> (1, "countedTierMap's cumulative count: " +
+      "the distinct score values"),
+    "queries/AnalyticsQueries.scala" -> (1, "q23's year-over-year lag: " +
+      "the month series"),
+    "queries/PipelineQueries.scala" -> (1, "s16's lexical rank: " +
+      "keywordTopK's k = 20 rows"))
+
+  test("unpartitioned guard: every window without a partition key has a named bound") {
+    // comment lines and the oracle's stripMargin SQL (`|`-prefixed DuckDB
+    // text, never planned by Spark) are not Spark windows
+    val site = ("Window\\s*\\.orderBy\\(|\\.over\\(\\s*\\)|" +
+      "(?i:over\\s*\\(\\s*order\\s+by)").r
+    val actual = mainSources().map { case (f, text) =>
+      val code = text.split("\n").filterNot { l =>
+        val t = l.trim
+        t.startsWith("//") || t.startsWith("*") || t.startsWith("/**") ||
+          t.startsWith("|")
+      }.mkString("\n")
+      f -> site.findAllIn(code).size
+    }.filter(_._2 > 0).toMap
+    assert(actual == unpartitioned.map { case (f, (n, _)) => f -> n },
+      s"unpartitioned windows changed — name each new site's bound here." +
+        s"\n  now: ${actual.toSeq.sorted}")
+  }
+
+  test("plan: the limit-bounded unpartitioned windows sit above their limit") {
+    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Window}
+    import spark.implicits._
+    val topN = 3
+    val keys = (1 to 40).map(i => (i.toLong % 7, i.toLong)).toDF("k", "v")
+    val docs = (1 to 12).map(i => (i.toLong,
+      s"the quick brown fox jumps over the lazy dog number ${i % 4} again"))
+      .toDF("doc_id", "text")
+    Seq(
+      "SkewAgg.skewReport" ->
+        graft.operators.SkewAgg.skewReport(keys, col("k"), topN),
+      "Dedup.boilerplateReport" -> graft.operators.Dedup.boilerplateReport(
+        docs, col("doc_id"), col("text"), k = 3, topN = topN)
+    ).foreach { case (op, df) =>
+      val windows = df.queryExecution.optimizedPlan.collect {
+        case w: Window if w.partitionSpec.isEmpty => w
+      }
+      assert(windows.nonEmpty, s"$op: no unpartitioned window in the plan")
+      windows.foreach { w =>
+        val limits = w.child.collect {
+          case l: GlobalLimit => l.limitExpr.eval().asInstanceOf[Int]
+        }
+        assert(limits == Seq(topN),
+          s"$op: the window's input is not bounded by limit($topN): $limits")
+      }
+      assert(df.count() == topN, op)
+    }
   }
 
   test("source guard: the lineitem running windows keep l_quantity in ORDER BY") {
